@@ -376,9 +376,11 @@ object StepBench {
       runs = runs :+ one(2) :+ one(3)
     gateRuns(name) = runs
     gateBands(name) = (lo, hi)
-    val byRatio = runs.sortBy(ratioOf)
-    val med = byRatio((byRatio.size - 1) / 2)
-    onSelect(runs.indexOf(med) + 1)
+    // the run index rides the sort: on an exact (small, large) tie
+    // indexOf would pick the FIRST equal run, not the selected one
+    val byRatio = runs.zipWithIndex.sortBy { case (p, _) => ratioOf(p) }
+    val (med, idx) = byRatio((byRatio.size - 1) / 2)
+    onSelect(idx + 1)
     (med._1, med._2, ratioOf(med))
   }
 

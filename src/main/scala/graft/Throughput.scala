@@ -212,7 +212,7 @@ object Throughput {
     * benchmark/README.md:222). Event time is monotonic, so "last" is the
     * max on (ts_ms, price); the state carries one row per live key (~10M
     * keys at 48M events — the large-state family). The state lives in a
-    * [[graft.incremental.BucketedUpsertState]]: each step shuffles ONLY the
+    * [[graft.incremental.BucketedUpsertStateLong]]: each step shuffles ONLY the
     * slice (map-side combined straight into the state's partitioner) and
     * merges bucket-locally — the state is never re-shuffled, so per-step
     * NETWORK cost is O(|Δ|) however large the key space grows. The r5
@@ -754,7 +754,7 @@ object Throughput {
     // count: the per-step merges move tiny state/partials, and 32-way
     // shuffles of tiny data are pure scheduling overhead (the same
     // lesson as sizing stateful-streaming parallelism per job). q18 is the
-    // exception — its 10M-key state lives in a BucketedUpsertState with
+    // exception — its 10M-key state lives in a BucketedUpsertStateLong with
     // its own 32-way partitioner, independent of this conf. AQE is
     // disabled inside the loops — its per-shuffle re-planning is pure
     // fixed cost on sub-second micro-batch jobs whose sizes are known.

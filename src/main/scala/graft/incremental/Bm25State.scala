@@ -1,6 +1,6 @@
 package graft.incremental
 
-import org.apache.spark.sql.{Column, DataFrame, Observation}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -81,57 +81,29 @@ final class MultiBm25State(emptyPosting: ZSetFrame,
                              * default). Tests shrink it to reach the pruning
                              * regime at toy corpus sizes. */
                            val grid: Double = 1e6,
-                           /** DURABLE mirror of the posting trace (VERDICT
-                             * r15 #4 — the reference's persistent-spine
-                             * property, crates/dbsp/src/trace/persistent/
+                           /** DURABLE mirror of the posting trace (the
+                             * reference's persistent-spine property,
+                             * crates/dbsp/src/trace/persistent/
                              * mod.rs:1-40, applied to the flagship
                              * operator family): when set, every step also
                              * merges its U-restricted delta into this
                              * disk-backed [[DurableKeyedState]] and then
-                             * records the driver constants (step counter,
-                             * N, T, df) in a sidecar — qIdx + constants
-                             * are the state's PRIMARY data; scoreIdx /
+                             * records the driver constants (N, T, df, and
+                             * the state identity: query sets, topK, grid)
+                             * in the commit sidecar — qIdx + constants are
+                             * the state's PRIMARY data; scoreIdx /
                              * bucketTop / topIdx are derived and are
-                             * REBUILT from scratch at [[MultiBm25State.restore]]
-                             * (bit-identical by the screen's exactness
-                             * induction: every stored score equals a
-                             * from-scratch evaluation under the CURRENT
-                             * constants).
-                             *
-                             * COMMIT PROTOCOL (code-review r16 — the
-                             * delta merge is NOT idempotent, so a torn
-                             * step must never be silently replayable):
-                             * each step writes an INTENT marker (gen
-                             * N+1) before touching the trace, then the
-                             * trace merge, then the constants sidecar
-                             * (gen N+1, atomic rename) as the commit
-                             * point. restore() REFUSES an intent newer
-                             * than the committed gen — a crash anywhere
-                             * inside the step window is DETECTED, not
-                             * silently double-applied; recovery from a
-                             * torn step is out of scope here (it needs a
-                             * transactional table format or a state
-                             * snapshot — at deployment, run the durable
-                             * trace on one). A CLEAN teardown/restore —
-                             * what q92 and DurableStateSpec certify —
-                             * resumes exactly, and `committedGen` tells
-                             * the CDC source which deltas to resend. */
-                           durablePath: Option[String] = None) {
+                             * REBUILT from scratch at
+                             * [[MultiBm25State.restore]]. A torn step is
+                             * detected at restore, not replayed (see
+                             * [[DurableMirror]]); a CLEAN teardown/restore
+                             * — what q92 and DurableStateSpec certify —
+                             * resumes exactly. */
+                           durablePath: Option[String] = None)
+    extends ScreenedState(nBuckets,
+      durablePath.map(MultiBm25State.Files.create(_, nBuckets, emptyPosting))) {
   import ZSetFrame.W
-
-  private var durIdx: Option[DurableMirror] =
-    durablePath.map(p => DurableMirror.create(
-      p, Seq("doc_id"), nBuckets, emptyPosting,
-      MultiBm25State.IntentFile, MultiBm25State.ConstsFile))
-
-  /** Restore-path constructor: ATTACH to an existing durable trace instead
-    * of create-resetting it (see [[MultiBm25State.restore]]). */
-  private[incremental] def this(emptyPosting: ZSetFrame,
-      qsets: Seq[(String, Seq[String])], nBuckets: Int, topK: Int,
-      grid: Double, dur: DurableMirror) = {
-    this(emptyPosting, qsets, nBuckets, topK, grid, None)
-    durIdx = Some(dur)
-  }
+  import ScreenedState.{Frame, Merge, Rescored}
 
   private val spark = emptyPosting.spark
 
@@ -139,27 +111,27 @@ final class MultiBm25State(emptyPosting: ZSetFrame,
     * to, and the granularity of df maintenance. */
   private val uterms: Seq[String] = qsets.flatMap(_._2).distinct
 
-  private val qIdx = new KeyedState(Seq("doc_id"), nBuckets, emptyPosting)
-  private val scoreIdx = new KeyedState(Seq("doc_id"), nBuckets,
+  private val qIdx = index(Seq("doc_id"), nBuckets, emptyPosting)
+  private val scoreIdx = index(Seq("doc_id"), nBuckets,
     ZSetFrame.fromDelta(emptyPosting.df.select(col("doc_id"),
       lit("").as("query_id"), lit(0L).as("score_q"), col(W))))
-  private val bucketTop = new KeyedState(Seq("doc_id"), nBuckets,
+  private val bucketTop = index(Seq("doc_id"), nBuckets,
     ZSetFrame.fromDelta(emptyPosting.df.select(col("doc_id"),
       lit("").as("query_id"), lit(0L).as("score_q"), col(W))))
-  private val topIdx = new KeyedState(Seq("doc_id"), nBuckets,
+  private val topIdx = index(Seq("doc_id"), nBuckets,
     ZSetFrame.fromDelta(emptyPosting.df.select(col("doc_id"),
       lit("").as("query_id"), lit(0L).as("score_q"), lit(0).as("rnk"),
       col(W))))
+
+  protected def answer: KeyedState = topIdx
+  override protected def consts: Seq[(String, String)] =
+    MultiBm25State.constsOf(nDocs, tToks, dfU.toMap, qsets, topK, grid)
 
   // corpus constants and the |U| df values — driver-held scalars, advanced
   // O(Δ) per step and broadcast into the screen/rescore expressions
   private var nDocs = 0L
   private var tToks = 0L
   private val dfU = scala.collection.mutable.Map[String, Long]()
-  /** Completed-step counter — the durable mirror's commit generation (the
-    * caller's ack watermark for torn-step detection; see `durIdx`). */
-  private var stepGen = 0L
-  def committedGen: Long = stepGen
 
   // the (query_id, term) dimension — the verdict's "dfTab broadcast becomes
   // a keyed dimension join": built once, broadcast into every rescore
@@ -169,13 +141,38 @@ final class MultiBm25State(emptyPosting: ZSetFrame,
       .toDF("query_id", "term")
   }
 
-  /** Diagnostic: last step's affected-doc set (pinned; tests count it to
-    * certify the screening prunes — affected ≪ union match set on steps
-    * whose constant drift stays inside the quantization grid). */
-  private[graft] var lastAffected: DataFrame = _
-  private var prevStepPins: Seq[DataFrame] = Nil
-
   private def ulits: Seq[Any] = uterms.map(_.asInstanceOf[Any])
+
+  /** Per (query, doc), the quantized score Σ Bm25.sq over the doc's
+    * matching `rows` under the (term, df) table and the one-row (n_new,
+    * t_new) constants — the step's rescore and the restore rebuild both
+    * score through here, so the two share one IEEE sequence. */
+  private def scoresOf(rows: DataFrame, dfTab: DataFrame,
+                       nt: DataFrame): DataFrame =
+    rows.join(broadcast(dfTab), Seq("term"))
+      .join(broadcast(qtTab), Seq("term"))
+      .crossJoin(broadcast(nt))
+      .select(col("query_id"), col("doc_id"),
+        Bm25.sq(col("tf"), col("dl"), col("df"),
+          col("n_new"), col("t_new"), grid).as("sq"))
+      .groupBy("query_id", "doc_id").agg(sum(col("sq")).as("score_q"))
+
+  /** Two-level top-k, level 1: per-(query, doc bucket) winners. */
+  private def bucketTopOf(scores: DataFrame): DataFrame =
+    scores.select("query_id", "doc_id", "score_q")
+      .withColumn("rn", row_number().over(
+        Window.partitionBy(col("query_id"),
+            pmod(hash(col("doc_id")), lit(nBuckets)))
+          .orderBy(col("score_q").desc, col("doc_id").asc)))
+      .where(col("rn") <= topK).drop("rn")
+
+  /** Level 2: per-query global top-k over the per-bucket winners. */
+  private def globalTopOf(winners: DataFrame): DataFrame =
+    winners.select("query_id", "doc_id", "score_q")
+      .withColumn("rnk", row_number().over(
+        Window.partitionBy(col("query_id"))
+          .orderBy(col("score_q").desc, col("doc_id").asc)))
+      .where(col("rnk") <= topK)
 
   /** One step. `delta` holds consolidated (doc_id, term, tf, dl) posting
     * rows with ±1 weights — a doc's FULL posting set on insert (+1) or
@@ -183,14 +180,12 @@ final class MultiBm25State(emptyPosting: ZSetFrame,
     * maintenance and are not stored. Returns the −old/+new top-k
     * replacement delta across ALL queries; the emitted rows integrate to
     * (query_id, doc_id, score_q, rnk). */
-  def step(delta: ZSetFrame): ZSetFrame = {
-    prevStepPins.foreach(Pinned.release)
-    prevStepPins = Nil
-    // 0. LAZY-pin the delta (r17 — measured: the raw plan re-ran the
-    //    caller's tokenize+explode chain in every consumer job of a
-    //    streaming step; the lazy checkpoint materializes inside the
-    //    affected action below and every later job reads pinned blocks —
-    //    zero extra barriers, one delta evaluation)
+  def step(delta: ZSetFrame): ZSetFrame = runStep {
+    // LAZY-pin the delta (r17 — measured: the raw plan re-ran the caller's
+    // tokenize+explode chain in every consumer job of a streaming step;
+    // the lazy checkpoint materializes inside the affected action and
+    // every later job reads pinned blocks — zero extra barriers, one delta
+    // evaluation)
     val d = delta.df.localCheckpoint(false)
     val nOld = nDocs; val tOld = tToks
     val dfOld = dfU.toMap
@@ -201,17 +196,19 @@ final class MultiBm25State(emptyPosting: ZSetFrame,
     //    driver-literal OLD values ⊕ the delta's own aggregates, broadcast
     //    into the screen and the rescore. The driver's own copies (next
     //    step's literals, the contract check, the durable sidecar) are
-    //    collected CONCURRENTLY with the emission action in step 5b — the
-    //    step is 3 barriers (affected, max(emission, stat), merges), down
-    //    from 4. (An Observation-riding variant was tried first and
-    //    reverted: CollectMetrics inside a broadcast-build subtree
-    //    reports in plain executions — ObservationSpec pins that — but a
-    //    q90 streaming micro-batch execution dropped the metrics and
-    //    Observation.get blocked forever; the concurrent collect has no
-    //    such mode.)
+    //    collected CONCURRENTLY with the emission action (step 5). (An
+    //    Observation-riding variant was tried first and reverted:
+    //    CollectMetrics inside a broadcast-build subtree reports in plain
+    //    executions — ObservationSpec pins that — but a q90 streaming
+    //    micro-batch execution dropped the metrics and Observation.get
+    //    blocked forever; the concurrent collect has no such mode.)
     //      - ntNew: ONE row (n_new, t_new) = (N,T)_old + (ΔN, ΔT) over the
     //        per-(doc, w) groups; ndl = the group's distinct dl count, so
     //        the dl-contract violation is a plain sum for the stat pass
+    //      - ddf: the U-restricted Δdf aggregate, LAZILY pinned — the
+    //        affected action's dfTab broadcast build materializes it, and
+    //        the stat collect reads the pinned blocks instead of planning
+    //        a second Δdf scan of the delta
     //      - dfTab: |U| rows (term, df_old literal, df_new = df_old + Δdf)
     val docRows = d.groupBy(col("doc_id"), col(W))
       .agg(count_distinct(col("dl")).as("ndl"), max(col("dl")).as("dl"))
@@ -220,15 +217,17 @@ final class MultiBm25State(emptyPosting: ZSetFrame,
         coalesce(sum(col("dl") * col(W)), lit(0L)).as("dt"))
       .select((lit(nOld) + col("dn")).as("n_new"),
         (lit(tOld) + col("dt")).as("t_new"))
+    val ddf = d.where(col("term").isin(ulits: _*))
+      .groupBy("term").agg(sum(col(W)).as("ddf"))
+      .localCheckpoint(false)
     val dfTab = uterms.map(t => (t, dfOld.getOrElse(t, 0L)))
       .toDF("term", "df_old")
-      .join(d.where(col("term").isin(ulits: _*))
-        .groupBy("term").agg(sum(col(W)).as("ddf")), Seq("term"), "left")
+      .join(ddf, Seq("term"), "left")
       .select(col("term"), col("df_old"),
         (col("df_old") + coalesce(col("ddf"), lit(0L))).as("df_new"))
     // 2. screen: ONE no-shuffle scan of the U-restricted index — every
     //    stored posting's floor under (N,T,df)_old vs (N,T,df)_new (both
-    //    sides column expressions now; the new constants come from the two
+    //    sides column expressions; the new constants come from the two
     //    broadcast tables above). A posting with df_new == 0 has all its
     //    docs in this step's delta (its term vanished from the corpus);
     //    MinValue marks it moved defensively. Query-independent: one scan
@@ -243,158 +242,92 @@ final class MultiBm25State(emptyPosting: ZSetFrame,
       .where(sqAt(col("df_old"), lit(nOld), lit(tOld))
         =!= sqAt(col("df_new"), col("n_new"), col("t_new")))
       .select(col("doc_id"))
-    // 3. affected = crossed docs ∪ the delta's matching docs (unchanged
-    //    from r17); the bucket span rides the checkpoint via an
-    //    Observation (Screened — the d31 discipline shared with
-    //    TfIdfState). This ONE action also materializes the delta pin and
-    //    the two broadcast constant tables.
+    // 3. affected = crossed docs ∪ the delta's matching docs; this ONE
+    //    action also materializes the delta pin, ddf and the two broadcast
+    //    constant tables
     val dU = ZSetFrame.fromDelta(d.where(col("term").isin(ulits: _*)))
-    val (affected, affB) = Screened.affectedKeys(screened,
-      dU.df.select("doc_id"), "doc_id", nBuckets)
-    lastAffected = affected
-    // 5. rescore the affected docs under the NEW constants BEFORE any trace
-    //    merge, over (pre-merge view ⊕ pinned delta) — identical rows to
-    //    the post-merge view (an append merge adds exactly the delta; the
-    //    consolidate absorbs weight splits); fanned out to matching queries
-    //    by the broadcast (query_id, term) dimension. A fully retracted doc
-    //    (or a (query, doc) pair whose last matching posting left) yields
-    //    no row, so its old score is retracted by the replacement delta;
-    //    unaffected-query rows of an affected doc cancel in the Z-set
-    //    minus. The whole two-level top-k cascade below is ONE output
-    //    action (the emission checkpoint): the intermediate replacement
-    //    deltas (scDelta, btDelta) are LAZILY checkpointed, so the action
-    //    pins them as it runs and the trace merges in step 6 read pinned
-    //    blocks instead of recomputing the cascade (r17 — the step dropped
-    //    from 7 driver barriers to 4; r18's concurrent stat makes it 3;
-    //    VERDICT r13 #2 lineage). The rescore's constants are the SAME
-    //    cluster-side tables the screen used — identical values and the
-    //    identical IEEE sequence, the leaves are column refs instead of
-    //    literals — which is what frees the emission from waiting on the
-    //    stat collect.
-    val dfNewTab = dfTab.select(col("term"), col("df_new").as("df"))
-    val rows = (qIdx.view(affB) + dU).consolidate.df
-      .join(affected, Seq("doc_id"))
-    val newScores = rows.join(broadcast(dfNewTab), Seq("term"))
-      .join(broadcast(qtTab), Seq("term"))
-      .crossJoin(broadcast(ntNew))
-      .select(col("query_id"), col("doc_id"),
-        Bm25.sq(col("tf"), col("dl"), col("df"),
-          col("n_new"), col("t_new"), grid).as("sq"))
-      .groupBy("query_id", "doc_id").agg(sum(col("sq")).as("score_q"))
-    val oldScores = scoreIdx.view(affB).consolidate.df
-      .join(affected, Seq("doc_id"))
-      .select("query_id", "doc_id", "score_q")
-    val scDelta = (ZSetFrame.fromTable(newScores)
-      - ZSetFrame.fromTable(oldScores)).consolidate.localCheckpoint()
-    // two-level top-k, level 1: per-(query, bucket) winners for exactly
-    // the touched buckets — O(touched bucket rows)
-    val bEx = pmod(hash(col("doc_id")), lit(nBuckets))
-    val newBT = (scoreIdx.view(affB) + scDelta).consolidate.df
-      .select("query_id", "doc_id", "score_q")
-      .withColumn("rn", row_number().over(
-        Window.partitionBy(col("query_id"), bEx)
-          .orderBy(col("score_q").desc, col("doc_id").asc)))
-      .where(col("rn") <= topK).drop("rn")
-    val oldBT = bucketTop.view(affB).consolidate.df
-      .select("query_id", "doc_id", "score_q")
-    val btDelta = (ZSetFrame.fromTable(newBT)
-      - ZSetFrame.fromTable(oldBT)).consolidate.localCheckpoint()
-    // level 2: per-query global top-k over the ≤ |Q|·nBuckets·k per-bucket
-    // winners — a dimension-sized trace (the per-query window sorts winner
-    // rows, never data)
-    val cand = (bucketTop.view(0 until nBuckets) + btDelta).consolidate.df
-      .select("query_id", "doc_id", "score_q")
-    val newTop = cand.withColumn("rnk", row_number().over(
-        Window.partitionBy(col("query_id"))
-          .orderBy(col("score_q").desc, col("doc_id").asc)))
-      .where(col("rnk") <= topK)
-    val oldTop = topIdx.view(0 until nBuckets).consolidate.df
-      .select("query_id", "doc_id", "score_q", "rnk")
-    // topIdx's touched span cannot ride affB: a displaced former winner can
-    // live in an untouched bucket — it must come from the (tiny) replacement
-    // delta itself, which Screened.replacementDelta hands over for free on
-    // the delta's own eager checkpoint (VERDICT r13 #2).
-    // 5b. emission ∥ stat (r18): the emission no longer reads any driver
-    //     constant (its tables are the cluster-side ones from step 1), so
-    //     the ≤|U|+1-row stat collect — ΔN/ΔT/Δdf for the next step's
-    //     literals, the dl-contract check (ADVICE r13), and the durable
-    //     sidecar — runs CONCURRENTLY with it over the pinned delta
-    //     (Screened.inParallel): the step pays max(emission, stat), not
-    //     their sum. The contract check still lands BEFORE any trace
-    //     merge, so a violating delta leaves every trace untouched,
-    //     exactly as before. (The OTHER contract — a doc's posting set
-    //     shipped at most once per polarity — stays UNCHECKED: detecting
-    //     a duplicate shipment needs a per-(doc,term) groupBy over the
-    //     delta, a second shuffle this path deliberately avoids; callers
-    //     own it, as the reference's upsert sources own key uniqueness.)
-    var emitted: (ZSetFrame, Seq[Int]) = null
-    var statRows: Array[org.apache.spark.sql.Row] = null
-    Screened.inParallel(
-      ("emission", () => { emitted = Screened.replacementDelta(
-        newTop, oldTop, "doc_id", nBuckets); () }),
-      ("stat", () => {
+    Frame(screened, dU.df.select("doc_id"), Seq(d, ddf)) { (affected, affB) =>
+      // 4. rescore the affected docs under the NEW constants over (pre-merge
+      //    view ⊕ pinned delta), fanned out to matching queries by the
+      //    broadcast (query_id, term) dimension. A fully retracted doc (or a
+      //    (query, doc) pair whose last matching posting left) yields no
+      //    row, so its old score is retracted by the replacement delta;
+      //    unaffected-query rows of an affected doc cancel in the Z-set
+      //    minus. The whole two-level top-k cascade below is ONE output
+      //    action (the emission checkpoint): the intermediate replacement
+      //    deltas (scDelta, btDelta) are LAZILY checkpointed, so the action
+      //    pins them as it runs and the trace merges read pinned blocks
+      //    instead of recomputing the cascade. The rescore's constants are
+      //    the SAME cluster-side tables the screen used — identical values
+      //    and the identical IEEE sequence — which is what frees the
+      //    emission from waiting on the stat collect.
+      val rows = (qIdx.view(affB) + dU).consolidate.df
+        .join(affected, Seq("doc_id"))
+      val newScores = scoresOf(rows,
+        dfTab.select(col("term"), col("df_new").as("df")), ntNew)
+      val oldScores = scoreIdx.view(affB).consolidate.df
+        .join(affected, Seq("doc_id"))
+        .select("query_id", "doc_id", "score_q")
+      val scDelta = (ZSetFrame.fromTable(newScores)
+        - ZSetFrame.fromTable(oldScores)).consolidate.localCheckpoint()
+      // level 1 for exactly the touched buckets — O(touched bucket rows)
+      val newBT = bucketTopOf(
+        (scoreIdx.view(affB) + scDelta).consolidate.df)
+      val oldBT = bucketTop.view(affB).consolidate.df
+        .select("query_id", "doc_id", "score_q")
+      val btDelta = (ZSetFrame.fromTable(newBT)
+        - ZSetFrame.fromTable(oldBT)).consolidate.localCheckpoint()
+      // level 2 over the ≤ |Q|·nBuckets·k per-bucket winners — a
+      // dimension-sized trace (the per-query window sorts winner rows,
+      // never data)
+      val newTop = globalTopOf(
+        (bucketTop.view(0 until nBuckets) + btDelta).consolidate.df)
+      val oldTop = topIdx.view(0 until nBuckets).consolidate.df
+        .select("query_id", "doc_id", "score_q", "rnk")
+      // 5. emission ∥ stat (r18): the emission reads no driver constant,
+      //    so the ≤|U|+1-row stat collect — ΔN/ΔT/Δdf for the next step's
+      //    literals, the dl-contract check (ADVICE r13), and the durable
+      //    sidecar — runs CONCURRENTLY with it over the pinned delta and
+      //    ddf. Its driver-side effect lands only after both succeed and
+      //    BEFORE any trace merge, so a violating delta leaves every trace
+      //    untouched. (The OTHER contract — a doc's posting set shipped at
+      //    most once per polarity — stays UNCHECKED: detecting a duplicate
+      //    shipment needs a per-(doc,term) groupBy over the delta, a second
+      //    shuffle this path deliberately avoids; callers own it, as the
+      //    reference's upsert sources own key uniqueness.)
+      val stat = () => {
         val docAgg = docRows
           .agg(coalesce(sum(col(W)), lit(0L)).as("a"),
             coalesce(sum(col("dl") * col(W)), lit(0L)).as("b"),
             coalesce(sum(col("ndl") - lit(1L)), lit(0L)).as("viol"))
           .select(lit(null).cast("string").as("term"), col("a"), col("b"),
             col("viol"))
-        val ddfAgg = d.where(col("term").isin(ulits: _*))
-          .groupBy("term").agg(sum(col(W)).as("a"))
-          .where(col("a") =!= 0L)
-          .select(col("term"), col("a"), lit(0L).as("b"), lit(0L).as("viol"))
-        statRows = docAgg.unionByName(ddfAgg).collect(); () }))
-    val (out, outB) = emitted
-    statRows.foreach { r =>
-      if (r.isNullAt(0)) {
-        require(r.getLong(3) == 0L,
-          "graft: Bm25 step contract violated — a (doc_id, w) pair in " +
-            "the delta carries more than one distinct dl; N/T maintenance " +
-            "would be silently corrupted")
-        nDocs += r.getLong(1); tToks += r.getLong(2)
-      } else
-        dfU(r.getString(0)) = dfU.getOrElse(r.getString(0), 0L) + r.getLong(1)
+        val ddfAgg = ddf.where(col("ddf") =!= 0L)
+          .select(col("term"), col("ddf").as("a"), lit(0L).as("b"),
+            lit(0L).as("viol"))
+        val statRows = docAgg.unionByName(ddfAgg).collect()
+        () => statRows.foreach { r =>
+          if (r.isNullAt(0)) {
+            require(r.getLong(3) == 0L,
+              "graft: Bm25 step contract violated — a (doc_id, w) pair in " +
+                "the delta carries more than one distinct dl; N/T " +
+                "maintenance would be silently corrupted")
+            nDocs += r.getLong(1); tToks += r.getLong(2)
+          } else
+            dfU(r.getString(0)) =
+              dfU.getOrElse(r.getString(0), 0L) + r.getLong(1)
+        }
+      }
+      // 6. merges: dU by the affected action, scDelta/btDelta by the
+      //    emission action are all pinned; affB is a superset of the
+      //    delta's span (correct by merge's contract), and the durable
+      //    mirror replays the posting merge
+      Rescored(newTop, oldTop, Seq(
+          Merge("q", qIdx, dU, Some(affB), mirrored = true),
+          Merge("score", scoreIdx, scDelta, Some(affB)),
+          Merge("bucket", bucketTop, btDelta, Some(affB))),
+        pins = Seq(scDelta.df, btDelta.df), alongside = Some(stat))
     }
-    // 6. trace maintenance, ALL CONCURRENT (Screened.inParallel — the
-    //    generalized aggStep fusion): every merge input is pinned (dU by
-    //    the affected action, scDelta/btDelta by the emission action, out by
-    //    its own checkpoint), every state is independent, so the step pays
-    //    max(merges) instead of four sequential barriers. All four merge in
-    //    APPEND mode — readers consolidate their views, so the spine's
-    //    weight-split rows are invisible and periodic compaction collapses
-    //    them; each merge is one O(Δ) routing job. The durable mirror
-    //    (when present) rides the same block: INTENT lands first
-    //    (driver-side marker), the trace merge runs with its peers, and
-    //    the commit sidecar stays strictly after every merge (affB is a
-    //    superset of the delta's span — correct by merge's contract).
-    durIdx.foreach(_.intend(stepGen + 1))
-    Screened.inParallel(
-      (Seq[(String, () => Unit)](
-        ("q-merge", () => { qIdx.merge(dU, checkpointDelta = false,
-          knownTouched = Some(affB), append = true); () }),
-        ("score-merge", () => { scoreIdx.merge(scDelta,
-          checkpointDelta = false, knownTouched = Some(affB),
-          append = true); () }),
-        ("bucket-merge", () => { bucketTop.merge(btDelta,
-          checkpointDelta = false, knownTouched = Some(affB),
-          append = true); () }),
-        ("top-merge", () => { topIdx.merge(out, checkpointDelta = false,
-          knownTouched = Some(outB), append = true); () })) ++
-        durIdx.map(m => ("durable-merge",
-          () => { m.merge(dU, knownTouched = Some(affB)); () }))): _*)
-    prevStepPins = Seq(d, affected, scDelta.df, btDelta.df)
-    // 7. durable COMMIT point: the constants sidecar (atomic rename) lands
-    //    LAST, with gen == the intent's — see the DurableMirror protocol
-    stepGen += 1
-    durIdx.foreach(_.commit(stepGen,
-      MultiBm25State.constsOf(nDocs, tToks, dfU.toMap, qsets, topK, grid)))
-    out
-  }
-
-  def close(): Unit = {
-    prevStepPins.foreach(Pinned.release)
-    prevStepPins = Nil
-    qIdx.close(); scoreIdx.close(); bucketTop.close(); topIdx.close()
   }
 
   /** Rebuild the derived indexes (scoreIdx / bucketTop / topIdx) from the
@@ -407,37 +340,21 @@ final class MultiBm25State(emptyPosting: ZSetFrame,
     * the integrated pre-restart output). */
   private def rebuildDerived(): Unit = {
     import spark.implicits._
-    val all: Option[Seq[Int]] = Some(0 until nBuckets) // full rebuild: no discovery jobs
-    val dfNewTab = uterms.map(t => (t, dfU.getOrElse(t, 0L))).toDF("term", "df")
-    val rows = qIdx.view(0 until nBuckets).consolidate.df
-    val newScores = rows.join(broadcast(dfNewTab), Seq("term"))
-      .join(broadcast(qtTab), Seq("term"))
-      .select(col("query_id"), col("doc_id"),
-        Bm25.sq(col("tf"), col("dl"), col("df"),
-          lit(nDocs), lit(tToks), grid).as("sq"))
-      .groupBy("query_id", "doc_id").agg(sum(col("sq")).as("score_q"))
-    scoreIdx.merge(ZSetFrame.fromTable(newScores), knownTouched = all)
-    val bEx = pmod(hash(col("doc_id")), lit(nBuckets))
-    val newBT = scoreIdx.view(0 until nBuckets).consolidate.df
-      .select("query_id", "doc_id", "score_q")
-      .withColumn("rn", row_number().over(
-        Window.partitionBy(col("query_id"), bEx)
-          .orderBy(col("score_q").desc, col("doc_id").asc)))
-      .where(col("rn") <= topK).drop("rn")
-    bucketTop.merge(ZSetFrame.fromTable(newBT), knownTouched = all)
-    val cand = bucketTop.view(0 until nBuckets).consolidate.df
-      .select("query_id", "doc_id", "score_q")
-    val newTop = cand.withColumn("rnk", row_number().over(
-        Window.partitionBy(col("query_id"))
-          .orderBy(col("score_q").desc, col("doc_id").asc)))
-      .where(col("rnk") <= topK)
-    topIdx.merge(ZSetFrame.fromTable(newTop), knownTouched = all)
+    val all = 0 until nBuckets // full rebuild: no discovery jobs
+    val dfTab = uterms.map(t => (t, dfU.getOrElse(t, 0L))).toDF("term", "df")
+    val nt = Seq((nDocs, tToks)).toDF("n_new", "t_new")
+    scoreIdx.merge(ZSetFrame.fromTable(scoresOf(
+        qIdx.view(all).consolidate.df, dfTab, nt)), knownTouched = Some(all))
+    bucketTop.merge(ZSetFrame.fromTable(bucketTopOf(
+        scoreIdx.view(all).consolidate.df)), knownTouched = Some(all))
+    topIdx.merge(ZSetFrame.fromTable(globalTopOf(
+        bucketTop.view(all).consolidate.df)), knownTouched = Some(all))
   }
 }
 
 object MultiBm25State {
-  private[incremental] val ConstsFile = "_graft_bm25_consts.txt"
-  private[incremental] val IntentFile = "_graft_bm25_intent.txt"
+  private[incremental] val Files = ScreenedState.MirrorFiles(
+    "_graft_bm25_intent.txt", "_graft_bm25_consts.txt", "retrieval")
 
   private def qsetsSig(qsets: Seq[(String, Seq[String])]): String =
     qsets.map { case (q, ts) => s"$q:${ts.mkString("|")}" }.mkString(";")
@@ -452,46 +369,38 @@ object MultiBm25State {
       df.toSeq.sortBy(_._1).map { case (k, v) => s"df.$k" -> v.toString }
 
   /** Re-attach to a durable retrieval state written by a
-    * `durablePath`-enabled instance — the recovery path (a fresh driver
-    * resumes the CDC replay where the last COMMITTED step left off): the
-    * posting trace comes back through [[DurableKeyedState.restore]] and is
-    * bulk-loaded into a fresh in-memory spine, the constants come from the
-    * sidecar, and the derived indexes are rebuilt from scratch (exact —
-    * see `rebuildDerived`). The standing query sets must match the writer's
-    * (the sidecar records their signature); `restored.committedGen` tells
-    * the CDC source which deltas to replay. */
+    * `durablePath`-enabled instance (see [[ScreenedState.restore]]): the
+    * posting trace is bulk-loaded into a fresh in-memory spine, the
+    * constants come from the sidecar, and the derived indexes are rebuilt
+    * from scratch (exact — see `rebuildDerived`). The standing query sets
+    * must match the writer's (the sidecar records their signature);
+    * `restored.committedGen` tells the CDC source which deltas to replay. */
   def restore(spark: org.apache.spark.sql.SparkSession, path: String,
               qsets: Seq[(String, Seq[String])], nBuckets: Int,
-              topK: Int = 10, grid: Double = 1e6): MultiBm25State = {
-    // torn-step detection + trace re-attach live in the shared protocol
-    // (DurableMirror, VERDICT r16 #4); the state-identity validations
-    // below are this state's own constants codec
-    val (mirror, kv) = DurableMirror.attach(spark, path, nBuckets,
-      IntentFile, ConstsFile, "retrieval")
-    require(kv("qsets") == qsetsSig(qsets),
-      "graft: MultiBm25State.restore qsets do not match the durable " +
-        s"state's (stored ${kv("qsets")}) — the trace is restricted to the " +
-        "writer's union term set; attach with the same standing queries")
-    // grid/topK are part of the state's identity: a restore under a
-    // different quantization (or k) would rebuild scores that never cancel
-    // against the consumer's integrated pre-restart output (code-review r16)
-    require(kv.get("topK").forall(_.toInt == topK) &&
-        kv.get("grid").forall(_.toDouble == grid),
-      s"graft: MultiBm25State.restore topK/grid ($topK/$grid) do not match " +
-        s"the durable state's (${kv.get("topK")}/${kv.get("grid")})")
-    val snapshot = mirror.dur.snapshot.consolidate
-    val st = new MultiBm25State(
-      ZSetFrame.fromDelta(snapshot.df.where(org.apache.spark.sql.functions.lit(false))),
-      qsets, nBuckets, topK, grid, mirror)
-    st.nDocs = kv("nDocs").toLong
-    st.tToks = kv("tToks").toLong
-    kv.foreach { case (k, v) =>
-      if (k.startsWith("df.")) st.dfU(k.drop(3)) = v.toLong }
-    st.stepGen = kv("gen").toLong
-    st.qIdx.merge(snapshot)
-    st.rebuildDerived()
-    st
-  }
+              topK: Int = 10, grid: Double = 1e6): MultiBm25State =
+    ScreenedState.restore(spark, path, nBuckets, Files) { (empty, kv) =>
+      require(kv("qsets") == qsetsSig(qsets),
+        "graft: MultiBm25State.restore qsets do not match the durable " +
+          s"state's (stored ${kv("qsets")}) — the trace is restricted to " +
+          "the writer's union term set; attach with the same standing " +
+          "queries")
+      // grid/topK are part of the state's identity: a restore under a
+      // different quantization (or k) would rebuild scores that never
+      // cancel against the consumer's integrated pre-restart output
+      require(kv.get("topK").forall(_.toInt == topK) &&
+          kv.get("grid").forall(_.toDouble == grid),
+        s"graft: MultiBm25State.restore topK/grid ($topK/$grid) do not " +
+          s"match the durable state's (${kv.get("topK")}/${kv.get("grid")})")
+      val st = new MultiBm25State(empty, qsets, nBuckets, topK, grid)
+      st.nDocs = kv("nDocs").toLong
+      st.tToks = kv("tToks").toLong
+      kv.foreach { case (k, v) =>
+        if (k.startsWith("df.")) st.dfU(k.drop(3)) = v.toLong }
+      st
+    } { (st, snapshot) =>
+      st.qIdx.merge(snapshot)
+      st.rebuildDerived()
+    }
 }
 
 /** Incrementally maintained BM25-surrogate top-k retrieval for a FIXED

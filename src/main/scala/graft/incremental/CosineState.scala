@@ -115,8 +115,10 @@ final class CosineState(emptyTf: ZSetFrame,
                           * also freezes rare-term floors). */
                         val idfCap: Long = 64L,
                         /** Cosine output grid (cos_q = floor(cos·grid)). */
-                        val grid: Double = 1e6) {
+                        val grid: Double = 1e6)
+    extends ScreenedState(nBuckets, None) {
   import ZSetFrame.W
+  import ScreenedState.{Frame, Merge, Rescored}
 
   require(cents.nonEmpty && cents.forall(_._2.forall(_._2 > 0L)),
     "graft: CosineState centroids must be non-empty with positive weights " +
@@ -129,10 +131,12 @@ final class CosineState(emptyTf: ZSetFrame,
     * the granularity of df maintenance. */
   val uterms: Seq[String] = cents.flatMap(_._2.map(_._1)).distinct
 
-  private val postIdx = new KeyedState(Seq("doc_id"), nBuckets, emptyTf)
-  private val simIdx = new KeyedState(Seq("doc_id"), nBuckets,
+  private val postIdx = index(Seq("doc_id"), nBuckets, emptyTf)
+  private val simIdx = index(Seq("doc_id"), nBuckets,
     ZSetFrame.fromDelta(emptyTf.df.select(col("doc_id"),
       lit("").as("cid"), lit(0L).as("cos_q"), col(W))))
+
+  protected def answer: KeyedState = simIdx
 
   // the centroid dimension — built once, broadcast into every rescore;
   // nc2 = Σ cw² is FIXED (the design invariant)
@@ -162,7 +166,7 @@ final class CosineState(emptyTf: ZSetFrame,
     * Maintained by the same O(Δ∩U) spine-append every step, concurrent
     * with its peers — no extra barrier; storage doubles the U-restricted
     * posting bytes, the price TfIdfState already pays for two-way keying. */
-  private val termIdx = new KeyedState(Seq("term"), nBuckets, emptyTf)
+  private val termIdx = index(Seq("term"), nBuckets, emptyTf)
 
   /** Diagnostic: bucket ids the last step's screen actually scanned —
     * since r18 these are TERM-keyed bucket ids of the crossed terms
@@ -179,12 +183,6 @@ final class CosineState(emptyTf: ZSetFrame,
     if (n <= 0L || df <= 0L) Long.MinValue
     else math.min(Math.floorDiv(idfGrid * n, df), idfGrid * idfCap)
 
-  /** Diagnostic: last step's affected-doc set (pinned; the law test counts
-    * it to certify the screening prunes — affected ≪ docs-with-U-terms on
-    * steps whose constant drift stays inside the idf grid). */
-  private[graft] var lastAffected: DataFrame = _
-  private var prevStepPins: Seq[DataFrame] = Nil
-
   private def ulits: Seq[Any] = uterms.map(_.asInstanceOf[Any])
 
   /** One step. `delta` holds consolidated (doc_id, term, tf) posting rows
@@ -196,9 +194,7 @@ final class CosineState(emptyTf: ZSetFrame,
     * once) and released with the next step's prologue. Returns the
     * −old/+new per-doc assignment replacement delta; the emitted rows
     * integrate to (doc_id, cid, cos_q) over docs holding ≥1 U-term. */
-  def step(delta: ZSetFrame): ZSetFrame = {
-    prevStepPins.foreach(Pinned.release)
-    prevStepPins = Nil
+  def step(delta: ZSetFrame): ZSetFrame = runStep {
     // 0. pin the delta once — the stat action, the index append and the
     //    affected set all read this one materialization. LAZY since r17:
     //    the stat action below is the step's first job and materializes it
@@ -261,74 +257,47 @@ final class CosineState(emptyTf: ZSetFrame,
       else termIdx.view(screenSpan).consolidate.df
         .join(broadcast(crossed.toDF("term")), Seq("term"))
         .select("doc_id")
-    val (affected, affB) = Screened.affectedKeys(screened,
-      ut.select("doc_id"), "doc_id", nBuckets)
-    lastAffected = affected
-    // 4. rescore the affected docs under the NEW constants BEFORE the trace
-    //    merge, over (pre-merge view ⊕ pinned delta) — identical rows to
-    //    the post-merge view (an append merge adds exactly the delta; the
-    //    consolidate absorbs weight splits), freeing both merges to run
-    //    concurrently after the one emission action (r17): the ≤|U|-row iq
-    //    table is driver-computed and broadcast with the centroid
-    //    dimension — integer sums per (doc, cid), then the one shared IEEE
-    //    sequence per scored pair. A fully retracted doc yields no row, so
-    //    its old assignment is retracted by the replacement delta.
-    val iqTab = uterms.flatMap { t =>
-      val v = iqOf(nDocs, dfU.getOrElse(t, 0L))
-      if (v == Long.MinValue) None else Some((t, v))
-    }.toDF("term", "iq")
-    val rows = (postIdx.view(affB) + ZSetFrame.fromDelta(ut)).consolidate.df
-      .join(affected, Seq("doc_id"))
-      .join(broadcast(iqTab), Seq("term"))
-      .select(col("doc_id"), col("term"), (col("tf") * col("iq")).as("dvq"))
-    val nd = rows.groupBy("doc_id")
-      .agg(sum(col("dvq") * col("dvq")).as("nd2"))
-    val dt = rows.join(broadcast(centTab), Seq("term"))
-      .groupBy("doc_id", "cid", "nc2")
-      .agg(sum(col("dvq") * col("cw")).as("dot"))
-    val scored = dt.join(nd, Seq("doc_id"))
-      .select(col("doc_id"), col("cid"),
-        floor(col("dot").cast("double")
-          / (sqrt(col("nd2").cast("double")) * sqrt(col("nc2").cast("double")))
-          * lit(grid)).cast("long").as("cos_q"))
-    val newTop = scored.withColumn("rn", row_number().over(
-        Window.partitionBy("doc_id")
-          .orderBy(col("cos_q").desc, col("cid").asc)))
-      .where(col("rn") === 1)
-      .select("doc_id", "cid", "cos_q")
-    val oldTop = simIdx.view(affB).consolidate.df
-      .join(affected, Seq("doc_id"))
-      .select("doc_id", "cid", "cos_q")
-    // 5. the emitted replacement delta IS the assignment index's
-    //    maintenance; its span rides the emission checkpoint (per-doc
-    //    rows: a replaced row lives in its doc's bucket, so outB ⊆ affB)
-    val (out, outB) = Screened.replacementDelta(newTop, oldTop,
-      "doc_id", nBuckets)
-    // 6. trace maintenance, CONCURRENT (Screened.inParallel): the two
-    //    posting appends (doc- and term-keyed) and the assignment merge
-    //    read only pinned inputs and hit independent states — the step
-    //    pays max(merges), and with the lazy delta pin the quiet-step
-    //    shape is stat → affected → emission → merges: 4 barriers. The
-    //    termIdx merge routes by the delta's own U-term list (stat rows →
-    //    driver-hashed buckets — no discovery job). simIdx appends too —
-    //    its readers consolidate, periodic compaction collapses the spine.
-    val deltaTermB = KeyedState.bucketsOfStringKeys(deltaTerms, nBuckets)
-    Screened.inParallel(
-      ("post-merge", () => { postIdx.merge(ZSetFrame.fromDelta(ut),
-        checkpointDelta = false, knownTouched = Some(affB),
-        append = true); () }),
-      ("term-merge", () => { termIdx.merge(ZSetFrame.fromDelta(ut),
-        checkpointDelta = false, knownTouched = Some(deltaTermB),
-        append = true); () }),
-      ("sim-merge", () => { simIdx.merge(out, checkpointDelta = false,
-        knownTouched = Some(outB), append = true); () }))
-    prevStepPins = Seq(d, affected)
-    out
-  }
-
-  def close(): Unit = {
-    prevStepPins.foreach(Pinned.release)
-    prevStepPins = Nil
-    postIdx.close(); termIdx.close(); simIdx.close()
+    Frame(screened, ut.select("doc_id"), Seq(d)) { (affected, affB) =>
+      // 4. rescore the affected docs under the NEW constants over
+      //    (pre-merge view ⊕ pinned delta): the ≤|U|-row iq table is
+      //    driver-computed and broadcast with the centroid dimension —
+      //    integer sums per (doc, cid), then the one shared IEEE sequence
+      //    per scored pair. A fully retracted doc yields no row, so its old
+      //    assignment is retracted by the replacement delta.
+      val iqTab = uterms.flatMap { t =>
+        val v = iqOf(nDocs, dfU.getOrElse(t, 0L))
+        if (v == Long.MinValue) None else Some((t, v))
+      }.toDF("term", "iq")
+      val rows = (postIdx.view(affB) + ZSetFrame.fromDelta(ut)).consolidate.df
+        .join(affected, Seq("doc_id"))
+        .join(broadcast(iqTab), Seq("term"))
+        .select(col("doc_id"), col("term"), (col("tf") * col("iq")).as("dvq"))
+      val nd = rows.groupBy("doc_id")
+        .agg(sum(col("dvq") * col("dvq")).as("nd2"))
+      val dt = rows.join(broadcast(centTab), Seq("term"))
+        .groupBy("doc_id", "cid", "nc2")
+        .agg(sum(col("dvq") * col("cw")).as("dot"))
+      val scored = dt.join(nd, Seq("doc_id"))
+        .select(col("doc_id"), col("cid"),
+          floor(col("dot").cast("double")
+            / (sqrt(col("nd2").cast("double")) * sqrt(col("nc2").cast("double")))
+            * lit(grid)).cast("long").as("cos_q"))
+      val newTop = scored.withColumn("rn", row_number().over(
+          Window.partitionBy("doc_id")
+            .orderBy(col("cos_q").desc, col("cid").asc)))
+        .where(col("rn") === 1)
+        .select("doc_id", "cid", "cos_q")
+      val oldTop = simIdx.view(affB).consolidate.df
+        .join(affected, Seq("doc_id"))
+        .select("doc_id", "cid", "cos_q")
+      // the two posting appends (doc- and term-keyed); with the lazy delta
+      // pin the quiet-step shape is stat → affected → emission → merges:
+      // 4 barriers. The termIdx merge routes by the delta's own U-term list
+      // (stat rows → driver-hashed buckets — no discovery job).
+      Rescored(newTop, oldTop, Seq(
+        Merge("post", postIdx, ZSetFrame.fromDelta(ut), Some(affB)),
+        Merge("term", termIdx, ZSetFrame.fromDelta(ut),
+          Some(KeyedState.bucketsOfStringKeys(deltaTerms, nBuckets)))))
+    }
   }
 }

@@ -21,7 +21,7 @@ import graft.core.ZSetFrame
   * role BM25's query terms play: the state is restricted to it.
   *
   * The third SCREENED state (VERDICT r14 #4 — the proof that
-  * [[Screened]] is an abstraction, not a two-instance coincidence), with a
+  * [[ScreenedState]] is an abstraction, not a two-instance coincidence), with a
   * twist that makes it the DEGENERATE-coupling corner of the family: in
   * TF-IDF the screen predicate needs per-posting data (tf); in BM25 it
   * needs per-posting tf AND dl; in PMI the score of a pair is a function
@@ -54,7 +54,7 @@ import graft.core.ZSetFrame
   *     crossed list ONLY on steps where some pair's floor crossed.
   *   - O(affected) rescore: affected = crossed-pair docs ∪ delta docs,
   *     partition-pruned by the bucket span riding the checkpoint
-  *     ([[Screened.affectedKeys]]); the per-pair pmi_q values are computed
+  *     ([[ScreenedState]]); the per-pair pmi_q values are computed
   *     ON THE DRIVER (≤|U|² of them) and broadcast — the rescore is a
   *     broadcast join + per-doc sum, no float ops per posting.
   *
@@ -95,17 +95,21 @@ final class PmiState(emptyTerms: ZSetFrame, val terms: Seq[String],
                        * At 1e6 every step crosses and the screen never
                        * prunes. Tests shrink it further to reach the
                        * pruning regime at toy corpus sizes. */
-                     val grid: Double = 1e4) {
+                     val grid: Double = 1e4)
+    extends ScreenedState(nBuckets, None) {
   import ZSetFrame.W
+  import ScreenedState.{Frame, Merge, Rescored}
 
   private val spark = emptyTerms.spark
 
-  private val pairIdx = new KeyedState(Seq("doc_id"), nBuckets,
+  private val pairIdx = index(Seq("doc_id"), nBuckets,
     ZSetFrame.fromDelta(emptyTerms.df.select(col("doc_id"),
       lit("").as("ta"), lit("").as("tb"), col(W))))
-  private val scoreIdx = new KeyedState(Seq("doc_id"), nBuckets,
+  private val scoreIdx = index(Seq("doc_id"), nBuckets,
     ZSetFrame.fromDelta(emptyTerms.df.select(col("doc_id"),
       lit(0L).as("n_pairs"), lit(0L).as("score_q"), col(W))))
+
+  protected def answer: KeyedState = scoreIdx
 
   // driver-held constants, advanced O(Δ) per step: N, the |U| term doc
   // frequencies, the ≤C(|U|,2) pair doc frequencies
@@ -120,12 +124,6 @@ final class PmiState(emptyTerms: ZSetFrame, val terms: Seq[String],
   private def pq(n: Long, cabV: Long, caV: Long, cbV: Long): Long =
     if (n <= 0L || cabV <= 0L || caV <= 0L || cbV <= 0L) Long.MinValue
     else math.floor((n * cabV).toDouble / (caV * cbV).toDouble * grid).toLong
-
-  /** Diagnostic: last step's affected-doc set (pinned; the law test counts
-    * it to certify the screening prunes — affected ≪ docs-with-pairs on
-    * steps whose constant drift stays inside the quantization grid). */
-  private[graft] var lastAffected: DataFrame = _
-  private var prevStepPins: Seq[DataFrame] = Nil
 
   private def tlits: Seq[Any] = terms.map(_.asInstanceOf[Any])
 
@@ -152,14 +150,12 @@ final class PmiState(emptyTerms: ZSetFrame, val terms: Seq[String],
     * structural). Returns the −old/+new per-doc score replacement delta;
     * the emitted rows integrate to (doc_id, n_pairs, score_q) over docs
     * holding ≥1 target pair. */
-  def step(delta: ZSetFrame): ZSetFrame = {
-    prevStepPins.foreach(Pinned.release)
-    prevStepPins = Nil
-    // 1. the delta's target-pair rows — eagerly pinned; reused by the stat
-    //    action, the index append, and the affected set (three consumers,
-    //    one materialization). The join keys on (doc_id, w): a CDC update
-    //    delta carries a doc at BOTH polarities, and the old set's pairs
-    //    (−1) must not cross with the new set's (+1).
+  def step(delta: ZSetFrame): ZSetFrame = runStep {
+    // 1. the delta's target-pair rows — pinned; reused by the stat action,
+    //    the index append, and the affected set (three consumers, one
+    //    materialization). The join keys on (doc_id, w): a CDC update delta
+    //    carries a doc at BOTH polarities, and the old set's pairs (−1) must
+    //    not cross with the new set's (+1).
     val ut = delta.df.where(col("term").isin(tlits: _*))
     val right = ut.select(col("doc_id"), col(W), col("term").as("tb2"))
     val pairDelta = ut.join(right, Seq("doc_id", W))
@@ -225,54 +221,29 @@ final class PmiState(emptyTerms: ZSetFrame, val terms: Seq[String],
       else pairIdx.view(0 until nBuckets).consolidate.df
         .join(broadcast(crossed.toDF("ta", "tb")), Seq("ta", "tb"))
         .select("doc_id")
-    val (affected, affB) = Screened.affectedKeys(screened,
-      pairDelta.select("doc_id"), "doc_id", nBuckets)
-    lastAffected = affected
-    // 5. rescore the affected docs BEFORE the trace merge, over (pre-merge
-    //    view ⊕ pinned pairDelta) — identical rows to the post-merge view
-    //    (an append merge adds exactly the delta; the consolidate absorbs
-    //    weight splits), freeing both merges to run concurrently after the
-    //    one emission action (r17): the per-pair pmi_q values under the
-    //    NEW constants are computed driver-side (≤C(|U|,2) of them) and
-    //    broadcast — the rescore is a partition-pruned scan + broadcast
-    //    join + per-doc sum; a fully retracted doc yields no row, so its
-    //    old score is retracted by the replacement delta
-    val pcTab = cab.toSeq.collect { case ((a, b), c) if c > 0L =>
-      (a, b, pq(nDocs, c, ca.getOrElse(a, 0L), ca.getOrElse(b, 0L)))
-    }.toDF("ta", "tb", "pq")
-    val rows = (pairIdx.view(affB) + ZSetFrame.fromDelta(pairDelta))
-      .consolidate.df.join(affected, Seq("doc_id"))
-    val newScores = rows.join(broadcast(pcTab), Seq("ta", "tb"))
-      .groupBy("doc_id")
-      .agg(count(lit(1)).as("n_pairs"), sum(col("pq")).as("score_q"))
-      .select("doc_id", "n_pairs", "score_q")
-    val oldScores = scoreIdx.view(affB).consolidate.df
-      .join(affected, Seq("doc_id"))
-      .select("doc_id", "n_pairs", "score_q")
-    // 6. the emitted replacement delta IS the score index's maintenance;
-    //    its span rides the emission checkpoint (per-doc scores: a
-    //    replaced row lives in its doc's bucket, so outB ⊆ affB)
-    val (out, outB) = Screened.replacementDelta(newScores, oldScores,
-      "doc_id", nBuckets)
-    // 7. trace maintenance, CONCURRENT (Screened.inParallel): both merges
-    //    read only pinned inputs and hit independent states — the step pays
-    //    max(merges); with the lazy pairDelta pin the quiet-step shape is
-    //    stat → affected → emission → merges: 4 barriers (was 6). scoreIdx
-    //    appends — its readers consolidate, periodic compaction collapses
-    //    the spine.
-    Screened.inParallel(
-      ("pair-merge", () => { pairIdx.merge(ZSetFrame.fromDelta(pairDelta),
-        checkpointDelta = false, knownTouched = Some(affB),
-        append = true); () }),
-      ("score-merge", () => { scoreIdx.merge(out, checkpointDelta = false,
-        knownTouched = Some(outB), append = true); () }))
-    prevStepPins = Seq(pairDelta, affected)
-    out
-  }
-
-  def close(): Unit = {
-    prevStepPins.foreach(Pinned.release)
-    prevStepPins = Nil
-    pairIdx.close(); scoreIdx.close()
+    Frame(screened, pairDelta.select("doc_id"), Seq(pairDelta)) { (affected, affB) =>
+      // 5. rescore the affected docs over (pre-merge view ⊕ pinned
+      //    pairDelta): the per-pair pmi_q values under the NEW constants
+      //    are computed driver-side (≤C(|U|,2) of them) and broadcast — the
+      //    rescore is a partition-pruned scan + broadcast join + per-doc
+      //    sum; a fully retracted doc yields no row, so its old score is
+      //    retracted by the replacement delta
+      val pcTab = cab.toSeq.collect { case ((a, b), c) if c > 0L =>
+        (a, b, pq(nDocs, c, ca.getOrElse(a, 0L), ca.getOrElse(b, 0L)))
+      }.toDF("ta", "tb", "pq")
+      val rows = (pairIdx.view(affB) + ZSetFrame.fromDelta(pairDelta))
+        .consolidate.df.join(affected, Seq("doc_id"))
+      val newScores = rows.join(broadcast(pcTab), Seq("ta", "tb"))
+        .groupBy("doc_id")
+        .agg(count(lit(1)).as("n_pairs"), sum(col("pq")).as("score_q"))
+        .select("doc_id", "n_pairs", "score_q")
+      val oldScores = scoreIdx.view(affB).consolidate.df
+        .join(affected, Seq("doc_id"))
+        .select("doc_id", "n_pairs", "score_q")
+      // with the lazy pairDelta pin the quiet-step shape is stat →
+      // affected → emission → merges: 4 barriers
+      Rescored(newScores, oldScores, Seq(
+        Merge("pair", pairIdx, ZSetFrame.fromDelta(pairDelta), Some(affB))))
+    }
   }
 }

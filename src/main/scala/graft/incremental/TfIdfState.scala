@@ -46,7 +46,8 @@ import graft.core.ZSetFrame
   * terms' postings, and a recompute sized to the affected docs — never the
   * corpus. Emitted deltas integrate to the batch answer (t12's DuckDB
   * oracle; IncrementalSpec gates mixed insert/retract sequences ≡ batch and
-  * that the screening is non-vacuous).
+  * that the screening is non-vacuous). The step lifecycle (pins, the
+  * concurrent merges, the durable protocol) is [[ScreenedState]]'s.
   */
 final class TfIdfState(emptyTf: ZSetFrame, val nBuckets: Int,
                        /** Quantization constant C in floor(tf·C/df). Coarse
@@ -56,41 +57,21 @@ final class TfIdfState(emptyTf: ZSetFrame, val nBuckets: Int,
                          * within a doc. Tests shrink it to force the
                          * pruning regime at toy corpus sizes. */
                        val C: Long = 10000L,
-                       /** DURABLE mirror of the posting set (VERDICT r16
-                         * #4 — the second Screened state on the shared
-                         * [[DurableMirror]] intent/commit protocol): when
-                         * set, every step also merges its full delta into
-                         * a doc-keyed disk-backed [[DurableKeyedState]]
-                         * and commits a constants sidecar. The postings +
-                         * C are the state's PRIMARY data; all four
-                         * in-memory traces are derivable — tfIdx/fwdIdx
-                         * are the postings keyed two ways, dfIdx is the
-                         * per-term presence count over them, top1 is the
-                         * batch argmax under the current df — and are
-                         * REBUILT at [[TfIdfState.restore]], bit-identical
-                         * by the screen's exactness induction (every
-                         * stored top-1 row equals a from-scratch batch
-                         * evaluation under the current constants). */
-                       durablePath: Option[String] = None) {
+                       /** DURABLE mirror of the posting set: when set, every
+                         * step also merges its full delta into a doc-keyed
+                         * disk-backed [[DurableKeyedState]] and commits C
+                         * as the constants sidecar. The postings + C are
+                         * the state's PRIMARY data; all four in-memory
+                         * traces are derivable — tfIdx/fwdIdx are the
+                         * postings keyed two ways, dfIdx is the per-term
+                         * presence count over them, top1 is the batch
+                         * argmax under the current df — and are REBUILT at
+                         * [[TfIdfState.restore]]. */
+                       durablePath: Option[String] = None)
+    extends ScreenedState(nBuckets,
+      durablePath.map(TfIdfState.Files.create(_, nBuckets, emptyTf))) {
   import ZSetFrame.W
-
-  private var durIdx: Option[DurableMirror] =
-    durablePath.map(p => DurableMirror.create(
-      p, Seq("doc_id"), nBuckets, emptyTf,
-      TfIdfState.IntentFile, TfIdfState.ConstsFile))
-
-  /** Restore-path constructor: ATTACH to an existing durable trace instead
-    * of create-resetting it (see [[TfIdfState.restore]]). */
-  private[incremental] def this(emptyTf: ZSetFrame, nBuckets: Int, C: Long,
-      dur: DurableMirror) = {
-    this(emptyTf, nBuckets, C, None)
-    durIdx = Some(dur)
-  }
-
-  /** Completed-step counter — the durable mirror's commit generation (the
-    * caller's ack watermark; see [[DurableMirror]]). */
-  private var stepGen = 0L
-  def committedGen: Long = stepGen
+  import ScreenedState.{Frame, Merge, Rescored}
 
   /** floor(tf·C/df) as EXACT integer arithmetic: (tf·C − (tf·C mod df)) is
     * divisible by df, so the IEEE division is integer/integer with an
@@ -110,11 +91,9 @@ final class TfIdfState(emptyTf: ZSetFrame, val nBuckets: Int,
     ((tfc - pmod(tfc, df)).cast("double") / df).cast("long")
   }
 
-  private val spark = emptyTf.spark
-
   // (term, doc_id, tf) postings keyed two ways, plus the two aggregates
-  private val tfIdx = new KeyedState(Seq("term"), nBuckets, emptyTf)
-  private val fwdIdx = new KeyedState(Seq("doc_id"), nBuckets, emptyTf)
+  private val tfIdx = index(Seq("term"), nBuckets, emptyTf)
+  private val fwdIdx = index(Seq("doc_id"), nBuckets, emptyTf)
   /** The df index is a DIMENSION (vocabulary-sized), so its bucket count is
     * CAPPED rather than corpus-proportional (r18): the rescore joins the
     * FULL df table every step (an affected doc's unaffected postings need
@@ -129,25 +108,28 @@ final class TfIdfState(emptyTf: ZSetFrame, val nBuckets: Int,
     * term spans no longer apply to this trace and the df reads fall back to
     * the full ≤ DimBuckets-wide dimension view. */
   private val nbDim = math.min(nBuckets, TfIdfState.DimBuckets)
-  private val dfIdx = new KeyedState(Seq("term"), nbDim,
+  private val dfIdx = index(Seq("term"), nbDim,
     ZSetFrame.fromDelta(emptyTf.df.select(col("term"), lit(0L).as("df"),
       col(W))))
-  private val top1 = new KeyedState(Seq("doc_id"), nBuckets,
+  private val top1 = index(Seq("doc_id"), nBuckets,
     ZSetFrame.fromDelta(emptyTf.df.select(col("doc_id"), col("term"),
       col("tf"), lit(0L).as("score_q"), col(W))))
 
-  /** Diagnostic: the affected-doc set of the last step (pinned; tests count
-    * it to certify the screening prunes — i.e. affected ≪ corpus on steps
-    * whose df drift stays inside the quantization grid). */
-  private[graft] var lastAffected: DataFrame = _
+  protected def answer: KeyedState = top1
+  override protected def consts: Seq[(String, String)] = Seq("c" -> C.toString)
 
-  /** The previous step's eager checkpoints (`moved`, `affected`). They must
-    * outlive their own step — the emitted output delta is consumed later —
-    * but not the NEXT one: without an explicit release the pinned blocks of
-    * every step accumulate across a long replay until driver GC happens to
-    * collect the RDDs (ADVICE r12). Released at the START of the following
-    * step and in close(), the KeyedState deferred-retire discipline. */
-  private var prevStepPins: Seq[DataFrame] = Nil
+  /** Per doc, the top term of its `postings` by (score_q desc, term asc)
+    * under the (term, df) table `df` — the step's rescore and the restore
+    * rebuild both score through here. */
+  private def top1Of(postings: DataFrame, df: DataFrame): DataFrame =
+    postings.join(df, Seq("term"))
+      .select(col("doc_id"), col("term"), col("tf"),
+        scoreQ(col("tf"), col("df")).as("score_q"))
+      .withColumn("rn", row_number().over(
+        Window.partitionBy("doc_id")
+          .orderBy(col("score_q").desc, col("term").asc)))
+      .where(col("rn") === 1)
+      .select("doc_id", "term", "tf", "score_q")
 
   /** One step. `delta` holds consolidated (doc_id, term, tf) rows with ±1
     * weights — a doc's full posting set on insert (+1) or retract (−1).
@@ -158,15 +140,12 @@ final class TfIdfState(emptyTf: ZSetFrame, val nBuckets: Int,
     * (doc_id, term, tf, score_q). */
   def step(delta: ZSetFrame,
            termBuckets: Option[Seq[Int]] = None,
-           docBuckets: Option[Seq[Int]] = None): ZSetFrame = {
-    // 0. retire the PREVIOUS step's eager checkpoints (see prevStepPins)
-    prevStepPins.foreach(Pinned.release)
-    prevStepPins = Nil
-    // 0b. LAZY-pin the delta (r17 — measured: with the raw plan, every
-    //     consumer job of a streaming step re-ran the caller's
-    //     tokenize+explode chain; the lazy checkpoint materializes inside
-    //     the step's FIRST action and every later job reads pinned blocks —
-    //     zero extra barriers, one delta evaluation)
+           docBuckets: Option[Seq[Int]] = None): ZSetFrame = runStep {
+    // LAZY-pin the delta (r17 — measured: with the raw plan, every consumer
+    // job of a streaming step re-ran the caller's tokenize+explode chain;
+    // the lazy checkpoint materializes inside the step's FIRST action and
+    // every later job reads pinned blocks — zero extra barriers, one delta
+    // evaluation)
     val d = ZSetFrame.fromDelta(delta.df.localCheckpoint(false))
     // 1. df movement per term this step (postings are unique per (doc,term),
     //    so presence weight == row weight)
@@ -184,9 +163,9 @@ final class TfIdfState(emptyTf: ZSetFrame, val nBuckets: Int,
     }).consolidate.df.select(col("term"), col("df").as("df_old"))
     // LAZY checkpoint (VERDICT r13 #2 — eager-vs-lazy audit): `moved` is
     // first computed by the broadcast-exchange collect INSIDE the affected
-    // set's eager checkpoint action below, which materializes and pins it
-    // with zero extra driver barriers; dfDelta (step 5) then reads the
-    // pinned blocks. An eager checkpoint here was one whole action per step.
+    // set's eager checkpoint action, which materializes and pins it with
+    // zero extra driver barriers; dfDelta then reads the pinned blocks. An
+    // eager checkpoint here was one whole action per step.
     val moved = ddf.join(dfOld, Seq("term"), "left")
       .select(col("term"), coalesce(col("df_old"), lit(0L)).as("df_old"),
         (coalesce(col("df_old"), lit(0L)) + col("ddf")).as("df_new"))
@@ -203,90 +182,31 @@ final class TfIdfState(emptyTf: ZSetFrame, val nBuckets: Int,
     val screened = postings.join(broadcast(moved), Seq("term"))
       .where(sq(col("df_old")) =!= sq(col("df_new")))
       .select(col("doc_id"))
-    // the affected set is data-dependent (it IS the operator's pruning
-    // output), so its bucket span cannot be threaded from the source like
-    // the delta spans — but it need not cost its own job either (the d31
-    // discipline, ADVICE r12): an Observation rides the checkpoint's
-    // materialization action and hands the span to the driver for free
-    // (Screened — the acquisition shared with MultiBm25State)
-    val (affected, affBuckets) = Screened.affectedKeys(screened,
-      d.df.select(col("doc_id")), "doc_id", nBuckets)
-    lastAffected = affected
-    // 4. df index delta: replace the moved terms' aggregated rows (reads
-    //    the `moved` blocks the affected action just pinned)
-    val dfDelta = ZSetFrame.fromDelta(
-      moved.where(col("df_new") =!= 0L)
-        .select(col("term"), col("df_new").as("df"), lit(1L).as(W))
-        .unionByName(moved.where(col("df_old") =!= 0L)
-          .select(col("term"), col("df_old").as("df"), lit(-1L).as(W))))
-    // 5. recompute top-1 for the affected docs BEFORE any trace merge, over
-    //    (pre-merge view ⊕ pinned delta) — identical rows to the post-merge
-    //    view (an append merge adds exactly the delta; the consolidate
-    //    absorbs weight splits), but it frees every index merge to run
-    //    CONCURRENTLY after this one output action (r17 — the step's
-    //    barrier count is the local-mode floor, VERDICT r13 #2 lineage:
-    //    this cuts the batch step from 5 driver barriers to 3)
-    val rows = (fwdIdx.view(affBuckets) + d).consolidate.df
-      .join(affected, Seq("doc_id"))
-    val scored = rows
-      .join((dfIdx.view(0 until nbDim) + dfDelta).consolidate.df,
-        Seq("term"))
-      .select(col("doc_id"), col("term"), col("tf"),
-        scoreQ(col("tf"), col("df")).as("score_q"))
-    val newTop = scored.withColumn("rn", row_number().over(
-        Window.partitionBy("doc_id")
-          .orderBy(col("score_q").desc, col("term").asc)))
-      .where(col("rn") === 1)
-      .select("doc_id", "term", "tf", "score_q")
-    val oldTop = top1.view(affBuckets).consolidate.df
-      .join(affected, Seq("doc_id"))
-      .select("doc_id", "term", "tf", "score_q")
-    // 6. the emitted replacement delta IS the top-1 index's maintenance —
-    //    its own span (⊆ affBuckets for a per-doc top-1, where a replaced
-    //    row lives in its doc's bucket) rides the emission checkpoint
-    //    (Screened, shared with MultiBm25State)
-    val (out, outB) = Screened.replacementDelta(newTop, oldTop,
-      "doc_id", nBuckets)
-    // 7. index maintenance — O(Δ) spine-appends into four INDEPENDENT
-    //    states (the emitted delta is already pinned, so top1's merge joins
-    //    them), ALL concurrent: the step pays max(...) instead of four
-    //    sequential barriers (Screened.inParallel — the generalized aggStep
-    //    fusion; failures barrier before propagating). dfIdx/top1 switch to
-    //    append mode: every reader consolidates its view, so the spine's
-    //    weight-split rows are invisible, and the periodic compaction
-    //    collapses them — same semantics, one O(Δ) routing job per merge.
-    //    The durable mirror (when present) rides the same block: INTENT
-    //    lands first (driver-side marker), the trace merge runs with its
-    //    peers, and the commit sidecar stays strictly after every merge.
-    durIdx.foreach(_.intend(stepGen + 1))
-    Screened.inParallel(
-      (Seq[(String, () => Unit)](
-        ("tf-merge", () => { tfIdx.merge(d, checkpointDelta = false,
-          knownTouched = termBuckets, append = true); () }),
-        ("fwd-merge", () => { fwdIdx.merge(d, checkpointDelta = false,
-          knownTouched = docBuckets, append = true); () }),
-        ("df-merge", () => { dfIdx.merge(dfDelta, checkpointDelta = false,
-          knownTouched = if (nbDim == nBuckets) termBuckets else None,
-          append = true); () }),
-        ("top1-merge", () => { top1.merge(out, checkpointDelta = false,
-          knownTouched = Some(outB), append = true); () })) ++
-        durIdx.map(m => ("durable-merge",
-          () => { m.merge(d, knownTouched = docBuckets); () }))): _*)
-    // this step's checkpoints stay pinned until the next step (lastAffected
-    // is a published diagnostic; moved feeds nothing after this point but
-    // shares the retire cadence for uniformity)
-    prevStepPins = Seq(d.df, moved, affected)
-    // 8. durable COMMIT point: the constants sidecar (atomic rename) lands
-    //    LAST, with gen == the intent's — see the DurableMirror protocol
-    stepGen += 1
-    durIdx.foreach(_.commit(stepGen, Seq("c" -> C.toString)))
-    out
-  }
-
-  def close(): Unit = {
-    prevStepPins.foreach(Pinned.release)
-    prevStepPins = Nil
-    tfIdx.close(); fwdIdx.close(); dfIdx.close(); top1.close()
+    Frame(screened, d.df.select(col("doc_id")), Seq(d.df, moved)) { (affected, affB) =>
+      // 4. df index delta: replace the moved terms' aggregated rows (reads
+      //    the `moved` blocks the affected action just pinned)
+      val dfDelta = ZSetFrame.fromDelta(
+        moved.where(col("df_new") =!= 0L)
+          .select(col("term"), col("df_new").as("df"), lit(1L).as(W))
+          .unionByName(moved.where(col("df_old") =!= 0L)
+            .select(col("term"), col("df_old").as("df"), lit(-1L).as(W))))
+      // 5. recompute top-1 for the affected docs over (pre-merge view ⊕
+      //    pinned delta); the full df table is read, since an affected
+      //    doc's unmoved postings need their df values too
+      val rows = (fwdIdx.view(affB) + d).consolidate.df
+        .join(affected, Seq("doc_id"))
+      val newTop = top1Of(rows,
+        (dfIdx.view(0 until nbDim) + dfDelta).consolidate.df)
+      val oldTop = top1.view(affB).consolidate.df
+        .join(affected, Seq("doc_id"))
+        .select("doc_id", "term", "tf", "score_q")
+      // the durable mirror replays the doc-keyed posting merge
+      Rescored(newTop, oldTop, Seq(
+        Merge("tf", tfIdx, d, termBuckets),
+        Merge("fwd", fwdIdx, d, docBuckets, mirrored = true),
+        Merge("df", dfIdx, dfDelta,
+          if (nbDim == nBuckets) termBuckets else None)))
+    }
   }
 
   /** Rebuild the derived indexes (dfIdx, top1) from the bulk-loaded
@@ -298,29 +218,22 @@ final class TfIdfState(emptyTf: ZSetFrame, val nBuckets: Int,
     * run would. Emits nothing (the consumer already holds the integrated
     * pre-restart output). */
   private def rebuildDerived(): Unit = {
-    val all: Option[Seq[Int]] = Some(0 until nBuckets) // full rebuild: no discovery jobs
-    val postings = fwdIdx.view(0 until nBuckets).consolidate.df
+    val all = 0 until nBuckets // full rebuild: no discovery jobs
+    val postings = fwdIdx.view(all).consolidate.df
     // df = per-term presence count (postings are unique per (doc, term))
     val dfRows = postings.groupBy("term").agg(count(lit(1)).as("df"))
     dfIdx.merge(ZSetFrame.fromDelta(
       dfRows.select(col("term"), col("df"), lit(1L).as(W))),
       knownTouched = Some(0 until nbDim))
-    val scored = postings
-      .join(dfIdx.view(0 until nbDim).consolidate.df, Seq("term"))
-      .select(col("doc_id"), col("term"), col("tf"),
-        scoreQ(col("tf"), col("df")).as("score_q"))
-    val newTop = scored.withColumn("rn", row_number().over(
-        Window.partitionBy("doc_id")
-          .orderBy(col("score_q").desc, col("term").asc)))
-      .where(col("rn") === 1)
-      .select("doc_id", "term", "tf", "score_q")
-    top1.merge(ZSetFrame.fromTable(newTop), knownTouched = all)
+    top1.merge(ZSetFrame.fromTable(
+        top1Of(postings, dfIdx.view(0 until nbDim).consolidate.df)),
+      knownTouched = Some(all))
   }
 }
 
 object TfIdfState {
-  private[incremental] val ConstsFile = "_graft_tfidf_consts.txt"
-  private[incremental] val IntentFile = "_graft_tfidf_intent.txt"
+  private[incremental] val Files = ScreenedState.MirrorFiles(
+    "_graft_tfidf_intent.txt", "_graft_tfidf_consts.txt", "tf-idf")
 
   /** Bucket-count cap for the DIMENSION trace (the df index) — see `nbDim`.
     * 64 keeps every declared query (nBuckets ≤ 32) byte-identical while
@@ -329,30 +242,24 @@ object TfIdfState {
   private[graft] val DimBuckets = 64
 
   /** Re-attach to a durable tf-idf state written by a `durablePath`-enabled
-    * instance — the recovery path (a fresh driver resumes the CDC replay
-    * where the last COMMITTED step left off): the posting set comes back
-    * through the shared [[DurableMirror.attach]] (torn-step refusal
-    * included), is bulk-loaded into the two in-memory posting indexes
-    * (term- and doc-keyed), and the derived df/top-1 indexes are rebuilt
-    * from scratch (exact — see `rebuildDerived`). `restored.committedGen`
-    * tells the CDC source which deltas to replay. */
+    * instance (see [[ScreenedState.restore]]): the posting set is
+    * bulk-loaded into the two in-memory posting indexes (term- and
+    * doc-keyed), and the derived df/top-1 indexes are rebuilt from scratch
+    * (exact — see `rebuildDerived`). `restored.committedGen` tells the CDC
+    * source which deltas to replay. */
   def restore(spark: org.apache.spark.sql.SparkSession, path: String,
-              nBuckets: Int, C: Long = 10000L): TfIdfState = {
-    val (mirror, kv) = DurableMirror.attach(spark, path, nBuckets,
-      IntentFile, ConstsFile, "tf-idf")
-    // C is the state's identity: a restore under a different quantization
-    // would rebuild top-1 rows that never cancel against the consumer's
-    // integrated pre-restart output
-    require(kv.get("c").forall(_.toLong == C),
-      s"graft: TfIdfState.restore quantization C ($C) does not match the " +
-        s"durable state's (${kv.get("c")})")
-    val snapshot = mirror.dur.snapshot.consolidate
-    val st = new TfIdfState(
-      ZSetFrame.fromDelta(snapshot.df.where(lit(false))), nBuckets, C, mirror)
-    st.stepGen = kv("gen").toLong
-    st.tfIdx.merge(snapshot)
-    st.fwdIdx.merge(snapshot)
-    st.rebuildDerived()
-    st
-  }
+              nBuckets: Int, C: Long = 10000L): TfIdfState =
+    ScreenedState.restore(spark, path, nBuckets, Files) { (empty, kv) =>
+      // C is the state's identity: a restore under a different quantization
+      // would rebuild top-1 rows that never cancel against the consumer's
+      // integrated pre-restart output
+      require(kv.get("c").forall(_.toLong == C),
+        s"graft: TfIdfState.restore quantization C ($C) does not match the " +
+          s"durable state's (${kv.get("c")})")
+      new TfIdfState(empty, nBuckets, C)
+    } { (st, snapshot) =>
+      st.tfIdx.merge(snapshot)
+      st.fwdIdx.merge(snapshot)
+      st.rebuildDerived()
+    }
 }

@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
 import graft.core.{Tables, ZSetFrame}
-import graft.incremental.BucketedUpsertState
+import graft.incremental.BucketedUpsertStateLong
 
 /** Scale-path near-dup + similarity operators: MinHash+LSH banding, SimHash,
   * and LSH-bucketed approximate nearest neighbors. These avoid the all-pairs
@@ -79,7 +79,7 @@ object Dedup extends QueryModule {
     * oracle. Every near-dup pair surfaces exactly once (at its later
     * member's arrival), so the union over steps equals batch d03
     * regardless of arrival order. Every
-    * [[graft.incremental.BucketedUpsertState.TruncateEvery]] steps the
+    * [[graft.incremental.BucketedUpsertStateLong.TruncateEvery]] steps the
     * slices consolidate into one lineage-truncated generation — the
     * amortized fueled-spine merge that bounds read fan-in on an unbounded
     * stream while keeping the per-step floor O(Δ). */
@@ -104,7 +104,7 @@ object Dedup extends QueryModule {
     }
 
     /** Consolidate a spine into one pinned, lineage-truncated generation
-      * and retire the slices (the BucketedUpsertState.step lifecycle). */
+      * and retire the slices (the BucketedUpsertStateLong.step lifecycle). */
     private def consolidate[T](sc: org.apache.spark.SparkContext,
                                slices: Vector[RDD[T]])(
         implicit ct: scala.reflect.ClassTag[T]): Vector[RDD[T]] = {
@@ -160,7 +160,7 @@ object Dedup extends QueryModule {
         dStore.count(); dBuckets.count()
         storeSlices = storeSlices :+ dStore
         traceSlices = traceSlices :+ dBuckets
-        if (gens % BucketedUpsertState.TruncateEvery == 0) {
+        if (gens % BucketedUpsertStateLong.TruncateEvery == 0) {
           storeSlices = consolidate(sc, storeSlices)
           traceSlices = consolidate(sc, traceSlices)
           if (res != null) res = res.localCheckpoint(true)
@@ -240,7 +240,7 @@ object Dedup extends QueryModule {
       // The result accumulator consolidates too — without it the union
       // tree over per-step ver frames grows O(steps), the same fan-in
       // defect the spines exist to prevent.
-      if (gens % BucketedUpsertState.TruncateEvery == 0) {
+      if (gens % BucketedUpsertStateLong.TruncateEvery == 0) {
         storeSlices = consolidate(sc, storeSlices)
         traceSlices = consolidate(sc, traceSlices)
         res = res.localCheckpoint(true)
@@ -345,7 +345,7 @@ object Dedup extends QueryModule {
       // checkpointed generation so read fan-in and lineage depth stay
       // bounded on an unbounded stream (superseded blocks are reclaimed
       // by the ContextCleaner once unreferenced)
-      if (gens % BucketedUpsertState.TruncateEvery == 0) {
+      if (gens % BucketedUpsertStateLong.TruncateEvery == 0) {
         trace = trace.localCheckpoint(true)
         qtrace = qtrace.localCheckpoint(true)
       }

@@ -1,5 +1,7 @@
 package graft.queries
 
+import scala.jdk.OptionConverters._
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
@@ -215,8 +217,14 @@ object StreamingQueries extends QueryModule {
         docs.where(lit(false)).coalesce(1).write.mode("overwrite")
           .parquet(te.toString)
         val l = Files.list(te)
-        val p = try l.filter(_.toString.endsWith(".parquet")).findFirst().get()
+        val found = try l.filter(_.toString.endsWith(".parquet")).findFirst()
         finally l.close()
+        val p = found.toScala match {
+          case Some(f) => f
+          case None => throw new IllegalStateException(
+            s"graft: the empty-slice template write to $te left no " +
+              "*.parquet part file to copy for empty slices")
+        }
         emptyTemplate = Some(p); p
       }
       // Rename each slice's part file to b$i.parquet with EXPLICIT strictly

@@ -458,14 +458,8 @@ class IncrementalSpec extends SparkSpec {
       }
       st.close()
       // batch model over the surviving corpus (updated docs at v2)
-      val tfRows = mk(live.toSeq.sorted, 1L, tfOf).map(r => (r._1, r._2, r._3))
-      val df = tfRows.groupBy(_._2).map { case (t, xs) => t -> xs.size.toLong }
-      val expected = tfRows.groupBy(_._1).toSeq.map { case (d, xs) =>
-        val scored = xs.map { case (_, t, tf) =>
-          (t, tf, math.floor(tf * c.toDouble / df(t)).toLong) }
-        val (t, tf, s) = scored.minBy { case (t, _, s) => (-s, t) }
-        (d, t, tf, s)
-      }
+      val expected = ScreenedModels.tfidfTop1(
+        live.map(i => i.toLong -> tfOf(i)).toMap, c)
       assertSameRows(ZSetFrame.sumAll(outs).consolidate.df,
         ZSetFrame.fromTable(
           expected.toDF("doc_id", "term", "tf", "score_q")).df)
@@ -548,26 +542,10 @@ class IncrementalSpec extends SparkSpec {
       }
       st.close()
       // brute-force batch model over the surviving corpus (updated docs at
-      // their CURRENT version) — the SAME IEEE sequence as Bm25.sq: two
-      // long-ratio doubles, left-assoc multiply
-      val n = live.size.toLong
-      val tt = live.toSeq.map(i => tfOf(i).values.sum).sum
-      val dfm = live.toSeq.flatMap(i => tfOf(i).keys.filter(qterms.contains))
-        .groupBy(identity).map { case (t, xs) => t -> xs.size.toLong }
-      val scored = live.toSeq.flatMap { i =>
-        val dl = tfOf(i).values.sum
-        tfOf(i).toSeq.collect { case (t, tf) if qterms.contains(t) =>
-          val df = dfm(t)
-          val r1 = (2L * n - 2L * df + 1L).toDouble / (2L * df + 1L).toDouble
-          val r2 = (44L * tt * tf).toDouble /
-            (20L * tt * tf + 6L * tt + 18L * dl * n).toDouble
-          (i.toLong, math.floor(r1 * r2 * grid).toLong)
-        }
-      }
-      val expected = scored.groupBy(_._1).toSeq
-        .map { case (d, xs) => (d, xs.map(_._2).sum) }
-        .sortBy { case (d, s) => (-s, d) }.take(5).zipWithIndex
-        .map { case ((d, s), r) => (d, s, r + 1) }
+      // their CURRENT version) — the SAME IEEE sequence as Bm25.sq
+      val expected = ScreenedModels.bm25TopK(
+          live.map(i => i.toLong -> tfOf(i)).toMap, Seq("q" -> qterms), 5, grid)
+        .map { case (_, d, s, r) => (d, s, r) }
       assertSameRows(ZSetFrame.sumAll(outs).consolidate.df,
         ZSetFrame.fromTable(
           expected.toDF("doc_id", "score_q", "rnk")).df)
@@ -684,24 +662,8 @@ class IncrementalSpec extends SparkSpec {
       // brute-force batch model over the surviving corpus (doc 2 carries
       // doc 30's term set after the update step) — the SAME IEEE sequence
       // as PmiState.pq
-      def eff(i: Int) = effTerms(i, reDoc2)
-      val n = live.size.toLong
-      val caM = uterms.map(t =>
-        t -> live.count(i => eff(i).contains(t)).toLong).toMap
-      def pairs(i: Int): Seq[(String, String)] = {
-        val ts = eff(i).filter(uterms.contains).sorted
-        for (a <- ts; b <- ts if a < b) yield (a, b)
-      }
-      val cabM = live.toSeq.flatMap(pairs)
-        .groupBy(identity).map { case (p, xs) => p -> xs.size.toLong }
-      def pqM(a: String, b: String): Long =
-        math.floor((n * cabM((a, b))).toDouble /
-          (caM(a) * caM(b)).toDouble * grid).toLong
-      val expected = live.toSeq.flatMap { i =>
-        val ps = pairs(i)
-        if (ps.isEmpty) None
-        else Some((i.toLong, ps.size.toLong, ps.map { case (a, b) => pqM(a, b) }.sum))
-      }
+      val expected = ScreenedModels.pmiScores(
+        live.map(i => i.toLong -> effTerms(i, reDoc2)).toMap, uterms, grid)
       assertSameRows(ZSetFrame.sumAll(outs).consolidate.df,
         ZSetFrame.fromTable(
           expected.toDF("doc_id", "n_pairs", "score_q")).df)
@@ -846,35 +808,9 @@ class IncrementalSpec extends SparkSpec {
       st.close()
       // brute-force batch model over the surviving corpus — the SAME
       // integer iq and IEEE cosine sequence as CosineState
-      def eff(i: Int) = cosEffPostings(i, reDoc2)
-      val n = live.size.toLong
-      val dfM = uterms.map(t =>
-        t -> live.count(i => eff(i).exists(_._1 == t)).toLong).toMap
-      def iqM(df: Long): Long =
-        if (n <= 0 || df <= 0) Long.MinValue
-        else math.min(Math.floorDiv(idfG * n, df), idfG * idfC)
-      val expected = live.toSeq.flatMap { i =>
-        val ups = eff(i).filter(p => uterms.contains(p._1))
-        if (ups.isEmpty) None
-        else {
-          val dvq = ups.map { case (t, tf) => t -> tf * iqM(dfM(t)) }.toMap
-          val nd2 = dvq.values.map(v => v * v).sum
-          val scoredPairs = cents.flatMap { case (cid, sup) =>
-            val common = sup.filter { case (t, _) => dvq.contains(t) }
-            if (common.isEmpty) None
-            else {
-              val dot = common.map { case (t, cw) => dvq(t) * cw }.sum
-              val nc2 = sup.map { case (_, cw) => cw * cw }.sum
-              val cq = math.floor(dot.toDouble
-                / (math.sqrt(nd2.toDouble) * math.sqrt(nc2.toDouble))
-                * 1e6).toLong
-              Some((cid, cq))
-            }
-          }
-          val (cid, cq) = scoredPairs.minBy { case (c, q) => (-q, c) }
-          Some((i.toLong, cid, cq))
-        }
-      }
+      val expected = ScreenedModels.cosineAssign(
+        live.map(i => i.toLong -> cosEffPostings(i, reDoc2)).toMap,
+        cents, idfG, idfC)
       assertSameRows(ZSetFrame.sumAll(outs).consolidate.df,
         ZSetFrame.fromTable(expected.toDF("doc_id", "cid", "cos_q")).df)
       if (idfG < 64L)
@@ -1031,25 +967,8 @@ class IncrementalSpec extends SparkSpec {
       st.close()
       // brute-force per-query batch model — the SAME IEEE sequence as
       // Bm25.sq, with df/N/T computed ONCE over the union match set
-      val n = live.size.toLong
-      val tt = live.toSeq.map(i => docTf(i).values.sum).sum
-      val dfm = live.toSeq.flatMap(i => docTf(i).keys.filter(uterms.contains))
-        .groupBy(identity).map { case (t, xs) => t -> xs.size.toLong }
-      def sq(tf: Long, dl: Long, df: Long): Long = {
-        val r1 = (2L * n - 2L * df + 1L).toDouble / (2L * df + 1L).toDouble
-        val r2 = (44L * tt * tf).toDouble /
-          (20L * tt * tf + 6L * tt + 18L * dl * n).toDouble
-        math.floor(r1 * r2 * grid).toLong
-      }
-      val expected = qsets.flatMap { case (q, qts) =>
-        live.toSeq.flatMap { i =>
-          val m = docTf(i); val dl = m.values.sum
-          val s = m.collect { case (t, tf) if qts.contains(t) =>
-            sq(tf, dl, dfm(t)) }.sum
-          if (m.keys.exists(qts.contains)) Some((q, i.toLong, s)) else None
-        }.sortBy { case (_, d, s) => (-s, d) }.take(4).zipWithIndex
-          .map { case ((qq, d, s), r) => (qq, d, s, r + 1) }
-      }
+      val expected = ScreenedModels.bm25TopK(
+        live.map(i => i.toLong -> docTf(i)).toMap, qsets, 4, grid)
       assertSameRows(ZSetFrame.sumAll(outs).consolidate.df,
         ZSetFrame.fromTable(
           expected.toDF("query_id", "doc_id", "score_q", "rnk")).df)

@@ -253,45 +253,9 @@ class KeyedStateSpec extends SparkSpec {
     }
   }
 
-  test("BucketedUpsertState: step ≡ naive fold, emits touched keys, no state shuffle") {
-    import graft.incremental.BucketedUpsertState
-    import org.apache.spark.ShuffleDependency
-    val mx = (a: Long, b: Long) => math.max(a, b)
-    val st = new BucketedUpsertState[Long, Long](spark.sparkContext, 4, mx)
-    val naive = scala.collection.mutable.Map[Long, Long]()
-    val rnd = new scala.util.Random(7)
-    for (step <- 1 to 5) {
-      val delta = Seq.fill(40)((rnd.nextInt(25).toLong, rnd.nextInt(1000).toLong))
-      val emitted = st.step(spark.sparkContext.parallelize(delta, 3)).collect().toMap
-      delta.foreach { case (k, v) =>
-        naive(k) = naive.get(k).map(mx(_, v)).getOrElse(v)
-      }
-      // emitted delta = the merged CURRENT value of exactly the touched keys
-      assert(emitted.keySet == delta.map(_._1).toSet)
-      emitted.foreach { case (k, v) => assert(v == naive(k), s"key $k") }
-      assert(st.snapshot.collect().toMap == naive.toMap)
-      // partition-preservation: the state keeps its partitioner, and the
-      // merge's lineage has NO shuffle dependency on the state side — only
-      // the delta's reduceByKey shuffles (the O(|Δ|)-network contract)
-      assert(st.snapshot.partitioner.exists(_.numPartitions == 4))
-      val mergedDeps = st.snapshot.dependencies.head.rdd.dependencies
-      assert(mergedDeps.forall(!_.isInstanceOf[ShuffleDependency[_, _, _]]),
-        "the bucket merge must be narrow on both sides (the delta's " +
-          "shuffle happens inside its reduceByKey, upstream of the zip)")
-    }
-    // keys are physically where the partitioner says (bucket-local merge is
-    // only correct if delta and state agree on placement)
-    val part = st.snapshot.partitioner.get
-    val placed = st.snapshot.mapPartitionsWithIndex { (pid, it) =>
-      it.map { case (k, _) => (k, pid) }
-    }.collect()
-    placed.foreach { case (k, pid) => assert(part.getPartition(k) == pid) }
-    st.close()
-  }
-
   test("BucketedUpsertStateLong ≡ naive fold across steps (incl. growth + dup keys)") {
-    import graft.incremental.BucketedUpsertState
     import graft.incremental.BucketedUpsertStateLong
+    import org.apache.spark.ShuffleDependency
     val stL = new BucketedUpsertStateLong(spark.sparkContext, 4, math.max)
     val naive = scala.collection.mutable.Map[Long, Long]()
     val rnd = new scala.util.Random(11)
@@ -310,9 +274,23 @@ class KeyedStateSpec extends SparkSpec {
         "dup delta keys must emit one row")
       assert(emitted.toMap.keySet == delta.map(_._1).toSet)
       emitted.foreach { case (k, v) => assert(v == naive(k), s"key $k") }
+      // partition-preservation: the state keeps its partitioner, and the
+      // merge's lineage has NO shuffle dependency on the state side — only
+      // the delta's partitionBy shuffles (the O(|Δ|)-network contract)
+      assert(stL.snapshot.partitioner.exists(_.numPartitions == 4))
+      val mergedDeps = stL.snapshot.dependencies.head.rdd.dependencies
+      assert(mergedDeps.forall(!_.isInstanceOf[ShuffleDependency[_, _, _]]),
+        "the bucket merge must be narrow on both sides (the delta's " +
+          "shuffle happens inside its partitionBy, upstream of the zip)")
     }
     assert(stL.snapshot.collect().toMap == naive.toMap)
     assert(stL.size == naive.size.toLong)
+    // keys are physically where the partitioner says (bucket-local merge is
+    // only correct if delta and state agree on placement)
+    val part = stL.snapshot.partitioner.get
+    stL.snapshot.mapPartitionsWithIndex { (pid, it) =>
+      it.map { case (k, _) => (k, pid) }
+    }.collect().foreach { case (k, pid) => assert(part.getPartition(k) == pid) }
     stL.close()
   }
 

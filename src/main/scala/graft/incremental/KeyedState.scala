@@ -1,13 +1,12 @@
 package graft.incremental
 
-import scala.collection.mutable
-
-import org.apache.spark.rdd.{PartitionPruningRDD, RDD}
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 import graft.core.ZSetFrame
+import graft.plans.{BucketPackRDD, BucketPacking, BucketSlot}
 
 /** Key-partitioned incremental state — the "trace" of a stateful operator,
   * sharded by the operator key so one delta step costs O(|Δ| + |touched
@@ -18,21 +17,26 @@ import graft.core.ZSetFrame
   * by key hash, crates/dbsp/src/operator/communication/shard.rs).
   *
   * Representation: the state is a set of immutable "segments", each a
-  * localCheckpoint'ed DataFrame that was written with
-  * `repartition(nBuckets, keys)`. Spark's `HashPartitioning` puts a row in
-  * partition `pmod(murmur3hash(keys), nBuckets)` — the same value the SQL
-  * `hash()` function computes — so PHYSICAL partition i holds exactly
-  * logical bucket i (asserted by IncrementalSpec "bucket ids line up").
-  * Each logical bucket points at (segment, partition); reading a bucket is a
-  * `PartitionPruningRDD` over its segment — only that partition's
-  * materialized blocks are touched, nothing is recomputed or rescanned.
+  * localCheckpoint'ed PACKED RDD. A row's logical bucket is
+  * `pmod(murmur3hash(keys), nBuckets)` — the SQL `hash()` value, and the
+  * partition `repartition(nBuckets, keys)` routes it to (asserted by
+  * KeyedStateSpec "bucket ids line up"). The bucket is the unit of routing
+  * and pruning, but not the unit of work: a segment over a span of k sorted
+  * buckets has G = min(k, defaultParallelism) partitions, partition g holds
+  * a contiguous group of the span, and stores ONE ELEMENT PER BUCKET of its
+  * group — that bucket's rows as an array. Each bucket therefore points at
+  * (segment, partition, slot); reading it pulls one element of one pinned
+  * partition (BucketUnionRDD) — its packed neighbours' rows are never
+  * iterated, nothing is recomputed or rescanned — and a step over k touched
+  * buckets runs G tasks per job, not k (the reference shards its trace one
+  * shard per worker, not per fine bucket).
   *
-  * A step consumes a delta: the delta's keys name the touched buckets; the
-  * old content of just those buckets is merged with the delta into ONE new
-  * segment (one Spark job over touched data only), and the touched buckets'
-  * pointers move to the new segment. Untouched buckets — the overwhelming
-  * majority of a large state under a small delta — are never read, shuffled,
-  * or rewritten.
+  * A step consumes a delta: the delta's keys name the touched buckets; only
+  * the delta is routed (shuffled) into the bucket layout, and the touched
+  * buckets' old content is consolidated with it in place into ONE new
+  * segment; the touched buckets' pointers move to the new segment.
+  * Untouched buckets — the overwhelming majority of a large state under a
+  * small delta — are never read, shuffled, or rewritten.
   *
   * SEGMENT RECLAMATION (the trace's merge/GC, reference:
   * crates/dbsp/src/trace/spine_fueled.rs merge batches + drop superseded):
@@ -40,12 +44,12 @@ import graft.core.ZSetFrame
   * that moves the last bucket off a segment retires it; retired segments
   * are unpersisted TWO merges later, so pinned storage tracks live state,
   * not step count. Because a bucket move supersedes only that bucket's
-  * partition (the rest of the old segment stays live and pinned whole),
-  * every `compactEvery` merges all buckets are compacted into one fresh
-  * segment, bounding stale-partition carry to the inter-compaction window.
+  * slot (the rest of the old segment stays live and pinned whole), every
+  * `compactEvery` merges all buckets are compacted into one fresh segment,
+  * bounding stale-slot carry to the inter-compaction window.
   *
   * LIFECYCLE CONTRACT: DataFrames returned by `view`/`probe`/`merge` are
-  * partition-pruned views over pinned segments — valid until the SECOND
+  * bucket-pruned views over pinned segments — valid until the SECOND
   * subsequent `merge` (or `compact`) on this state. Step outputs that must
   * outlive that window are eagerly materialized (`aggStep` does this for
   * its emitted delta; `Incremental.joinDeltaKeyed` likewise).
@@ -60,6 +64,7 @@ final class KeyedState(val keys: Seq[String], val nBuckets: Int, init: ZSetFrame
   private val spark = init.spark
   /** Canonical column order: data columns as declared by `init`, then weight. */
   private val colsInOrder: Seq[String] = init.dataCols.toSeq :+ ZSetFrame.W
+  private val dataCols: Seq[String] = init.dataCols.toSeq
   private val schema = init.df.select(colsInOrder.map(col): _*).schema
 
   private def keyExprs: Seq[Column] = keys.map(col)
@@ -68,24 +73,22 @@ final class KeyedState(val keys: Seq[String], val nBuckets: Int, init: ZSetFrame
     * `repartition(nBuckets, keys)` (HashPartitioning.partitionIdExpression). */
   def bucketId: Column = pmod(hash(keyExprs: _*), lit(nBuckets))
 
-  /** `index`: for a TOUCHED-PRUNED segment (see `materializeBucketed`),
-    * the bucket-id → physical-partition-index map; `None` means physical
-    * partition i IS bucket i (full-layout segment). Rows are pinned in the
-    * INTERNAL (UnsafeRow) format — views rebuild DataFrames without any
-    * row conversion, and `bucketsDf` re-declares the key clustering the
-    * layout guarantees. (The delta-checkpoint retirement vehicle in
-    * `prepare` stores an external-row RDD — it is only ever unpersisted,
-    * never read — hence `RDD[_]`.) */
-  private final class Segment(val rdd: RDD[_],
-                              val index: Option[Map[Int, Int]] = None) {
+  /** `rdd` holds, per partition, one element per bucket of its group (an
+    * `RDD[Array[InternalRow]]`; rows in the INTERNAL UnsafeRow format, so
+    * views rebuild DataFrames without any row conversion and `viewOf`
+    * re-declares the key clustering the layout guarantees); `slots` maps
+    * every bucket the segment carries to its (partition, slot). (The
+    * delta-checkpoint retirement vehicle in `prepare` stores an
+    * external-row RDD with no slots — it is only ever unpersisted, never
+    * read — hence `RDD[_]`.) */
+  private final class Segment(val rdd: RDD[_], val slots: Map[Int, BucketSlot]) {
     var refs: Int = 0
-    def internalRows: RDD[org.apache.spark.sql.catalyst.InternalRow] =
-      rdd.asInstanceOf[RDD[org.apache.spark.sql.catalyst.InternalRow]]
+    def chunks: RDD[Array[InternalRow]] = rdd.asInstanceOf[RDD[Array[InternalRow]]]
   }
 
   /** bucket -> SEGMENT LIST, newest first. A bucket's logical content is
-    * the Z-set SUM of partition `bucket` across its listed segments: a
-    * replacing merge leaves one consolidated segment; an APPEND merge
+    * the Z-set SUM of its slot across its listed segments: a replacing
+    * merge leaves one consolidated segment; an APPEND merge
     * (`append = true`) prepends the delta's segment without touching old
     * content — the reference's fueled-spine batch append
     * (crates/dbsp/src/trace/spine_fueled.rs:1-45: a delta becomes a new
@@ -101,7 +104,7 @@ final class KeyedState(val keys: Seq[String], val nBuckets: Int, init: ZSetFrame
   private def gen: Long = retireQ.generation
 
   { // seed segment: the (usually empty) initial state, bucketed
-    install(materializeBucketed(init, consolidate = true), 0 until nBuckets)
+    install(pin(routed(init, groupsOf(0 until nBuckets), consolidate = true)), 0 until nBuckets)
   }
 
   /** REPLACE `bucketIds`' lists with `seg`, maintaining refcounts; segments
@@ -141,29 +144,45 @@ final class KeyedState(val keys: Seq[String], val nBuckets: Int, init: ZSetFrame
     (0 until nBuckets).foreach(b => bucketSegs(b) = Nil)
   }
 
-  /** One job: shuffle into the nBuckets bucket layout by key hash and pin in
-    * memory. When the writer's touched-bucket span is known (every per-step
-    * merge — `touched` is resolved before the segment build), the shuffle-
-    * READ stage is PRUNED to those partitions before materializing: a step's
-    * segment job runs |touched| reduce tasks, not nBuckets. Without pruning,
-    * every step pays an nBuckets-task stage of overwhelmingly EMPTY tasks —
-    * pure scheduling overhead that grows with bucket COUNT (~0.1-0.2 ms/task
-    * in local mode, and at deployment-sized bucket counts it dominates the
-    * step: the r10 radix_scaled track measured +0.46 s/step at 2560 buckets
-    * from exactly this). The pruned segment records its bucket→partition
-    * index map; readers translate (bucketsDf). The reference never pays this
-    * either: a shard writes only the shards a batch touches
-    * (communication/shard.rs), not one output per possible shard. */
-  /** `consolidate = true` weight-merges to physically-unique rows INSIDE
+  /** The packing of a sorted bucket span: one contiguous group per task,
+    * G = min(|span|, defaultParallelism) — derived from the cluster, never
+    * configured. A step computes its span's groups ONCE and hands them to
+    * every view and segment it builds: an in-place consolidation needs its
+    * view's partitions and its own packing to agree, and a cluster's
+    * parallelism can change between two calls. */
+  private def groupsOf(sorted: IndexedSeq[Int]): IndexedSeq[IndexedSeq[Int]] =
+    BucketPacking.groups(sorted, spark.sparkContext.defaultParallelism)
+
+  /** Pin a segment's packed partitions in memory (one job, G tasks). */
+  private def pin(seg: Segment): Segment = {
+    seg.rdd.localCheckpoint()
+    seg.rdd.count()
+    seg
+  }
+
+  /** Route `z` into the bucket layout by key hash, as an UNPINNED segment
+    * packed by `groups`. The shuffle writes nBuckets partitions, but only
+    * the span's are ever READ: the reduce side is pruned to the groups'
+    * buckets and packed into G tasks (BucketPackRDD) — a step's
+    * Δ route runs G reduce tasks, not nBuckets, nor |touched|. Without the
+    * pruning every step would pay an nBuckets-task stage of overwhelmingly
+    * EMPTY tasks — pure scheduling overhead that grows with bucket COUNT
+    * (~0.1-0.2 ms/task in local mode, and at deployment-sized bucket counts
+    * it dominates the step: the r10 radix_scaled track measured +0.46
+    * s/step at 2560 buckets from exactly this). The reference never pays
+    * this either: a shard writes only the shards a batch touches
+    * (communication/shard.rs), not one output per possible shard. Under AQE
+    * the shuffle's map stage runs here (its own job); the reduce side runs
+    * with whichever job reads the result.
+    *
+    * `consolidate = true` weight-merges to physically-unique rows INSIDE
     * the bucket layout: repartition first, THEN groupBy — the repartition's
     * HashPartitioning(keys) satisfies the consolidate's full-column
-    * clustering, so the groupBy adds NO second exchange (pre-r10 the order
-    * was consolidate-then-bucket: two shuffles of the touched data per
-    * replace-mode step where one suffices). Same rows out either way —
-    * grouping is on all data columns and zero-net rows drop after the sum. */
-  private def materializeBucketed(z: ZSetFrame,
-                                  touched: Option[Seq[Int]] = None,
-                                  consolidate: Boolean = false): Segment = {
+    * clustering, so the groupBy adds NO second exchange. Same rows out
+    * either way — grouping is on all data columns and zero-net rows drop
+    * after the sum. */
+  private def routed(z: ZSetFrame, groups: IndexedSeq[IndexedSeq[Int]],
+                     consolidate: Boolean = false): Segment = {
     // the consolidate below relies on HashPartitioning's SUBSET rule
     // (grouping by dataCols ⊇ keys is satisfied by the key repartition);
     // spark.sql.requireAllClusterKeysForDistribution=true disables that
@@ -184,16 +203,14 @@ final class KeyedState(val keys: Seq[String], val nBuckets: Int, init: ZSetFrame
     val bucketed = z.df.select(colsInOrder.map(col): _*)
       .repartition(nBuckets, keyExprs: _*)
     val ds = if (consolidate) {
-      val dataCols = colsInOrder.filterNot(_ == ZSetFrame.W)
       bucketed.groupBy(dataCols.map(col): _*)
         .agg(sum(ZSetFrame.W).as(ZSetFrame.W))
         .where(col(ZSetFrame.W) =!= 0L)
         .select(colsInOrder.map(col): _*)
     } else bucketed
-    // pin INTERNAL rows (what Dataset.checkpoint itself does): no Row
-    // conversion on write or on any later view read. UnsafeRow buffers are
-    // reused within a partition — copy before persisting.
-    val internal0 = ds.queryExecution.toRdd.map(_.copy())
+    // INTERNAL rows (what Dataset.checkpoint itself does): no Row
+    // conversion on write or on any later view read
+    val internal0 = ds.queryExecution.toRdd
     val internal = if (internal0.getNumPartitions == nBuckets) internal0 else {
       // AQE's empty-relation propagation folds an ALL-EMPTY build (the seed
       // of a fresh state, or a delta that exactly cancels its buckets) into
@@ -205,61 +222,40 @@ final class KeyedState(val keys: Seq[String], val nBuckets: Int, init: ZSetFrame
       require(internal0.take(1).isEmpty,
         s"graft: bucket layout lost (${internal0.getNumPartitions} partitions," +
           s" expected $nBuckets) on non-empty data")
-      spark.sparkContext.parallelize(
-        Seq.empty[org.apache.spark.sql.catalyst.InternalRow], nBuckets)
+      spark.sparkContext.parallelize(Seq.empty[InternalRow], nBuckets)
     }
-    touched match {
-      case Some(ts) if ts.size < nBuckets =>
-        val sorted = ts.distinct.sorted
-        val keep = sorted.toSet
-        // PartitionPruningRDD re-indexes the kept partitions consecutively
-        // in parent order (ascending bucket id) — sorted order IS the map
-        val pruned = PartitionPruningRDD.create(internal, keep.contains)
-        pruned.localCheckpoint()
-        pruned.count()
-        new Segment(pruned, Some(sorted.zipWithIndex.toMap))
-      case _ =>
-        internal.localCheckpoint()
-        internal.count()
-        new Segment(internal)
-    }
+    new Segment(new BucketPackRDD(internal, groups), BucketPacking.slots(groups))
   }
 
-  /** DataFrame over exactly the given buckets — partition-pruned reads of
-    * their segments; no job is launched and no other bucket is scanned.
-    * A bucket's row lives in partition `bucket` of every segment in its
-    * list (every segment was written with the same repartition layout);
-    * appended buckets may carry weight-split duplicate rows — consolidate
-    * on read where physical uniqueness matters. */
-  /** Consolidate an ALREADY bucket-aligned view (a `bucketsDf` result whose
-    * partition j is bucket sorted(j)) into a pruned segment WITHOUT
-    * re-shuffling: the view's declared clustering satisfies the
-    * consolidate's grouping, so the build is scan + agg in place and the
-    * aggregate preserves partition count and indexes — the reference's
-    * shard-local spine merge (spine_fueled.rs: batches of one shard merge
-    * within the shard; nothing crosses shards). */
-  private def materializeAligned(view: DataFrame, sorted: Seq[Int]): Segment = {
+  /** Consolidate an ALREADY bucket-aligned view (a `viewOf(groups, …)`
+    * result) into a pinned segment packed by the same `groups` WITHOUT re-shuffling: the view's
+    * declared clustering satisfies the consolidate's grouping, so the build
+    * is scan + agg in place — the reference's shard-local spine merge
+    * (spine_fueled.rs: batches of one shard merge within the shard; nothing
+    * crosses shards). The aggregate keeps the view's partitions (one per
+    * bucket group) but mixes a group's buckets, so each output row carries
+    * its bucket id and the pack splits the group back into per-bucket
+    * slots. */
+  private def materializeAligned(view: DataFrame,
+                                 groups: IndexedSeq[IndexedSeq[Int]]): Segment = {
     // empty-delta step: no touched buckets, nothing to consolidate. Without
     // this guard the empty view's consolidate plans a shuffle whose width is
     // spark.sql.shuffle.partitions when AQE is off (AQE-on folds it to an
     // EmptyRelation), and the layout-restore below would need a 0-slice
     // parallelize — which throws.
-    if (sorted.isEmpty)
-      return new Segment(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.catalyst.InternalRow],
-        Some(Map.empty))
-    val dataCols = colsInOrder.filterNot(_ == ZSetFrame.W)
+    if (groups.isEmpty)
+      return new Segment(spark.sparkContext.emptyRDD[Array[InternalRow]], Map.empty)
     val ds = view.groupBy(dataCols.map(col): _*)
       .agg(sum(ZSetFrame.W).as(ZSetFrame.W))
       .where(col(ZSetFrame.W) =!= 0L)
-      .select(colsInOrder.map(col): _*)
+      .select(colsInOrder.map(col) :+ bucketId.as("__b"): _*)
     // SOUNDNESS GATE (ADVICE r10): partition COUNT alone cannot prove the
     // aligned layout survived planning — an exchange whose width happens to
-    // equal sorted.size (small touched spans vs shuffle.partitions, or
+    // equal the group count (small touched spans vs shuffle.partitions, or
     // spark.sql.requireAllClusterKeysForDistribution=true defeating the
     // subset rule in BucketClusteredPartitioning.satisfies0) would silently
-    // re-index partitions away from their buckets and pruned reads would
-    // return wrong rows. The declared clustering makes this plan
+    // move rows away from their group's partition and the pack would file
+    // them under the wrong slots. The declared clustering makes this plan
     // exchange-free by construction, so any Exchange in it is a broken
     // invariant — fail loudly instead of corrupting state. (String check on
     // the already-planned physical plan: no extra planning work.)
@@ -268,60 +264,60 @@ final class KeyedState(val keys: Seq[String], val nBuckets: Int, init: ZSetFrame
       "graft: materializeAligned planned an Exchange — the bucket-aligned " +
         "view lost its declared clustering; refusing to pin a mis-indexed " +
         s"segment. Plan:\n$planStr")
-    val internal0 = ds.queryExecution.toRdd.map(_.copy())
-    val internal = if (internal0.getNumPartitions == sorted.size) internal0 else {
-      // same AQE empty-relation fold as materializeBucketed: an all-empty
+    val internal0 = ds.queryExecution.toRdd
+    val internal = if (internal0.getNumPartitions == groups.size) internal0 else {
+      // same AQE empty-relation fold as `routed`: an all-empty
       // consolidation loses the layout; restore an empty aligned RDD
       require(internal0.take(1).isEmpty,
         s"graft: aligned layout lost (${internal0.getNumPartitions} parts," +
-          s" expected ${sorted.size}) on non-empty data")
-      spark.sparkContext.parallelize(
-        Seq.empty[org.apache.spark.sql.catalyst.InternalRow], sorted.size)
+          s" expected ${groups.size}) on non-empty data")
+      spark.sparkContext.parallelize(Seq.empty[InternalRow], groups.size)
     }
-    internal.localCheckpoint()
-    internal.count()
-    if (sorted == (0 until nBuckets)) new Segment(internal)
-    else new Segment(internal, Some(sorted.zipWithIndex.toMap))
+    pin(new Segment(BucketPacking.byRowBucket(internal, groups, schema),
+      BucketPacking.slots(groups)))
   }
 
-  private def bucketsDf(ids: Seq[Int], extra: Option[Segment] = None): DataFrame = {
-    val sorted = ids.distinct.sorted
-    val pairs = sorted.flatMap(b => bucketSegs(b).map(s => (s, b)))
-    if (sorted.isEmpty || pairs.isEmpty) return spark.createDataFrame(
-      spark.sparkContext.emptyRDD[Row], schema)
-    // ONE scan for the whole view: output partition j concatenates bucket
-    // sorted(j)'s physical partition from every segment in its spine
-    // (BucketUnionRDD, narrow). The resulting frame DECLARES the key
-    // clustering the bucket layout guarantees (BucketClusteredPartitioning
-    // via the LogicalRDD shim) — so a step's consolidate ∘ agg over this
-    // view plans with ZERO exchanges: Catalyst is told what the reference's
-    // sharded trace makes structural (shard.rs — aggregation probes shards
-    // in place, never re-shards). Correctness is untouched: the declared
-    // property (equal keys co-located) holds by construction of every
-    // segment, and IncrementalSpec's bucket-lineup + KeyedStateSpec's
-    // readback gates pin it.
-    // `extra`: an uninstalled segment (a step's Δ mini-segment) read as if
-    // appended to every bucket it covers — lets aggStep see old ∪ Δ as one
-    // clustered scan before deciding how to install the merge
-    val segs = (pairs.map(_._1) ++ extra).distinct
-    val choices: Array[Array[Array[Int]]] = Array.tabulate(sorted.size) { j =>
-      val b = sorted(j)
-      val inSpine = bucketSegs(b)
+  /** DataFrame over exactly the buckets of `groups` — slot reads of their
+    * pinned segments; no job is launched and no other bucket is scanned.
+    * The view has one partition per group; partition j concatenates, for
+    * each bucket of group j, its slot in every segment of its spine.
+    * Appended buckets may carry weight-split duplicate rows — consolidate
+    * on read where physical uniqueness matters.
+    *
+    * ONE scan for the whole view (BucketUnionRDD, narrow). The resulting
+    * frame DECLARES the key clustering the bucket layout guarantees
+    * (BucketClusteredPartitioning via the LogicalRDD shim) — so a step's
+    * consolidate ∘ agg over this view plans with ZERO exchanges: Catalyst is
+    * told what the reference's sharded trace makes structural (shard.rs —
+    * aggregation probes shards in place, never re-shards). Correctness is
+    * untouched: the declared property (equal keys co-located) holds because
+    * a key lives in exactly one bucket and a bucket in exactly one group,
+    * and KeyedStateSpec's layout law and readback gates pin it.
+    *
+    * `extra`: an uninstalled segment (a step's routed Δ) read as if
+    * appended to every bucket it covers — lets a step see old ∪ Δ as one
+    * clustered scan and consolidate it in place. */
+  private def viewOf(groups: IndexedSeq[IndexedSeq[Int]],
+                     extra: Option[Segment] = None): DataFrame = {
+    val listed = groups.flatten.flatMap(bucketSegs(_)).distinct
+    if (listed.isEmpty) return spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
+    val segs = (listed ++ extra).distinct
+    def carries(s: Segment, b: Int): Boolean =
+      bucketSegs(b).contains(s) || extra.exists(x => (x eq s) && x.slots.contains(b))
+    val reads = groups.map { grp =>
       segs.map { s =>
-        val listed = inSpine.contains(s) ||
-          extra.exists(x => (x eq s) && x.index.forall(_.contains(b)))
-        if (listed) Array(s.index.map(_(b)).getOrElse(b))
-        else Array.empty[Int]
+        grp.filter(carries(s, _)).map(s.slots).groupBy(_.part).toArray.sortBy(_._1)
+          .map { case (p, ss) => (p, ss.map(_.slot).sorted.toArray) }
       }.toArray
-    }
-    val union = new graft.plans.BucketUnionRDD(segs.map(_.internalRows), choices)
+    }.toArray
+    val union = new graft.plans.BucketUnionRDD(segs.map(_.chunks), reads)
     org.apache.spark.sql.graft.GraftSqlShim.internalDf(spark, union, schema,
       attrs => graft.plans.BucketClusteredPartitioning(
-        keys.map(k => attrs(schema.fieldIndex(k))), sorted.size))
+        keys.map(k => attrs(schema.fieldIndex(k))), groups.size))
   }
 
   /** The full state as a Z-set (final read-out; scans every bucket). */
-  def snapshot: ZSetFrame = ZSetFrame.fromDelta(bucketsDf(0 until nBuckets))
+  def snapshot: ZSetFrame = view(0 until nBuckets)
 
   /** Bucket ids a delta's keys hash into (one small job). Shareable across
     * same-shaped states: any KeyedState with equal `keys` and `nBuckets`
@@ -330,17 +326,17 @@ final class KeyedState(val keys: Seq[String], val nBuckets: Int, init: ZSetFrame
     delta.df.select(pmod(hash(keys.map(delta.df(_)): _*), lit(nBuckets)).as("b"))
       .distinct().collect().map(_.getInt(0)).toSeq.sorted
 
-  /** Partition-pruned read of the given buckets (no job launched). */
+  /** Bucket-pruned read of the given buckets (no job launched). */
   def view(bucketIds: Seq[Int]): ZSetFrame =
-    ZSetFrame.fromDelta(bucketsDf(bucketIds))
+    ZSetFrame.fromDelta(viewOf(groupsOf(bucketIds.distinct.sorted.toIndexedSeq)))
 
   /** Rewrite ALL buckets into one fresh CONSOLIDATED segment (one
-    * O(|state|) job) and retire every old segment — reclaims partitions
-    * superseded by bucket moves that the per-segment refcount cannot see,
-    * and collapses append-mode spine chains (weight-split duplicates) back
-    * to physically-unique rows. Runs automatically every `compactEvery`
-    * merges; amortized cost O(|state|/compactEvery) per step — the fueled
-    * spine's deferred merge.
+    * O(|state|) job, in place — no shuffle) and retire every old segment —
+    * reclaims slots superseded by bucket moves that the per-segment
+    * refcount cannot see, and collapses append-mode spine chains
+    * (weight-split duplicates) back to physically-unique rows. Runs
+    * automatically every `compactEvery` merges; amortized cost
+    * O(|state|/compactEvery) per step — the fueled spine's deferred merge.
     *
     * `keep`: optional RETENTION predicate over the data columns — rows
     * failing it are DROPPED (not retracted) during the rewrite. This is
@@ -365,35 +361,20 @@ final class KeyedState(val keys: Seq[String], val nBuckets: Int, init: ZSetFrame
   }
 
   private def compactInternal(keep: Option[Column]): Unit = {
-    val all = ZSetFrame.fromDelta(bucketsDf(0 until nBuckets))
-    val seg = materializeBucketed(
-      keep.fold(all)(all.where), consolidate = true)
-    install(seg, 0 until nBuckets)
+    val groups = groupsOf(0 until nBuckets)
+    val view = viewOf(groups)
+    install(materializeAligned(keep.fold(view)(view.where), groups), 0 until nBuckets)
   }
 
-  /** Merge a delta into the state, touching only the buckets its keys hash
-    * into. Returns (old content of touched buckets, new content of touched
-    * buckets) for delta-rule use — both are partition-pruned views, never
-    * full-state scans; valid until the second subsequent merge.
-    *
-    * `append = false` (default): the touched buckets' old content and the
-    * delta consolidate into ONE new segment — rows stay physically unique,
-    * at O(touched-bucket rows) per step.
-    * `append = true`: the delta becomes a NEW segment prepended to its
-    * buckets' spine — O(|Δ|) per step regardless of bucket size (the
-    * reference's fueled-spine append, spine_fueled.rs:1-45); returned
-    * views may then carry weight-split duplicate rows, so readers that
-    * need physical uniqueness consolidate on read (aggStep consolidates
-    * AFTER `restrictTo`, paying O(restricted), and periodic `compact`
-    * collapses the spine). */
   /** Shared step prologue: advance the generation clock (reclaim + periodic
-    * compaction), align/pin the delta, resolve the touched-bucket span, and
-    * take the pre-merge view of the touched buckets. Install of the new
+    * compaction), align/pin the delta, resolve the touched-bucket span and
+    * its packing (`groupsOf`), and take the pre-merge view of the touched
+    * buckets. Install of the new
     * segment is the caller's job — `aggStep` uses this to run the segment
     * build CONCURRENTLY with the output-delta job. */
   private def prepare(delta: ZSetFrame, checkpointDelta: Boolean,
                       knownTouched: Option[Seq[Int]])
-      : (ZSetFrame, Seq[Int], ZSetFrame) = {
+      : (ZSetFrame, IndexedSeq[IndexedSeq[Int]], ZSetFrame) = {
     retireQ.advance()
     // compactInternal, NOT compact(): this merge's advance() above already
     // ticked the clock for this step (see compact()'s scaladoc)
@@ -408,13 +389,13 @@ final class KeyedState(val keys: Seq[String], val nBuckets: Int, init: ZSetFrame
       val c = aligned.localCheckpoint()
       // the internal delta checkpoint only needs to live through this
       // merge; free it on the same deferred schedule as retired segments
-      retireQ.retire(new Segment(c.df.rdd))
+      retireQ.retire(new Segment(c.df.rdd, Map.empty))
       c
     } else aligned
     // knownTouched CONTRACT: any SUPERSET of the delta's true bucket span.
     // An under-inclusive set silently corrupts state — install() repoints
     // only the listed buckets, so delta rows hashing elsewhere land in an
-    // unreferenced partition and are dropped without error. Validated
+    // unreferenced slot and are dropped without error. Validated
     // behind spark.graft.checkedTouched (debug; costs one extra job/step).
     val touched = knownTouched match {
       case Some(ts) =>
@@ -426,33 +407,53 @@ final class KeyedState(val keys: Seq[String], val nBuckets: Int, init: ZSetFrame
         ts
       case None => touchedBuckets(d)
     }
-    (d, touched, ZSetFrame.fromDelta(bucketsDf(touched)))
+    val groups = groupsOf(touched.distinct.sorted.toIndexedSeq)
+    (d, groups, ZSetFrame.fromDelta(viewOf(groups)))
   }
 
+  /** Merge a delta into the state, touching only the buckets its keys hash
+    * into. Returns (old content of touched buckets, new content of touched
+    * buckets) for delta-rule use — both are bucket-pruned views, never
+    * full-state scans; valid until the second subsequent merge.
+    *
+    * `append = false` (default): only the delta is routed into the bucket
+    * layout, and the touched buckets' old content is consolidated with it
+    * IN PLACE into ONE new segment (`aggStep`'s shape: the Δ route's map
+    * stage plus one exchange-free consolidation — 2 jobs) — rows stay
+    * physically unique, at O(|Δ|) shuffle and O(touched-bucket rows) scan
+    * per step.
+    * `append = true`: the delta becomes a NEW segment prepended to its
+    * buckets' spine — O(|Δ|) per step regardless of bucket size (the
+    * reference's fueled-spine append, spine_fueled.rs:1-45); returned
+    * views may then carry weight-split duplicate rows, so readers that
+    * need physical uniqueness consolidate on read (aggStep consolidates
+    * AFTER `restrictTo`, paying O(restricted), and periodic `compact`
+    * collapses the spine). */
   def merge(delta: ZSetFrame, checkpointDelta: Boolean = true,
             knownTouched: Option[Seq[Int]] = None,
             append: Boolean = false): (ZSetFrame, ZSetFrame) = {
-    val (d, touched, oldTouched) = prepare(delta, checkpointDelta, knownTouched)
+    val (d, groups, oldTouched) = prepare(delta, checkpointDelta, knownTouched)
+    val touched = groups.flatten
     if (append) {
-      // spine append: shuffle ONLY the delta into the bucket layout; old
+      // spine append: route ONLY the delta into the bucket layout; old
       // segments are untouched (no O(bucket) consolidate on the hot path)
-      installAppend(materializeBucketed(d, Some(touched)), touched)
+      installAppend(pin(routed(d, groups)), touched)
     } else {
       // consolidate BEFORE installing: state rows must stay physically
       // unique (weight-merged) or count-style aggregates over the trace
-      // would see duplicate rows; the groupBy shuffles only touched data,
-      // never |DB|
-      val seg = materializeBucketed(oldTouched + d, Some(touched), consolidate = true)
-      install(seg, touched)
+      // would see duplicate rows. The routed Δ is read unpinned, once, as
+      // the view's extra spine batch — its shuffle is the step's only one
+      val dView = viewOf(groups, extra = Some(routed(d, groups)))
+      install(materializeAligned(dView, groups), touched)
     }
-    val newTouched = ZSetFrame.fromDelta(bucketsDf(touched))
+    val newTouched = ZSetFrame.fromDelta(viewOf(groups))
     (oldTouched, newTouched)
   }
 
   /** Trace PROBE: the state rows living in the buckets touched by `other`'s
     * keys — the reference's indexed-trace lookup during an incremental join
     * (reference: operator/join.rs:180 — Δ is joined against the sharded
-    * trace by key probe, never a full scan). Read-only, partition-pruned:
+    * trace by key probe, never a full scan). Read-only, bucket-pruned:
     * cost is O(|other| + touched-bucket rows). The result may contain
     * co-bucketed extra keys; the subsequent equi-join discards them. */
   def probe(other: ZSetFrame): ZSetFrame = view(touchedBuckets(other))
@@ -461,7 +462,7 @@ final class KeyedState(val keys: Seq[String], val nBuckets: Int, init: ZSetFrame
     * merge the delta, then re-aggregate ONLY the touched buckets, emitting
     * -old/+new output rows (reference: aggregate/mod.rs:204-244). Per-step
     * cost is O(|Δ| + |state of touched buckets|): both aggregates below run
-    * over partition-pruned bucket views, so untouched state is never
+    * over bucket-pruned views, so untouched state is never
     * scanned; output rows of co-bucketed but untouched keys are identical
     * in both terms and cancel in the Z-set minus. The emitted delta is
     * EAGERLY materialized (it is O(touched output), not O(state)) so it
@@ -522,17 +523,18 @@ final class KeyedState(val keys: Seq[String], val nBuckets: Int, init: ZSetFrame
     // consolidation on actual spine depth (oldTouched is a view over the
     // pre-merge segment lists)
     val preSpined = anySpine
-    val (d, touched, oldTouched) = prepare(delta, checkpointDelta, knownTouched)
-    // Δ BUCKET ALIGNMENT, eagerly (ONE O(|Δ|) job — the step's only
-    // shuffle): with the delta in the state's own layout, the new side is
+    val (d, groups, oldTouched) = prepare(delta, checkpointDelta, knownTouched)
+    val touched = groups.flatten
+    // Δ BUCKET ALIGNMENT, eagerly (the step's only shuffle, O(|Δ|), and
+    // pinned: both aggregate chains and the segment build read it): with the delta in the state's own layout, the new side is
     // a single bucket-clustered scan (old spine ⊎ Δ mini-segment via
-    // bucketsDf's `extra`), so BOTH aggregate chains below and the replace
+    // viewOf's `extra`), so BOTH aggregate chains below and the replace
     // consolidation plan with zero exchanges. This is the reference's step
     // economics made literal: a batch is routed to its shards once, and
     // every downstream read/merge happens shard-local
     // (communication/shard.rs; spine_fueled.rs merges within a shard).
-    val miniSeg = materializeBucketed(d, Some(touched))
-    val newView = ZSetFrame.fromDelta(bucketsDf(touched, extra = Some(miniSeg)))
+    val miniSeg = pin(routed(d, groups))
+    val newView = ZSetFrame.fromDelta(viewOf(groups, extra = Some(miniSeg)))
     val (o, n) = restrictTo match {
       case Some(p) => (oldTouched.where(p), newView.where(p))
       case None => (oldTouched, newView)
@@ -543,7 +545,7 @@ final class KeyedState(val keys: Seq[String], val nBuckets: Int, init: ZSetFrame
     val oc = if (preSpined) o.consolidate else o
     if (append) {
       // the aligned delta IS the merge — install up front; views captured
-      // above are unaffected (bucketsDf snapshots the spine lists eagerly).
+      // above are unaffected (viewOf snapshots the spine lists eagerly).
       // A failed output job leaves the merge installed, matching the
       // replace path's failure contract.
       installAppend(miniSeg, touched)
@@ -557,9 +559,9 @@ final class KeyedState(val keys: Seq[String], val nBuckets: Int, init: ZSetFrame
       // which a shared pool thread would not see), CONCURRENT with the
       // output job — and itself shuffle-free: the spine view is already
       // bucket-aligned, so consolidating it is scan + agg in place
-      // (materializeAligned), partition indexes preserved.
+      // (materializeAligned), each bucket group staying in its task.
       val segTask = new java.util.concurrent.FutureTask(() =>
-        materializeAligned(newView.df, touched.distinct.sorted))
+        materializeAligned(newView.df, groups))
       val segThread = new Thread(segTask, "graft-segment-build")
       segThread.setDaemon(true)
       segThread.start()

@@ -5,12 +5,16 @@ import org.apache.spark.sql.catalyst.plans.physical._
 import org.apache.spark.sql.types.{DataType, IntegerType}
 
 /** Physical partitioning of a KeyedState bucket view: every row of a given
-  * key lives in exactly one partition (its bucket), but partition INDEX is
-  * not a function Catalyst can reproduce (touched-pruned views renumber the
-  * kept buckets consecutively). That is precisely `ClusteredDistribution` —
-  * co-location without an index formula — so this partitioning satisfies
-  * clustered requirements (aggregations over the state keys or any superset,
-  * e.g. a Z-set consolidate's full-column grouping) and NOTHING else.
+  * key lives in exactly one partition — the one whose bucket GROUP holds
+  * its bucket (a view of k sorted buckets runs as G = min(k, parallelism)
+  * partitions, each a contiguous group of them; each key hashes to exactly
+  * one bucket, so it is in exactly one group). Partition INDEX is not a
+  * function Catalyst can reproduce (groups depend on which buckets the view
+  * spans). That is precisely `ClusteredDistribution` — co-location without
+  * an index formula — so this partitioning satisfies clustered requirements
+  * (aggregations over the state keys or any superset, e.g. a Z-set
+  * consolidate's full-column grouping) and NOTHING else. `numPartitions` is
+  * G, not the bucket count.
   *
   * Declaring it on the trace's scan node is what lets Catalyst plan a
   * per-step `consolidate ∘ agg` with ZERO exchanges: the reference never

@@ -65,7 +65,7 @@ object TextAnalysis extends QueryModule {
     * hash-collision contamination (another slice sharing a bucket)
     * filters out exactly — the epoch frames are row-identical to the
     * former `where` filters. Close after the replay's last step. */
-  private final class EpochSlices(src: DataFrame, mod: Int, retRes: Int) {
+  private[graft] final class EpochSlices(src: DataFrame, mod: Int, retRes: Int) {
     import graft.core.ZSetFrame
     private val nB = 16
     private val srcCols = src.columns.toSeq
@@ -76,9 +76,11 @@ object TextAnalysis extends QueryModule {
       ZSetFrame.fromTable(src.where(lit(false)).select(col("*"), slCol)))
     slicer.merge(ZSetFrame.fromTable(src.select(col("*"), slCol)),
       checkpointDelta = false)
+    /** The replace merge weight-merges exact-duplicate source rows into one
+      * row of weight w, so the read re-expands each row w times. */
     private def read(slices: Seq[Long], pred: Column): DataFrame =
       slicer.view(graft.incremental.KeyedState.bucketsOfLongKeys(slices, nB))
-        .df.where(pred).select(srcCols.map(col): _*)
+        .where(pred).toMultisetDF.select(srcCols.map(col): _*)
     /** rows with doc_id % mod == res — an insert epoch's delta */
     def insert(res: Int): DataFrame =
       read(Seq(res * 2L, res * 2L + 1L),

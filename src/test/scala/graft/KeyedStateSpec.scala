@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.core.ZSetFrame
-import graft.incremental.{Incremental, KeyedState}
+import graft.incremental.{Incremental, KeyedState, Pinned}
 
 /** Key-partitioned trace: correctness of the bucket layout and the
   * incremental-agg law over it. */
@@ -129,11 +129,10 @@ class KeyedStateSpec extends SparkSpec {
   }
 
   test("touched-pruned segments: sparse merges at high bucket count read back exactly") {
-    // r10: per-step segments materialize ONLY their touched partitions
-    // (PartitionPruningRDD + a bucket→index map). At 64 buckets and 1-3
-    // keys per delta every post-seed segment is pruned and the map is
-    // non-trivial (physical index ≠ bucket id for all but bucket 0) —
-    // snapshot, partition-pruned view() reads, and aggStep deltas must all
+    // per-step segments materialize ONLY their touched buckets, packed
+    // into (partition, slot)s. At 64 buckets and 1-3 keys per delta every
+    // post-seed segment is pruned and the slot index is non-trivial —
+    // snapshot, bucket-pruned view() reads, and aggStep deltas must all
     // translate correctly, in replace AND append (spine) mode.
     for (append <- Seq(false, true)) {
       val rnd = new scala.util.Random(if (append) 1300 else 1200)
@@ -357,4 +356,121 @@ class KeyedStateSpec extends SparkSpec {
     assert(st.view(0 until 4).consolidate.df.count() === 64)
     st.close()
   }
+
+  test("layout law: view(S) ≡ the naive fold restricted to S, across a generated op sequence") {
+    // every way a step can rewrite the packed layout — replace and append
+    // merges, aggStep with and without restrictTo (and in append mode), a
+    // caller compact, and a bulk step touching every bucket — must leave
+    // each bucket readable on its own: view(S) equals the naive Z-set fold
+    // filtered to pmod(hash(k), n) ∈ S, for S = ∅, a singleton, a random
+    // subset and all buckets. aggStep's emitted delta must equal the batch
+    // max-per-key difference of the fold.
+    val n = 16
+    val rnd = new scala.util.Random(1700)
+    val naive = scala.collection.mutable.Map.empty[(Long, Long), Long]
+    def fold(rows: Seq[(Long, Long, Long)]): Unit = rows.foreach { case (k, v, w) =>
+      val nw = naive.getOrElse((k, v), 0L) + w
+      if (nw == 0) naive.remove((k, v)) else naive((k, v)) = nw
+    }
+    def zf(rows: Seq[(Long, Long, Long)]): ZSetFrame =
+      ZSetFrame.fromDelta(rows.toDF("k", "v", ZSetFrame.W))
+    // inserts with weights 1-2, two exact-duplicate rows, retractions of live rows
+    def delta(inserts: Int, keySpace: Int): Seq[(Long, Long, Long)] = {
+      val ins = Seq.fill(inserts)(
+        (rnd.nextInt(keySpace).toLong, rnd.nextInt(50).toLong, 1L + rnd.nextInt(2)))
+      val ret = rnd.shuffle(naive.keys.toSeq.sorted).take(2).map { case (k, v) => (k, v, -1L) }
+      ins ++ ins.take(2) ++ ret
+    }
+    def maxAgg(z: ZSetFrame): ZSetFrame =
+      z.aggregate(Seq(col("k")), expandWeights = false, max(col("v")).as("mx"))
+    def maxOf(m: collection.Map[(Long, Long), Long]): Map[(Long, Long), Long] =
+      m.keys.groupBy(_._1).map { case (k, kvs) => (k, kvs.map(_._2).max) -> 1L }
+    def rowsOf(z: ZSetFrame): Map[(Long, Long), Long] =
+      z.consolidate.df.collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
+    val st = new KeyedState(Seq("k"), n, Incremental.emptyLike(zf(Seq((0L, 0L, 1L)))))
+    def checkViews(label: String): Unit =
+      Seq(Seq.empty[Int], Seq(rnd.nextInt(n)), (0 until n).filter(_ => rnd.nextBoolean()),
+          0 until n).foreach { s =>
+        val want = naive.filter { case ((k, _), _) => s.contains(KeyedState.bucketOfLongs(Seq(k), n)) }
+        assert(rowsOf(st.view(s)) == want, s"after $label: view(${s.mkString(",")}) differs")
+      }
+    def aggOp(rows: Seq[(Long, Long, Long)], restrict: Boolean, append: Boolean): Unit = {
+      val before = maxOf(naive)
+      val keys = rows.map(_._1).distinct
+      val out = st.aggStep(zf(rows), append = append,
+        restrictTo = if (restrict) Some(col("k").isin(keys: _*)) else None)(maxAgg)
+      fold(rows)
+      val after = maxOf(naive)
+      val want = (before.keySet ++ after.keySet).toSeq
+        .map(r => r -> (after.getOrElse(r, 0L) - before.getOrElse(r, 0L))).filter(_._2 != 0).toMap
+      assert(rowsOf(out) == want, s"aggStep(restrict=$restrict, append=$append) emitted a wrong delta")
+    }
+    val ops = rnd.shuffle(Seq("replace", "append", "agg", "aggRestrict", "aggAppend", "compact") ++
+      Seq("replace", "append", "agg", "aggRestrict", "aggAppend")) :+ "bulk"
+    ops.foreach { op =>
+      op match {
+        case "replace" => val d = delta(5, 200); st.merge(zf(d)); fold(d)
+        case "append" => val d = delta(5, 200); st.merge(zf(d), append = true); fold(d)
+        case "agg" => aggOp(delta(5, 200), restrict = false, append = false)
+        case "aggRestrict" => aggOp(delta(5, 200), restrict = true, append = false)
+        case "aggAppend" => aggOp(delta(5, 200), restrict = true, append = true)
+        case "compact" => st.compact()
+        case "bulk" =>
+          val d = delta(300, 200)
+          assert(KeyedState.bucketsOfLongKeys(d.map(_._1), n).size == n, "bulk step must touch every bucket")
+          st.merge(zf(d)); fold(d)
+      }
+      checkViews(op)
+    }
+    // after the bulk replace every bucket has one segment, packed into
+    // G = min(n, cores) partitions: reading one bucket pulls whole chunk
+    // elements from its partition (counted by the cached-block reader),
+    // never the rows of the buckets packed beside it
+    val g = math.min(n, spark.sparkContext.defaultParallelism)
+    val b = (0 until n).maxBy(b => naive.keys.count(kv => KeyedState.bucketOfLongs(Seq(kv._1), n) == b))
+    val (rows, shape) = StepShape.measure(spark)(st.view(Seq(b)).df.queryExecution.toRdd.count())
+    val coPacked = naive.keys.count(kv => KeyedState.bucketOfLongs(Seq(kv._1), n) != b)
+    assert(rows == naive.keys.count(kv => KeyedState.bucketOfLongs(Seq(kv._1), n) == b))
+    assert(shape.tasks == 1, s"one bucket must read as one task, got $shape")
+    assert(shape.cachedRecordsRead <= (n + g - 1) / g,
+      s"reading bucket $b pulled ${shape.cachedRecordsRead} cached elements: more than its " +
+        s"partition's chunk count (the $coPacked co-packed rows must not be iterated)")
+    st.close()
+  }
+
+  test("a packed partition's skipped chunks are never iterated") {
+    // BucketUnionRDD picks chunks by slot: the rows of a chunk it does not
+    // select are never touched — here any touch of them throws
+    import org.apache.spark.sql.catalyst.InternalRow
+    import graft.plans.BucketUnionRDD
+    val packed = spark.sparkContext.parallelize(Seq(0), 1).mapPartitions { _ =>
+      def rows(vs: Long*): Array[InternalRow] = vs.map(v => new PoisonableRow(v, false): InternalRow).toArray
+      def poison: Array[InternalRow] = Array(new PoisonableRow(0L, true))
+      Iterator(poison, rows(1L, 2L), poison, rows(3L), poison)
+    }.localCheckpoint()
+    packed.count()
+    val view = new BucketUnionRDD(Seq(packed), Array(Array(Array((0, Array(1, 3))))))
+    assert(view.map(_.getLong(0)).collect().sorted.toSeq == Seq(1L, 2L, 3L))
+    Pinned.unpersistTree(packed)
+  }
+
+  test("EpochSlices.read keeps the multiplicity of exact-duplicate source rows") {
+    // the slicer's replace merge weight-merges an exact-duplicate source row
+    // into one row of weight 2; the epoch read must expand it back
+    val src = Seq((1L, "a", 1L), (1L, "a", 1L), (2L, "b", 1L), (3L, "c", 2L), (4L, "d", 1L))
+      .toDF("doc_id", "term", "tf")
+    val es = new graft.queries.TextAnalysis.EpochSlices(src, 2, 3)
+    try {
+      assertSameRows(es.insert(1), src.where(pmod(col("doc_id"), lit(2L)) === 1L))
+      assertSameRows(es.retract, src.where(pmod(col("doc_id"), lit(10L)) === 3L))
+    } finally es.close()
+  }
+}
+
+/** A test row whose field reads throw when `poisoned`. */
+final class PoisonableRow(v: Long, poisoned: Boolean)
+    extends org.apache.spark.sql.catalyst.expressions.GenericInternalRow(Array[Any](v)) {
+  override protected def genericGet(ordinal: Int): Any =
+    if (poisoned) throw new IllegalStateException("a skipped chunk's row was read")
+    else super.genericGet(ordinal)
 }

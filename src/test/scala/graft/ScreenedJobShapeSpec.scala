@@ -1,15 +1,9 @@
 package graft
 
-import java.util.concurrent.ConcurrentHashMap
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.ListenerBusAccess
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-
 import graft.core.ZSetFrame
 
-/** Per-step Spark job counts of the four screened retrieval states, pinned
-  * as upper bounds: a step's cost on this engine is barrier-floor
+/** Per-step Spark job and task counts of the four screened retrieval
+  * states, pinned as upper bounds: a step's cost on this engine is barrier-floor
   * dominated, so the number of jobs a step schedules is the figure a
   * refactor of the step lifecycle must not raise. Each state runs one
   * fixed sequence — a LOAD step (12 docs), a QUIET step (a CDC update of
@@ -17,9 +11,9 @@ import graft.core.ZSetFrame
   * and only the updated doc is rescored) and a CROSSING step (3 inserted
   * docs that move N/df enough to pull non-delta docs into the rescore) —
   * and its integrated output must equal the batch model over the final
-  * corpus. Jobs are attributed by a thread-local tag that Spark copies
-  * into every job the step starts, including the ones its concurrent
-  * merge threads and broadcast builds run. */
+  * corpus. Work is attributed by StepShape's thread-local tag, which Spark
+  * copies into every job the step starts, including the ones its
+  * concurrent merge threads and broadcast builds run. */
 class ScreenedJobShapeSpec extends SparkSpec {
   import spark.implicits._
 
@@ -39,30 +33,16 @@ class ScreenedJobShapeSpec extends SparkSpec {
     "pmi" -> Seq(20, 18, 21),
     "cosine" -> Seq(24, 23, 25))
 
-  private val TagKey = "graft.jobshape"
-  private val jobs = new ConcurrentHashMap[String, AtomicInteger]()
-  private lazy val listener = {
-    val l = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit =
-        Option(js.properties).flatMap(p => Option(p.getProperty(TagKey)))
-          .foreach(t => jobs.computeIfAbsent(t, _ => new AtomicInteger).incrementAndGet())
-    }
-    spark.sparkContext.addSparkListener(l)
-    l
-  }
-  private val tagSeq = new AtomicInteger
-
-  /** Jobs started by `f` (on this thread or any thread it spawns). */
-  private def countJobs[A](f: => A): (A, Int) = {
-    listener
-    val sc = spark.sparkContext
-    val tag = s"step-${tagSeq.incrementAndGet()}"
-    ListenerBusAccess.drain(sc)
-    sc.setLocalProperty(TagKey, tag)
-    val a = try f finally sc.setLocalProperty(TagKey, null)
-    ListenerBusAccess.drain(sc)
-    (a, Option(jobs.get(tag)).map(_.get).getOrElse(0))
-  }
+  /** Task-count ceilings (load, quiet, crossing), measured on local[4]
+    * with the packed bucket layout (a view over k buckets reads in
+    * min(k, cores) tasks); charged like the job counts. */
+  private val taskBounds: Map[String, Seq[Int]] = Map(
+    "tfidf" -> Seq(89, 64, 85),
+    "tfidf-durable" -> Seq(102, 79, 100),
+    "bm25" -> Seq(106, 83, 106),
+    "bm25-durable" -> Seq(114, 93, 120),
+    "pmi" -> Seq(64, 44, 58),
+    "cosine" -> Seq(73, 53, 70))
 
   // doc i → term → tf: "a" everywhere, "b" on even docs, "c" on every third
   // doc, one of four filler terms
@@ -84,30 +64,34 @@ class ScreenedJobShapeSpec extends SparkSpec {
     Seq((6L, docTf(6), -1L), (6L, v2, 1L)),
     crossIds.map(i => (i.toLong, docTf(i), 1L)))
 
-  /** Run `steps` through a state, returning per-step job counts and the
+  /** Run `steps` through a state, returning per-step (jobs, tasks) and the
     * integrated output; the quiet step must rescore only its own delta
     * docs and the crossing step must pull in others. */
   private def drive(steps: Seq[ZSetFrame], step: ZSetFrame => ZSetFrame,
                     affected: () => Set[Long], deltaDocs: Seq[Set[Long]])
-      : (Seq[Int], ZSetFrame) = {
+      : (Seq[(Int, Int)], ZSetFrame) = {
     val (outs, counts) = steps.zip(deltaDocs).zipWithIndex.map { case ((d, docs), i) =>
-      val (out, n) = countJobs(step(d))
+      val (out, shape) = StepShape.measure(spark)(step(d))
       val aff = affected()
       if (i == 1) assert(aff == docs, s"quiet step rescored $aff, not only $docs")
       if (i == 2) assert((aff -- docs).nonEmpty, s"crossing step rescored only $aff")
-      (out, n)
+      (out, (shape.jobs, shape.tasks))
     }.unzip
     (counts, ZSetFrame.sumAll(outs))
   }
 
-  /** Run one state's sequence twice; assert each step's smaller job count
-    * against its bound. */
-  private def check(name: String)(run: => Seq[Int]): Unit = {
-    val counts = Seq(run, run).transpose.map(_.min)
-    info(s"$name jobs per step (load, quiet, crossing): ${counts.mkString(", ")}")
-    counts.zip(bounds(name)).zip(Seq("load", "quiet", "crossing")).foreach {
-      case ((n, b), phase) =>
-        assert(n <= b, s"$name $phase step ran $n jobs, bound $b")
+  /** Run one state's sequence twice; assert each step's smaller job and
+    * task counts against their bounds. */
+  private def check(name: String)(run: => Seq[(Int, Int)]): Unit = {
+    val runs = Seq(run, run)
+    val jobs = runs.map(_.map(_._1)).transpose.map(_.min)
+    val tasks = runs.map(_.map(_._2)).transpose.map(_.min)
+    info(s"$name jobs per step (load, quiet, crossing): ${jobs.mkString(", ")}; " +
+      s"tasks: ${tasks.mkString(", ")}")
+    Seq("load", "quiet", "crossing").zipWithIndex.foreach { case (phase, i) =>
+      assert(jobs(i) <= bounds(name)(i), s"$name $phase step ran ${jobs(i)} jobs, bound ${bounds(name)(i)}")
+      assert(tasks(i) <= taskBounds(name)(i),
+        s"$name $phase step ran ${tasks(i)} tasks, bound ${taskBounds(name)(i)}")
     }
   }
 

@@ -268,7 +268,7 @@ object StepBench {
     * of corpus-only vectors. Claim under test: a steady-state step — no new
     * queries in Δ — is O(Δ): the cached ≤100-row query trace joins the
     * broadcast Δ and the corpus trace is never rescanned (it is touched
-    * only by the amortized consolidation every TruncateEvery steps, whose
+    * only by the amortized consolidation every Pinned.TruncateEvery steps, whose
     * spike the per-step FLOOR stat deliberately excludes). */
   def runAnn(spark: SparkSession, n: Long, steps: Int): Seq[Double] = {
     import graft.queries.Dedup

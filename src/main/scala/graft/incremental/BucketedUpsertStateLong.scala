@@ -105,7 +105,7 @@ object LongLongMap {
   * Lifecycle: each step pins the merged state (`MEMORY_AND_DISK`) and
   * unpersists the previous generation after the merge materializes, so
   * pinned storage tracks ONE state copy plus the in-flight merge. Every
-  * [[BucketedUpsertStateLong.TruncateEvery]] steps the generation is
+  * [[Pinned.TruncateEvery]] steps the generation is
   * `localCheckpoint`ed: each generation's lineage points at the previous
   * (unpersisted) one, so without truncation a lost block after N steps
   * recomputes the whole delta history (and deep lineage risks stack
@@ -121,7 +121,7 @@ object LongLongMap {
   * merged current values — which doubles as the emitted output delta) and
   * prepends it; nothing else is copied, so a step's local work is
   * O(|Δ| · spine-depth probes), INDEPENDENT of bucket size. Every
-  * [[BucketedUpsertStateLong.TruncateEvery]] steps the spine folds into one
+  * [[Pinned.TruncateEvery]] steps the spine folds into one
   * fresh base (newest value per key wins — overlay values are
   * already-merged currents) — amortized O(bucket/TruncateEvery) per step,
   * the spine's deferred merge. The previous design copied the whole bucket
@@ -155,7 +155,7 @@ final class BucketedUpsertStateLong(
     val cmb = combine
     // compaction rides the same cadence as lineage truncation: the folded
     // generation is also the one whose block localCheckpoint pins
-    val doCompact = (stepsDone + 1) % BucketedUpsertStateLong.TruncateEvery == 0
+    val doCompact = (stepsDone + 1) % Pinned.TruncateEvery == 0
     val prevState: RDD[(List[LongLongMap], LongLongMap)] =
       if (pinned != null) pinned
       else sc.emptyRDD[(Long, Long)].partitionBy(partitioner)
@@ -201,7 +201,7 @@ final class BucketedUpsertStateLong(
     }
     merged.persist(StorageLevel.MEMORY_AND_DISK)
     stepsDone += 1
-    if (stepsDone % BucketedUpsertStateLong.TruncateEvery == 0)
+    if (stepsDone % Pinned.TruncateEvery == 0)
       merged.localCheckpoint() // truncate lineage (see class doc)
     merged.count() // materialize before retiring the previous generation
     val prev = pinned
@@ -234,15 +234,4 @@ final class BucketedUpsertStateLong(
     if (pinned != null) pinned.unpersist(blocking = false)
     pinned = null
   }
-}
-
-object BucketedUpsertStateLong {
-  /** Lineage-truncation cadence: generation N's lineage references
-    * generation N−1, which is unpersisted — after K steps a lost block
-    * would replay K delta merges, and unbounded chains eventually overflow
-    * the stack. Every 8th generation localCheckpoints (reusing its
-    * persisted blocks), bounding any replay to <8 steps; the spine
-    * compaction and the dedup steppers' slice consolidation ride the same
-    * cadence. */
-  val TruncateEvery = 8
 }

@@ -15,6 +15,15 @@ import org.apache.spark.storage.StorageLevel
   * shows no drift, so the cost was session debris, not the query). */
 object Pinned {
 
+  /** Lineage-truncation cadence of the generation-per-step states: state
+    * generation N's lineage references generation N−1, which is
+    * unpersisted — after K steps a lost block would replay K delta merges,
+    * and unbounded chains eventually overflow the stack. Every 8th
+    * generation localCheckpoints (reusing its persisted blocks), bounding
+    * any replay to <8 steps; BucketedUpsertStateLong's spine compaction and
+    * the dedup steppers' slice consolidation ride the same cadence. */
+  val TruncateEvery = 8
+
   /** Unpersist `rdd` and every persisted ancestor: a DataFrame's `.rdd` is
     * a row-conversion CHILD of the internally persisted checkpoint RDD, so
     * releasing a checkpointed frame means walking the (short) dependency

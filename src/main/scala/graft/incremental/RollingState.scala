@@ -204,22 +204,55 @@ final class RollingLinearState(init: ZSetFrame, keyCol: String, tsCol: String,
     * whose window outputs are not wanted (and what the step-bench seeds
     * use: a seed's output assembly over the whole corpus was the tier's
     * single most expensive job, VERDICT r15 #1). The post-ingest state is
-    * bit-identical to `step`'s — the merges below are the step's own merge
-    * branch verbatim — so subsequent `step` calls emit exactly what they
-    * would after an output-producing load of the same data. */
+    * bit-identical to `step`'s — both run [[admit]] and [[mergeDelta]] —
+    * so subsequent `step` calls emit exactly what they would after an
+    * output-producing load of the same data. */
   def ingest(delta: ZSetFrame, lo: Long, hi: Long,
              touchedKeys: Option[Seq[Long]]): Unit = {
+    val (d, dBuckets) = admit(delta, lo, hi, touchedKeys, checkpointDelta = true)
+    chunkLoSeen = math.min(chunkLoSeen, floorDiv(lo, chunkLen))
+    chunkHiSeen = math.max(chunkHiSeen, floorDiv(hi, chunkLen))
+    mergeDelta(d, dBuckets, withStats = true)
+  }
+
+  /** A step's delta, chunk-aligned (and pinned under `checkpointDelta`),
+    * with the buckets it touches. */
+  private def admit(delta: ZSetFrame, lo: Long, hi: Long,
+                    touchedKeys: Option[Seq[Long]],
+                    checkpointDelta: Boolean): (ZSetFrame, Seq[Int]) = {
     retireQ.advance()
-    val C = chunkLen
     val aligned = withChunk(ZSetFrame.fromDelta(
       delta.df.select((dataCols :+ ZSetFrame.W).map(col): _*)))
-    val d = aligned.localCheckpoint(eager = true)
-    retireQ.retire(d.df)
-    val all: Seq[Int] = 0 until nBuckets
-    val dBuckets = touchedKeys.fold(all)(ks =>
-      bucketsFor(ks, floorDiv(lo, C), floorDiv(hi, C)))
-    chunkLoSeen = math.min(chunkLoSeen, floorDiv(lo, C))
-    chunkHiSeen = math.max(chunkHiSeen, floorDiv(hi, C))
+    val d =
+      if (checkpointDelta) {
+        val c = aligned.localCheckpoint(eager = true)
+        retireQ.retire(c.df)
+        c
+      } else aligned
+    val dBuckets = touchedKeys.fold[Seq[Int]](0 until nBuckets)(ks =>
+      bucketsFor(ks, floorDiv(lo, chunkLen), floorDiv(hi, chunkLen)))
+    (d, dBuckets)
+  }
+
+  /** Merge the aligned delta `d` into the state: the partials delta
+    * (linear, O(Δ): −old +new per touched (k, chunk), from the PRE-merge
+    * partials view), the partials merge, the adaptive stats when
+    * `withStats`, then the spine append.
+    *
+    * The partials merge REPLACES (consolidates) its touched buckets — an
+    * O(touched bucket) shuffle, but one that keeps rows physically unique
+    * and the per-step plan width constant. The append-mode alternative was
+    * measured and rejected: O(Δ) merges, but every step leaves another
+    * segment in the view union, and the growing plan width cost more at the
+    * step floor than the consolidation it saved. The consolidation term
+    * scales with bucket SIZE, a deployment constant (partition count ∝
+    * state, Spark's own sizing rule — see STEPBENCH.md radix notes).
+    *
+    * The stats are two aggregates over the PRUNED touched views (co-bucketed
+    * untouched cells appear in both and cancel) — exact global rowsNet /
+    * cellsOccupied maintenance. */
+  private def mergeDelta(d: ZSetFrame, dBuckets: Seq[Int],
+                         withStats: Boolean): Unit = {
     val dAgg = d.df.groupBy(col(keyCol), col(CH))
       .agg(sum(col(ZSetFrame.W)).as("d_cnt"),
         sum(col(valCol) * col(ZSetFrame.W)).as("d_vsum"))
@@ -238,15 +271,17 @@ final class RollingLinearState(init: ZSetFrame, keyCol: String, tsCol: String,
         .unionByName(retractRows))
     val (oldT, newT) = partials.merge(pDelta, checkpointDelta = true,
       Some(dBuckets))
-    def stats(df: org.apache.spark.sql.DataFrame): (Long, Long) = {
-      val r = df.agg(coalesce(sum(col("p_cnt")), lit(0L)),
-        count(lit(1))).head()
-      (r.getLong(0), r.getLong(1))
+    if (withStats) {
+      def stats(df: org.apache.spark.sql.DataFrame): (Long, Long) = {
+        val r = df.agg(coalesce(sum(col("p_cnt")), lit(0L)),
+          count(lit(1))).head()
+        (r.getLong(0), r.getLong(1))
+      }
+      val (oSum, oCnt) = stats(oldT.df)
+      val (nSum, nCnt) = stats(newT.df)
+      rowsNet += nSum - oSum
+      cellsOccupied += nCnt - oCnt
     }
-    val (oSum, oCnt) = stats(oldT.df)
-    val (nSum, nCnt) = stats(newT.df)
-    rowsNet += nSum - oSum
-    cellsOccupied += nCnt - oCnt
     spine.merge(d, checkpointDelta = false, Some(dBuckets), append = true)
   }
 
@@ -284,19 +319,9 @@ final class RollingLinearState(init: ZSetFrame, keyCol: String, tsCol: String,
            touchedKeys: Option[Seq[Long]],
            checkpointDelta: Boolean = true,
            strategy: RollingLinearState.Strategy = RollingLinearState.Auto): ZSetFrame = {
-    retireQ.advance()
     val C = chunkLen
-    val aligned = withChunk(ZSetFrame.fromDelta(
-      delta.df.select((dataCols :+ ZSetFrame.W).map(col): _*)))
-    val d =
-      if (checkpointDelta) {
-        val c = aligned.localCheckpoint(eager = true)
-        retireQ.retire(c.df)
-        c
-      } else aligned
+    val (d, dBuckets) = admit(delta, lo, hi, touchedKeys, checkpointDelta)
     val all: Seq[Int] = 0 until nBuckets
-    val dBuckets = touchedKeys.fold(all)(ks =>
-      bucketsFor(ks, floorDiv(lo, C), floorDiv(hi, C)))
 
     // strategy decision BEFORE this step's stats update (the stats describe
     // the pre-step state, which is what the restricted read covers)
@@ -310,25 +335,6 @@ final class RollingLinearState(init: ZSetFrame, keyCol: String, tsCol: String,
     }
     chunkLoSeen = math.min(chunkLoSeen, floorDiv(lo, C))
     chunkHiSeen = math.max(chunkHiSeen, floorDiv(hi, C))
-
-    // ---- partials delta (linear, O(Δ)): −old +new per touched (k, chunk),
-    // computed from the PRE-merge partials view
-    val dAgg = d.df.groupBy(col(keyCol), col(CH))
-      .agg(sum(col(ZSetFrame.W)).as("d_cnt"),
-        sum(col(valCol) * col(ZSetFrame.W)).as("d_vsum"))
-    val oldP = partials.view(dBuckets).consolidate.df
-      .select(col(keyCol), col(CH), col("p_cnt"), col("p_vsum"))
-    val joinedP = dAgg.join(oldP, Seq(keyCol, CH), "left_outer")
-    val newRows = joinedP.select(col(keyCol), col(CH),
-      (coalesce(col("p_cnt"), lit(0L)) + col("d_cnt")).as("p_cnt"),
-      (coalesce(col("p_vsum"), lit(0L)) + col("d_vsum")).as("p_vsum"),
-      lit(1L).as(ZSetFrame.W))
-    val retractRows = joinedP.where(col("p_cnt").isNotNull)
-      .select(col(keyCol), col(CH), col("p_cnt"), col("p_vsum"),
-        lit(-1L).as(ZSetFrame.W))
-    val pDelta = ZSetFrame.fromDelta(
-      newRows.where(col("p_cnt") =!= 0L || col("p_vsum") =!= 0L)
-        .unionByName(retractRows))
 
     // ---- affected span + pre-merge spine view (assembly inputs)
     val (spanLo, spanHi) = (lo, hi + horizon)           // outputs that can change
@@ -346,37 +352,10 @@ final class RollingLinearState(init: ZSetFrame, keyCol: String, tsCol: String,
 
     // ---- both state merges on side threads, concurrent with assembly
     // (fresh threads so Spark job-local properties are inherited)
-    val mergeTask = new java.util.concurrent.FutureTask[Unit](() => {
-      // partials merge REPLACES (consolidates) its touched buckets — an
-      // O(touched bucket) shuffle, but one that keeps rows physically
-      // unique and the per-step plan width constant. The append-mode
-      // alternative was measured and rejected: O(Δ) merges, but every
-      // step leaves another segment in the view union, and the growing
-      // plan width cost more at the step floor than the consolidation it
-      // saved. The consolidation term scales with bucket SIZE, a
-      // deployment constant (partition count ∝ state, Spark's own sizing
-      // rule — see STEPBENCH.md radix notes), and runs concurrent with
-      // the output action, so it is visible only when it exceeds the
-      // output's own cost.
-      val (oldT, newT) = partials.merge(pDelta, checkpointDelta = true, Some(dBuckets))
-      if (strategy == RollingLinearState.Auto) {
-        // adaptive stats ride the merge thread: two aggregates over the
-        // PRUNED touched views (co-bucketed untouched cells appear in both
-        // and cancel) — exact global rowsNet / cellsOccupied maintenance
-        // with no critical-path job. Forced-strategy callers (measurement
-        // harnesses) skip it.
-        def stats(df: org.apache.spark.sql.DataFrame): (Long, Long) = {
-          val r = df.agg(coalesce(sum(col("p_cnt")), lit(0L)),
-            count(lit(1))).head()
-          (r.getLong(0), r.getLong(1))
-        }
-        val (oSum, oCnt) = stats(oldT.df)
-        val (nSum, nCnt) = stats(newT.df)
-        rowsNet += nSum - oSum
-        cellsOccupied += nCnt - oCnt
-      }
-      spine.merge(d, checkpointDelta = false, Some(dBuckets), append = true)
-    })
+    // (the stats ride the merge thread, off the critical path; forced-
+    // strategy callers — measurement harnesses — skip them)
+    val mergeTask = new java.util.concurrent.FutureTask[Unit](() =>
+      mergeDelta(d, dBuckets, withStats = strategy == RollingLinearState.Auto))
     val mergeThread = new Thread(mergeTask, "graft-rolling-merge")
     mergeThread.setDaemon(true)
     mergeThread.start()

@@ -1,5 +1,7 @@
 package graft.queries
 
+import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+
 import scala.jdk.OptionConverters._
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -20,33 +22,75 @@ object StreamingQueries extends QueryModule {
     * the flush sentinel's event time. */
   private val FlushNanos = 1717200000L * 1000000000L
 
-  /** Delete superseded staged generations (ADVICE r7): staged dirs are
-    * keyed on the source file's mtime, so a testdata regeneration strands
-    * every prior generation — same tag/dir prefix+suffix, different stamp —
-    * with real parquet copies inside. Swept when the new generation stages;
-    * also sweeps old-stamp `_build_`/`_pq` crash debris past the age guard
-    * (same-stamp debris is handled by the publish path's own sweep). */
-  private def gcStaleStaged(staged: java.nio.file.Path, pre: String,
-                            suf: String): Unit = {
-    import java.nio.file.{Files, Path}
-    def deleteTree(p: Path): Unit = if (Files.exists(p)) {
-      val walk = Files.walk(p)
-      try walk.sorted(java.util.Comparator.reverseOrder[Path]())
-        .forEach(Files.deleteIfExists(_))
-      finally walk.close()
-    }
+  /** Delete `p` and everything under it, children first (the walk stream
+    * is closed). A missing `p` is a no-op; any other failure throws. */
+  private[queries] def deleteTree(p: Path): Unit = if (Files.exists(p)) {
+    val walk = Files.walk(p)
+    try walk.sorted(java.util.Comparator.reverseOrder[Path]())
+      .forEach(Files.deleteIfExists(_))
+    finally walk.close()
+  }
+
+  /** Sweep a staged dir's garbage siblings (same tag/dir prefix+suffix):
+    * superseded generations — staged dirs are keyed on the source file's
+    * mtime, so a testdata regeneration strands every prior generation with
+    * real parquet copies inside — and `_build_`/`_pq` crash debris of any
+    * stamp. Debris is swept only past a 60 s age guard: an in-flight build
+    * of a concurrent suite is seconds old, so only dirs a previous (crashed)
+    * run could have left are old enough. */
+  private def gcStaleStaged(staged: Path, pre: String, suf: String): Unit = {
     val cur = staged.getFileName.toString
     val cutoff = System.currentTimeMillis() - 60000L
     val sibs = Files.list(staged.getParent)
     try sibs.filter { p =>
       val n = p.getFileName.toString
-      n != cur && n.startsWith(pre) && !n.startsWith(cur) && (
-        n.endsWith(suf) || // a published superseded generation
-        ((n.contains("_build_") || n.endsWith("_pq")) && // old crash debris
+      n != cur && n.startsWith(pre) && (
+        (n.endsWith(suf) && !n.startsWith(cur)) || // a superseded generation
+        ((n.contains("_build_") || n.endsWith("_pq")) && // crash debris
           (try Files.getLastModifiedTime(p).toMillis < cutoff
            catch { case _: java.io.IOException => false })))
     }.forEach(p => deleteTree(p))
     finally sibs.close()
+  }
+
+  /** THE publish protocol of the staged stream-source dirs (stageDir and
+    * stageSlicedDir): the dir is `/tmp/graft_stream_<tag>_<stamp>_<dir>`,
+    * where the stamp is the source file's mtime — a regenerated testdata
+    * (new schema/values) must not be served an old generation. Readiness
+    * is keyed on `marker`, the LAST artifact staged, not on the dir: a
+    * crash mid-staging leaves no marker, so the half-staged dir self-heals
+    * on the next call instead of being served incomplete. On that path the
+    * stale generations and crash debris are swept, `fill` builds the
+    * content in a private `_build_` dir, and a single atomic rename
+    * publishes it. */
+  private def publishStaged(dir: String, source: String, tag: String,
+                            marker: String)(fill: Path => Unit): String = {
+    val stamp = Files.getLastModifiedTime(Paths.get(source)).toMillis.toHexString
+    val suffix = "_" + dir.replaceAll("[^A-Za-z0-9]", "_")
+    val staged = Paths.get(s"/tmp/graft_stream_${tag}_$stamp$suffix")
+    if (!Files.exists(staged.resolve(marker))) {
+      gcStaleStaged(staged, s"graft_stream_${tag}_", suffix)
+      val build = staged.resolveSibling(
+        s"${staged.getFileName}_build_${java.util.UUID.randomUUID().toString.take(8)}")
+      Files.createDirectories(build)
+      fill(build)
+      // NOTE: only the final move is atomic; the deleteTree→move pair is
+      // not. Concurrent callers could delete a competitor's just-published
+      // dir before re-publishing, and a reader listing mid-gap sees a
+      // transient missing dir. The bench/verify drivers call this
+      // SEQUENTIALLY (one query at a time), which is the assumption here;
+      // a concurrent deployment would take a lock file around the publish.
+      deleteTree(staged) // clear any half-staged leftover before publishing
+      try Files.move(build, staged, StandardCopyOption.ATOMIC_MOVE)
+      catch {
+        case _: java.nio.file.FileSystemException =>
+          // a concurrent caller published first; accept theirs if complete
+          deleteTree(build)
+          if (!Files.exists(staged.resolve(marker)))
+            sys.error(s"staging race left $staged incomplete")
+      }
+    }
+    staged.toString
   }
 
   /** Stage a directory for the file stream source (it requires a directory):
@@ -56,55 +100,11 @@ object StreamingQueries extends QueryModule {
     * micro-batch that pushes the watermark past every real window — append
     * mode then emits and GCs all real windows; queries filter the sentinel
     * out). Each query tags its own dir so sentinels never leak across
-    * queries. */
+    * queries; the sentinel, when requested, is the readiness marker. */
   private[graft] def stageDir(s: SparkSession, dir: String, tag: String,
-                                sentinel: Boolean): String = {
-    import java.nio.file.{Files, Path, Paths, StandardCopyOption}
-    // the source file's mtime is part of the staged-dir identity: if the
-    // driver regenerates the testdata (new schema/values), the old staged
-    // dir — including a sentinel written against the OLD schema — must not
-    // satisfy the readiness check
-    val stamp = Files.getLastModifiedTime(
-      Paths.get(s"$dir/events.parquet")).toMillis.toHexString
-    val staged = Paths.get(
-      s"/tmp/graft_stream_${tag}_${stamp}_${dir.replaceAll("[^A-Za-z0-9]", "_")}")
-    // Readiness is keyed on the LAST artifact staged (the sentinel when one
-    // is requested), NOT on the directory: a crash mid-staging leaves no
-    // marker, so the half-staged dir self-heals on the next call instead of
-    // being served incomplete (empty streams + confusing oracle failures).
-    val marker =
-      staged.resolve(if (sentinel) "zz_flush.parquet" else "events.parquet")
-    def deleteTree(p: Path): Unit = if (Files.exists(p)) {
-      val walk = Files.walk(p)
-      try walk.sorted(java.util.Comparator.reverseOrder[Path]())
-        .forEach(Files.deleteIfExists(_))
-      finally walk.close()
-    }
-    if (!Files.exists(marker)) {
-      gcStaleStaged(staged, s"graft_stream_${tag}_",
-        "_" + dir.replaceAll("[^A-Za-z0-9]", "_"))
-      // crash debris first: a previous run killed mid-publish can leave
-      // `_build_<uuid>` / `_pq` siblings with this staged dir's prefix.
-      // Readiness is keyed on the marker, so on the self-heal path anything
-      // else carrying the prefix is garbage — sweep it (other tags have
-      // different prefixes and are untouched; same-tag callers are
-      // sequential per the publish contract below).
-      val pfx = staged.getFileName.toString
-      val cutoff = System.currentTimeMillis() - 60000L // age-guard: an
-      // in-flight build of a concurrent suite is seconds old — only dirs
-      // a previous (crashed) run could have left are old enough to sweep
-      val sibs = Files.list(staged.getParent)
-      try sibs.filter { p =>
-        val n = p.getFileName.toString
-        n != pfx && n.startsWith(pfx) && (n.contains("_build_") || n.endsWith("_pq")) &&
-          (try Files.getLastModifiedTime(p).toMillis < cutoff
-           catch { case _: java.io.IOException => false })
-      }.forEach(p => deleteTree(p))
-      finally sibs.close()
-      // build in a private dir, then publish with a single atomic rename
-      val build = staged.resolveSibling(
-        s"${staged.getFileName}_build_${java.util.UUID.randomUUID().toString.take(8)}")
-      Files.createDirectories(build)
+                                sentinel: Boolean): String =
+    publishStaged(dir, s"$dir/events.parquet", tag,
+        if (sentinel) "zz_flush.parquet" else "events.parquet") { build =>
       Files.createSymbolicLink(build.resolve("events.parquet"),
         Paths.get(s"$dir/events.parquet"))
       if (sentinel) {
@@ -135,30 +135,12 @@ object StreamingQueries extends QueryModule {
           StandardCopyOption.REPLACE_EXISTING)
         deleteTree(tmp)
       }
-      // NOTE: only the final move is atomic; the deleteTree→move pair is
-      // not. Concurrent callers could delete a competitor's just-published
-      // dir before re-publishing, and a reader listing mid-gap sees a
-      // transient missing dir. The bench/verify drivers call this
-      // SEQUENTIALLY (one query at a time), which is the assumption here;
-      // a concurrent deployment would take a lock file around the publish.
-      deleteTree(staged) // clear any half-staged leftover before publishing
-      try Files.move(build, staged, StandardCopyOption.ATOMIC_MOVE)
-      catch {
-        case _: java.nio.file.FileSystemException =>
-          // a concurrent caller published first; accept theirs if complete
-          deleteTree(build)
-          if (!Files.exists(marker))
-            sys.error(s"staging race left $staged incomplete")
-      }
     }
-    staged.toString
-  }
 
   /** Stage a table as K parquet files (batch i = rows with key % K == i)
     * for the file stream source — the arrival batches of the
     * continuous-ingest queries (q65 documents, q66 embeddings). Same
-    * publish contract as stageDir: build private, single atomic rename,
-    * marker-keyed readiness, sequential callers. */
+    * publish contract as stageDir. */
   private[graft] def stageSplitDir(s: SparkSession, dir: String,
                                    table: String, key: String, k: Int): String =
     stageSlicedDir(s, dir, table, s"$table$k", k,
@@ -168,31 +150,15 @@ object StreamingQueries extends QueryModule {
     * key-mod splits (q65/q66 arrival batches) or TIME slices (q87's
     * in-order CDC replay, where ascending file mtimes make the file source
     * deliver batches in event-time order). `xform` reshapes the table
-    * BEFORE slicing (default identity) — q88 uses it to append a
-    * retraction slice (the same rows again with weight −1), which a pure
-    * row→slice map cannot express. */
+    * BEFORE slicing (default identity) — the screened family's CDC replay
+    * uses it to append a retraction slice (rows again with weight −1),
+    * which a pure row→slice map cannot express. The last slice's file is
+    * the readiness marker. */
   private[graft] def stageSlicedDir(s: SparkSession, dir: String,
                                     table: String, tag: String, k: Int,
                                     sliceOf: org.apache.spark.sql.DataFrame => org.apache.spark.sql.Column,
-                                    xform: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame = identity): String = {
-    import java.nio.file.{Files, Path, Paths, StandardCopyOption}
-    val stamp = Files.getLastModifiedTime(
-      Paths.get(s"$dir/$table.parquet")).toMillis.toHexString
-    val staged = Paths.get(
-      s"/tmp/graft_stream_${tag}_${stamp}_${dir.replaceAll("[^A-Za-z0-9]", "_")}")
-    val marker = staged.resolve(s"b${k - 1}.parquet")
-    def deleteTree(p: Path): Unit = if (Files.exists(p)) {
-      val walk = Files.walk(p)
-      try walk.sorted(java.util.Comparator.reverseOrder[Path]())
-        .forEach(Files.deleteIfExists(_))
-      finally walk.close()
-    }
-    if (!Files.exists(marker)) {
-      gcStaleStaged(staged, s"graft_stream_${tag}_",
-        "_" + dir.replaceAll("[^A-Za-z0-9]", "_"))
-      val build = staged.resolveSibling(
-        s"${staged.getFileName}_build_${java.util.UUID.randomUUID().toString.take(8)}")
-      Files.createDirectories(build)
+                                    xform: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame = identity): String =
+    publishStaged(dir, s"$dir/$table.parquet", tag, s"b${k - 1}.parquet") { build =>
       val docs = xform(s.read.parquet(s"$dir/$table.parquet"))
       // ONE partitioned write for all K slices (r18, guide §6.2 / VERDICT
       // r17 #1a — the former loop ran K sequential filter+coalesce(1) jobs,
@@ -238,10 +204,8 @@ object StreamingQueries extends QueryModule {
         val target = build.resolve(s"b$i.parquet")
         val part: Option[Path] = if (Files.isDirectory(pdir)) {
           val l = Files.list(pdir)
-          try {
-            val f = l.filter(_.toString.endsWith(".parquet")).findFirst()
-            if (f.isPresent) Some(f.get()) else None
-          } finally l.close()
+          try l.filter(_.toString.endsWith(".parquet")).findFirst().toScala
+          finally l.close()
         } else None
         part match {
           case Some(p) => Files.move(p, target,
@@ -254,25 +218,15 @@ object StreamingQueries extends QueryModule {
       }
       deleteTree(tmp)
       emptyTemplate.foreach(_ => deleteTree(build.resolve("tmpempty")))
-      deleteTree(staged)
-      try Files.move(build, staged, StandardCopyOption.ATOMIC_MOVE)
-      catch {
-        case _: java.nio.file.FileSystemException =>
-          deleteTree(build)
-          if (!Files.exists(marker))
-            sys.error(s"staging race left $staged incomplete")
-      }
     }
-    staged.toString
-  }
 
   /** THE exception-safe drive for the stateful foreachBatch queries
-    * (q87–q90) — one owner for the lifecycle whose fixes kept landing
-    * per-copy while it was hand-written at each site (VERDICT r14 #1; the
-    * r13 ADVICE checkpoint-leak fix touched all three copies): create a
-    * /tmp checkpoint dir, run `src` through a checkpointed foreachBatch
-    * feeding each NON-EMPTY micro-batch to `onBatch`, force `result`
-    * before teardown, and delete the ck tree on every exit path.
+    * (q65/q66, q87 and the screened family's CDC replay) — one owner for
+    * the lifecycle whose fixes kept landing per-copy while it was
+    * hand-written at each site (VERDICT r14 #1): create a /tmp checkpoint
+    * dir, run `src` through a checkpointed foreachBatch feeding each
+    * NON-EMPTY micro-batch to `onBatch`, force `result` before teardown,
+    * and delete the ck tree on every exit path.
     * Invariants owned here, once (code-review r13 + ADVICE r13):
     *   - the ck dir's deletion is a finally tied to its CREATION — it
     *     runs whether start() throws, a micro-batch fails, or q.stop()
@@ -284,10 +238,9 @@ object StreamingQueries extends QueryModule {
     * state types differ per query and their pinned traces must release on
     * every path, including a staging failure before this helper is ever
     * entered. */
-  private def driveForeachBatch(src: DataFrame, ckTag: String)
-                               (onBatch: DataFrame => Unit)
-                               (result: => DataFrame): DataFrame = {
-    import java.nio.file.Files
+  private[queries] def driveForeachBatch(src: DataFrame, ckTag: String)
+                                        (onBatch: DataFrame => Unit)
+                                        (result: => DataFrame): DataFrame = {
     val ck = Files.createTempDirectory(ckTag)
     try {
       val q = src.writeStream
@@ -299,12 +252,7 @@ object StreamingQueries extends QueryModule {
       try q.processAllAvailable()
       finally q.stop()
       result
-    } finally {
-      val walk = Files.walk(ck)
-      try walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-        .forEach(Files.deleteIfExists(_))
-      finally walk.close()
-    }
+    } finally deleteTree(ck)
   }
 
   /** Streaming read of the (staged) events table; converts the raw
@@ -615,12 +563,7 @@ object StreamingQueries extends QueryModule {
         s"chained_stateful_${System.nanoTime()}", OutputMode.Append)
         .where(col("event_type") =!= "flush")
       // interchange + checkpoint are consumed (memory sink holds the rows)
-      if (Files.exists(base)) {
-        val walk = Files.walk(base)
-        try walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-          .forEach(Files.deleteIfExists(_))
-        finally walk.close()
-      }
+      deleteTree(base)
       out
     }),
 
@@ -758,12 +701,7 @@ object StreamingQueries extends QueryModule {
         .where(col("net") > 0 && col("n_users") > 0)
         .select("bucket", "n_users")
         .localCheckpoint(true)
-      if (Files.exists(base)) {
-        val walk = Files.walk(base)
-        try walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-          .forEach(Files.deleteIfExists(_))
-        finally walk.close()
-      }
+      deleteTree(base)
       res
     }),
 
@@ -887,272 +825,65 @@ object StreamingQueries extends QueryModule {
 
     // STREAMING INCREMENTAL TF-IDF (q88, VERDICT r12 #8 — the streaming
     // rendition of t12; reference: operator/upsert.rs:21-60 command-stream
-    // maintenance): the documents table replays as FIVE staged files — four
-    // insert epochs (doc_id mod 4, weight +1) then a RETRACTION epoch
-    // re-shipping the doc_id%10==3 rows with weight −1 (a CDC delete
-    // command; xform-staged, since a delete re-ships rows a row→slice map
-    // cannot duplicate) — and a checkpointed foreachBatch drives the SAME
-    // TfIdfState t12 certifies: per trigger, tokenize the batch into
-    // (doc_id, term, tf, ±w) postings and step the four-trace index. The
-    // retraction epoch exercises the df-index downward maintenance and the
-    // screening's retract-side floor crossings. Unlike t12 (which threads
-    // CDC bucket spans driver-side), the stream derives spans at runtime
-    // through the partition-pruned PROBE path — the two queries certify
-    // both span-acquisition modes. Integrated output ≡ the batch top-term
-    // query over the surviving corpus (t12's oracle verbatim).
-    "q88_stream_inc_tfidf" -> ((s, dir) => {
-      import graft.core.ZSetFrame
-      import graft.incremental.TfIdfState
-      val E = 4
-      val staged = stageSlicedDir(s, dir, "documents", "dtfidf5", E + 1,
-        _ => col("slice"),
-        xform = df => df.select(col("doc_id"), col("text"),
-            pmod(col("doc_id"), lit(E)).cast("int").as("slice"),
-            lit(1L).as("w"))
-          .unionByName(df.where(pmod(col("doc_id"), lit(10)) === 3)
-            .select(col("doc_id"), col("text"), lit(E).as("slice"),
-              lit(-1L).as("w"))))
-      // shared posting builder (VERDICT r13 #3) — the CDC weight column
-      // rides the grouping; one tokenize/tf across t10/t12/q88
-      def toPostings(df: DataFrame): DataFrame =
-        Postings.build(df, withDl = false)
-          .select(col("doc_id"), col("term"), col("tf"),
-            col("w").as(ZSetFrame.W))
-      val template = s.read.parquet(s"$dir/documents.parquet")
-        .withColumn("w", lit(1L))
-      val st = new TfIdfState(
-        ZSetFrame.fromDelta(toPostings(template.where(lit(false)))), 32)
-      val acc = new graft.incremental.Incremental.State(ZSetFrame.fromDelta(
-        toPostings(template.where(lit(false)))
-          .select(col("doc_id"), col("term"), col("tf"),
-            lit(0L).as("score_q"), col(ZSetFrame.W))))
-      val schema = s.read.parquet(staged).schema
-      val src = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(staged)
-      // shared exception-safe drive (driveForeachBatch, VERDICT r14 #1);
-      // st.close() is the caller's outermost finally so the state's pinned
-      // traces release on every path
-      try {
-        driveForeachBatch(src, "graft_stfidf_ck") { batch =>
-          acc.update(st.step(ZSetFrame.fromDelta(toPostings(batch))))
-        } {
-          acc.acc.consolidate.toDF
-            .select("doc_id", "term", "tf", "score_q")
-            .localCheckpoint(true)
-        }
-      } finally st.close()
-    }),
+    // maintenance): the SAME TfIdfState t12 certifies, stepped once per
+    // trigger of the shared CDC stream (CdcReplay.stream); the retraction
+    // epoch exercises the df-index downward maintenance and the screening's
+    // retract-side floor crossings. Unlike t12, which threads driver-side
+    // bucket spans, q88 derives them at runtime through the
+    // partition-pruned PROBE path: the two certify both span-acquisition
+    // modes.
+    "q88_stream_inc_tfidf" -> ((s, dir) =>
+      CdcReplay.stream(s, dir, CdcReplay.tf, Seq("doc_id", "term", "tf", "score_q"),
+          "graft_stfidf_ck") { p =>
+        CdcReplay.Stepper(new graft.incremental.TfIdfState(CdcReplay.empty(p), 32))
+      }),
 
-    // STREAMING INCREMENTAL BM25 (q89) — t13's Bm25State driven by the
-    // real streaming engine, the q88 pattern on the harsher-coupled
-    // state: five staged epochs (4 inserts then a CDC retraction epoch
-    // re-shipping doc_id%10==3 rows at weight −1) through a checkpointed
-    // foreachBatch. Each micro-batch advances the driver-held corpus
-    // constants (N, T, per-term df), screens the query-restricted index
-    // for quantized floor crossings, and emits the top-k replacement
-    // delta; the integrated deltas must equal t11's batch top-10 over the
-    // surviving corpus (t13's oracle verbatim). Certifies the state's
-    // runtime path: constant maintenance from micro-batch aggregations,
-    // affected-span Observation under the streaming scheduler, and
-    // downward df/N/T maintenance on the retraction epoch.
-    "q89_stream_inc_bm25" -> ((s, dir) => {
-      import graft.core.ZSetFrame
-      import graft.incremental.Bm25State
-      val E = 4
-      val qterms = Postings.QueryTerms
-      val staged = stageSlicedDir(s, dir, "documents", "dbm255", E + 1,
-        _ => col("slice"),
-        xform = df => df.select(col("doc_id"), col("text"),
-            pmod(col("doc_id"), lit(E)).cast("int").as("slice"),
-            lit(1L).as("w"))
-          .unionByName(df.where(pmod(col("doc_id"), lit(10)) === 3)
-            .select(col("doc_id"), col("text"), lit(E).as("slice"),
-              lit(-1L).as("w"))))
-      // shared posting builder (VERDICT r13 #3) — with dl; one
-      // tokenize/tf/dl across t11/t13/q89
-      def toPostings(df: DataFrame): DataFrame =
-        Postings.build(df, withDl = true)
-          .select(col("doc_id"), col("term"), col("tf"), col("dl"),
-            col("w").as(ZSetFrame.W))
-      val template = s.read.parquet(s"$dir/documents.parquet")
-        .withColumn("w", lit(1L))
-      val st = new Bm25State(
-        ZSetFrame.fromDelta(toPostings(template.where(lit(false)))),
-        qterms, 32)
-      val acc = new graft.incremental.Incremental.State(ZSetFrame.fromDelta(
-        toPostings(template.where(lit(false)))
-          .select(col("doc_id"), lit(0L).as("score_q"), lit(0).as("rnk"),
-            col(ZSetFrame.W))))
-      val schema = s.read.parquet(staged).schema
-      val src = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(staged)
-      // shared exception-safe drive (driveForeachBatch, VERDICT r14 #1);
-      // st.close() outermost — see q88
-      try {
-        driveForeachBatch(src, "graft_sbm25_ck") { batch =>
-          acc.update(st.step(ZSetFrame.fromDelta(toPostings(batch))))
-        } {
-          acc.acc.consolidate.toDF
-            .select("doc_id", "score_q", "rnk")
-            .localCheckpoint(true)
-        }
-      } finally st.close()
-    }),
+    // STREAMING INCREMENTAL BM25 (q89) — t13's Bm25State on the shared CDC
+    // stream. Certifies the state's runtime path: constant maintenance
+    // (N, T, per-term df) from micro-batch aggregations, the affected-span
+    // Observation under the streaming scheduler, and downward df/N/T
+    // maintenance on the retraction epoch.
+    "q89_stream_inc_bm25" -> ((s, dir) =>
+      CdcReplay.stream(s, dir, CdcReplay.tfDl, Seq("doc_id", "score_q", "rnk"),
+          "graft_sbm25_ck") { p =>
+        CdcReplay.Stepper(new graft.incremental.Bm25State(CdcReplay.empty(p),
+          Postings.QueryTerms, 32))
+      }),
 
     // STREAMING MULTI-QUERY INCREMENTAL BM25 (q90, VERDICT r14 #3) —
-    // MultiBm25State (the certified multi-query retrieval engine, t14)
-    // under the REAL streaming engine: the q89 drive verbatim on the
-    // multi-query state, completing the batch / step-loop / streaming ×
-    // single / multi-query matrix (t11+t14 / t13+t14 / q89+q90). Five
-    // staged epochs (4 inserts then the doc_id%10==3 CDC retraction
-    // epoch at weight −1) through a checkpointed foreachBatch; each
-    // micro-batch advances the shared corpus constants, screens the
-    // union-restricted index ONCE for all four standing query sets, and
-    // emits the per-query top-k replacement delta. Integrated output ≡
-    // the per-query batch top-10 over the surviving corpus (t14's oracle
-    // verbatim).
-    "q90_stream_multi_bm25" -> ((s, dir) => {
-      import graft.core.ZSetFrame
-      import graft.incremental.MultiBm25State
-      val E = 4
-      val staged = stageSlicedDir(s, dir, "documents", "dbm255", E + 1,
-        _ => col("slice"),
-        xform = df => df.select(col("doc_id"), col("text"),
-            pmod(col("doc_id"), lit(E)).cast("int").as("slice"),
-            lit(1L).as("w"))
-          .unionByName(df.where(pmod(col("doc_id"), lit(10)) === 3)
-            .select(col("doc_id"), col("text"), lit(E).as("slice"),
-              lit(-1L).as("w"))))
-      // the q89 CDC posting shape (shared builder) — the staged dir is
-      // ALSO q89's ("dbm255"): the replay is identical, only the standing
-      // query side differs, so the two queries share one staging cost
-      def toPostings(df: DataFrame): DataFrame =
-        Postings.build(df, withDl = true)
-          .select(col("doc_id"), col("term"), col("tf"), col("dl"),
-            col("w").as(ZSetFrame.W))
-      val template = s.read.parquet(s"$dir/documents.parquet")
-        .withColumn("w", lit(1L))
-      val st = new MultiBm25State(
-        ZSetFrame.fromDelta(toPostings(template.where(lit(false)))),
-        Postings.MultiQuerySets, 32)
-      val acc = new graft.incremental.Incremental.State(ZSetFrame.fromDelta(
-        toPostings(template.where(lit(false)))
-          .select(lit("").as("query_id"), col("doc_id"),
-            lit(0L).as("score_q"), lit(0).as("rnk"), col(ZSetFrame.W))))
-      val schema = s.read.parquet(staged).schema
-      val src = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(staged)
-      try {
-        driveForeachBatch(src, "graft_smbm25_ck") { batch =>
-          acc.update(st.step(ZSetFrame.fromDelta(toPostings(batch))))
-        } {
-          acc.acc.consolidate.toDF
-            .select("query_id", "doc_id", "score_q", "rnk")
-            .localCheckpoint(true)
-        }
-      } finally st.close()
-    }),
+    // MultiBm25State (t14) on the shared CDC stream, completing the batch /
+    // step-loop / streaming × single / multi-query matrix (t11+t14 /
+    // t13+t14 / q89+q90): each micro-batch screens the union-restricted
+    // index ONCE for all four standing query sets.
+    "q90_stream_multi_bm25" -> ((s, dir) =>
+      CdcReplay.stream(s, dir, CdcReplay.tfDl,
+          Seq("query_id", "doc_id", "score_q", "rnk"), "graft_smbm25_ck") { p =>
+        CdcReplay.Stepper(new graft.incremental.MultiBm25State(
+          CdcReplay.empty(p), Postings.MultiQuerySets, 32))
+      }),
 
-    // STREAMING INCREMENTAL PMI (q91) — t15's PmiState driven by the real
-    // streaming engine: the q89/q90 CDC replay (SAME staged dir — the
-    // replay is identical, only the maintained state differs) through the
-    // shared drive; each micro-batch advances the driver-held constants
-    // (N, c_a, c_ab), decides floor crossings on the driver, and emits the
-    // per-doc association-score replacement delta. The retraction epoch
-    // exercises the downward constant maintenance and retract-side
-    // crossings. Integrated output ≡ the batch per-doc PMI sum over the
-    // surviving corpus (t15's oracle verbatim).
-    "q91_stream_inc_pmi" -> ((s, dir) => {
-      import graft.core.ZSetFrame
-      import graft.incremental.PmiState
-      val E = 4
-      val staged = stageSlicedDir(s, dir, "documents", "dbm255", E + 1,
-        _ => col("slice"),
-        xform = df => df.select(col("doc_id"), col("text"),
-            pmod(col("doc_id"), lit(E)).cast("int").as("slice"),
-            lit(1L).as("w"))
-          .unionByName(df.where(pmod(col("doc_id"), lit(10)) === 3)
-            .select(col("doc_id"), col("text"), lit(E).as("slice"),
-              lit(-1L).as("w"))))
-      def toTerms(df: DataFrame): DataFrame =
-        Postings.distinctTerms(df)
-          .select(col("doc_id"), col("term"), col("w").as(ZSetFrame.W))
-      val template = s.read.parquet(s"$dir/documents.parquet")
-        .withColumn("w", lit(1L))
-      val st = new PmiState(
-        ZSetFrame.fromDelta(toTerms(template.where(lit(false)))),
-        Postings.PmiTerms, 32)
-      val acc = new graft.incremental.Incremental.State(ZSetFrame.fromDelta(
-        toTerms(template.where(lit(false)))
-          .select(col("doc_id"), lit(0L).as("n_pairs"),
-            lit(0L).as("score_q"), col(ZSetFrame.W))))
-      val schema = s.read.parquet(staged).schema
-      val src = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(staged)
-      try {
-        driveForeachBatch(src, "graft_spmi_ck") { batch =>
-          acc.update(st.step(ZSetFrame.fromDelta(toTerms(batch))))
-        } {
-          acc.acc.consolidate.toDF
-            .select("doc_id", "n_pairs", "score_q")
-            .localCheckpoint(true)
-        }
-      } finally st.close()
-    }),
+    // STREAMING INCREMENTAL PMI (q91) — t15's PmiState on the shared CDC
+    // stream: each micro-batch advances the driver-held constants
+    // (N, c_a, c_ab) and decides floor crossings on the driver; the
+    // retraction epoch exercises the downward constant maintenance.
+    "q91_stream_inc_pmi" -> ((s, dir) =>
+      CdcReplay.stream(s, dir, CdcReplay.terms, Seq("doc_id", "n_pairs", "score_q"),
+          "graft_spmi_ck") { p =>
+        CdcReplay.Stepper(new graft.incremental.PmiState(CdcReplay.empty(p),
+          Postings.PmiTerms, 32))
+      }),
 
     // STREAMING INCREMENTAL COSINE ASSIGNMENT (q93, VERDICT r16 #1) —
-    // t16's CosineState driven by the real streaming engine, completing
-    // the streaming row of the screened-family matrix (t12→q88, t13→q89,
-    // t14→q90, t15→q91, t16→q93): the q89–q91 CDC replay (SAME staged dir
-    // — the replay is identical, only the maintained state differs, so
-    // the five queries share one staging cost) through the shared drive.
-    // Each micro-batch advances the driver-held constants (N, the |U| df
-    // values), decides quantized-idf floor crossings on the driver (quiet
-    // micro-batches schedule zero cluster-side screening), and emits the
-    // per-doc best-centroid replacement delta. The retraction epoch
-    // exercises downward N/df maintenance and retract-side crossings.
-    // Integrated output ≡ the batch per-doc argmax over the surviving
-    // corpus (t16's oracle verbatim).
-    "q93_stream_inc_cosine" -> ((s, dir) => {
-      import graft.core.ZSetFrame
-      import graft.incremental.CosineState
-      val E = 4
-      val staged = stageSlicedDir(s, dir, "documents", "dbm255", E + 1,
-        _ => col("slice"),
-        xform = df => df.select(col("doc_id"), col("text"),
-            pmod(col("doc_id"), lit(E)).cast("int").as("slice"),
-            lit(1L).as("w"))
-          .unionByName(df.where(pmod(col("doc_id"), lit(10)) === 3)
-            .select(col("doc_id"), col("text"), lit(E).as("slice"),
-              lit(-1L).as("w"))))
-      // shared posting builder (VERDICT r13 #3) — t16's shape (no dl; the
-      // cosine is length-normalized by ‖d‖ itself)
-      def toPostings(df: DataFrame): DataFrame =
-        Postings.build(df, withDl = false)
-          .select(col("doc_id"), col("term"), col("tf"),
-            col("w").as(ZSetFrame.W))
-      val template = s.read.parquet(s"$dir/documents.parquet")
-        .withColumn("w", lit(1L))
-      val st = new CosineState(
-        ZSetFrame.fromDelta(toPostings(template.where(lit(false)))),
-        Postings.CosineCentroids, 32)
-      val acc = new graft.incremental.Incremental.State(ZSetFrame.fromDelta(
-        toPostings(template.where(lit(false)))
-          .select(col("doc_id"), lit("").as("cid"), lit(0L).as("cos_q"),
-            col(ZSetFrame.W))))
-      val schema = s.read.parquet(staged).schema
-      val src = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(staged)
-      try {
-        driveForeachBatch(src, "graft_scos_ck") { batch =>
-          acc.update(st.step(ZSetFrame.fromDelta(toPostings(batch))))
-        } {
-          acc.acc.consolidate.toDF
-            .select("doc_id", "cid", "cos_q")
-            .localCheckpoint(true)
-        }
-      } finally st.close()
-    })
+    // t16's CosineState on the shared CDC stream, completing the streaming
+    // row of the screened-family matrix (t12→q88, t13→q89, t14→q90,
+    // t15→q91, t16→q93): quantized-idf floor crossings are decided on the
+    // driver, so quiet micro-batches schedule zero cluster-side screening.
+    "q93_stream_inc_cosine" -> ((s, dir) =>
+      CdcReplay.stream(s, dir, CdcReplay.tf, Seq("doc_id", "cid", "cos_q"),
+          "graft_scos_ck") { p =>
+        CdcReplay.Stepper(new graft.incremental.CosineState(CdcReplay.empty(p),
+          Postings.CosineCentroids, 32))
+      })
   )
 
   override def oracle: Map[String, String] = Map(

@@ -46,64 +46,6 @@ object TextAnalysis extends QueryModule {
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
     Tables(s, dir, name)
 
-  /** Delete a per-invocation /tmp scratch tree (the durable-restart
-    * queries' state dirs) — best-effort, and the Files.walk stream is
-    * CLOSED (ADVICE r16: the old iterator-to-Seq form never closed the
-    * stream — one leaked directory handle per bench invocation). */
-  /** ONE-job epoch pre-split of a pinned posting/term table (r18, VERDICT
-    * r17 #6): the t12–t16/q92/q94 CDC replays derive every epoch's delta
-    * as a `where` filter of the pinned parent, so each step's first action
-    * re-scanned ALL parent partitions to materialize its lazily-pinned
-    * slice (measured r17: the re-filter rode the delta-pin job — ~34
-    * tasks, 8–10 s taskSum, 0.3–0.5 s wall per step at sf0.1). The rows
-    * are instead routed ONCE into a slice-keyed KeyedState — slice id =
-    * (doc_id mod `mod`) ⊕ the retraction-residue bit — and each epoch
-    * reads a PARTITION-PRUNED view of its own slices; the driver computes
-    * the bucket ids arithmetically (the CDC "a source knows its delta's
-    * keys" discipline), so there is no per-step discovery job and no
-    * full-parent scan. The slice predicates stay on the pruned read, so
-    * hash-collision contamination (another slice sharing a bucket)
-    * filters out exactly — the epoch frames are row-identical to the
-    * former `where` filters. Close after the replay's last step. */
-  private[graft] final class EpochSlices(src: DataFrame, mod: Int, retRes: Int) {
-    import graft.core.ZSetFrame
-    private val nB = 16
-    private val srcCols = src.columns.toSeq
-    private val slCol = (pmod(col("doc_id"), lit(mod.toLong)) * lit(2L) +
-      when(pmod(col("doc_id"), lit(10L)) === lit(retRes.toLong), lit(1L))
-        .otherwise(lit(0L))).cast("long").as("__sl")
-    private val slicer = new graft.incremental.KeyedState(Seq("__sl"), nB,
-      ZSetFrame.fromTable(src.where(lit(false)).select(col("*"), slCol)))
-    slicer.merge(ZSetFrame.fromTable(src.select(col("*"), slCol)),
-      checkpointDelta = false)
-    /** The replace merge weight-merges exact-duplicate source rows into one
-      * row of weight w, so the read re-expands each row w times. */
-    private def read(slices: Seq[Long], pred: Column): DataFrame =
-      slicer.view(graft.incremental.KeyedState.bucketsOfLongKeys(slices, nB))
-        .where(pred).toMultisetDF.select(srcCols.map(col): _*)
-    /** rows with doc_id % mod == res — an insert epoch's delta */
-    def insert(res: Int): DataFrame =
-      read(Seq(res * 2L, res * 2L + 1L),
-        pmod(col("doc_id"), lit(mod.toLong)) === lit(res.toLong))
-    /** rows with doc_id % 10 == retRes — the retraction epoch's delta */
-    def retract: DataFrame =
-      read((0 until mod).map(v => v * 2L + 1L),
-        pmod(col("doc_id"), lit(10L)) === lit(retRes.toLong))
-    def close(): Unit = slicer.close()
-  }
-
-  private def deleteScratchTree(path: String): Unit =
-    try {
-      import java.nio.file.{Files, Path, Paths}
-      val root = Paths.get(path)
-      if (Files.exists(root)) {
-        val walk = Files.walk(root)
-        try walk.sorted(java.util.Comparator.reverseOrder[Path]())
-          .forEach(p => { Files.deleteIfExists(p); () })
-        finally walk.close()
-      }
-    } catch { case _: Throwable => () }
-
   override def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // TF-IDF top term per document — the doc-term-matrix shape every
     // keyword-extraction / BM25-retrieval pipeline runs. tf from one
@@ -184,207 +126,94 @@ object TextAnalysis extends QueryModule {
     }),
 
     // INCREMENTAL TF-IDF top-term maintenance (t12) — t10's doc-term-matrix
-    // answer kept exact while documents arrive AND leave. idf couples every
-    // doc to every other (one insert moves df for all its terms), so the
-    // naive incremental step is O(corpus); TfIdfState's screening recomputes
-    // only docs holding a posting whose QUANTIZED score floor(tf·C/df)
-    // actually crossed under this step's df transition — hot terms' floors
-    // almost never cross, which confines the recompute to the affected set
-    // (see TfIdfState's scaladoc for the induction). Replay: 4 insert
-    // epochs (doc_id mod 4) then a retraction epoch deleting doc_id%10==3;
-    // the integrated −old/+new output must equal the batch top-term query
-    // over the surviving corpus. Per-epoch bucket spans are threaded from
-    // ONE job over the pinned postings (the d31 CDC discipline); the only
+    // answer kept exact while documents arrive AND leave, replayed through
+    // the shared CDC step loop (CdcReplay). idf couples every doc to every
+    // other (one insert moves df for all its terms), so the naive
+    // incremental step is O(corpus); TfIdfState's screening recomputes only
+    // docs holding a posting whose QUANTIZED score floor(tf·C/df) actually
+    // crossed under this step's df transition — hot terms' floors almost
+    // never cross, which confines the recompute to the affected set (see
+    // TfIdfState's scaladoc for the induction). t12 threads per-epoch bucket
+    // spans from ONE driver job over the pinned postings (the d31 CDC
+    // discipline), while its stream twin q88 derives them at runtime through
+    // the probe path: the two certify both span-acquisition modes. The only
     // per-step discovery job is the affected-doc span — the data-dependent
     // pruning output itself.
     "t12_inc_tfidf" -> ((s, dir) => {
-      import graft.core.ZSetFrame
-      val E = 4
-      val nB = 32
-      val tfAll = Postings.build(
-          t(s, dir, "documents").select(col("doc_id"), col("text")),
-          withDl = false)
-        .localCheckpoint(true)
-      val st = new graft.incremental.TfIdfState(
-        ZSetFrame.fromTable(tfAll.where(lit(false))), nB)
-      // one job: every epoch's term- and doc-bucket span over the pinned
-      // postings (insert epoch = doc_id mod E; retraction = doc_id%10==3)
-      val spans = tfAll.select(
-          pmod(col("doc_id"), lit(E)).cast("int").as("ie"),
-          (pmod(col("doc_id"), lit(10)) === 3).as("ret"),
-          pmod(hash(col("term")), lit(nB)).as("tb"),
-          pmod(hash(col("doc_id")), lit(nB)).as("db"))
-        .distinct().collect()
-      def tb(f: org.apache.spark.sql.Row => Boolean): Seq[Int] =
-        spans.filter(f).map(_.getInt(2)).distinct.sorted.toSeq
-      def db(f: org.apache.spark.sql.Row => Boolean): Seq[Int] =
-        spans.filter(f).map(_.getInt(3)).distinct.sorted.toSeq
-      val es = new EpochSlices(tfAll, E, 3)
-      val outs =
-        (0 until E).map { i =>
-          st.step(ZSetFrame.fromTable(es.insert(i)),
-            termBuckets = Some(tb(_.getInt(0) == i)),
-            docBuckets = Some(db(_.getInt(0) == i)))
-        } :+
-        st.step(ZSetFrame.fromDelta(
-            es.retract.withColumn(ZSetFrame.W, lit(-1L))),
-          termBuckets = Some(tb(_.getBoolean(1))),
-          docBuckets = Some(db(_.getBoolean(1))))
-      st.close(); es.close()
-      ZSetFrame.sumAll(outs).consolidate.toDF
-        .select("doc_id", "term", "tf", "score_q")
+      import CdcReplay.{Epoch, Stepper}
+      CdcReplay.steps(s, dir, CdcReplay.tf, Seq("doc_id", "term", "tf", "score_q")) { p =>
+        val nB = 32
+        val st = new graft.incremental.TfIdfState(CdcReplay.empty(p), nB)
+        val spans = p.select(CdcReplay.Full.residue.cast("int"),
+            CdcReplay.Full.retracted,
+            pmod(hash(col("term")), lit(nB)), pmod(hash(col("doc_id")), lit(nB)))
+          .distinct().collect()
+        def span(e: Epoch, i: Int): Option[Seq[Int]] = Some(spans
+          .filter(r => e.ships(r.getInt(0), r.getBoolean(1)))
+          .map(_.getInt(i)).distinct.sorted.toSeq)
+        new Stepper(st.step(_), () => st.close()) {
+          override def epochStep(e: Epoch, d: graft.core.ZSetFrame) =
+            st.step(d, termBuckets = span(e, 2), docBuckets = span(e, 3))
+        }
+      }
     }),
 
     // INCREMENTAL BM25 top-k retrieval (t13) — t11's standing ranked query
-    // kept exact while documents arrive AND leave. Strictly harsher
-    // coupling than t12's: the corpus constants N and T enter EVERY
-    // posting's score (idf + length normalization), so each insert moves,
-    // in principle, every matching doc. Bm25State confines the step to one
-    // no-shuffle screen of the QUERY-RESTRICTED index (storage = the match
-    // set, never the corpus) for quantized floor crossings under the step's
-    // (N, T, df) transition, an O(affected) rescore, and O(touched-bucket)
-    // two-level top-k maintenance. Replay mirrors t12: 4 insert epochs
-    // (doc_id mod 4) then a retraction epoch deleting doc_id%10==3; the
-    // integrated −old/+new output must equal t11's batch top-10 over the
-    // surviving corpus.
-    "t13_inc_bm25" -> ((s, dir) => {
-      import graft.core.ZSetFrame
-      val E = 4
-      val nB = 32
-      val qterms = Postings.QueryTerms
-      val tfAll = Postings.build(
-          t(s, dir, "documents").select(col("doc_id"), col("text")),
-          withDl = true)
-        .select("doc_id", "term", "tf", "dl")
-        .localCheckpoint(true)
-      val st = new graft.incremental.Bm25State(
-        ZSetFrame.fromTable(tfAll.where(lit(false))), qterms, nB)
-      val es = new EpochSlices(tfAll, E, 3)
-      val outs =
-        (0 until E).map { i =>
-          st.step(ZSetFrame.fromTable(es.insert(i)))
-        } :+
-        st.step(ZSetFrame.fromDelta(
-          es.retract.withColumn(ZSetFrame.W, lit(-1L))))
-      st.close(); es.close()
-      ZSetFrame.sumAll(outs).consolidate.toDF
-        .select("doc_id", "score_q", "rnk")
-    }),
+    // kept exact while documents arrive AND leave (shared CDC step loop).
+    // Strictly harsher coupling than t12's: the corpus constants N and T
+    // enter EVERY posting's score (idf + length normalization), so each
+    // insert moves, in principle, every matching doc. Bm25State confines the
+    // step to one no-shuffle screen of the QUERY-RESTRICTED index (storage =
+    // the match set, never the corpus) for quantized floor crossings under
+    // the step's (N, T, df) transition, an O(affected) rescore, and
+    // O(touched-bucket) two-level top-k maintenance.
+    "t13_inc_bm25" -> ((s, dir) =>
+      CdcReplay.steps(s, dir, CdcReplay.tfDl, Seq("doc_id", "score_q", "rnk")) {
+        p => CdcReplay.Stepper(new graft.incremental.Bm25State(
+          CdcReplay.empty(p), Postings.QueryTerms, 32))
+      }),
 
     // DURABLE RESTART FOR THE SCREENED RETRIEVAL FAMILY (q92, VERDICT r15
     // #4 — the reference's persistent-spine property, crates/dbsp/src/
     // trace/persistent/mod.rs:1-40, applied to the flagship operator):
-    // t13's CDC replay with the posting trace mirrored into a
-    // DurableKeyedState-backed parquet table plus a constants sidecar.
-    // Mid-replay the in-memory state is TORN DOWN (close() releases every
-    // pinned trace) and re-attached from disk — the derived score/top-k
-    // indexes are rebuilt from the durable trace under the recorded
-    // constants (bit-identical by the screen's exactness induction) — and
-    // the replay continues; the integrated output must still equal t13's
-    // batch top-10 over the surviving corpus. Recovery loses nothing.
-    "q92_durable_bm25" -> ((s, dir) => {
-      import graft.core.ZSetFrame
-      val E = 2
-      val nB = 8
-      val qterms = Postings.QueryTerms
-      // Proportions: what this query certifies is the RESTART boundary
-      // (durable step commits, teardown, re-attach, derived-index rebuild,
-      // post-restore retraction) — a property of the commit machinery, not
-      // of replay length or corpus size; t13 carries the operator at full
-      // scale. HALF corpus + 2 insert epochs + the retraction epoch, and 8
-      // state buckets (partitions ∝ data, Spark's own sizing rule — each
-      // durable step pays one fs commit per touched partition dir, so
-      // over-bucketing a small corpus just multiplies fs ops).
-      val tfAll = Postings.build(
-          t(s, dir, "documents").select(col("doc_id"), col("text"))
-            .where(pmod(col("doc_id"), lit(2)) === 0),
-          withDl = true)
-        .select("doc_id", "term", "tf", "dl")
-        .localCheckpoint(true)
-      val path = s"/tmp/graft_durable_q92_${System.nanoTime()}"
-      var st = new graft.incremental.Bm25State(
-        ZSetFrame.fromTable(tfAll.where(lit(false))), qterms, nB,
-        durablePath = Some(path))
-      val es = new EpochSlices(tfAll, 2 * E, 4)
-      try {
-        // epochs split on EVEN residues (doc_id % 4 = 0 / 2) and the
-        // retraction on doc_id % 10 = 4 — the corpus is even-only, so
-        // odd-selecting predicates would make every post-restore delta
-        // EMPTY and the restart would certify nothing (code-review r16)
-        val outs =
-          (0 until E).map { i =>
-            if (i == 1) { // driver restart point: drop memory, resume from disk
-              st.close()
-              // null BETWEEN close and restore (ADVICE r16): if restore
-              // throws, the finally below must not close the already-closed
-              // state a second time
-              st = null
-              st = graft.incremental.Bm25State.restore(s, path, qterms, nB)
-            }
-            st.step(ZSetFrame.fromTable(es.insert(2 * i)))
-          } :+
-          st.step(ZSetFrame.fromDelta(
-            es.retract.withColumn(ZSetFrame.W, lit(-1L))))
-        // step outputs are eagerly checkpointed by the state — the lazy
-        // integration below stays valid after close() and the dir delete
-        ZSetFrame.sumAll(outs).consolidate.toDF
-          .select("doc_id", "score_q", "rnk")
-      } finally {
-        es.close()
-        if (st != null) st.close()
-        deleteScratchTree(path)
-      }
-    }),
+    // t13's state with its posting trace mirrored into a
+    // DurableKeyedState-backed parquet table plus a constants sidecar,
+    // through the shared restart replay (CdcReplay.durableSteps). The
+    // derived score/top-k indexes are rebuilt from the durable trace under
+    // the recorded constants (bit-identical by the screen's exactness
+    // induction); the integrated output must still equal t13's batch
+    // top-10 over the surviving corpus. q92/q94 certify the restart
+    // boundary (durable step commits, teardown, re-attach, derived-index
+    // rebuild, post-restore retraction) — a property of the commit
+    // machinery, not of replay length, so 8 state buckets (partitions ∝
+    // data: each durable step pays one fs commit per touched partition dir).
+    "q92_durable_bm25" -> ((s, dir) =>
+      CdcReplay.durableSteps(s, dir, CdcReplay.tfDl,
+          Seq("doc_id", "score_q", "rnk"), "q92") { (p, path) =>
+        CdcReplay.Stepper(new graft.incremental.Bm25State(CdcReplay.empty(p),
+          Postings.QueryTerms, 8, durablePath = Some(path)))
+      } { path => CdcReplay.Stepper(graft.incremental.Bm25State.restore(
+          s, path, Postings.QueryTerms, 8))
+      }),
 
     // DURABLE RESTART FOR THE TF-IDF SCREENED STATE (q94, VERDICT r16 #4
     // — the reference persists EVERY trace, not one operator's:
-    // crates/dbsp/src/trace/persistent/mod.rs): t12's CDC replay with the
-    // posting set mirrored into a doc-keyed DurableKeyedState parquet
-    // table through the SHARED DurableMirror intent/commit protocol
-    // (factored out of the BM25 family this round — each state supplies
-    // only its constants codec and derived-index rebuild). Mid-replay the
-    // in-memory state is torn down and re-attached from disk — tfIdx/
-    // fwdIdx bulk-load from the durable postings, dfIdx/top1 rebuild from
-    // scratch under the recorded quantization C (bit-identical by the
-    // screen's exactness induction) — and the replay continues; the
-    // integrated output must still equal t12's batch top-term query over
-    // the surviving corpus. Proportions mirror q92's (the restart
-    // boundary is the property, not replay length): half corpus, 2 insert
-    // epochs on even residues + the doc_id%10==4 retraction, 8 buckets.
-    "q94_durable_tfidf" -> ((s, dir) => {
-      import graft.core.ZSetFrame
-      val E = 2
-      val nB = 8
-      val tfAll = Postings.build(
-          t(s, dir, "documents").select(col("doc_id"), col("text"))
-            .where(pmod(col("doc_id"), lit(2)) === 0),
-          withDl = false)
-        .localCheckpoint(true)
-      val path = s"/tmp/graft_durable_q94_${System.nanoTime()}"
-      var st = new graft.incremental.TfIdfState(
-        ZSetFrame.fromTable(tfAll.where(lit(false))), nB,
-        durablePath = Some(path))
-      val es = new EpochSlices(tfAll, 2 * E, 4)
-      try {
-        val outs =
-          (0 until E).map { i =>
-            if (i == 1) { // driver restart point: drop memory, resume from disk
-              st.close()
-              st = null // see q92: a throwing restore must not double-close
-              st = graft.incremental.TfIdfState.restore(s, path, nB)
-            }
-            st.step(ZSetFrame.fromTable(es.insert(2 * i)))
-          } :+
-          st.step(ZSetFrame.fromDelta(
-            es.retract.withColumn(ZSetFrame.W, lit(-1L))))
-        ZSetFrame.sumAll(outs).consolidate.toDF
-          .select("doc_id", "term", "tf", "score_q")
-      } finally {
-        es.close()
-        if (st != null) st.close()
-        deleteScratchTree(path)
-      }
-    }),
+    // crates/dbsp/src/trace/persistent/mod.rs): t12's state with the
+    // posting set mirrored into a doc-keyed DurableKeyedState parquet table
+    // through the SHARED DurableMirror intent/commit protocol, through q92's
+    // restart replay. On re-attach tfIdx/fwdIdx bulk-load from the durable
+    // postings and dfIdx/top1 rebuild from scratch under the recorded
+    // quantization C (bit-identical by the screen's exactness induction);
+    // the integrated output must still equal t12's batch top-term query
+    // over the surviving corpus.
+    "q94_durable_tfidf" -> ((s, dir) =>
+      CdcReplay.durableSteps(s, dir, CdcReplay.tf,
+          Seq("doc_id", "term", "tf", "score_q"), "q94") { (p, path) =>
+        CdcReplay.Stepper(new graft.incremental.TfIdfState(CdcReplay.empty(p),
+          8, durablePath = Some(path)))
+      } { path => CdcReplay.Stepper(graft.incremental.TfIdfState.restore(
+          s, path, 8))
+      }),
 
     // MULTI-QUERY INCREMENTAL RETRIEVAL (t14, VERDICT r13 #7) — a real
     // retrieval index serves MANY standing ranked queries, not one:
@@ -393,32 +222,14 @@ object TextAnalysis extends QueryModule {
     // posting trace, one set of corpus constants, and ONE per-step screen
     // (floor crossing is per-posting, query-independent); affected docs
     // fan out to their matching queries through a broadcast
-    // (query_id, term) dimension. Replay mirrors t13: 4 insert epochs then
-    // the doc_id%10==3 retraction epoch; the integrated output must equal
-    // the per-query batch top-10 over the surviving corpus.
-    "t14_multi_bm25" -> ((s, dir) => {
-      import graft.core.ZSetFrame
-      val E = 4
-      val nB = 32
-      val tfAll = Postings.build(
-          t(s, dir, "documents").select(col("doc_id"), col("text")),
-          withDl = true)
-        .select("doc_id", "term", "tf", "dl")
-        .localCheckpoint(true)
-      val st = new graft.incremental.MultiBm25State(
-        ZSetFrame.fromTable(tfAll.where(lit(false))),
-        Postings.MultiQuerySets, nB)
-      val es = new EpochSlices(tfAll, E, 3)
-      val outs =
-        (0 until E).map { i =>
-          st.step(ZSetFrame.fromTable(es.insert(i)))
-        } :+
-        st.step(ZSetFrame.fromDelta(
-          es.retract.withColumn(ZSetFrame.W, lit(-1L))))
-      st.close(); es.close()
-      ZSetFrame.sumAll(outs).consolidate.toDF
-        .select("query_id", "doc_id", "score_q", "rnk")
-    }),
+    // (query_id, term) dimension. The integrated output must equal the
+    // per-query batch top-10 over the surviving corpus.
+    "t14_multi_bm25" -> ((s, dir) =>
+      CdcReplay.steps(s, dir, CdcReplay.tfDl,
+          Seq("query_id", "doc_id", "score_q", "rnk")) {
+        p => CdcReplay.Stepper(new graft.incremental.MultiBm25State(
+          CdcReplay.empty(p), Postings.MultiQuerySets, 32))
+      }),
 
     // INCREMENTAL PMI ASSOCIATION SCORE (t15, VERDICT r14 #4 — the third
     // Screened state): per-doc sum of quantized exp-PMI over the doc's
@@ -427,29 +238,12 @@ object TextAnalysis extends QueryModule {
     // input (N, c_a, c_ab) is a driver-held constant, so floor crossing is
     // decided on the driver over the ≤C(|U|,2) pair dimension and quiet
     // steps cost ZERO cluster-side screening — the corner that proves the
-    // Screened factoring spans the whole coupling spectrum. Replay mirrors
-    // t12: 4 insert epochs (doc_id mod 4) then the doc_id%10==3 retraction
-    // epoch; the integrated −old/+new output must equal the batch per-doc
-    // PMI sum over the surviving corpus.
-    "t15_inc_pmi" -> ((s, dir) => {
-      import graft.core.ZSetFrame
-      val E = 4
-      val trAll = Postings.distinctTerms(
-          t(s, dir, "documents").select(col("doc_id"), col("text")))
-        .localCheckpoint(true)
-      val st = new graft.incremental.PmiState(
-        ZSetFrame.fromTable(trAll.where(lit(false))), Postings.PmiTerms, 32)
-      val es = new EpochSlices(trAll, E, 3)
-      val outs =
-        (0 until E).map { i =>
-          st.step(ZSetFrame.fromTable(es.insert(i)))
-        } :+
-        st.step(ZSetFrame.fromDelta(
-          es.retract.withColumn(ZSetFrame.W, lit(-1L))))
-      st.close(); es.close()
-      ZSetFrame.sumAll(outs).consolidate.toDF
-        .select("doc_id", "n_pairs", "score_q")
-    }),
+    // Screened factoring spans the whole coupling spectrum.
+    "t15_inc_pmi" -> ((s, dir) =>
+      CdcReplay.steps(s, dir, CdcReplay.terms, Seq("doc_id", "n_pairs", "score_q")) {
+        p => CdcReplay.Stepper(new graft.incremental.PmiState(
+          CdcReplay.empty(p), Postings.PmiTerms, 32))
+      }),
 
     // INCREMENTAL TF-IDF COSINE ASSIGNMENT (t16, VERDICT r15 #5 — the
     // fourth Screened state): per-doc best centroid by quantized cosine
@@ -459,31 +253,12 @@ object TextAnalysis extends QueryModule {
     // DRIVER over the |U| term dimension (the PMI discipline — quiet
     // steps schedule zero cluster-side screening), while the affected set
     // is data-dependent (docs HOLDING a crossed term — the TF-IDF
-    // discipline). Replay mirrors t12: 4 insert epochs (doc_id mod 4)
-    // then the doc_id%10==3 retraction epoch; the integrated −old/+new
-    // output must equal the batch per-doc argmax over the surviving
-    // corpus.
-    "t16_inc_cosine" -> ((s, dir) => {
-      import graft.core.ZSetFrame
-      val E = 4
-      val tfAll = Postings.build(
-          t(s, dir, "documents").select(col("doc_id"), col("text")),
-          withDl = false)
-        .localCheckpoint(true)
-      val st = new graft.incremental.CosineState(
-        ZSetFrame.fromTable(tfAll.where(lit(false))),
-        Postings.CosineCentroids, 32)
-      val es = new EpochSlices(tfAll, E, 3)
-      val outs =
-        (0 until E).map { i =>
-          st.step(ZSetFrame.fromTable(es.insert(i)))
-        } :+
-        st.step(ZSetFrame.fromDelta(
-          es.retract.withColumn(ZSetFrame.W, lit(-1L))))
-      st.close(); es.close()
-      ZSetFrame.sumAll(outs).consolidate.toDF
-        .select("doc_id", "cid", "cos_q")
-    }),
+    // discipline).
+    "t16_inc_cosine" -> ((s, dir) =>
+      CdcReplay.steps(s, dir, CdcReplay.tf, Seq("doc_id", "cid", "cos_q")) {
+        p => CdcReplay.Stepper(new graft.incremental.CosineState(
+          CdcReplay.empty(p), Postings.CosineCentroids, 32))
+      }),
 
     // token / char counting
     "t01_tokens" -> ((s, dir) => {

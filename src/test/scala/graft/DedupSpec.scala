@@ -56,7 +56,7 @@ class DedupSpec extends SparkSpec {
     // 17 arrival batches cross the TruncateEvery=8 lineage-truncation
     // boundary twice, so the amortized spine merge (consolidate) runs
     // under the semantics gate — not only in step_bench timings
-    val K = 2 * graft.incremental.BucketedUpsertStateLong.TruncateEvery + 1
+    val K = 2 * graft.incremental.Pinned.TruncateEvery + 1
     val sh = Dedup.shingleStore(
       graft.core.Tables(spark, sf0001, "documents")).localCheckpoint(true)
     val st = new Dedup.LshDedupState
@@ -101,7 +101,7 @@ class DedupSpec extends SparkSpec {
     // 17 arrival batches (queries spread across all of them) cross the
     // TruncateEvery=8 trace/qtrace consolidation boundary twice, so the
     // amortized collapse runs under the semantics gate
-    val K = 2 * graft.incremental.BucketedUpsertStateLong.TruncateEvery + 1
+    val K = 2 * graft.incremental.Pinned.TruncateEvery + 1
     val v = graft.core.Tables(spark, sf0001, "embeddings")
       .select(col("vec_id"), col("embedding"))
     val np = Dedup.planesFor(v.count())

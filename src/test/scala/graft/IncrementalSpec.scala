@@ -332,6 +332,24 @@ class IncrementalSpec extends SparkSpec {
         ZSetFrame.fromTable(oracle(accIn.acc)).df)
       st.close()
     }
+    // an ingest-primed seed leaves the state a step-primed seed leaves: the
+    // next step emits the same delta and Auto picks the same plan
+    val ks = Seq(0L, 1L)
+    val next = Seq.tabulate(6)(j => (900L + j, ks(j % 2), 300L + j * 7L, j.toLong, 1L)) ++
+      seedRows.collect { case (i, k, t, v) if ks.contains(k) && t >= 300 && t < 350 =>
+        (i, k, t, v, -1L) }.take(3)
+    for (chunkLen <- Seq(32L, 256L)) {
+      val seed = z(seedRows.map { case (i, k, t, v) => (i, k, t, v, 1L) })
+      val (sts, outs) = Seq(false, true).map { ingest =>
+        val st = new RollingLinearState(Incremental.emptyLike(seed),
+          "k", "ts", "v", horizon, chunkLen, 16)
+        if (ingest) st.ingest(seed, 0L, 999L, None) else st.step(seed, 0L, 999L, None)
+        (st, st.step(z(next), next.map(_._3).min, next.map(_._3).max, Some(ks)))
+      }.unzip
+      assert(sts(0).lastChoseSort == sts(1).lastChoseSort)
+      assertSameRows(outs(0).consolidate.df, outs(1).consolidate.df)
+      sts.foreach(_.close())
+    }
   }
 
   test("incremental holistic agg (percentile) ≡ batch under random retractions") {

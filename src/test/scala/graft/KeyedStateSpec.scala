@@ -258,7 +258,7 @@ class KeyedStateSpec extends SparkSpec {
     val stL = new BucketedUpsertStateLong(spark.sparkContext, 4, math.max)
     val naive = scala.collection.mutable.Map[Long, Long]()
     val rnd = new scala.util.Random(11)
-    // > 2× TruncateEvery steps so the lineage-truncation path (every 8th
+    // > 2× Pinned.TruncateEvery steps so the lineage-truncation path (every 8th
     // generation localCheckpoints) runs — and semantics survive it
     for (step <- 1 to 18) {
       // enough keys per step to force LongLongMap growth through several
@@ -459,7 +459,8 @@ class KeyedStateSpec extends SparkSpec {
     // into one row of weight 2; the epoch read must expand it back
     val src = Seq((1L, "a", 1L), (1L, "a", 1L), (2L, "b", 1L), (3L, "c", 2L), (4L, "d", 1L))
       .toDF("doc_id", "term", "tf")
-    val es = new graft.queries.TextAnalysis.EpochSlices(src, 2, 3)
+    val es = new graft.queries.CdcReplay.EpochSlices(src,
+      graft.queries.CdcReplay.Epochs(2, 0 until 2, 3))
     try {
       assertSameRows(es.insert(1), src.where(pmod(col("doc_id"), lit(2L)) === 1L))
       assertSameRows(es.retract, src.where(pmod(col("doc_id"), lit(10L)) === 3L))

@@ -74,26 +74,40 @@ object Incremental {
     // (any SUPERSET of the actual span is correct — a DENSE delta passes
     // all buckets, skipping the per-step bucket-discovery job entirely,
     // since discovery would return every bucket anyway).
-    // PIN the deltas ONCE, up front (code-review r15): the discovery job,
-    // both merges, and the output join all read them — previously the raw
-    // plans were re-evaluated per consumer, concurrently across the merge
-    // thread and the main thread, so a delta whose plan is not stable
-    // under re-evaluation (rand(), a growing source table) could land
-    // DIFFERENT rows in the traces than in the emitted join delta with no
-    // error (checkpointDeltas=true pinned only the merges' private
-    // copies). Total action count is unchanged — the merges' per-delta
-    // checkpoints are skipped in exchange — and deterministic callers
-    // save two delta re-evaluations per step. The pins are released once
-    // the output is materialized and both merges have installed their
-    // (eagerly materialized) segments. checkpointDeltas=false keeps the
-    // old contract: the CALLER owns delta stability and pinning.
-    val (pinA, pinB) =
-      if (checkpointDeltas)
-        (dA.localCheckpoint(eager = true), dB.localCheckpoint(eager = true))
-      else (dA, dB)
+    // PIN cluster-resident deltas ONCE, up front (code-review r15): the
+    // discovery job, both merges, and the output join all read them —
+    // previously the raw plans were re-evaluated per consumer, concurrently
+    // across the merge thread and the main thread, so a delta whose plan is
+    // not stable under re-evaluation (rand(), a growing source table) could
+    // land DIFFERENT rows in the traces than in the emitted join delta with
+    // no error (checkpointDeltas=true pinned only the merges' private
+    // copies). The merges' per-delta checkpoints are skipped in exchange.
+    // A DRIVER-RESIDENT delta (KeyedState.route: a deterministic plan
+    // folding to a LocalRelation) is NOT pinned: its rows are fixed on the
+    // driver, so every consumer reads the same rows; its bucket span comes
+    // from those rows with no job and both merges take the driver route,
+    // with no shuffle. A rand()/uuid()/current_timestamp() delta fails the
+    // determinism guard and is pinned here like any cluster-resident one —
+    // the r15 fix stands. Each delta's route is resolved once and shared by its probe
+    // span and its merge. The pins are released once the output is
+    // materialized and both merges have installed their (eagerly
+    // materialized) segments. checkpointDeltas=false keeps the old
+    // contract: the CALLER owns delta stability and pinning.
+    val pinned = scala.collection.mutable.Buffer.empty[ZSetFrame]
+    def resolve(st: KeyedState, d: ZSetFrame): (ZSetFrame, KeyedState.DeltaRoute) = {
+      val r = st.route(d)
+      if (!checkpointDeltas || r.onDriver) (d, r)
+      else {
+        val p = d.localCheckpoint(eager = true)
+        pinned += p
+        (p, st.route(p))
+      }
+    }
     try {
-      val aTouched = knownTouchedA.getOrElse(aSt.touchedBuckets(pinA))
-      val bTouched = knownTouchedB.getOrElse(bSt.touchedBuckets(pinB))
+      val (pinA, routeA) = resolve(aSt, dA)
+      val (pinB, routeB) = resolve(bSt, dB)
+      val aTouched = aSt.span(routeA, knownTouchedA)
+      val bTouched = bSt.span(routeB, knownTouchedB)
       val bOldProbe = bSt.view(aTouched)               // B_old for ΔA's buckets
       // A_new for ΔB's buckets, built LAZILY from the pre-merge view + the
       // slice of ΔA hashing into those buckets — so the output job does not
@@ -104,8 +118,8 @@ object Incremental {
         pmod(hash(keys.map(col): _*), lit(aSt.nBuckets)).isin(bTouched: _*))
       val aNewProbe = aOldProbe + dAInB
       val mergeTask = new java.util.concurrent.FutureTask[Unit](() => {
-        aSt.merge(pinA, checkpointDelta = false, Some(aTouched))
-        bSt.merge(pinB, checkpointDelta = false, Some(bTouched))
+        aSt.mergeRouted(routeA, checkpointDelta = false, Some(aTouched), append = false)
+        bSt.mergeRouted(routeB, checkpointDelta = false, Some(bTouched), append = false)
       })
       val mergeThread = new Thread(mergeTask, "graft-join-merge")
       mergeThread.setDaemon(true)
@@ -123,9 +137,7 @@ object Incremental {
           try mergeTask.get() catch { case _: Throwable => () }
           throw e
       }
-    } finally {
-      if (checkpointDeltas) { Pinned.release(pinA.df); Pinned.release(pinB.df) }
-    }
+    } finally pinned.foreach(p => Pinned.release(p.df))
   }
 
   /** Incremental distinct: δ = distinct(A_new) − distinct(A_old)

@@ -3,6 +3,9 @@ package graft.incremental
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Attribute, BoundReference, UnsafeProjection}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.catalyst.trees.TreePattern.CURRENT_LIKE
 import org.apache.spark.sql.functions._
 
 import graft.core.ZSetFrame
@@ -32,11 +35,32 @@ import graft.plans.{BucketPackRDD, BucketPacking, BucketSlot}
   * shard per worker, not per fine bucket).
   *
   * A step consumes a delta: the delta's keys name the touched buckets; only
-  * the delta is routed (shuffled) into the bucket layout, and the touched
-  * buckets' old content is consolidated with it in place into ONE new
-  * segment; the touched buckets' pointers move to the new segment.
-  * Untouched buckets — the overwhelming majority of a large state under a
-  * small delta — are never read, shuffled, or rewritten.
+  * the delta is routed into the bucket layout, and the touched buckets' old
+  * content is consolidated with it in place into ONE new segment; the
+  * touched buckets' pointers move to the new segment. Untouched buckets —
+  * the overwhelming majority of a large state under a small delta — are
+  * never read, shuffled, or rewritten.
+  *
+  * TWO ROUTES into the layout, decided once per delta per step (`route`),
+  * both building the same segment:
+  *  - DRIVER route — the delta is driver-resident: its plan is
+  *    deterministic and folds to a LocalRelation (a `Seq.toDF` delta, a
+  *    CDC batch the caller built in memory). Spark's own optimizer
+  *    evaluates the bucket id `pmod(hash(keys), n)` over its rows, which
+  *    are filed under their (partition, slot) on the driver and handed to
+  *    Spark as a G-partition parallelize, one element per bucket: no
+  *    shuffle, no delta pin, no bucket-discovery job, and a `knownTouched`
+  *    span is checked against every row for free. This is the reference's
+  *    input handle, which hashes pushed deltas to their worker shards
+  *    before the step starts (operator/input.rs, `handle.append`).
+  *  - SHUFFLE route — every other delta (pinned CDC slices, query frames)
+  *    and the seed: `repartition(nBuckets, keys)`, pruned to the span.
+  *  The DETERMINISM GUARD: a plan with a nondeterministic projection
+  *  (rand(), uuid(), a nondeterministic UDF) or one reading the clock
+  *  (current_timestamp(), which the optimizer fixes per optimization) also
+  *  folds to a LocalRelation, but re-folds to new rows each time a plan
+  *  over it is optimized; it takes the shuffle route and keeps the pin its
+  *  callers give it, so every consumer sees the same rows.
   *
   * SEGMENT RECLAMATION (the trace's merge/GC, reference:
   * crates/dbsp/src/trace/spine_fueled.rs merge batches + drop superseded):
@@ -160,8 +184,13 @@ final class KeyedState(val keys: Seq[String], val nBuckets: Int, init: ZSetFrame
     seg
   }
 
-  /** Route `z` into the bucket layout by key hash, as an UNPINNED segment
-    * packed by `groups`. The shuffle writes nBuckets partitions, but only
+  /** The SHUFFLE route (see the class scaladoc for the two routes): route
+    * `z` into the bucket layout by key hash, as an UNPINNED segment packed
+    * by `groups`. It serves the seed and every delta that is not
+    * driver-resident — a cluster-resident plan, or one the determinism
+    * guard turns away (its caller's pin fixes its rows first; the driver
+    * route's `deltaSegment` builds the same segment from rows already on
+    * the driver). The shuffle writes nBuckets partitions, but only
     * the span's are ever READ: the reduce side is pruned to the groups'
     * buckets and packed into G tasks (BucketPackRDD) — a step's
     * Δ route runs G reduce tasks, not nBuckets, nor |touched|. Without the
@@ -319,12 +348,81 @@ final class KeyedState(val keys: Seq[String], val nBuckets: Int, init: ZSetFrame
   /** The full state as a Z-set (final read-out; scans every bucket). */
   def snapshot: ZSetFrame = view(0 until nBuckets)
 
-  /** Bucket ids a delta's keys hash into (one small job). Shareable across
-    * same-shaped states: any KeyedState with equal `keys` and `nBuckets`
-    * assigns identical ids. */
-  def touchedBuckets(delta: ZSetFrame): Seq[Int] =
-    delta.df.select(pmod(hash(keys.map(delta.df(_)): _*), lit(nBuckets)).as("b"))
-      .distinct().collect().map(_.getInt(0)).toSeq.sorted
+  /** Bucket ids a delta's keys hash into: one small job, or none for a
+    * driver-resident delta (read off its folded LocalRelation). Shareable
+    * across same-shaped states: any KeyedState with equal `keys` and
+    * `nBuckets` assigns identical ids. */
+  def touchedBuckets(delta: ZSetFrame): Seq[Int] = {
+    val b = delta.df.select(pmod(hash(keys.map(delta.df(_)): _*), lit(nBuckets)).as("b"))
+    KeyedState.driverRows(b) match {
+      case Some((_, rows)) => rows.map(_.getInt(0)).distinct.sorted
+      case None => b.distinct().collect().map(_.getInt(0)).toSeq.sorted
+    }
+  }
+
+  /** Resolve a delta's route into this state's layout (see the class
+    * scaladoc) — once per delta per step; every consumer of the step
+    * shares the result. The delta projected to the state's columns plus its
+    * bucket id is optimized once: when it folds to a LocalRelation, Spark's
+    * ConvertToLocalRelation has evaluated the very expression
+    * `repartition(nBuckets, keys)` routes by, so the driver route's bucket
+    * ids match the shuffle route's by construction. */
+  private[incremental] def route(delta: ZSetFrame): KeyedState.DeltaRoute = {
+    val frame = ZSetFrame.fromDelta(delta.df.select(colsInOrder.map(col): _*))
+    val n = colsInOrder.size
+    val withBucket = frame.df.select(colsInOrder.map(col) :+ bucketId.as("__b"): _*)
+    val rows = KeyedState.driverRows(withBucket).map { case (output, data) =>
+      val strip = UnsafeProjection.create(output.take(n).zipWithIndex.map {
+        case (a, i) => BoundReference(i, a.dataType, a.nullable)
+      })
+      data.groupBy(_.getInt(n)).map { case (b, rs) =>
+        b -> rs.map(r => strip(r).copy(): InternalRow).toArray
+      }
+    }
+    new KeyedState.DeltaRoute(frame, rows)
+  }
+
+  /** The bucket span a step over `r` touches: a caller's `knownTouched`, or
+    * else the delta's own buckets. knownTouched CONTRACT: any SUPERSET of
+    * the delta's true span — `install` repoints only the listed buckets, so
+    * delta rows hashing elsewhere would be dropped. A driver-resident
+    * delta's rows are all in hand, so the contract is always checked, at
+    * no cost; a cluster-resident delta's only behind
+    * spark.graft.checkedTouched (debug; one extra job). It fails as
+    * DurableKeyedState.merge does: an IllegalArgumentException naming
+    * `knownTouched` and the missed buckets. */
+  private[incremental] def span(r: KeyedState.DeltaRoute, knownTouched: Option[Seq[Int]]): Seq[Int] =
+    knownTouched match {
+      case Some(ts) =>
+        val checked = r.rows.map(_.keys.toSeq).orElse(
+          if (spark.conf.getOption(KeyedState.CheckedTouchedConf).contains("true"))
+            Some(touchedBuckets(r.frame))
+          else None)
+        val have = ts.toSet
+        val missing = checked.getOrElse(Nil).filterNot(have)
+        require(missing.isEmpty,
+          s"graft: KeyedState knownTouched=${ts.distinct.sorted} does not cover delta " +
+            s"bucket(s) ${missing.sorted} - the rows there would be dropped")
+        ts
+      case None => r.rows.fold(touchedBuckets(r.frame))(_.keys.toSeq.sorted)
+    }
+
+  /** The delta's UNPINNED segment packed by `groups`, by its route: the
+    * driver route hands each bucket's rows to Spark as one element of a
+    * G-partition parallelize (the rows travel inside the tasks, as a
+    * LocalTableScanExec already ships them); the shuffle route is
+    * `routed`. */
+  private def deltaSegment(r: KeyedState.DeltaRoute,
+                           groups: IndexedSeq[IndexedSeq[Int]]): Segment = r.rows match {
+    case Some(rows) =>
+      val sc = spark.sparkContext
+      val chunks = groups.map(_.map(b => rows.getOrElse(b, Array.empty[InternalRow])))
+      val rdd =
+        if (groups.isEmpty) sc.emptyRDD[Array[InternalRow]]
+        else sc.parallelize(chunks, groups.size).flatMap(_.iterator)
+      new Segment(rdd, BucketPacking.slots(groups))
+    case None => routed(r.frame, groups)
+  }
 
   /** Bucket-pruned read of the given buckets (no job launched). */
   def view(bucketIds: Seq[Int]): ZSetFrame =
@@ -367,48 +465,37 @@ final class KeyedState(val keys: Seq[String], val nBuckets: Int, init: ZSetFrame
   }
 
   /** Shared step prologue: advance the generation clock (reclaim + periodic
-    * compaction), align/pin the delta, resolve the touched-bucket span and
-    * its packing (`groupsOf`), and take the pre-merge view of the touched
-    * buckets. Install of the new
+    * compaction), pin a cluster-resident delta, resolve the touched-bucket
+    * span and its packing (`groupsOf`), and take the pre-merge view of the
+    * touched buckets. Install of the new
     * segment is the caller's job — `aggStep` uses this to run the segment
     * build CONCURRENTLY with the output-delta job. */
-  private def prepare(delta: ZSetFrame, checkpointDelta: Boolean,
+  private def prepare(r0: KeyedState.DeltaRoute, checkpointDelta: Boolean,
                       knownTouched: Option[Seq[Int]])
-      : (ZSetFrame, IndexedSeq[IndexedSeq[Int]], ZSetFrame) = {
+      : (KeyedState.DeltaRoute, IndexedSeq[IndexedSeq[Int]], ZSetFrame) = {
+    // a driver-resident delta's span is resolved — and a knownTouched
+    // checked against its rows — before the step changes anything
+    val driverSpan = if (r0.onDriver) Some(span(r0, knownTouched)) else None
     retireQ.advance()
     // compactInternal, NOT compact(): this merge's advance() above already
     // ticked the clock for this step (see compact()'s scaladoc)
     if (compactEvery > 0 && gen % compactEvery == 0) compactInternal(None)
     // no pre-consolidation of the delta: the merged-segment consolidate
-    // below subsumes it; checkpoint only pins the delta so the touched-
-    // bucket scan and the merge don't recompute it. Callers whose delta is
+    // below subsumes it; checkpoint only pins a cluster-resident delta so
+    // the touched-bucket scan and the merge don't recompute it (a
+    // driver-resident one has nothing to recompute). Callers whose delta is
     // already materialized (or a trivial filter of materialized data) pass
     // checkpointDelta=false to save the extra job.
-    val aligned = ZSetFrame.fromDelta(delta.df.select(colsInOrder.map(col): _*))
-    val d = if (checkpointDelta) {
-      val c = aligned.localCheckpoint()
+    val r = if (checkpointDelta && !r0.onDriver) {
+      val c = r0.frame.localCheckpoint()
       // the internal delta checkpoint only needs to live through this
       // merge; free it on the same deferred schedule as retired segments
       retireQ.retire(new Segment(c.df.rdd, Map.empty))
-      c
-    } else aligned
-    // knownTouched CONTRACT: any SUPERSET of the delta's true bucket span.
-    // An under-inclusive set silently corrupts state — install() repoints
-    // only the listed buckets, so delta rows hashing elsewhere land in an
-    // unreferenced slot and are dropped without error. Validated
-    // behind spark.graft.checkedTouched (debug; costs one extra job/step).
-    val touched = knownTouched match {
-      case Some(ts) =>
-        if (spark.conf.getOption(KeyedState.CheckedTouchedConf).contains("true")) {
-          val missing = touchedBuckets(d).filterNot(ts.contains)
-          require(missing.isEmpty,
-            s"graft: knownTouched misses buckets $missing — deltas there would be dropped")
-        }
-        ts
-      case None => touchedBuckets(d)
-    }
+      new KeyedState.DeltaRoute(c, None)
+    } else r0
+    val touched = driverSpan.getOrElse(span(r, knownTouched))
     val groups = groupsOf(touched.distinct.sorted.toIndexedSeq)
-    (d, groups, ZSetFrame.fromDelta(viewOf(groups)))
+    (r, groups, ZSetFrame.fromDelta(viewOf(groups)))
   }
 
   /** Merge a delta into the state, touching only the buckets its keys hash
@@ -418,10 +505,10 @@ final class KeyedState(val keys: Seq[String], val nBuckets: Int, init: ZSetFrame
     *
     * `append = false` (default): only the delta is routed into the bucket
     * layout, and the touched buckets' old content is consolidated with it
-    * IN PLACE into ONE new segment (`aggStep`'s shape: the Δ route's map
-    * stage plus one exchange-free consolidation — 2 jobs) — rows stay
-    * physically unique, at O(|Δ|) shuffle and O(touched-bucket rows) scan
-    * per step.
+    * IN PLACE into ONE new segment (the shuffle route's map stage plus one
+    * exchange-free consolidation — 2 jobs; the driver route runs only the
+    * consolidation) — rows stay physically unique, at O(|Δ|) routing and
+    * O(touched-bucket rows) scan per step.
     * `append = true`: the delta becomes a NEW segment prepended to its
     * buckets' spine — O(|Δ|) per step regardless of bucket size (the
     * reference's fueled-spine append, spine_fueled.rs:1-45); returned
@@ -431,19 +518,27 @@ final class KeyedState(val keys: Seq[String], val nBuckets: Int, init: ZSetFrame
     * collapses the spine). */
   def merge(delta: ZSetFrame, checkpointDelta: Boolean = true,
             knownTouched: Option[Seq[Int]] = None,
-            append: Boolean = false): (ZSetFrame, ZSetFrame) = {
-    val (d, groups, oldTouched) = prepare(delta, checkpointDelta, knownTouched)
+            append: Boolean = false): (ZSetFrame, ZSetFrame) =
+    mergeRouted(route(delta), checkpointDelta, knownTouched, append)
+
+  /** `merge` over an already resolved route (`Incremental.joinDeltaKeyed`
+    * resolves each delta once and shares it with its probes). */
+  private[incremental] def mergeRouted(r0: KeyedState.DeltaRoute, checkpointDelta: Boolean,
+                                       knownTouched: Option[Seq[Int]],
+                                       append: Boolean): (ZSetFrame, ZSetFrame) = {
+    val (r, groups, oldTouched) = prepare(r0, checkpointDelta, knownTouched)
     val touched = groups.flatten
     if (append) {
       // spine append: route ONLY the delta into the bucket layout; old
       // segments are untouched (no O(bucket) consolidate on the hot path)
-      installAppend(pin(routed(d, groups)), touched)
+      installAppend(pin(deltaSegment(r, groups)), touched)
     } else {
       // consolidate BEFORE installing: state rows must stay physically
       // unique (weight-merged) or count-style aggregates over the trace
       // would see duplicate rows. The routed Δ is read unpinned, once, as
-      // the view's extra spine batch — its shuffle is the step's only one
-      val dView = viewOf(groups, extra = Some(routed(d, groups)))
+      // the view's extra spine batch — on the shuffle route its exchange is
+      // the step's only one
+      val dView = viewOf(groups, extra = Some(deltaSegment(r, groups)))
       install(materializeAligned(dView, groups), touched)
     }
     val newTouched = ZSetFrame.fromDelta(viewOf(groups))
@@ -523,17 +618,21 @@ final class KeyedState(val keys: Seq[String], val nBuckets: Int, init: ZSetFrame
     // consolidation on actual spine depth (oldTouched is a view over the
     // pre-merge segment lists)
     val preSpined = anySpine
-    val (d, groups, oldTouched) = prepare(delta, checkpointDelta, knownTouched)
+    val (r, groups, oldTouched) = prepare(route(delta), checkpointDelta, knownTouched)
     val touched = groups.flatten
-    // Δ BUCKET ALIGNMENT, eagerly (the step's only shuffle, O(|Δ|), and
-    // pinned: both aggregate chains and the segment build read it): with the delta in the state's own layout, the new side is
-    // a single bucket-clustered scan (old spine ⊎ Δ mini-segment via
-    // viewOf's `extra`), so BOTH aggregate chains below and the replace
-    // consolidation plan with zero exchanges. This is the reference's step
-    // economics made literal: a batch is routed to its shards once, and
-    // every downstream read/merge happens shard-local
+    // Δ BUCKET ALIGNMENT, once: with the delta in the state's own layout,
+    // the new side is a single bucket-clustered scan (old spine ⊎ Δ
+    // mini-segment via viewOf's `extra`), so BOTH aggregate chains below
+    // and the replace consolidation plan with zero exchanges. This is the
+    // reference's step economics made literal: a batch is routed to its
+    // shards once, and every downstream read/merge happens shard-local
     // (communication/shard.rs; spine_fueled.rs merges within a shard).
-    val miniSeg = pin(routed(d, groups))
+    // The shuffle route pins the mini-segment (its exchange, O(|Δ|), is the
+    // step's only one, and three readers share it); the driver route's
+    // rows ride inside each reader's tasks, so it is pinned only in append
+    // mode, where it is installed as a spine segment that outlives the step.
+    val seg = deltaSegment(r, groups)
+    val miniSeg = if (r.onDriver && !append) seg else pin(seg)
     val newView = ZSetFrame.fromDelta(viewOf(groups, extra = Some(miniSeg)))
     val (o, n) = restrictTo match {
       case Some(p) => (oldTouched.where(p), newView.where(p))
@@ -551,9 +650,9 @@ final class KeyedState(val keys: Seq[String], val nBuckets: Int, init: ZSetFrame
       installAppend(miniSeg, touched)
       (agg(n.consolidate) - agg(oc)).localCheckpoint(eager = true)
     } else {
-      // pin the aligned delta through this step's reads; the deferred
+      // keep a pinned aligned delta through this step's reads; the deferred
       // reclaim frees it once the replace segment supersedes it
-      retireQ.retire(miniSeg)
+      if (!r.onDriver) retireQ.retire(miniSeg)
       // replace consolidation on a side thread (fresh thread per step:
       // Spark's job-local properties are inherited at thread creation,
       // which a shared pool thread would not see), CONCURRENT with the
@@ -586,9 +685,38 @@ final class KeyedState(val keys: Seq[String], val nBuckets: Int, init: ZSetFrame
 
 object KeyedState {
   /** Debug flag: when "true", `merge` verifies a caller-supplied
-    * `knownTouched` is a superset of the delta's actual bucket span
-    * (the same contract-check philosophy as ZSetFrame.CheckedWeightsConf). */
+    * `knownTouched` is a superset of a cluster-resident delta's actual
+    * bucket span (the same contract-check philosophy as
+    * ZSetFrame.CheckedWeightsConf); a driver-resident delta is always
+    * checked. */
   val CheckedTouchedConf = "spark.graft.checkedTouched"
+
+  /** A step's delta resolved against one state's layout (`KeyedState.route`):
+    * `frame` is the delta in the state's column order; `rows` holds a
+    * DRIVER-RESIDENT delta's rows (UnsafeRows) by bucket — the driver
+    * route — and is None for a cluster-resident delta, which takes the
+    * shuffle route. */
+  private[incremental] final class DeltaRoute(val frame: ZSetFrame,
+                                              val rows: Option[Map[Int, Array[InternalRow]]]) {
+    def onDriver: Boolean = rows.isDefined
+  }
+
+  /** `df`'s output and rows when its plan is driver-resident: every leaf is
+    * a LocalRelation, the analyzed plan is deterministic and reads no
+    * clock (the determinism guard, see the class scaladoc), and the
+    * optimized plan is one LocalRelation — Spark has then already
+    * evaluated `df`'s projections and filters on the driver, and its rows
+    * are read here with no job. Otherwise None. The leaf check keeps a
+    * cluster-resident plan from paying an extra optimizer pass. */
+  private[incremental] def driverRows(df: DataFrame): Option[(Seq[Attribute], Seq[InternalRow])] = {
+    val plan = df.queryExecution.analyzed
+    if (!plan.deterministic || plan.containsPattern(CURRENT_LIKE) ||
+        !plan.collectLeaves().forall(_.isInstanceOf[LocalRelation])) None
+    else df.queryExecution.optimizedPlan match {
+      case lr: LocalRelation => Some((lr.output, lr.data))
+      case _ => None
+    }
+  }
 
   /** DRIVER-SIDE bucket id for a row of Long key values — exactly what
     * `repartition(n, keys)` computes for LongType key columns: murmur3

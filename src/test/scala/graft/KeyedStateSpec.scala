@@ -9,6 +9,12 @@ import graft.incremental.{Incremental, KeyedState, Pinned}
 class KeyedStateSpec extends SparkSpec {
   import spark.implicits._
 
+  private def zf(rows: Seq[(Long, Long, Long)], v: String = "v"): ZSetFrame =
+    ZSetFrame.fromDelta(rows.toDF("k", v, ZSetFrame.W))
+  /** A two-column (k, v) Z-set's consolidated rows. */
+  private def rowsOf(z: ZSetFrame): Map[(Long, Long), Long] =
+    z.consolidate.df.collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
+
   test("bucket ids line up with repartition partition ids") {
     // the layout invariant KeyedState relies on: repartition(n, keys) puts a
     // row in physical partition pmod(hash(keys), n) — HashPartitioning's
@@ -360,65 +366,124 @@ class KeyedStateSpec extends SparkSpec {
   test("layout law: view(S) ≡ the naive fold restricted to S, across a generated op sequence") {
     // every way a step can rewrite the packed layout — replace and append
     // merges, aggStep with and without restrictTo (and in append mode), a
-    // caller compact, and a bulk step touching every bucket — must leave
-    // each bucket readable on its own: view(S) equals the naive Z-set fold
+    // caller compact (also straight after an append), an empty delta, a
+    // join step, and a bulk step touching every bucket — must leave each
+    // bucket readable on its own: view(S) equals the naive Z-set fold
     // filtered to pmod(hash(k), n) ∈ S, for S = ∅, a singleton, a random
-    // subset and all buckets. aggStep's emitted delta must equal the batch
-    // max-per-key difference of the fold.
+    // subset and all buckets. Every op runs twice, on twin states: once
+    // with the delta as a `Seq.toDF` frame (the driver route) and once with
+    // it pinned first (the shuffle route). Both twins must match the fold,
+    // aggStep's emitted deltas the batch max-per-key difference, and
+    // joinDeltaKeyed's the batch join difference.
     val n = 16
     val rnd = new scala.util.Random(1700)
     val naive = scala.collection.mutable.Map.empty[(Long, Long), Long]
-    def fold(rows: Seq[(Long, Long, Long)]): Unit = rows.foreach { case (k, v, w) =>
-      val nw = naive.getOrElse((k, v), 0L) + w
-      if (nw == 0) naive.remove((k, v)) else naive((k, v)) = nw
+    val naiveDim = scala.collection.mutable.Map.empty[(Long, Long), Long]
+    def fold(into: scala.collection.mutable.Map[(Long, Long), Long], rows: Seq[(Long, Long, Long)]): Unit =
+      rows.foreach { case (k, v, w) =>
+        val nw = into.getOrElse((k, v), 0L) + w
+        if (nw == 0) into.remove((k, v)) else into((k, v)) = nw
+      }
+    val pins = scala.collection.mutable.Buffer.empty[ZSetFrame]
+    /** The delta as each route's twin receives it: driver-resident, then pinned. */
+    def routes(rows: Seq[(Long, Long, Long)], v: String = "v"): Seq[ZSetFrame] = {
+      val pinned = zf(rows, v).localCheckpoint(eager = true)
+      pins += pinned
+      Seq(zf(rows, v), pinned)
     }
-    def zf(rows: Seq[(Long, Long, Long)]): ZSetFrame =
-      ZSetFrame.fromDelta(rows.toDF("k", "v", ZSetFrame.W))
-    // inserts with weights 1-2, two exact-duplicate rows, retractions of live rows
+    // inserts with weights 1-2, two exact-duplicate rows, retractions of
+    // live rows, and a fresh row whose weights net to zero
     def delta(inserts: Int, keySpace: Int): Seq[(Long, Long, Long)] = {
       val ins = Seq.fill(inserts)(
         (rnd.nextInt(keySpace).toLong, rnd.nextInt(50).toLong, 1L + rnd.nextInt(2)))
       val ret = rnd.shuffle(naive.keys.toSeq.sorted).take(2).map { case (k, v) => (k, v, -1L) }
-      ins ++ ins.take(2) ++ ret
+      val netZero = (rnd.nextInt(keySpace).toLong, 1000L + rnd.nextInt(50))
+      ins ++ ins.take(2) ++ ret ++ Seq((netZero._1, netZero._2, 1L), (netZero._1, netZero._2, -1L))
     }
     def maxAgg(z: ZSetFrame): ZSetFrame =
       z.aggregate(Seq(col("k")), expandWeights = false, max(col("v")).as("mx"))
     def maxOf(m: collection.Map[(Long, Long), Long]): Map[(Long, Long), Long] =
       m.keys.groupBy(_._1).map { case (k, kvs) => (k, kvs.map(_._2).max) -> 1L }
-    def rowsOf(z: ZSetFrame): Map[(Long, Long), Long] =
-      z.consolidate.df.collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
-    val st = new KeyedState(Seq("k"), n, Incremental.emptyLike(zf(Seq((0L, 0L, 1L)))))
+    def joinOf(a: collection.Map[(Long, Long), Long],
+               b: collection.Map[(Long, Long), Long]): Map[(Long, Long, Long), Long] = {
+      val bByK = b.toSeq.groupBy(_._1._1)
+      a.toSeq.flatMap { case ((k, v), wa) =>
+        bByK.getOrElse(k, Nil).map { case ((_, at), wb) => (k, v, at) -> wa * wb }
+      }.groupMapReduce(_._1)(_._2)(_ + _).filter(_._2 != 0)
+    }
+    def diff[K](before: Map[K, Long], after: Map[K, Long]): Map[K, Long] =
+      (before.keySet ++ after.keySet).toSeq
+        .map(r => r -> (after.getOrElse(r, 0L) - before.getOrElse(r, 0L))).filter(_._2 != 0).toMap
+    val sts = Seq.fill(2)(new KeyedState(Seq("k"), n, Incremental.emptyLike(zf(Seq((0L, 0L, 1L))))))
+    val dims = Seq.fill(2)(new KeyedState(Seq("k"), n,
+      Incremental.emptyLike(zf(Seq((0L, 0L, 1L)), "attr"))))
+    val routeName = Seq("driver route", "shuffle route")
     def checkViews(label: String): Unit =
       Seq(Seq.empty[Int], Seq(rnd.nextInt(n)), (0 until n).filter(_ => rnd.nextBoolean()),
           0 until n).foreach { s =>
         val want = naive.filter { case ((k, _), _) => s.contains(KeyedState.bucketOfLongs(Seq(k), n)) }
-        assert(rowsOf(st.view(s)) == want, s"after $label: view(${s.mkString(",")}) differs")
+        sts.zip(routeName).foreach { case (st, r) =>
+          assert(rowsOf(st.view(s)) == want, s"after $label on the $r: view(${s.mkString(",")}) differs")
+        }
       }
     def aggOp(rows: Seq[(Long, Long, Long)], restrict: Boolean, append: Boolean): Unit = {
       val before = maxOf(naive)
       val keys = rows.map(_._1).distinct
-      val out = st.aggStep(zf(rows), append = append,
-        restrictTo = if (restrict) Some(col("k").isin(keys: _*)) else None)(maxAgg)
-      fold(rows)
-      val after = maxOf(naive)
-      val want = (before.keySet ++ after.keySet).toSeq
-        .map(r => r -> (after.getOrElse(r, 0L) - before.getOrElse(r, 0L))).filter(_._2 != 0).toMap
-      assert(rowsOf(out) == want, s"aggStep(restrict=$restrict, append=$append) emitted a wrong delta")
+      val outs = sts.zip(routes(rows)).map { case (st, d) =>
+        rowsOf(st.aggStep(d, append = append,
+          restrictTo = if (restrict) Some(col("k").isin(keys: _*)) else None)(maxAgg))
+      }
+      fold(naive, rows)
+      val want = diff(before, maxOf(naive))
+      outs.zip(routeName).foreach { case (out, r) =>
+        assert(out == want, s"aggStep(restrict=$restrict, append=$append) on the $r emitted a wrong delta")
+      }
     }
-    val ops = rnd.shuffle(Seq("replace", "append", "agg", "aggRestrict", "aggAppend", "compact") ++
-      Seq("replace", "append", "agg", "aggRestrict", "aggAppend")) :+ "bulk"
+    def joinOp(rowsA: Seq[(Long, Long, Long)], rowsB: Seq[(Long, Long, Long)]): Unit = {
+      val before = joinOf(naive, naiveDim)
+      val (as, bs) = (routes(rowsA), routes(rowsB, "attr"))
+      val outs = sts.indices.map { i =>
+        val out = Incremental.joinDeltaKeyed(sts(i), as(i), dims(i), bs(i), Seq("k"))
+        out.consolidate.df.collect().map(r =>
+          (r.getAs[Long]("k"), r.getAs[Long]("v"), r.getAs[Long]("attr")) -> r.getAs[Long](ZSetFrame.W)).toMap
+      }
+      fold(naive, rowsA); fold(naiveDim, rowsB)
+      val want = diff(before, joinOf(naive, naiveDim))
+      outs.zip(routeName).foreach { case (out, r) =>
+        assert(out == want, s"joinDeltaKeyed on the $r emitted a wrong delta")
+      }
+      val dimWant = naiveDim.toMap
+      dims.zip(routeName).foreach { case (d, r) =>
+        assert(rowsOf(d.snapshot) == dimWant, s"joinDeltaKeyed on the $r left a wrong B trace")
+      }
+    }
+    def dimDelta(): Seq[(Long, Long, Long)] = {
+      val ins = Seq.fill(6)((rnd.nextInt(200).toLong, rnd.nextInt(5).toLong, 1L + rnd.nextInt(2)))
+      ins ++ rnd.shuffle(naiveDim.keys.toSeq.sorted).take(2).map { case (k, at) => (k, at, -1L) }
+    }
+    def mergeOp(rows: Seq[(Long, Long, Long)], append: Boolean): Unit = {
+      sts.zip(routes(rows)).foreach { case (st, d) => st.merge(d, append = append) }
+      fold(naive, rows)
+    }
+    val ops = rnd.shuffle(Seq("replace", "append", "agg", "aggRestrict", "aggAppend", "compact",
+      "empty", "join") ++ Seq("replace", "append", "agg", "aggRestrict", "aggAppend", "join")) ++
+      Seq("append", "compact", "bulk")
     ops.foreach { op =>
       op match {
-        case "replace" => val d = delta(5, 200); st.merge(zf(d)); fold(d)
-        case "append" => val d = delta(5, 200); st.merge(zf(d), append = true); fold(d)
+        case "replace" => mergeOp(delta(5, 200), append = false)
+        case "append" => mergeOp(delta(5, 200), append = true)
         case "agg" => aggOp(delta(5, 200), restrict = false, append = false)
         case "aggRestrict" => aggOp(delta(5, 200), restrict = true, append = false)
         case "aggAppend" => aggOp(delta(5, 200), restrict = true, append = true)
-        case "compact" => st.compact()
+        case "compact" => sts.foreach(_.compact())
+        case "empty" =>
+          aggOp(Nil, restrict = false, append = false)
+          mergeOp(Nil, append = true)
+        case "join" => joinOp(delta(5, 200), dimDelta())
         case "bulk" =>
           val d = delta(300, 200)
           assert(KeyedState.bucketsOfLongKeys(d.map(_._1), n).size == n, "bulk step must touch every bucket")
-          st.merge(zf(d)); fold(d)
+          mergeOp(d, append = false)
       }
       checkViews(op)
     }
@@ -426,6 +491,7 @@ class KeyedStateSpec extends SparkSpec {
     // G = min(n, cores) partitions: reading one bucket pulls whole chunk
     // elements from its partition (counted by the cached-block reader),
     // never the rows of the buckets packed beside it
+    val st = sts.head
     val g = math.min(n, spark.sparkContext.defaultParallelism)
     val b = (0 until n).maxBy(b => naive.keys.count(kv => KeyedState.bucketOfLongs(Seq(kv._1), n) == b))
     val (rows, shape) = StepShape.measure(spark)(st.view(Seq(b)).df.queryExecution.toRdd.count())
@@ -435,7 +501,85 @@ class KeyedStateSpec extends SparkSpec {
     assert(shape.cachedRecordsRead <= (n + g - 1) / g,
       s"reading bucket $b pulled ${shape.cachedRecordsRead} cached elements: more than its " +
         s"partition's chunk count (the $coPacked co-packed rows must not be iterated)")
-    st.close()
+    (sts ++ dims).foreach(_.close())
+    pins.foreach(p => Pinned.release(p.df))
+  }
+
+  test("a driver-resident delta's under-inclusive knownTouched fails loudly and changes nothing") {
+    // the shuffle route drops rows hashing outside a caller's knownTouched
+    // span unless the debug check is on; the driver route sees every row's
+    // bucket, so it always refuses — with DurableKeyedState's error
+    val n = 8
+    val st = new KeyedState(Seq("k"), n, Incremental.emptyLike(zf(Seq((0L, 0L, 1L)))))
+    val dim = new KeyedState(Seq("k"), n, Incremental.emptyLike(zf(Seq((0L, 0L, 1L)), "attr")))
+    st.merge(zf((0L until 32L).map(k => (k, k, 1L))))
+    dim.merge(zf((0L until 32L).map(k => (k, k % 3, 1L)), "attr"))
+    val before = (rowsOf(st.snapshot), rowsOf(dim.snapshot))
+    val d = zf(Seq((3L, 99L, 1L), (4L, 7L, 2L)))
+    val missed = KeyedState.bucketOfLongs(Seq(3L), n)
+    val wrong = Some((0 until n).filterNot(_ == missed))
+    def refused(step: String)(f: => Any): Unit = {
+      val e = intercept[IllegalArgumentException](f)
+      assert(e.getMessage.contains("knownTouched") && e.getMessage.contains(s"$missed"),
+        s"$step: ${e.getMessage}")
+      assert((rowsOf(st.snapshot), rowsOf(dim.snapshot)) == before, s"$step changed the state")
+    }
+    refused("merge")(st.merge(d, knownTouched = wrong))
+    refused("merge append")(st.merge(d, knownTouched = wrong, append = true))
+    refused("aggStep")(st.aggStep(d, knownTouched = wrong)(
+      _.aggregate(Seq(col("k")), expandWeights = false, max(col("v")).as("mx"))))
+    refused("joinDeltaKeyed")(Incremental.joinDeltaKeyed(st, d, dim,
+      zf(Seq((3L, 1L, 1L)), "attr"), Seq("k"), knownTouchedA = wrong))
+    // a superset span is fine
+    st.merge(d, knownTouched = Some(0 until n))
+    assert(rowsOf(st.snapshot) == before._1 ++ Map((3L, 99L) -> 1L, (4L, 7L) -> 2L))
+    st.close(); dim.close()
+  }
+
+  test("driver-side touchedBuckets and probe run no job and match the SQL hash() bucket") {
+    val n = 32
+    val longs = Seq(0L, 1L, -1L, 97L, 123456789L, Long.MaxValue, Long.MinValue, 97L)
+    val strings = Seq("", "a", "spark", "ünïcødé-ターム", "a longer term", "spark")
+    def check(st: KeyedState, d: ZSetFrame, key: String): Unit = {
+      val want = d.df.select(pmod(hash(col(key)), lit(n))).distinct().collect().map(_.getInt(0)).toSeq.sorted
+      val (got, shape) = StepShape.measure(spark)(st.touchedBuckets(d))
+      assert(got == want)
+      assert(shape.jobs == 0, s"driver-side touchedBuckets ran $shape")
+      val (_, probeShape) = StepShape.measure(spark)(st.probe(d))
+      assert(probeShape.jobs == 0, s"driver-side probe ran $probeShape")
+      // a cluster-resident delta takes the job route to the same buckets
+      val pinned = d.localCheckpoint(eager = true)
+      assert(st.touchedBuckets(pinned) == want)
+      Pinned.release(pinned.df)
+    }
+    val ls = new KeyedState(Seq("k"), n, Incremental.emptyLike(zf(Seq((0L, 0L, 1L)))))
+    check(ls, zf(longs.map(k => (k, 1L, 1L))), "k")
+    val ts = new KeyedState(Seq("t"), n,
+      Incremental.emptyLike(ZSetFrame.fromDelta(Seq(("x", 1L)).toDF("t", ZSetFrame.W))))
+    check(ts, ZSetFrame.fromDelta(strings.map(t => (t, 1L)).toDF("t", ZSetFrame.W)), "t")
+    ls.close(); ts.close()
+  }
+
+  test("joinDeltaKeyed: a rand() delta lands the same rows in the traces as in its emitted delta") {
+    // the determinism guard: a delta computing rand(), a nondeterministic
+    // UDF or the current time also folds to a LocalRelation, but a fold per
+    // optimized plan would hand each consumer new rows — such a delta is
+    // pinned once and shared
+    val noise = udf(() => scala.util.Random.nextInt(1000).toLong).asNondeterministic()
+    val attrs = Seq(noise(), unix_micros(current_timestamp()), noise())
+    val aSt = new KeyedState(Seq("k"), 8, Incremental.emptyLike(zf(Seq((0L, 0L, 1L)))))
+    val bSt = new KeyedState(Seq("k"), 8, Incremental.emptyLike(zf(Seq((0L, 0L, 1L)), "attr")))
+    val out = new Incremental.State(Incremental.emptyLike(
+      zf(Seq((0L, 0L, 1L))).join(zf(Seq((0L, 0L, 1L)), "attr"), Seq("k"))))
+    attrs.foreach { attr =>
+      val keys = (1L to 20L).toDF("k")
+      val dA = ZSetFrame.fromDelta(keys.select(col("k"),
+        (rand() * 1000).cast("long").as("v"), lit(1L).as(ZSetFrame.W)))
+      val dB = ZSetFrame.fromDelta(keys.select(col("k"), attr.as("attr"), lit(1L).as(ZSetFrame.W)))
+      out.update(Incremental.joinDeltaKeyed(aSt, dA, bSt, dB, Seq("k")))
+    }
+    assertSameRows(out.acc.consolidate.df, aSt.snapshot.join(bSt.snapshot, Seq("k")).consolidate.df)
+    aSt.close(); bSt.close()
   }
 
   test("a packed partition's skipped chunks are never iterated") {

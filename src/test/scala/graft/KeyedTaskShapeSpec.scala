@@ -9,7 +9,10 @@ import graft.incremental.{Incremental, KeyedState, Pinned}
   * touched buckets reads each bucket view in G = min(k, cores) tasks, one
   * contiguous group of buckets per task, instead of one task per bucket.
   * 64 buckets, 36 of them touched; tasks and jobs are counted with a tagged
-  * listener (StepShape) and pinned as upper bounds. */
+  * listener (StepShape) and pinned as upper bounds. Each delta-routing step
+  * runs on both routes into the layout: a `Seq.toDF` delta takes the driver
+  * route (no shuffle, no delta pin), the same delta pinned first takes the
+  * shuffle route ("cluster" cases). */
 class KeyedTaskShapeSpec extends SparkSpec {
   import spark.implicits._
 
@@ -18,12 +21,16 @@ class KeyedTaskShapeSpec extends SparkSpec {
 
   /** Per-step ceilings (jobs, tasks), measured on local[4] (G = 4) with the
     * packed layout. Before it, the same steps ran one task per touched
-    * bucket in every view-reading stage. */
+    * bucket in every view-reading stage. The driver-route steps ran
+    * (4, 20) and (9, 44) on the shuffle route, the bounds their cluster
+    * twins keep. */
   private val bounds: Map[String, (Int, Int)] = Map(
-    "aggStep" -> (4, 20),
+    "aggStep" -> (2, 12),
+    "aggStep cluster" -> (4, 20),
     "merge" -> (2, 8),
     "merge append" -> (2, 8),
-    "joinDeltaKeyed" -> (9, 44))
+    "joinDeltaKeyed" -> (5, 28),
+    "joinDeltaKeyed cluster" -> (9, 44))
 
   test("a keyed step reads each view in ≤ G tasks; per-step jobs and tasks stay bounded") {
     val rnd = new scala.util.Random(2100)
@@ -49,29 +56,39 @@ class KeyedTaskShapeSpec extends SparkSpec {
 
     val known = Some(touched)
 
-    /** One run of the four steps on fresh states. */
+    /** One run of the six steps on fresh states. */
     def run(): Seq[(String, Shape)] = {
       val agg = new KeyedState(Seq("k"), N, seed)
+      val aggC = new KeyedState(Seq("k"), N, seed)
       val replaced = new KeyedState(Seq("k"), N, seed)
       val appended = new KeyedState(Seq("k"), N, seed)
       val facts = new KeyedState(Seq("k"), N, seed)
       val dims = new KeyedState(Seq("k"), N, seedDim)
+      val factsC = new KeyedState(Seq("k"), N, seed)
+      val dimsC = new KeyedState(Seq("k"), N, seedDim)
       // merge deltas are pinned outside the measured step, as
-      // joinDeltaKeyed pins its own before merging with checkpointDelta = false
-      val (d1, d2) = (dFact().localCheckpoint(eager = true), dFact().localCheckpoint(eager = true))
+      // joinDeltaKeyed pins its own before merging with checkpointDelta = false;
+      // the cluster cases' deltas are pinned outside it too
+      val pins = Seq.fill(4)(dFact().localCheckpoint(eager = true)) :+ dDim.localCheckpoint(eager = true)
+      val Seq(d1, d2, dAgg, dJoin, dDimC) = pins
       try Seq(
         "aggStep" -> StepShape.measure(spark)(
           agg.aggStep(dFact(), knownTouched = known)(maxAgg))._2,
+        "aggStep cluster" -> StepShape.measure(spark)(
+          aggC.aggStep(dAgg, knownTouched = known)(maxAgg))._2,
         "merge" -> StepShape.measure(spark)(
           replaced.merge(d1, checkpointDelta = false, knownTouched = known))._2,
         "merge append" -> StepShape.measure(spark)(
           appended.merge(d2, checkpointDelta = false, knownTouched = known, append = true))._2,
         "joinDeltaKeyed" -> StepShape.measure(spark)(
           Incremental.joinDeltaKeyed(facts, dFact(), dims, dDim, Seq("k"),
+            knownTouchedA = known, knownTouchedB = known))._2,
+        "joinDeltaKeyed cluster" -> StepShape.measure(spark)(
+          Incremental.joinDeltaKeyed(factsC, dJoin, dimsC, dDimC, Seq("k"),
             knownTouchedA = known, knownTouchedB = known))._2)
       finally {
-        Seq(agg, replaced, appended, facts, dims).foreach(_.close())
-        Seq(d1, d2).foreach(d => Pinned.release(d.df))
+        Seq(agg, aggC, replaced, appended, facts, dims, factsC, dimsC).foreach(_.close())
+        pins.foreach(d => Pinned.release(d.df))
       }
     }
     // joinDeltaKeyed's A_new probe is a view ∪ the ΔA slice hashing into
@@ -81,7 +98,7 @@ class KeyedTaskShapeSpec extends SparkSpec {
     runs.flatten.foreach { case (name, s) =>
       s.stages.filter(_.viewParts.nonEmpty).foreach { st =>
         assert(st.viewParts.forall(_ <= g), s"$name read a view in more than G = $g tasks: $st")
-        val allowed = g * st.viewParts.size + (if (name == "joinDeltaKeyed") deltaParts else 0)
+        val allowed = g * st.viewParts.size + (if (name.startsWith("joinDeltaKeyed")) deltaParts else 0)
         assert(st.tasks <= allowed,
           s"$name ran a view-reading stage of ${st.tasks} tasks over ${st.viewParts.size} views")
       }

@@ -49,7 +49,7 @@ object StepBench {
     // a fraction of the build cost. knownTouched = all: a dense seed
     // touches every bucket by construction, no discovery job.
     st.merge(ZSetFrame.fromTable(seedRows(spark, n, nKeys)),
-      checkpointDelta = false, knownTouched = Some(0 until nBuckets))
+      knownTouched = Some(0 until nBuckets))
     val ts = (1 to steps).map { i =>
       // knownTouched from the delta's own keys, mapped driver-side
       // (KeyedState.bucketsOfLongKeys == SQL hash(); a CDC source knows
@@ -147,8 +147,7 @@ object StepBench {
     // trace-only seed (see runKeyed): skips the seed's full-corpus WINDOW
     // SORT — the single most expensive build job of the old tier — while
     // leaving every timed step's state bit-identical
-    st.merge(ZSetFrame.fromTable(seed),
-      checkpointDelta = false, knownTouched = Some(0 until nBuckets))
+    st.merge(ZSetFrame.fromTable(seed), knownTouched = Some(0 until nBuckets))
     val ts = (1 to steps).map { i =>
       // 2 touched keys: insert one late row, retract the previous step's
       // (same delta shape as smallDelta — timing track, not an oracle)
@@ -216,8 +215,7 @@ object StepBench {
       val ks = rows.map(_._1).distinct
       val (lo, hi) = (rows.map(_._2).min, rows.map(_._2).max)
       val t0 = System.nanoTime()
-      val out = st.step(d, lo, hi, Some(ks), checkpointDelta = false,
-        strategy = force)
+      val out = st.step(d, lo, hi, Some(ks), strategy = force)
       val dt = (System.nanoTime() - t0) / 1e9
       graft.incremental.Pinned.release(out.df) // consumed; outside the timer
       dt

@@ -63,7 +63,6 @@ object Incremental {
   def joinDeltaKeyed(aSt: KeyedState, dA: ZSetFrame,
                      bSt: KeyedState, dB: ZSetFrame,
                      keys: Seq[String],
-                     checkpointDeltas: Boolean = true,
                      knownTouchedA: Option[Seq[Int]] = None,
                      knownTouchedB: Option[Seq[Int]] = None): ZSetFrame = {
     require(aSt.nBuckets == bSt.nBuckets && aSt.keys == bSt.keys,
@@ -74,34 +73,21 @@ object Incremental {
     // (any SUPERSET of the actual span is correct — a DENSE delta passes
     // all buckets, skipping the per-step bucket-discovery job entirely,
     // since discovery would return every bucket anyway).
-    // PIN cluster-resident deltas ONCE, up front (code-review r15): the
-    // discovery job, both merges, and the output join all read them —
-    // previously the raw plans were re-evaluated per consumer, concurrently
-    // across the merge thread and the main thread, so a delta whose plan is
-    // not stable under re-evaluation (rand(), a growing source table) could
-    // land DIFFERENT rows in the traces than in the emitted join delta with
-    // no error (checkpointDeltas=true pinned only the merges' private
-    // copies). The merges' per-delta checkpoints are skipped in exchange.
-    // A DRIVER-RESIDENT delta (KeyedState.route: a deterministic plan
-    // folding to a LocalRelation) is NOT pinned: its rows are fixed on the
-    // driver, so every consumer reads the same rows; its bucket span comes
-    // from those rows with no job and both merges take the driver route,
-    // with no shuffle. A rand()/uuid()/current_timestamp() delta fails the
-    // determinism guard and is pinned here like any cluster-resident one —
-    // the r15 fix stands. Each delta's route is resolved once and shared by its probe
-    // span and its merge. The pins are released once the output is
-    // materialized and both merges have installed their (eagerly
-    // materialized) segments. checkpointDeltas=false keeps the old
-    // contract: the CALLER owns delta stability and pinning.
+    // PIN each delta the pin rule cannot prove stable ONCE, eagerly, up
+    // front (code-review r15): the discovery job, both merges, and the
+    // output join all read it, concurrently across the merge task and the
+    // output job, so a plan not stable under re-evaluation (rand(), a
+    // growing source table) would otherwise land DIFFERENT rows in the
+    // traces than in the emitted join delta with no error. A stable delta
+    // (driver-resident, or already pinned by its producer) is not pinned
+    // again, and neither merge re-pins the pinned one: it is stable. Each
+    // delta's route is resolved once and shared by its probe span and its
+    // merge. The pins are released once the output is materialized and
+    // both merges have installed their (eagerly materialized) segments.
     val pinned = scala.collection.mutable.Buffer.empty[ZSetFrame]
     def resolve(st: KeyedState, d: ZSetFrame): (ZSetFrame, KeyedState.DeltaRoute) = {
-      val r = st.route(d)
-      if (!checkpointDeltas || r.onDriver) (d, r)
-      else {
-        val p = d.localCheckpoint(eager = true)
-        pinned += p
-        (p, st.route(p))
-      }
+      val p = Pinned.stabilized(d, eager = true)(pinned += _)
+      (p, st.route(p))
     }
     try {
       val (pinA, routeA) = resolve(aSt, dA)
@@ -112,30 +98,19 @@ object Incremental {
       // A_new for ΔB's buckets, built LAZILY from the pre-merge view + the
       // slice of ΔA hashing into those buckets — so the output job does not
       // wait for A's segment build (the aggStep JOB-FUSION shape): both
-      // merges run on a side thread concurrent with the single output action.
+      // merges run as a side task concurrent with the single output action.
       val aOldProbe = aSt.view(bTouched)
       val dAInB = pinA.where(
         pmod(hash(keys.map(col): _*), lit(aSt.nBuckets)).isin(bTouched: _*))
       val aNewProbe = aOldProbe + dAInB
-      val mergeTask = new java.util.concurrent.FutureTask[Unit](() => {
-        aSt.mergeRouted(routeA, checkpointDelta = false, Some(aTouched), append = false)
-        bSt.mergeRouted(routeB, checkpointDelta = false, Some(bTouched), append = false)
-      })
-      val mergeThread = new Thread(mergeTask, "graft-join-merge")
-      mergeThread.setDaemon(true)
-      mergeThread.start()
-      try {
-        // eager: the emitted join delta references partition-pruned probe
-        // views that are only valid until the second subsequent merge
-        // (KeyedState reclaims superseded segments) — materialize it first
-        val out = (pinA.join(bOldProbe, keys) + aNewProbe.join(pinB, keys))
-          .localCheckpoint(eager = true)
-        mergeTask.get() // surface merge failures; states updated on return
-        out
-      } catch {
-        case e: Throwable =>
-          try mergeTask.get() catch { case _: Throwable => () }
-          throw e
+      // eager: the emitted join delta references partition-pruned probe
+      // views that are only valid until the second subsequent merge
+      // (KeyedState reclaims superseded segments) — materialize it first
+      StepTasks.output("join-merge" -> (() => {
+        aSt.mergeRouted(routeA, Some(aTouched), append = false)
+        bSt.mergeRouted(routeB, Some(bTouched), append = false)
+      })) {
+        (pinA.join(bOldProbe, keys) + aNewProbe.join(pinB, keys)).localCheckpoint(eager = true)
       }
     } finally pinned.foreach(p => Pinned.release(p.df))
   }

@@ -5,7 +5,6 @@ import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Attribute, BoundReference, UnsafeProjection}
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
-import org.apache.spark.sql.catalyst.trees.TreePattern.CURRENT_LIKE
 import org.apache.spark.sql.functions._
 
 import graft.core.ZSetFrame
@@ -55,12 +54,13 @@ import graft.plans.{BucketPackRDD, BucketPacking, BucketSlot}
   *    before the step starts (operator/input.rs, `handle.append`).
   *  - SHUFFLE route — every other delta (pinned CDC slices, query frames)
   *    and the seed: `repartition(nBuckets, keys)`, pruned to the span.
-  *  The DETERMINISM GUARD: a plan with a nondeterministic projection
-  *  (rand(), uuid(), a nondeterministic UDF) or one reading the clock
-  *  (current_timestamp(), which the optimizer fixes per optimization) also
-  *  folds to a LocalRelation, but re-folds to new rows each time a plan
-  *  over it is optimized; it takes the shuffle route and keeps the pin its
-  *  callers give it, so every consumer sees the same rows.
+  *  The DETERMINISM GUARD (`Pinned.fixedRows`): a plan with a
+  *  nondeterministic projection (rand(), uuid(), a nondeterministic UDF)
+  *  or one reading the clock (current_timestamp(), which the optimizer
+  *  fixes per optimization) also folds to a LocalRelation, but re-folds to
+  *  new rows each time a plan over it is optimized; it takes the shuffle
+  *  route, and the pin rule (`Pinned.isStable`) pins it, so every consumer
+  *  sees the same rows.
   *
   * SEGMENT RECLAMATION (the trace's merge/GC, reference:
   * crates/dbsp/src/trace/spine_fueled.rs merge batches + drop superseded):
@@ -97,17 +97,13 @@ final class KeyedState(val keys: Seq[String], val nBuckets: Int, init: ZSetFrame
     * `repartition(nBuckets, keys)` (HashPartitioning.partitionIdExpression). */
   def bucketId: Column = pmod(hash(keyExprs: _*), lit(nBuckets))
 
-  /** `rdd` holds, per partition, one element per bucket of its group (an
-    * `RDD[Array[InternalRow]]`; rows in the INTERNAL UnsafeRow format, so
-    * views rebuild DataFrames without any row conversion and `viewOf`
-    * re-declares the key clustering the layout guarantees); `slots` maps
-    * every bucket the segment carries to its (partition, slot). (The
-    * delta-checkpoint retirement vehicle in `prepare` stores an
-    * external-row RDD with no slots — it is only ever unpersisted, never
-    * read — hence `RDD[_]`.) */
-  private final class Segment(val rdd: RDD[_], val slots: Map[Int, BucketSlot]) {
+  /** `rdd` holds, per partition, one element per bucket of its group;
+    * rows in the INTERNAL UnsafeRow format, so views rebuild DataFrames
+    * without any row conversion and `viewOf` re-declares the key clustering
+    * the layout guarantees. `slots` maps every bucket the segment carries
+    * to its (partition, slot). */
+  private final class Segment(val rdd: RDD[Array[InternalRow]], val slots: Map[Int, BucketSlot]) {
     var refs: Int = 0
-    def chunks: RDD[Array[InternalRow]] = rdd.asInstanceOf[RDD[Array[InternalRow]]]
   }
 
   /** bucket -> SEGMENT LIST, newest first. A bucket's logical content is
@@ -122,9 +118,9 @@ final class KeyedState(val keys: Seq[String], val nBuckets: Int, init: ZSetFrame
     * `restrictTo`, so the consolidation pays O(restricted rows), never
     * O(bucket)). */
   private val bucketSegs = Array.fill(nBuckets)(List.empty[Segment])
-  /** Deferred release of superseded segments (and per-step delta pins):
-    * the merge counter doubles as the periodic-compaction clock. */
-  private val retireQ = new RetireQueue[Segment](seg => unpersistTree(seg.rdd))
+  /** Deferred release of superseded segments' RDDs (and per-step delta
+    * pins): the merge counter doubles as the periodic-compaction clock. */
+  private val retireQ = new RetireQueue[RDD[_]](unpersistTree)
   private def gen: Long = retireQ.generation
 
   { // seed segment: the (usually empty) initial state, bucketed
@@ -138,7 +134,7 @@ final class KeyedState(val keys: Seq[String], val nBuckets: Int, init: ZSetFrame
       bucketSegs(b).foreach { old =>
         if (old ne seg) {
           old.refs -= 1
-          if (old.refs == 0) retireQ.retire(old)
+          if (old.refs == 0) retireQ.retire(old.rdd)
         }
       }
       if (!bucketSegs(b).contains(seg)) seg.refs += 1
@@ -188,7 +184,7 @@ final class KeyedState(val keys: Seq[String], val nBuckets: Int, init: ZSetFrame
     * `z` into the bucket layout by key hash, as an UNPINNED segment packed
     * by `groups`. It serves the seed and every delta that is not
     * driver-resident — a cluster-resident plan, or one the determinism
-    * guard turns away (its caller's pin fixes its rows first; the driver
+    * guard turns away (the pin rule fixes its rows first; the driver
     * route's `deltaSegment` builds the same segment from rows already on
     * the driver). The shuffle writes nBuckets partitions, but only
     * the span's are ever READ: the reduce side is pruned to the groups'
@@ -339,7 +335,7 @@ final class KeyedState(val keys: Seq[String], val nBuckets: Int, init: ZSetFrame
           .map { case (p, ss) => (p, ss.map(_.slot).sorted.toArray) }
       }.toArray
     }.toArray
-    val union = new graft.plans.BucketUnionRDD(segs.map(_.chunks), reads)
+    val union = new graft.plans.BucketUnionRDD(segs.map(_.rdd), reads)
     org.apache.spark.sql.graft.GraftSqlShim.internalDf(spark, union, schema,
       attrs => graft.plans.BucketClusteredPartitioning(
         keys.map(k => attrs(schema.fieldIndex(k))), groups.size))
@@ -465,13 +461,12 @@ final class KeyedState(val keys: Seq[String], val nBuckets: Int, init: ZSetFrame
   }
 
   /** Shared step prologue: advance the generation clock (reclaim + periodic
-    * compaction), pin a cluster-resident delta, resolve the touched-bucket
-    * span and its packing (`groupsOf`), and take the pre-merge view of the
-    * touched buckets. Install of the new
+    * compaction), pin a delta the pin rule cannot prove stable, resolve the
+    * touched-bucket span and its packing (`groupsOf`), and take the
+    * pre-merge view of the touched buckets. Install of the new
     * segment is the caller's job — `aggStep` uses this to run the segment
     * build CONCURRENTLY with the output-delta job. */
-  private def prepare(r0: KeyedState.DeltaRoute, checkpointDelta: Boolean,
-                      knownTouched: Option[Seq[Int]])
+  private def prepare(r0: KeyedState.DeltaRoute, knownTouched: Option[Seq[Int]])
       : (KeyedState.DeltaRoute, IndexedSeq[IndexedSeq[Int]], ZSetFrame) = {
     // a driver-resident delta's span is resolved — and a knownTouched
     // checked against its rows — before the step changes anything
@@ -481,18 +476,15 @@ final class KeyedState(val keys: Seq[String], val nBuckets: Int, init: ZSetFrame
     // ticked the clock for this step (see compact()'s scaladoc)
     if (compactEvery > 0 && gen % compactEvery == 0) compactInternal(None)
     // no pre-consolidation of the delta: the merged-segment consolidate
-    // below subsumes it; checkpoint only pins a cluster-resident delta so
-    // the touched-bucket scan and the merge don't recompute it (a
-    // driver-resident one has nothing to recompute). Callers whose delta is
-    // already materialized (or a trivial filter of materialized data) pass
-    // checkpointDelta=false to save the extra job.
-    val r = if (checkpointDelta && !r0.onDriver) {
-      val c = r0.frame.localCheckpoint()
-      // the internal delta checkpoint only needs to live through this
-      // merge; free it on the same deferred schedule as retired segments
-      retireQ.retire(new Segment(c.df.rdd, Map.empty))
-      new KeyedState.DeltaRoute(c, None)
-    } else r0
+    // below subsumes it. A delta the pin rule cannot prove stable (a file
+    // scan, a view, a rand() plan) is pinned LAZILY — no job of its own; the
+    // step's first read fills it — so the touched-bucket scan and the merge
+    // read the same rows without recomputing them. A stable delta (a
+    // driver-resident one included) is read as it is. The pin only needs to
+    // live through this merge; it is freed on the retired segments'
+    // deferred schedule.
+    val d = Pinned.stabilized(r0.frame, eager = false)(c => retireQ.retire(c.df.rdd))
+    val r = if (d eq r0.frame) r0 else new KeyedState.DeltaRoute(d, None)
     val touched = driverSpan.getOrElse(span(r, knownTouched))
     val groups = groupsOf(touched.distinct.sorted.toIndexedSeq)
     (r, groups, ZSetFrame.fromDelta(viewOf(groups)))
@@ -515,18 +507,22 @@ final class KeyedState(val keys: Seq[String], val nBuckets: Int, init: ZSetFrame
     * views may then carry weight-split duplicate rows, so readers that
     * need physical uniqueness consolidate on read (aggStep consolidates
     * AFTER `restrictTo`, paying O(restricted), and periodic `compact`
-    * collapses the spine). */
-  def merge(delta: ZSetFrame, checkpointDelta: Boolean = true,
-            knownTouched: Option[Seq[Int]] = None,
+    * collapses the spine).
+    *
+    * The engine decides the delta's pin (`Pinned.isStable`): a delta it
+    * cannot prove stable is pinned once, lazily, for this merge; a stable
+    * one — driver-resident, or a deterministic plan over pinned data — is
+    * read as it is. */
+  def merge(delta: ZSetFrame, knownTouched: Option[Seq[Int]] = None,
             append: Boolean = false): (ZSetFrame, ZSetFrame) =
-    mergeRouted(route(delta), checkpointDelta, knownTouched, append)
+    mergeRouted(route(delta), knownTouched, append)
 
   /** `merge` over an already resolved route (`Incremental.joinDeltaKeyed`
     * resolves each delta once and shares it with its probes). */
-  private[incremental] def mergeRouted(r0: KeyedState.DeltaRoute, checkpointDelta: Boolean,
+  private[incremental] def mergeRouted(r0: KeyedState.DeltaRoute,
                                        knownTouched: Option[Seq[Int]],
                                        append: Boolean): (ZSetFrame, ZSetFrame) = {
-    val (r, groups, oldTouched) = prepare(r0, checkpointDelta, knownTouched)
+    val (r, groups, oldTouched) = prepare(r0, knownTouched)
     val touched = groups.flatten
     if (append) {
       // spine append: route ONLY the delta into the bucket layout; old
@@ -602,13 +598,14 @@ final class KeyedState(val keys: Seq[String], val nBuckets: Int, init: ZSetFrame
     * local-mode lever, and job COUNT per step is what sets it): the new
     * touched content is ≡ (oldTouched + Δ) consolidated, so the output-
     * delta job does not need the new SEGMENT — it reads the same inputs
-    * (old views + pinned Δ) through its own consolidate. That makes the
+    * (old views + the aligned Δ) through its own consolidate. That makes the
     * segment-materialization job and the output job independent, and they
-    * run CONCURRENTLY on a throwaway thread (Spark schedules concurrent
-    * jobs fine; both read only pinned blocks). A step's wall clock is
-    * max(segment, output) instead of segment + output. */
-  def aggStep(delta: ZSetFrame, checkpointDelta: Boolean = true,
-              knownTouched: Option[Seq[Int]] = None,
+    * run CONCURRENTLY as step tasks (`StepTasks`; Spark schedules
+    * concurrent jobs fine; both read only pinned blocks). A step's wall
+    * clock is max(segment, output) instead of segment + output. The delta
+    * is pinned as in `merge`: only when the pin rule cannot prove it
+    * stable. */
+  def aggStep(delta: ZSetFrame, knownTouched: Option[Seq[Int]] = None,
               restrictTo: Option[Column] = None,
               append: Boolean = false)
              (agg: ZSetFrame => ZSetFrame): ZSetFrame = {
@@ -618,7 +615,7 @@ final class KeyedState(val keys: Seq[String], val nBuckets: Int, init: ZSetFrame
     // consolidation on actual spine depth (oldTouched is a view over the
     // pre-merge segment lists)
     val preSpined = anySpine
-    val (r, groups, oldTouched) = prepare(route(delta), checkpointDelta, knownTouched)
+    val (r, groups, oldTouched) = prepare(route(delta), knownTouched)
     val touched = groups.flatten
     // Δ BUCKET ALIGNMENT, once: with the delta in the state's own layout,
     // the new side is a single bucket-clustered scan (old spine ⊎ Δ
@@ -652,32 +649,17 @@ final class KeyedState(val keys: Seq[String], val nBuckets: Int, init: ZSetFrame
     } else {
       // keep a pinned aligned delta through this step's reads; the deferred
       // reclaim frees it once the replace segment supersedes it
-      if (!r.onDriver) retireQ.retire(miniSeg)
-      // replace consolidation on a side thread (fresh thread per step:
-      // Spark's job-local properties are inherited at thread creation,
-      // which a shared pool thread would not see), CONCURRENT with the
-      // output job — and itself shuffle-free: the spine view is already
-      // bucket-aligned, so consolidating it is scan + agg in place
-      // (materializeAligned), each bucket group staying in its task.
-      val segTask = new java.util.concurrent.FutureTask(() =>
-        materializeAligned(newView.df, groups))
-      val segThread = new Thread(segTask, "graft-segment-build")
-      segThread.setDaemon(true)
-      segThread.start()
-      try {
-        val out = (agg(n.consolidate) - agg(oc)).localCheckpoint(eager = true)
-        install(segTask.get(), touched)
-        out
-      } catch {
-        case e: Throwable =>
-          // still install the finished segment so the state is not
-          // corrupted by a failed output job (the merge itself succeeded);
-          // if the segment build ALSO failed, record it on the propagated
-          // exception — the merge was NOT installed (state stays pre-merge
-          // while gen advanced) and the caller must be able to see why
-          try install(segTask.get(), touched)
-          catch { case se: Throwable => e.addSuppressed(se) }
-          throw e
+      if (!r.onDriver) retireQ.retire(miniSeg.rdd)
+      // the replace consolidation builds AND installs the new segment on a
+      // side task, CONCURRENT with the output job — and is itself
+      // shuffle-free: the spine view is already bucket-aligned, so
+      // consolidating it is scan + agg in place (materializeAligned), each
+      // bucket group staying in its task. A failed output job therefore
+      // still leaves the merge installed; a failed build leaves the state
+      // pre-merge (with the generation advanced) and fails the step.
+      StepTasks.output("segment-build" -> (() =>
+          install(materializeAligned(newView.df, groups), touched))) {
+        (agg(n.consolidate) - agg(oc)).localCheckpoint(eager = true)
       }
     }
   }
@@ -710,7 +692,7 @@ object KeyedState {
     * cluster-resident plan from paying an extra optimizer pass. */
   private[incremental] def driverRows(df: DataFrame): Option[(Seq[Attribute], Seq[InternalRow])] = {
     val plan = df.queryExecution.analyzed
-    if (!plan.deterministic || plan.containsPattern(CURRENT_LIKE) ||
+    if (!Pinned.fixedRows(plan) ||
         !plan.collectLeaves().forall(_.isInstanceOf[LocalRelation])) None
     else df.queryExecution.optimizedPlan match {
       case lr: LocalRelation => Some((lr.output, lr.data))

@@ -3,7 +3,12 @@ package graft.incremental
 import org.apache.spark.SparkContext
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan, Range}
+import org.apache.spark.sql.catalyst.trees.TreePattern.CURRENT_LIKE
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.storage.StorageLevel
+
+import graft.core.ZSetFrame
 
 /** Pinned-block lifecycle helpers. Every stateful operator in this library
   * pins its trace (localCheckpoint / persist) so steps cost O(Δ); the flip
@@ -23,6 +28,40 @@ object Pinned {
     * any replay to <8 steps; BucketedUpsertStateLong's spine compaction and
     * the dedup steppers' slice consolidation ride the same cadence. */
   val TruncateEvery = 8
+
+  /** The DETERMINISM GUARD: `plan` re-evaluates to the same rows over the
+    * same inputs. Beyond Catalyst's `deterministic` (rand(), uuid(), a
+    * nondeterministic UDF), it turns away a plan that reads the clock:
+    * `current_timestamp()` counts as deterministic but is re-fixed on
+    * every optimization, so two plans over the same delta would see
+    * different values. */
+  private[incremental] def fixedRows(plan: LogicalPlan): Boolean =
+    plan.deterministic && !plan.containsPattern(CURRENT_LIKE)
+
+  /** THE PIN RULE. A delta is STABLE when every evaluation of it yields the
+    * same rows: its analyzed plan passes the determinism guard and every
+    * leaf is fixed data — a LocalRelation (`Seq.toDF`), a Range, or a
+    * LogicalRDD whose RDD is checkpointed or persisted (an eager or lazy
+    * `localCheckpoint`). Deterministic lineage over fixed inputs
+    * re-evaluates to the same rows (the D-Streams recovery argument), so a
+    * stable delta is never pinned; a file scan, a KeyedState view (its
+    * segments are reclaimed two merges on), a streaming micro-batch or a
+    * rand()/clock plan is not stable, and the step pins it exactly once. */
+  private[graft] def isStable(df: DataFrame): Boolean = {
+    val plan = df.queryExecution.analyzed
+    fixedRows(plan) && plan.collectLeaves().forall {
+      case _: LocalRelation | _: Range => true
+      case l: LogicalRDD => l.rdd.isCheckpointed || l.rdd.getStorageLevel != StorageLevel.NONE
+      case _ => false
+    }
+  }
+
+  /** `z` itself when it is stable, else `z` pinned (`localCheckpoint`,
+    * eager or lazy), with the pin handed to `own` — its owner releases it. */
+  private[graft] def stabilized(z: ZSetFrame, eager: Boolean)
+                               (own: ZSetFrame => Unit): ZSetFrame =
+    if (isStable(z.df)) z
+    else { val p = z.localCheckpoint(eager); own(p); p }
 
   /** Unpersist `rdd` and every persisted ancestor: a DataFrame's `.rdd` is
     * a row-conversion CHILD of the internally persisted checkpoint RDD, so

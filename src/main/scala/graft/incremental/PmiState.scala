@@ -127,16 +127,17 @@ final class PmiState(emptyTerms: ZSetFrame, val terms: Seq[String],
 
   private def tlits: Seq[Any] = terms.map(_.asInstanceOf[Any])
 
-  /** One step. PLAN-STABILITY CONTRACT (ADVICE r15): the caller's delta
-    * plan must be stable under re-evaluation (already materialized, or a
-    * deterministic filter of materialized data) — the step reads it in two
-    * independent jobs (the pairDelta checkpoint and the stat action), and
-    * a nondeterministic plan would land different rows in the driver
-    * constants than in the pair trace. Same contract as
-    * [[RollingLinearState.step]]'s checkpointDelta=false mode; every
-    * in-repo caller passes checkpointed/deterministic deltas, and the
-    * alternative — an extra eager pin per step — would tax the quiet-step
-    * barrier floor this state exists to minimize (the pmi_growth gate).
+  /** One step. DELTA PIN (ADVICE r15): the step reads the delta in
+    * several scans (the pairDelta derivation and the stat action's doc and
+    * term groups), and a plan that re-evaluates to different rows would
+    * land different rows in the driver constants than in the pair trace.
+    * The engine pins exactly the deltas the pin rule
+    * (`Pinned.isStable`) cannot prove stable, lazily — the stat action
+    * fills the pin, so no barrier is added to the quiet-step floor this
+    * state exists to minimize (the pmi_growth gate); a stable delta
+    * (materialized, or a deterministic plan over pinned data) is read as
+    * it is, while a view-derived or streaming micro-batch delta is pinned
+    * and released with the step's other pins.
     *
     * `delta` holds consolidated (doc_id, term) rows with ±1
     * weights — one row per DISTINCT term of the doc (presence, not tf),
@@ -156,7 +157,9 @@ final class PmiState(emptyTerms: ZSetFrame, val terms: Seq[String],
     //    materialization). The join keys on (doc_id, w): a CDC update delta
     //    carries a doc at BOTH polarities, and the old set's pairs (−1) must
     //    not cross with the new set's (+1).
-    val ut = delta.df.where(col("term").isin(tlits: _*))
+    var deltaPin = Seq.empty[DataFrame]
+    val d = Pinned.stabilized(delta, eager = false)(p => deltaPin = Seq(p.df)).df
+    val ut = d.where(col("term").isin(tlits: _*))
     val right = ut.select(col("doc_id"), col(W), col("term").as("tb2"))
     val pairDelta = ut.join(right, Seq("doc_id", W))
       .where(col("term") < col("tb2"))
@@ -172,7 +175,7 @@ final class PmiState(emptyTerms: ZSetFrame, val terms: Seq[String],
     //    must be ±1 — pair derivation and the N/c_a/c_ab doc-frequency
     //    semantics are presence-based, so a |w|>1 row would silently
     //    corrupt every constant; it fails loudly here, riding the action.
-    val docAgg = delta.df.select(col("doc_id"), col(W)).distinct()
+    val docAgg = d.select(col("doc_id"), col(W)).distinct()
       .agg(coalesce(sum(col(W)), lit(0L)).as("a"),
         coalesce(max(abs(col(W))), lit(1L)).as("viol"))
       .select(lit(null).cast("string").as("ta"),
@@ -221,7 +224,7 @@ final class PmiState(emptyTerms: ZSetFrame, val terms: Seq[String],
       else pairIdx.view(0 until nBuckets).consolidate.df
         .join(broadcast(crossed.toDF("ta", "tb")), Seq("ta", "tb"))
         .select("doc_id")
-    Frame(screened, pairDelta.select("doc_id"), Seq(pairDelta)) { (affected, affB) =>
+    Frame(screened, pairDelta.select("doc_id"), pairDelta +: deltaPin) { (affected, affB) =>
       // 5. rescore the affected docs over (pre-merge view ⊕ pinned
       //    pairDelta): the per-pair pmi_q values under the NEW constants
       //    are computed driver-side (≤C(|U|,2) of them) and broadcast — the

@@ -13,9 +13,9 @@ import scala.collection.mutable
   * merge that retired them until no reader can hold them).
   *
   * One instance per stateful owner; `T` is whatever handle the owner pins
-  * (DataFrame, RDD, segment). NOT thread-safe by itself — owners already
-  * serialize their step calls; side threads only read previously installed
-  * resources, never this queue. */
+  * (a DataFrame, an RDD). NOT thread-safe by itself — owners already
+  * serialize their step calls, and within a step only the one step task
+  * that installs the merge (`StepTasks`) touches this queue. */
 final class RetireQueue[T](release: T => Unit) {
   private val retired = mutable.Buffer[(Long, T)]()
   private var gen = 0L

@@ -24,7 +24,7 @@ import graft.core.ZSetFrame
   * The step computes the output delta DIRECTLY (no old-vs-new window
   * recompute): over the affected span [lo, hi + horizon],
   *   F_new(k, t)  — assembled from partials + edge rows (post-merge logic
-  *                  built lazily from pre-merge views + the pinned Δ);
+  *                  built lazily from pre-merge views + the stable Δ);
   *   F_old(k, t)  =  F_new(k, t) − D(k, t), D = the delta's own
   *                   contribution to the frame (a join against tiny Δ);
   *   emitted      =  rows_new·F_new − rows_old·F_old, rows_old =
@@ -35,9 +35,10 @@ import graft.core.ZSetFrame
   * truncation-cancellation is even needed.
   *
   * JOB SHAPE (the per-step action floor, VERDICT r9 #4): the two state
-  * merges (spine append segment, partials segment) run on side threads
-  * CONCURRENTLY with the output-assembly action; with `checkpointDelta =
-  * false` a step pays ONE sequential Spark action. All bucket ids are
+  * merges (spine append segment, partials segment) run as a side task
+  * CONCURRENTLY with the output-assembly action; a step whose delta the
+  * pin rule proves stable (`Pinned.isStable`) pays ONE sequential Spark
+  * action, any other delta one eager pin first. All bucket ids are
   * computed driver-side from caller-supplied CDC metadata (the keys and
   * time span that DEFINE the batch) — no discovery job.
   *
@@ -157,7 +158,7 @@ final class RollingLinearState(init: ZSetFrame, keyCol: String, tsCol: String,
   }
 
   // ---- driver-side adaptive-strategy statistics (exact, maintained on the
-  // merge thread from the partials merge's own pruned views — zero jobs on
+  // merge task from the partials merge's own pruned views — zero jobs on
   // the step's critical path, zero driver-side key sets). rowsNet is the
   // partials state's Σ p_cnt (= spine row count net of retractions);
   // cellsOccupied its row count (= occupied (key, chunk) cells). The
@@ -209,26 +210,23 @@ final class RollingLinearState(init: ZSetFrame, keyCol: String, tsCol: String,
     * output-producing load of the same data. */
   def ingest(delta: ZSetFrame, lo: Long, hi: Long,
              touchedKeys: Option[Seq[Long]]): Unit = {
-    val (d, dBuckets) = admit(delta, lo, hi, touchedKeys, checkpointDelta = true)
+    val (d, dBuckets) = admit(delta, lo, hi, touchedKeys)
     chunkLoSeen = math.min(chunkLoSeen, floorDiv(lo, chunkLen))
     chunkHiSeen = math.max(chunkHiSeen, floorDiv(hi, chunkLen))
     mergeDelta(d, dBuckets, withStats = true)
   }
 
-  /** A step's delta, chunk-aligned (and pinned under `checkpointDelta`),
-    * with the buckets it touches. */
+  /** A step's delta, chunk-aligned and — unless the pin rule proves it
+    * stable — eagerly pinned, with the buckets it touches: the spine merge,
+    * the partials merge and the output assembly all read it, the merges
+    * concurrently with the assembly, so every reader must see the same
+    * rows. */
   private def admit(delta: ZSetFrame, lo: Long, hi: Long,
-                    touchedKeys: Option[Seq[Long]],
-                    checkpointDelta: Boolean): (ZSetFrame, Seq[Int]) = {
+                    touchedKeys: Option[Seq[Long]]): (ZSetFrame, Seq[Int]) = {
     retireQ.advance()
     val aligned = withChunk(ZSetFrame.fromDelta(
       delta.df.select((dataCols :+ ZSetFrame.W).map(col): _*)))
-    val d =
-      if (checkpointDelta) {
-        val c = aligned.localCheckpoint(eager = true)
-        retireQ.retire(c.df)
-        c
-      } else aligned
+    val d = Pinned.stabilized(aligned, eager = true)(c => retireQ.retire(c.df))
     val dBuckets = touchedKeys.fold[Seq[Int]](0 until nBuckets)(ks =>
       bucketsFor(ks, floorDiv(lo, chunkLen), floorDiv(hi, chunkLen)))
     (d, dBuckets)
@@ -269,8 +267,7 @@ final class RollingLinearState(init: ZSetFrame, keyCol: String, tsCol: String,
     val pDelta = ZSetFrame.fromDelta(
       newRows.where(col("p_cnt") =!= 0L || col("p_vsum") =!= 0L)
         .unionByName(retractRows))
-    val (oldT, newT) = partials.merge(pDelta, checkpointDelta = true,
-      Some(dBuckets))
+    val (oldT, newT) = partials.merge(pDelta, Some(dBuckets))
     if (withStats) {
       def stats(df: org.apache.spark.sql.DataFrame): (Long, Long) = {
         val r = df.agg(coalesce(sum(col("p_cnt")), lit(0L)),
@@ -282,7 +279,7 @@ final class RollingLinearState(init: ZSetFrame, keyCol: String, tsCol: String,
       rowsNet += nSum - oSum
       cellsOccupied += nCnt - oCnt
     }
-    spine.merge(d, checkpointDelta = false, Some(dBuckets), append = true)
+    spine.merge(d, Some(dBuckets), append = true)
   }
 
   /** One step: apply `delta` (cols = init's data cols + weight; event times
@@ -308,19 +305,18 @@ final class RollingLinearState(init: ZSetFrame, keyCol: String, tsCol: String,
     * exist for measurement harnesses (step_bench tracks) and specs.
     * State maintenance (spine append + partials replace) is identical
     * under every strategy. */
-  /** `checkpointDelta = false` CONTRACT: the caller's delta plan must be
-    * stable under re-evaluation (already materialized, or a deterministic
-    * filter of materialized data). The merge thread and the output job
-    * evaluate the un-pinned plan CONCURRENTLY — a nondeterministic delta
-    * (rand(), a table being written) would silently diverge spine,
-    * partials, and emitted output from each other. Same contract as
-    * KeyedState, sharpened here because the evaluations race. */
+  /** DELTA PINS: the merge task and the output job evaluate the delta
+    * CONCURRENTLY, so a plan that re-evaluates to different rows (rand(), a
+    * table being written) would silently diverge spine, partials and
+    * emitted output from each other. The engine pins exactly the deltas
+    * the pin rule (`Pinned.isStable`) cannot prove stable; a delta that is
+    * already materialized, or a deterministic plan over pinned data, is
+    * read as it is. */
   def step(delta: ZSetFrame, lo: Long, hi: Long,
            touchedKeys: Option[Seq[Long]],
-           checkpointDelta: Boolean = true,
            strategy: RollingLinearState.Strategy = RollingLinearState.Auto): ZSetFrame = {
     val C = chunkLen
-    val (d, dBuckets) = admit(delta, lo, hi, touchedKeys, checkpointDelta)
+    val (d, dBuckets) = admit(delta, lo, hi, touchedKeys)
     val all: Seq[Int] = 0 until nBuckets
 
     // strategy decision BEFORE this step's stats update (the stats describe
@@ -343,26 +339,22 @@ final class RollingLinearState(init: ZSetFrame, keyCol: String, tsCol: String,
       bucketsFor(ks, floorDiv(readLo, C), floorDiv(readHi, C)))
     val kSet = touchedKeys.fold(lit(true))(ks => col(keyCol).isin(ks: _*))
     val inRead = kSet && col(tsCol).between(readLo, readHi)
-    // PRE-merge views, captured before the merge thread starts (the merge
+    // PRE-merge views, captured before the merge task starts (the merge
     // installs new segments; these views stay valid through it — the
     // KeyedState lifecycle contract — but a view taken AFTER the merge
     // would already include the delta and double-count)
     val sOldView = spine.view(readBuckets).where(inRead)
     val pOldView = partials.view(readBuckets).df.where(kSet)
 
-    // ---- both state merges on side threads, concurrent with assembly
-    // (fresh threads so Spark job-local properties are inherited)
-    // (the stats ride the merge thread, off the critical path; forced-
-    // strategy callers — measurement harnesses — skip them)
-    val mergeTask = new java.util.concurrent.FutureTask[Unit](() =>
-      mergeDelta(d, dBuckets, withStats = strategy == RollingLinearState.Auto))
-    val mergeThread = new Thread(mergeTask, "graft-rolling-merge")
-    mergeThread.setDaemon(true)
-    mergeThread.start()
-
-    try {
+    // ---- both state merges as a side task, concurrent with assembly
+    // (the stats ride the merge task, off the critical path; forced-
+    // strategy callers — measurement harnesses — skip them). The state is
+    // never left half-stepped: the merges are awaited even when the
+    // assembly fails.
+    StepTasks.output("rolling-merge" -> (() =>
+        mergeDelta(d, dBuckets, withStats = strategy == RollingLinearState.Auto))) {
       // Both output paths below are built LAZILY from pre-merge views + the
-      // pinned Δ and exploit WEIGHT LINEARITY end-to-end: no intermediate
+      // stable Δ and exploit WEIGHT LINEARITY end-to-end: no intermediate
       // consolidation anywhere — weight-split spine duplicates and the
       // partials' −old/+new delta rows sum out inside the final aggregates,
       // so the only shuffles are the ones the plan semantically needs.
@@ -432,7 +424,7 @@ final class RollingLinearState(init: ZSetFrame, keyCol: String, tsCol: String,
           // only ever SUMS contributions, so the delta needs no
           // pre-aggregation and no join against the old partials here
           // (pDelta's −old/+new form exists solely for the state merge on
-          // the side thread). This keeps the whole partials-lookup branch
+          // the side task). This keeps the whole partials-lookup branch
           // exchange-free: two pruned scans under one equi-join.
           val P = pOldView.select(col(keyCol), col(CH),
               (col("p_cnt") * col(ZSetFrame.W)).as("__pc"),
@@ -518,14 +510,7 @@ final class RollingLinearState(init: ZSetFrame, keyCol: String, tsCol: String,
       // where physical uniqueness matters (q85 does, the spec oracle does),
       // and dropping the per-step consolidate removes a whole exchange +
       // stage barrier from every step's critical path
-      val out = ZSetFrame.fromDelta(out0).localCheckpoint(eager = true)
-      mergeTask.get() // surface merge failures before handing out the delta
-      out
-    } catch {
-      case e: Throwable =>
-        // let the merges finish: the state must not be left half-stepped
-        try mergeTask.get() catch { case _: Throwable => () }
-        throw e
+      ZSetFrame.fromDelta(out0).localCheckpoint(eager = true)
     }
   }
 }

@@ -102,22 +102,21 @@ private[incremental] abstract class ScreenedState(buckets: Int,
     prevStepPins ++= r.pins
     var emitted: (DataFrame, Seq[Int]) = null
     var settle: () => Unit = () => ()
-    inParallel(("emission", () => {
+    StepTasks.run(("emission", () => {
       emitted = spanned((ZSetFrame.fromTable(r.newRows)
         - ZSetFrame.fromTable(r.oldRows)).consolidate.df)
-    }) +: r.alongside.map(t => ("alongside", () => { settle = t() })).toSeq)
+    }) +: r.alongside.map(t => ("alongside", () => { settle = t() })).toSeq: _*)
     settle()
     val out = ZSetFrame.fromDelta(emitted._1)
     val outB = emitted._2
     durIdx.foreach(_.intend(stepGen + 1))
     val merges = r.merges :+ Merge("answer", answer, out, Some(outB))
-    inParallel(merges.map(m => (s"${m.name}-merge", () => {
-      m.into.merge(m.delta, checkpointDelta = false, knownTouched = m.touched,
-        append = true); ()
+    StepTasks.run(merges.map(m => (s"${m.name}-merge", () => {
+      m.into.merge(m.delta, knownTouched = m.touched, append = true); ()
     })) ++ durIdx.map { dm =>
       val m = merges.find(_.mirrored).get
       ("durable-merge", () => dm.merge(m.delta, knownTouched = m.touched))
-    })
+    }: _*)
     stepGen += 1
     durIdx.foreach(_.commit(stepGen, consts))
     out
@@ -192,36 +191,4 @@ private[incremental] object ScreenedState {
     load(st, snapshot)
     st
   }
-
-  /** Run independent per-step tasks CONCURRENTLY: each task is one
-    * driver-synchronous Spark action over already-pinned inputs, so the
-    * step pays max(tasks) instead of Σ(tasks) of the per-action barrier
-    * floor. Threads are fresh per call (Spark's job-local properties are
-    * inherited at thread creation; a shared pool thread would not see
-    * them). On failure every task is still barriered before propagating —
-    * a caller's finally-close() must never race a daemon merge — and all
-    * failures surface (first thrown, rest suppressed). */
-  private def inParallel(tasks: Seq[(String, () => Unit)]): Unit =
-    if (tasks.size == 1) tasks.head._2()
-    else {
-      val futs = tasks.map { case (n, f) =>
-        val t = new java.util.concurrent.FutureTask[Unit](() => f())
-        val th = new Thread(t, s"graft-par-$n")
-        th.setDaemon(true)
-        th.start()
-        t
-      }
-      var err: Throwable = null
-      futs.foreach { t =>
-        try t.get()
-        catch {
-          case e: java.util.concurrent.ExecutionException =>
-            val c = if (e.getCause != null) e.getCause else e
-            if (err == null) err = c else err.addSuppressed(c)
-          case e: Throwable =>
-            if (err == null) err = e else err.addSuppressed(e)
-        }
-      }
-      if (err != null) throw err
-    }
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.core.ZSetFrame
-import graft.incremental.{Incremental, KeyedState}
+import graft.incremental.{Incremental, KeyedState, Pinned}
 
 /** Incremental triangle counting as a CASCADE of two bilinear incremental
   * joins over key-partitioned traces — the circuit composition the
@@ -52,32 +52,35 @@ final class TriangleCountState(spark: SparkSession, nBuckets: Int = 32) {
     * triangle delta (u,v,w, weight) — eagerly materialized, sum of weights
     * = ΔT. Accumulated over steps, the weights telescope to the count.
     *
-    * PLAN-STABILITY CONTRACT (code-review r16, the PmiState discipline):
-    * the caller's dE plan must be stable under re-evaluation (already
-    * materialized, or a deterministic filter of materialized data) — the
-    * step reads it in several independent jobs (trace merges, both
-    * bilinear join terms, the wedge maintenance), and a nondeterministic
-    * plan would silently diverge the traces from the emitted deltas.
-    * Every in-repo caller passes checkpointed/deterministic deltas; the
-    * alternative — an extra eager pin per step — would tax the gated
-    * tri-track barrier floor. */
-  def advance(dE: ZSetFrame): ZSetFrame = {
-    // J1: wedge delta through the u-keyed self-join. merge() returns the
-    // old/new content of exactly the delta's buckets — both probe views.
-    val touched = edgeU.touchedBuckets(dE)
-    val (eOldT, eNewT) = edgeU.merge(dE, checkpointDelta = false,
-      knownTouched = Some(touched))
-    def roleB(z: ZSetFrame) = ZSetFrame.fromDelta(
-      z.df.select(col("u"), col("v").as("w"), col(W)))
-    val dW = (dE.join(roleB(eOldT), Seq("u")) + eNewT.join(roleB(dE), Seq("u")))
-      .where(col("w") > col("v"))
-      .localCheckpoint(eager = true)
-    // J2: close wedges against the (v,w)-keyed edge trace; both deltas
-    // enter their traces, probes are partition-pruned by each delta's keys
-    val dEvw = ZSetFrame.fromDelta(
-      dE.df.select(col("u").as("v"), col("v").as("w"), col(W)))
-    Incremental.joinDeltaKeyed(wedges, dW, edgeVW, dEvw, Seq("v", "w"),
-      checkpointDeltas = false)
+    * DELTA PIN (code-review r16): the step reads dE in several
+    * independent jobs (trace merges, both bilinear join terms, the wedge
+    * maintenance), so a plan that re-evaluates to different rows would
+    * silently diverge the traces from the emitted deltas. The engine pins
+    * exactly the deltas the pin rule (`Pinned.isStable`) cannot prove
+    * stable, lazily — the touched-bucket job fills the pin, so no barrier
+    * is added to the gated tri-track floor; a stable delta (every in-repo
+    * caller's) is read as it is. The step's pins (that one and the wedge
+    * delta) are released once the triangle delta is materialized. */
+  def advance(delta: ZSetFrame): ZSetFrame = {
+    val pins = scala.collection.mutable.Buffer.empty[ZSetFrame]
+    val dE = Pinned.stabilized(delta, eager = false)(pins += _)
+    try {
+      // J1: wedge delta through the u-keyed self-join. merge() returns the
+      // old/new content of exactly the delta's buckets — both probe views.
+      val touched = edgeU.touchedBuckets(dE)
+      val (eOldT, eNewT) = edgeU.merge(dE, knownTouched = Some(touched))
+      def roleB(z: ZSetFrame) = ZSetFrame.fromDelta(
+        z.df.select(col("u"), col("v").as("w"), col(W)))
+      val dW = (dE.join(roleB(eOldT), Seq("u")) + eNewT.join(roleB(dE), Seq("u")))
+        .where(col("w") > col("v"))
+        .localCheckpoint(eager = true)
+      pins += dW
+      // J2: close wedges against the (v,w)-keyed edge trace; both deltas
+      // enter their traces, probes are partition-pruned by each delta's keys
+      val dEvw = ZSetFrame.fromDelta(
+        dE.df.select(col("u").as("v"), col("v").as("w"), col(W)))
+      Incremental.joinDeltaKeyed(wedges, dW, edgeVW, dEvw, Seq("v", "w"))
+    } finally pins.foreach(p => Pinned.release(p.df))
   }
 
   /** Release all three traces' pinned storage (state unusable afterwards;

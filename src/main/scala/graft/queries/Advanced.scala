@@ -313,10 +313,8 @@ object Advanced extends QueryModule {
       val allB = Some(0 until aSt.nBuckets: Seq[Int]) // derived from the
       // state so a future bucket-count change can't silently shrink the span
       val outDeltas = das.zip(dbs).map { case (dA, dB) =>
-        val dD = bSt.aggStep(dB, checkpointDelta = false,
-          knownTouched = allB)(_.distinctZ)
+        val dD = bSt.aggStep(dB, knownTouched = allB)(_.distinctZ)
         val dSemi = Incremental.joinDeltaKeyed(aSt, dA, dSt, dD, keys,
-          checkpointDeltas = false,
           knownTouchedA = allB, knownTouchedB = allB)
         dA - dSemi
       }
@@ -376,7 +374,7 @@ object Advanced extends QueryModule {
         Incremental.emptyLike(ds.head._1))
       val allB = Some(0 until in.nBuckets: Seq[Int])
       val outDeltas = ds.map { case (d, lo, hi) =>
-        in.aggStep(d, checkpointDelta = false, knownTouched = allB,
+        in.aggStep(d, knownTouched = allB,
           restrictTo = Some(col("ts_ms").between(lo - horizon, hi + horizon)),
           append = true)(aggFn)
       }
@@ -802,10 +800,9 @@ object Advanced extends QueryModule {
       // O(touched buckets), and the deltas aren't checkpointed because the
       // step inputs are trivial filters over the pinned scan
       val outDeltas =
-        in.aggStep(ZSetFrame.fromTable(li), checkpointDelta = false)(aggFn) +:
+        in.aggStep(ZSetFrame.fromTable(li))(aggFn) +:
           deltas.zip(stepKeys).map { case (d, k) =>
-            in.aggStep(d, checkpointDelta = false,
-              knownTouched = Some(keyBucket(k)))(aggFn)
+            in.aggStep(d, knownTouched = Some(keyBucket(k)))(aggFn)
           }
       ZSetFrame.sumAll(outDeltas).consolidate
         .toDF.select("l_partkey", "max_price", "n_items", "min_qty")
@@ -872,7 +869,6 @@ object Advanced extends QueryModule {
       val outDeltas = waves.map { case (dA, dB) =>
         // deltas are filters over the pinned scans — no per-wave checkpoint
         Incremental.joinDeltaKeyed(aSt, dA, bSt, dB, keys,
-          checkpointDeltas = false,
           knownTouchedA = allBuckets, knownTouchedB = allBuckets)
       }
       ZSetFrame.sumAll(outDeltas).consolidate

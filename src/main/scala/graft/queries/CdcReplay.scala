@@ -209,8 +209,7 @@ private[graft] object CdcReplay {
       when(epochs.retracted, lit(1L)).otherwise(lit(0L))).cast("long").as("__sl")
     private val slicer = new KeyedState(Seq("__sl"), nB,
       ZSetFrame.fromTable(src.where(lit(false)).select(col("*"), slCol)))
-    slicer.merge(ZSetFrame.fromTable(src.select(col("*"), slCol)),
-      checkpointDelta = false)
+    slicer.merge(ZSetFrame.fromTable(src.select(col("*"), slCol)))
     /** The replace merge weight-merges exact-duplicate source rows into one
       * row of weight w, so the read re-expands each row w times. */
     private def read(slices: Seq[Long], pred: Column): DataFrame =

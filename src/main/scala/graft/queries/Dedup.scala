@@ -468,7 +468,6 @@ object Dedup extends QueryModule {
       for (i <- 0 until K)
         dup.update(st.aggStep(ZSetFrame.fromDelta(
             gramRows(base.where(pmod(col("doc_id"), lit(K)) === i))),
-          checkpointDelta = false,
           knownTouched = Some(batchBuckets.getOrElse(i, Nil)))(aggFn))
       st.close()
       val counts = dup.acc.consolidate.df

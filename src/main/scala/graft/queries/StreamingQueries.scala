@@ -811,7 +811,7 @@ object StreamingQueries extends QueryModule {
           val span = ev.agg(min("ts_ms"), max("ts_ms")).head()
           val (lo, hi) = (span.getLong(0), span.getLong(1))
           acc.update(st.step(ZSetFrame.fromTable(ev), lo, hi,
-            touchedKeys = None, checkpointDelta = false))
+            touchedKeys = None))
           st.gcBefore(hi) // watermark = max event time (slices ascend)
           graft.incremental.Pinned.release(ev)
         } {

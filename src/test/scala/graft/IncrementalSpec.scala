@@ -123,8 +123,7 @@ class IncrementalSpec extends SparkSpec {
     steps.foreach { rs =>
       val d = z(rs)
       val span = rs.map(_._2)
-      acc.update(st.step(d, span.min, span.max,
-        touchedKeys = None, checkpointDelta = true))
+      acc.update(st.step(d, span.min, span.max, touchedKeys = None))
     }
     st.close()
     // batch mirror: per surviving row, count/sum over [ts - horizon, ts]

@@ -582,6 +582,64 @@ class KeyedStateSpec extends SparkSpec {
     aSt.close(); bSt.close()
   }
 
+  test("the pin rule: a delta is stable exactly when its plan is fixed data under a deterministic, clock-free plan") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-pin-rule").toString
+    spark.range(6).select(col("id").as("k"), (col("id") % 3).as("v"))
+      .write.mode("overwrite").parquet(dir)
+    val scan = spark.read.parquet(dir)
+    val local = Seq((1L, 2L), (3L, 4L)).toDF("k", "v")
+    val range = spark.range(4).select(col("id").as("k"), (col("id") * 2).as("v"))
+    val eager = scan.localCheckpoint(true)
+    val lazyPin = scan.localCheckpoint(false)
+    val st = new KeyedState(Seq("k"), 4, ZSetFrame.fromTable(local))
+    val noise = udf(() => scala.util.Random.nextInt(10).toLong).asNondeterministic()
+    try {
+      val stable = Seq(
+        "Seq.toDF" -> local, "range" -> range, "eager localCheckpoint" -> eager,
+        "lazy localCheckpoint" -> lazyPin,
+        "select" -> eager.select((col("k") + 1).as("k"), col("v")),
+        "where" -> lazyPin.where(col("v") > 0), "join" -> local.join(eager, "k"),
+        "union" -> range.union(lazyPin).union(local))
+      val unstable = Seq(
+        "parquet scan" -> scan, "KeyedState view" -> st.snapshot.df,
+        "rand()" -> local.select(col("k"), (rand() * 10).cast("long").as("v")),
+        "nondeterministic UDF" -> range.select(col("k"), noise().as("v")),
+        "current_timestamp()" -> local.select(col("k"), unix_micros(current_timestamp()).as("v")),
+        "pinned ⋈ scan" -> eager.join(scan, "k"))
+      stable.foreach { case (n, df) => assert(Pinned.isStable(df), s"$n must be stable") }
+      unstable.foreach { case (n, df) => assert(!Pinned.isStable(df), s"$n must not be stable") }
+    } finally {
+      st.close(); Pinned.release(eager); Pinned.release(lazyPin)
+    }
+  }
+
+  test("a failed joinDeltaKeyed step throws its cause unwrapped and leaves no pin behind") {
+    // with requireAllClusterKeysForDistribution the shuffle route refuses to
+    // build a segment, so the merge task fails while the output job succeeds:
+    // the step must throw the merge's own exception, and release the output
+    // it already pinned (the states' segments are unchanged — neither merge
+    // installed anything)
+    val n = 8
+    val aSt = new KeyedState(Seq("k"), n, zf((0L until 16L).map(k => (k, k, 1L))))
+    val bSt = new KeyedState(Seq("k"), n, zf((0L until 16L).map(k => (k, k % 3, 1L)), "attr"))
+    val dA = zf((0L until 16L).map(k => (k, k + 100, 1L))).localCheckpoint(eager = true)
+    val dB = zf((0L until 16L).map(k => (k, 7L, 1L)), "attr").localCheckpoint(eager = true)
+    val sc = spark.sparkContext
+    val conf = "spark.sql.requireAllClusterKeysForDistribution"
+    val before = sc.getPersistentRDDs.keySet
+    spark.conf.set(conf, "true")
+    try {
+      val e = intercept[IllegalArgumentException](Incremental.joinDeltaKeyed(aSt, dA, bSt, dB,
+        Seq("k"), knownTouchedA = Some(0 until n), knownTouchedB = Some(0 until n)))
+      assert(e.getMessage.contains("requireAllClusterKeysForDistribution"), e.getMessage)
+      assert(sc.getPersistentRDDs.keySet -- before == Set.empty,
+        "the failed step left pinned RDDs behind")
+    } finally {
+      spark.conf.unset(conf)
+      aSt.close(); bSt.close(); Pinned.release(dA.df); Pinned.release(dB.df)
+    }
+  }
+
   test("a packed partition's skipped chunks are never iterated") {
     // BucketUnionRDD picks chunks by slot: the rows of a chunk it does not
     // select are never touched — here any touch of them throws

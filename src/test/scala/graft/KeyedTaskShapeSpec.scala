@@ -22,15 +22,16 @@ class KeyedTaskShapeSpec extends SparkSpec {
   /** Per-step ceilings (jobs, tasks), measured on local[4] (G = 4) with the
     * packed layout. Before it, the same steps ran one task per touched
     * bucket in every view-reading stage. The driver-route steps ran
-    * (4, 20) and (9, 44) on the shuffle route, the bounds their cluster
-    * twins keep. */
+    * (4, 20) and (9, 44) on the shuffle route; the cluster join now runs
+    * (7, 36), since its already-pinned deltas are stable and are not
+    * pinned again. */
   private val bounds: Map[String, (Int, Int)] = Map(
     "aggStep" -> (2, 12),
     "aggStep cluster" -> (4, 20),
     "merge" -> (2, 8),
     "merge append" -> (2, 8),
     "joinDeltaKeyed" -> (5, 28),
-    "joinDeltaKeyed cluster" -> (9, 44))
+    "joinDeltaKeyed cluster" -> (7, 36))
 
   test("a keyed step reads each view in ≤ G tasks; per-step jobs and tasks stay bounded") {
     val rnd = new scala.util.Random(2100)
@@ -66,9 +67,9 @@ class KeyedTaskShapeSpec extends SparkSpec {
       val dims = new KeyedState(Seq("k"), N, seedDim)
       val factsC = new KeyedState(Seq("k"), N, seed)
       val dimsC = new KeyedState(Seq("k"), N, seedDim)
-      // merge deltas are pinned outside the measured step, as
-      // joinDeltaKeyed pins its own before merging with checkpointDelta = false;
-      // the cluster cases' deltas are pinned outside it too
+      // merge deltas are pinned outside the measured step, so they are
+      // stable and the step pins nothing; the cluster cases' deltas are
+      // pinned outside it too, and joinDeltaKeyed does not re-pin them
       val pins = Seq.fill(4)(dFact().localCheckpoint(eager = true)) :+ dDim.localCheckpoint(eager = true)
       val Seq(d1, d2, dAgg, dJoin, dDimC) = pins
       try Seq(
@@ -77,9 +78,9 @@ class KeyedTaskShapeSpec extends SparkSpec {
         "aggStep cluster" -> StepShape.measure(spark)(
           aggC.aggStep(dAgg, knownTouched = known)(maxAgg))._2,
         "merge" -> StepShape.measure(spark)(
-          replaced.merge(d1, checkpointDelta = false, knownTouched = known))._2,
+          replaced.merge(d1, knownTouched = known))._2,
         "merge append" -> StepShape.measure(spark)(
-          appended.merge(d2, checkpointDelta = false, knownTouched = known, append = true))._2,
+          appended.merge(d2, knownTouched = known, append = true))._2,
         "joinDeltaKeyed" -> StepShape.measure(spark)(
           Incremental.joinDeltaKeyed(facts, dFact(), dims, dDim, Seq("k"),
             knownTouchedA = known, knownTouchedB = known))._2,

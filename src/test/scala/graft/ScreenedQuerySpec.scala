@@ -24,7 +24,9 @@ class ScreenedQuerySpec extends SparkSpec {
     * or after the suites that precede this one in a full run. AQE timing
     * can split a stage job in two between runs of the same code (those
     * runs spread by up to 4 jobs per query), so each query runs twice and
-    * is charged its smaller count. */
+    * is charged its smaller count. q91's ceiling is its measured 116 plus
+    * that spread: since its PMI state pins each micro-batch delta, which
+    * the step reads in several scans, it runs ~10 fewer jobs. */
   private val maxJobs: Map[String, Int] = Map(
     "t12_inc_tfidf" -> 131,
     "t13_inc_bm25" -> 225,
@@ -34,7 +36,7 @@ class ScreenedQuerySpec extends SparkSpec {
     "q88_stream_inc_tfidf" -> 203,
     "q89_stream_inc_bm25" -> 220,
     "q90_stream_multi_bm25" -> 220,
-    "q91_stream_inc_pmi" -> 134,
+    "q91_stream_inc_pmi" -> 120,
     "q92_durable_bm25" -> 179,
     "q93_stream_inc_cosine" -> 148,
     "q94_durable_tfidf" -> 167)

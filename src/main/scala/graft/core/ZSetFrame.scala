@@ -218,7 +218,10 @@ object ZSetFrame {
   /** Wrap a DataFrame that already carries a `__weight` column (a delta). */
   def fromDelta(df: DataFrame): ZSetFrame = {
     require(df.columns.contains(W), s"delta must carry a $W column")
-    new ZSetFrame(df.withColumn(W, col(W).cast("long")))
+    // a weight that is already a long is taken as it is: no identity cast
+    // layered on every step's views and routed deltas
+    if (df.schema(W).dataType == org.apache.spark.sql.types.LongType) new ZSetFrame(df)
+    else new ZSetFrame(df.withColumn(W, col(W).cast("long")))
   }
 
   /** N-ary plus. reference: operator/sum.rs:25 */

@@ -58,59 +58,78 @@ object Incremental {
   /** Incremental bilinear join over KEY-PARTITIONED traces: each delta is
     * joined against a PROBE of the other side's trace (only the buckets the
     * delta's keys hash into are read), so a step costs O(|Δ| + touched
-    * buckets) — the reference's sharded-trace join lookup
-    * (operator/join.rs:180). Merges ΔB into `bSt` and ΔA into `aSt`. */
+    * buckets). Merges ΔA into `aSt` and ΔB into `bSt`.
+    *
+    * CO-PARTITIONED: each delta is routed ONCE into its trace's packed
+    * bucket layout (`KeyedState.align`, the mini-segment aggStep builds
+    * too), and both terms join inside that layout — the reference's
+    * sharded join, where a delta meets the other trace in the shard both
+    * were routed to (operator/join.rs:180, communication/shard.rs):
+    *   ΔA ⋈ B_old — ΔA's mini-segment against B's view over ΔA's groups;
+    *   A_new ⋈ ΔB — A's pre-merge view over ΔB's groups with ΔA read as its
+    *                extra spine batch, against ΔB's mini-segment.
+    * The two traces share key columns, key types and bucket count, so both
+    * sides of a term have one layout and Catalyst plans each as a
+    * shuffled-hash join with NO exchange (BucketClusteredPartitioning's
+    * layout compatibility; the delta side is the hash build side). A step
+    * runs the output job and the two merges CONCURRENTLY (`StepTasks`),
+    * each merge reusing its delta's mini-segment: 3 jobs when both deltas
+    * are driver-resident, plus one routing-shuffle map job per
+    * cluster-resident delta. A driver-resident delta's span is its own
+    * buckets (a knownTouched* is only checked against them), so with no
+    * rows it adds no term and no merge.
+    *
+    * Callers that know a delta's bucket span pass it via knownTouched*
+    * (any SUPERSET of the actual span is correct — a DENSE delta passes
+    * all buckets, skipping the per-step bucket-discovery job entirely,
+    * since discovery would return every bucket anyway). Each delta the
+    * pin rule cannot prove stable is PINNED ONCE, eagerly, up front: the
+    * discovery job, the routing, the output job and its merge all read it,
+    * so a plan not stable under re-evaluation (rand(), a growing source
+    * table) would otherwise land different rows in the traces than in the
+    * emitted join delta with no error. A stable delta (driver-resident, or
+    * already pinned by its producer) is not pinned again. The pins are
+    * released once the output is materialized and both merges installed
+    * their segments. */
   def joinDeltaKeyed(aSt: KeyedState, dA: ZSetFrame,
                      bSt: KeyedState, dB: ZSetFrame,
                      keys: Seq[String],
                      knownTouchedA: Option[Seq[Int]] = None,
                      knownTouchedB: Option[Seq[Int]] = None): ZSetFrame = {
+    require(aSt ne bSt,
+      "graft: joinDeltaKeyed needs two traces - its two merges run concurrently and " +
+        "would race on one state; keep the second side in a KeyedState of its own")
     require(aSt.nBuckets == bSt.nBuckets && aSt.keys == bSt.keys,
       "join traces must share key columns and bucket count")
-    // bucket ids are computed ONCE per delta and shared between the probe
-    // of one trace and the merge of the other (identical hash layout).
-    // Callers that know a delta's bucket span pass it via knownTouched*
-    // (any SUPERSET of the actual span is correct — a DENSE delta passes
-    // all buckets, skipping the per-step bucket-discovery job entirely,
-    // since discovery would return every bucket anyway).
-    // PIN each delta the pin rule cannot prove stable ONCE, eagerly, up
-    // front (code-review r15): the discovery job, both merges, and the
-    // output join all read it, concurrently across the merge task and the
-    // output job, so a plan not stable under re-evaluation (rand(), a
-    // growing source table) would otherwise land DIFFERENT rows in the
-    // traces than in the emitted join delta with no error. A stable delta
-    // (driver-resident, or already pinned by its producer) is not pinned
-    // again, and neither merge re-pins the pinned one: it is stable. Each
-    // delta's route is resolved once and shared by its probe span and its
-    // merge. The pins are released once the output is materialized and
-    // both merges have installed their (eagerly materialized) segments.
+    require(aSt.keyTypes == bSt.keyTypes,
+      s"graft: joinDeltaKeyed traces must share key types (a key hashes by its type): " +
+        s"${aSt.keys.zip(aSt.keyTypes).map { case (k, t) => s"$k ${t.sql}" }.mkString(", ")} vs " +
+        s"${bSt.keys.zip(bSt.keyTypes).map { case (k, t) => s"$k ${t.sql}" }.mkString(", ")}")
     val pinned = scala.collection.mutable.Buffer.empty[ZSetFrame]
-    def resolve(st: KeyedState, d: ZSetFrame): (ZSetFrame, KeyedState.DeltaRoute) = {
-      val p = Pinned.stabilized(d, eager = true)(pinned += _)
-      (p, st.route(p))
-    }
+    def align(st: KeyedState, d: ZSetFrame, known: Option[Seq[Int]]): KeyedState.Aligned =
+      st.align(st.route(Pinned.stabilized(d, eager = true)(pinned += _)), known)
     try {
-      val (pinA, routeA) = resolve(aSt, dA)
-      val (pinB, routeB) = resolve(bSt, dB)
-      val aTouched = aSt.span(routeA, knownTouchedA)
-      val bTouched = bSt.span(routeB, knownTouchedB)
-      val bOldProbe = bSt.view(aTouched)               // B_old for ΔA's buckets
-      // A_new for ΔB's buckets, built LAZILY from the pre-merge view + the
-      // slice of ΔA hashing into those buckets — so the output job does not
-      // wait for A's segment build (the aggStep JOB-FUSION shape): both
-      // merges run as a side task concurrent with the single output action.
-      val aOldProbe = aSt.view(bTouched)
-      val dAInB = pinA.where(
-        pmod(hash(keys.map(col): _*), lit(aSt.nBuckets)).isin(bTouched: _*))
-      val aNewProbe = aOldProbe + dAInB
-      // eager: the emitted join delta references partition-pruned probe
-      // views that are only valid until the second subsequent merge
-      // (KeyedState reclaims superseded segments) — materialize it first
-      StepTasks.output("join-merge" -> (() => {
-        aSt.mergeRouted(routeA, Some(aTouched), append = false)
-        bSt.mergeRouted(routeB, Some(bTouched), append = false)
-      })) {
-        (pinA.join(bOldProbe, keys) + aNewProbe.join(pinB, keys)).localCheckpoint(eager = true)
+      val a = align(aSt, dA, knownTouchedA)
+      val b = align(bSt, dB, knownTouchedB)
+      // the PRE-merge views are taken here, before the merges start (a view
+      // snapshots its buckets' segment lists); the terms over them are
+      // composed and planned on the output task while the merges run
+      val terms = Seq(
+        // ΔA ⋈ B_old
+        a -> (aSt.deltaView(a).hint("shuffle_hash"), bSt.viewOf(a.groups)),
+        // A_new ⋈ ΔB
+        b -> (aSt.viewOf(b.groups, extra = Some(a.seg)), bSt.deltaView(b).hint("shuffle_hash")))
+        .collect { case (d, (l, r)) if !d.isEmpty => (l, r) }
+      // eager: the emitted join delta reads views that are only valid until
+      // the second subsequent merge (KeyedState reclaims superseded
+      // segments) — materialize it while the merges run
+      StepTasks.output(
+          "merge-a" -> (() => aSt.mergeAligned(a)),
+          "merge-b" -> (() => bSt.mergeAligned(b))) {
+        def join(l: DataFrame, r: DataFrame) = ZSetFrame.fromDelta(l).join(ZSetFrame.fromDelta(r), keys)
+        terms.map((join _).tupled).reduceOption(_ + _)
+          .getOrElse(emptyLike(join(aSt.viewOf(Vector.empty), bSt.viewOf(Vector.empty))))
+          .localCheckpoint(eager = true)
       }
     } finally pinned.foreach(p => Pinned.release(p.df))
   }

@@ -5,10 +5,12 @@ import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Attribute, BoundReference, UnsafeProjection}
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.DataType
 
 import graft.core.ZSetFrame
-import graft.plans.{BucketPackRDD, BucketPacking, BucketSlot}
+import graft.plans.{BucketClusteredPartitioning, BucketLayout, BucketPackRDD, BucketPacking, BucketSlot}
 
 /** Key-partitioned incremental state — the "trace" of a stateful operator,
   * sharded by the operator key so one delta step costs O(|Δ| + |touched
@@ -76,7 +78,10 @@ import graft.plans.{BucketPackRDD, BucketPacking, BucketSlot}
   * bucket-pruned views over pinned segments — valid until the SECOND
   * subsequent `merge` (or `compact`) on this state. Step outputs that must
   * outlive that window are eagerly materialized (`aggStep` does this for
-  * its emitted delta; `Incremental.joinDeltaKeyed` likewise).
+  * its emitted delta; `Incremental.joinDeltaKeyed` likewise, joining each
+  * delta's routed mini-segment against the other state's view over the
+  * same bucket groups — co-partitioned, no exchange — while both merges
+  * run beside its output job).
   *
   * On a real cluster the same layout is a bucketed/partitioned state table
   * with dynamic partition overwrite of touched buckets — that rendition is
@@ -85,6 +90,7 @@ import graft.plans.{BucketPackRDD, BucketPacking, BucketSlot}
   */
 final class KeyedState(val keys: Seq[String], val nBuckets: Int, init: ZSetFrame,
                        val compactEvery: Int = 64) {
+  import KeyedState.{Aligned, Segment}
   private val spark = init.spark
   /** Canonical column order: data columns as declared by `init`, then weight. */
   private val colsInOrder: Seq[String] = init.dataCols.toSeq :+ ZSetFrame.W
@@ -93,18 +99,13 @@ final class KeyedState(val keys: Seq[String], val nBuckets: Int, init: ZSetFrame
 
   private def keyExprs: Seq[Column] = keys.map(col)
 
+  /** The data types of the key columns: the bucket of a key depends on
+    * them (murmur3 hashes an int and a long of equal value apart). */
+  private[incremental] def keyTypes: Seq[DataType] = keys.map(k => schema(k).dataType)
+
   /** Logical bucket of a row — equals the physical partition id assigned by
     * `repartition(nBuckets, keys)` (HashPartitioning.partitionIdExpression). */
   def bucketId: Column = pmod(hash(keyExprs: _*), lit(nBuckets))
-
-  /** `rdd` holds, per partition, one element per bucket of its group;
-    * rows in the INTERNAL UnsafeRow format, so views rebuild DataFrames
-    * without any row conversion and `viewOf` re-declares the key clustering
-    * the layout guarantees. `slots` maps every bucket the segment carries
-    * to its (partition, slot). */
-  private final class Segment(val rdd: RDD[Array[InternalRow]], val slots: Map[Int, BucketSlot]) {
-    var refs: Int = 0
-  }
 
   /** bucket -> SEGMENT LIST, newest first. A bucket's logical content is
     * the Z-set SUM of its slot across its listed segments: a replacing
@@ -321,14 +322,32 @@ final class KeyedState(val keys: Seq[String], val nBuckets: Int, init: ZSetFrame
     *
     * `extra`: an uninstalled segment (a step's routed Δ) read as if
     * appended to every bucket it covers — lets a step see old ∪ Δ as one
-    * clustered scan and consolidate it in place. */
-  private def viewOf(groups: IndexedSeq[IndexedSeq[Int]],
-                     extra: Option[Segment] = None): DataFrame = {
+    * clustered scan and consolidate it in place. The segment may be packed
+    * by other groups than the view's: each bucket's slot is read where the
+    * segment holds it. */
+  private[incremental] def viewOf(groups: IndexedSeq[IndexedSeq[Int]],
+                                  extra: Option[Segment] = None): DataFrame = {
     val listed = groups.flatten.flatMap(bucketSegs(_)).distinct
-    if (listed.isEmpty) return spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
-    val segs = (listed ++ extra).distinct
-    def carries(s: Segment, b: Int): Boolean =
-      bucketSegs(b).contains(s) || extra.exists(x => (x eq s) && x.slots.contains(b))
+    scan(groups, (listed ++ extra).distinct, (s, b) =>
+      bucketSegs(b).contains(s) || extra.exists(x => (x eq s) && x.slots.contains(b)))
+  }
+
+  /** A step's aligned delta ALONE, as a scan in its span's layout that
+    * OFFERS that layout to a join (BucketClusteredPartitioning): joined with
+    * another state's `viewOf` the same groups on the key columns, Catalyst
+    * plans the join with no exchange — each group's delta rows meet that
+    * group's trace rows in one task. */
+  private[incremental] def deltaView(a: Aligned): DataFrame =
+    scan(a.groups, Seq(a.seg), (s, b) => s.slots.contains(b), offersLayout = true)
+
+  /** ONE narrow scan over `segs` (BucketUnionRDD): partition j reads, for
+    * each bucket of group j, its slot in every segment that `carries` it,
+    * and the frame declares the layout's key clustering. */
+  private def scan(groups: IndexedSeq[IndexedSeq[Int]], segs: Seq[Segment],
+                   carries: (Segment, Int) => Boolean,
+                   offersLayout: Boolean = false): DataFrame = {
+    if (groups.isEmpty || segs.isEmpty)
+      return spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
     val reads = groups.map { grp =>
       segs.map { s =>
         grp.filter(carries(s, _)).map(s.slots).groupBy(_.part).toArray.sortBy(_._1)
@@ -337,8 +356,8 @@ final class KeyedState(val keys: Seq[String], val nBuckets: Int, init: ZSetFrame
     }.toArray
     val union = new graft.plans.BucketUnionRDD(segs.map(_.rdd), reads)
     org.apache.spark.sql.graft.GraftSqlShim.internalDf(spark, union, schema,
-      attrs => graft.plans.BucketClusteredPartitioning(
-        keys.map(k => attrs(schema.fieldIndex(k))), groups.size))
+      attrs => BucketClusteredPartitioning(keys.map(k => attrs(schema.fieldIndex(k))),
+        BucketLayout(nBuckets, groups), offersLayout))
   }
 
   /** The full state as a Z-set (final read-out; scans every bucket). */
@@ -365,6 +384,15 @@ final class KeyedState(val keys: Seq[String], val nBuckets: Int, init: ZSetFrame
     * ids match the shuffle route's by construction. */
   private[incremental] def route(delta: ZSetFrame): KeyedState.DeltaRoute = {
     val frame = ZSetFrame.fromDelta(delta.df.select(colsInOrder.map(col): _*))
+    // the segment rows are read with the STATE's schema and filed by a hash
+    // of their own key values: a column of another type (an int key into a
+    // long state hashes with hashInt, not hashLong) would be misfiled or
+    // misread with no error
+    frame.df.schema.fields.zip(schema.fields).foreach { case (got, want) =>
+      require(DataTypeUtils.equalsIgnoreNullability(got.dataType, want.dataType),
+        s"graft: KeyedState column `${want.name}` is ${want.dataType.sql} but the delta's is " +
+          s"${got.dataType.sql} - cast the delta to the state's types")
+    }
     val n = colsInOrder.size
     val withBucket = frame.df.select(colsInOrder.map(col) :+ bucketId.as("__b"): _*)
     val rows = KeyedState.driverRows(withBucket).map { case (output, data) =>
@@ -460,6 +488,15 @@ final class KeyedState(val keys: Seq[String], val nBuckets: Int, init: ZSetFrame
     install(materializeAligned(keep.fold(view)(view.where), groups), 0 until nBuckets)
   }
 
+  /** A merge's clock tick: free what was retired two merges ago and, every
+    * `compactEvery` merges, compact — through compactInternal, NOT
+    * compact(): this tick already advanced the clock for this step (see
+    * compact()'s scaladoc). */
+  private def advance(): Unit = {
+    retireQ.advance()
+    if (compactEvery > 0 && gen % compactEvery == 0) compactInternal(None)
+  }
+
   /** Shared step prologue: advance the generation clock (reclaim + periodic
     * compaction), pin a delta the pin rule cannot prove stable, resolve the
     * touched-bucket span and its packing (`groupsOf`), and take the
@@ -471,10 +508,7 @@ final class KeyedState(val keys: Seq[String], val nBuckets: Int, init: ZSetFrame
     // a driver-resident delta's span is resolved — and a knownTouched
     // checked against its rows — before the step changes anything
     val driverSpan = if (r0.onDriver) Some(span(r0, knownTouched)) else None
-    retireQ.advance()
-    // compactInternal, NOT compact(): this merge's advance() above already
-    // ticked the clock for this step (see compact()'s scaladoc)
-    if (compactEvery > 0 && gen % compactEvery == 0) compactInternal(None)
+    advance()
     // no pre-consolidation of the delta: the merged-segment consolidate
     // below subsumes it. A delta the pin rule cannot prove stable (a file
     // scan, a view, a rand() plan) is pinned LAZILY — no job of its own; the
@@ -514,15 +548,8 @@ final class KeyedState(val keys: Seq[String], val nBuckets: Int, init: ZSetFrame
     * one — driver-resident, or a deterministic plan over pinned data — is
     * read as it is. */
   def merge(delta: ZSetFrame, knownTouched: Option[Seq[Int]] = None,
-            append: Boolean = false): (ZSetFrame, ZSetFrame) =
-    mergeRouted(route(delta), knownTouched, append)
-
-  /** `merge` over an already resolved route (`Incremental.joinDeltaKeyed`
-    * resolves each delta once and shares it with its probes). */
-  private[incremental] def mergeRouted(r0: KeyedState.DeltaRoute,
-                                       knownTouched: Option[Seq[Int]],
-                                       append: Boolean): (ZSetFrame, ZSetFrame) = {
-    val (r, groups, oldTouched) = prepare(r0, knownTouched)
+            append: Boolean = false): (ZSetFrame, ZSetFrame) = {
+    val (r, groups, oldTouched) = prepare(route(delta), knownTouched)
     val touched = groups.flatten
     if (append) {
       // spine append: route ONLY the delta into the bucket layout; old
@@ -540,6 +567,33 @@ final class KeyedState(val keys: Seq[String], val nBuckets: Int, init: ZSetFrame
     val newTouched = ZSetFrame.fromDelta(viewOf(groups))
     (oldTouched, newTouched)
   }
+
+  /** Route a delta (already pinned if the pin rule asks for it) into this
+    * state's layout for one step, without changing the state: its span,
+    * the span's packing, and the delta's UNPINNED mini-segment. A join
+    * reads the segment in its output job and `mergeAligned` reuses it, so
+    * the shuffle route's exchange runs once (its map output is read by
+    * both), and the driver route's rows ride inside each reader's tasks.
+    * A driver-resident delta's span is exactly its own buckets — a
+    * `knownTouched` is only checked against them — so the join probes and
+    * merges no bucket the delta does not hit; a cluster-resident delta's
+    * span is `knownTouched` or its discovered buckets. */
+  private[incremental] def align(r: KeyedState.DeltaRoute,
+                                 knownTouched: Option[Seq[Int]]): Aligned = {
+    val checked = span(r, knownTouched)
+    val groups = groupsOf(r.rows.fold(checked)(_.keys.toSeq).distinct.sorted.toIndexedSeq)
+    new Aligned(groups, deltaSegment(r, groups))
+  }
+
+  /** The replace `merge` of an `align`ed delta: tick the clock, then
+    * consolidate the span with the delta's mini-segment in place — one job.
+    * An empty delta changes nothing, so it runs nothing and leaves the
+    * clock as it is. */
+  private[incremental] def mergeAligned(a: Aligned): Unit =
+    if (!a.isEmpty) {
+      advance()
+      install(materializeAligned(viewOf(a.groups, extra = Some(a.seg)), a.groups), a.groups.flatten)
+    }
 
   /** Trace PROBE: the state rows living in the buckets touched by `other`'s
     * keys — the reference's indexed-trace lookup during an incremental join
@@ -681,6 +735,26 @@ object KeyedState {
   private[incremental] final class DeltaRoute(val frame: ZSetFrame,
                                               val rows: Option[Map[Int, Array[InternalRow]]]) {
     def onDriver: Boolean = rows.isDefined
+  }
+
+  /** `rdd` holds, per partition, one element per bucket of its group;
+    * rows in the INTERNAL UnsafeRow format, so views rebuild DataFrames
+    * without any row conversion and `viewOf` re-declares the key clustering
+    * the layout guarantees. `slots` maps every bucket the segment carries
+    * to its (partition, slot); `refs` counts the buckets of the owning
+    * state that point at it. */
+  private[incremental] final class Segment(val rdd: RDD[Array[InternalRow]],
+                                           val slots: Map[Int, BucketSlot]) {
+    var refs: Int = 0
+  }
+
+  /** A step's delta routed into one state's layout (`KeyedState.align`):
+    * the packing of its span and its mini-segment. `isEmpty` when the span
+    * is empty (a driver-resident delta with no rows) — a join term or a
+    * merge over it is a no-op. */
+  private[incremental] final class Aligned(val groups: IndexedSeq[IndexedSeq[Int]],
+                                           val seg: Segment) {
+    def isEmpty: Boolean = groups.isEmpty
   }
 
   /** `df`'s output and rows when its plan is driver-resident: every leaf is

@@ -41,6 +41,21 @@ object Recursive {
       obs.get("n").asInstanceOf[Long])
   }
 
+  /** `df` with a broadcast hint when its `rows` (a bound on its row count
+    * the step already holds, riding a materialization) times Spark's row
+    * size estimate fits `spark.sql.autoBroadcastJoinThreshold` — Spark's
+    * own size rule, applied to a frame whose RDD-backed plan carries no
+    * statistics. A delta-derived set the CDC contract keeps O(Δ) is then
+    * broadcast, and a bulk one falls back to a shuffle join instead of
+    * building a broadcast relation on the driver (and, with the threshold
+    * at -1, nothing is broadcast). */
+  private def broadcastIfSmall(df: DataFrame, rows: Long): DataFrame = {
+    val rowBytes = org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
+      .getSizePerRow(df.queryExecution.analyzed.output)
+    val threshold = df.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
+    if (BigInt(rows) * rowBytes <= threshold) broadcast(df) else df
+  }
+
   /** `materializeCounted` also carrying min(minCol) — the scc loops fuse
     * their per-round (count, next-pivot) scalar into the round's own
     * materialization action. NULL min (empty frame) maps to Long.MinValue,
@@ -280,23 +295,24 @@ object Recursive {
     /** one epoch: apply an edge delta Z-set (mixed ±) and repair the closure */
     def step(delta: ZSetFrame): DataFrame = {
       retireQ.advance()
-      val dEdges = materialize(delta.df.select("src", "dst", ZSetFrame.W))
+      val (dEdges, nDelta) = materializeCounted(delta.df.select("src", "dst", ZSetFrame.W))
       val eNew = materialize(
         (ZSetFrame.fromTable(edges) + ZSetFrame.fromDelta(dEdges)).distinctZ.toDF)
       // affected sources: u of every touched edge (u,v), plus every x with
-      // (x,u) already in the closure. touchedSrc is O(Δ) by the CDC
-      // contract, so it broadcasts (r18, guide §3.1) — the CLOSURE side
-      // (the big one) is probed in place instead of being shuffled for a
-      // sort-merge join the stats-free RDD plan would otherwise pick.
+      // (x,u) already in the closure. touchedSrc (≤ |Δ| rows) and aff are
+      // O(Δ) by the CDC contract, so they broadcast when their counts fit
+      // the threshold (r18, guide §3.1) — the CLOSURE side (the big one) is
+      // probed in place instead of being shuffled for a sort-merge join the
+      // stats-free RDD plan would otherwise pick.
       val touchedSrc = dEdges.select(col("src").as("u")).distinct()
-      val aff = materialize(
-        tc.join(broadcast(touchedSrc), tc("dst") === col("u"), "left_semi")
+      val (aff, nAff) = materializeCounted(
+        tc.join(broadcastIfSmall(touchedSrc, nDelta), tc("dst") === col("u"), "left_semi")
           .select("src")
           .union(touchedSrc.select(col("u").as("src"))).distinct())
       // re-derive reachability for affected sources only
-      val seed = eNew.join(broadcast(aff), Seq("src"), "left_semi")
+      val seed = eNew.join(broadcastIfSmall(aff, nAff), Seq("src"), "left_semi")
       val reAff = closureFrom(seed, eNew)
-      val kept = tc.join(broadcast(aff), Seq("src"), "left_anti")
+      val kept = tc.join(broadcastIfSmall(aff, nAff), Seq("src"), "left_anti")
       val (oldTc, oldEdges) = (tc, edges)
       edges = eNew
       tc = materialize(kept.union(reAff))
@@ -547,21 +563,22 @@ object Recursive {
       // the retraction-only-epoch fast path costs no extra isEmpty job
       val (inserted, nIns) = materializeCounted(
         dAll.where(col(ZSetFrame.W) > 0))
-      val touched = materialize(
+      val (touched, nTouched) = materializeCounted(
         dAll.select(col("src").as("node"))
           .union(dAll.select(col("dst").as("node"))).distinct())
       // old components of every touched node (covers splits). Both probe
       // sides here are O(Δ)-bounded by the CDC contract (touched = the
-      // delta's endpoints; tscc = their component ids), so they broadcast
+      // delta's endpoints; tscc = their component ids, at most one per
+      // touched node), so they broadcast when that count fits the threshold
       // (r18, guide §3.1): without the hint the RDD-backed frames carry no
       // stats, the planner picks a shuffle join, and AQE only converts it
       // AFTER materializing both shuffle stages — two scheduling-floor
       // stage jobs per epoch for a join whose build side is delta-sized.
-      // The LABELS side (corpus-sized) is never shuffled now.
+      // The LABELS side (corpus-sized) is then never shuffled.
       val touchedComps = labels
-        .join(broadcast(labels.join(broadcast(touched), Seq("node"),
+        .join(broadcastIfSmall(labels.join(broadcastIfSmall(touched, nTouched), Seq("node"),
             "left_semi")
-          .select(col("scc").as("tscc")).distinct()),
+          .select(col("scc").as("tscc")).distinct(), nTouched),
           col("scc") === col("tscc"), "left_semi")
         .select("node")
       // cycles through inserted edges (covers merges): fw(heads) ∩ bw(tails).

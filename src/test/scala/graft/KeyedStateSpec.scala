@@ -109,6 +109,53 @@ class KeyedStateSpec extends SparkSpec {
       assertSameRows(out.acc.consolidate.df,
         aSt.snapshot.join(bSt.snapshot, Seq("k")).consolidate.df)
     }
+    // the shapes the co-partitioned join must also get right: spans that
+    // differ between the two sides, an empty ΔB (a bulk step on A alone),
+    // a two-column key (q73's (v, w)) and null keys, on the driver route
+    // and on the shuffle route (deltas pinned first)
+    val n = 8
+    val rnd = new scala.util.Random(821)
+    def rows(nRows: Int, nullKeys: Boolean): Seq[(Option[Long], Long, Long, Long)] = Seq.fill(nRows) {
+      val k = if (nullKeys && rnd.nextInt(4) == 0) None else Some(rnd.nextInt(9).toLong)
+      (k, rnd.nextInt(3).toLong, rnd.nextInt(8).toLong, (rnd.nextInt(3) + 1L) * (if (rnd.nextBoolean()) 1 else -1))
+    }
+    def frame(rs: Seq[(Option[Long], Long, Long, Long)], k2: String, v: String, pin: Boolean): ZSetFrame = {
+      val z = ZSetFrame.fromDelta(rs.toDF("k", k2, v, ZSetFrame.W))
+      if (pin) z.localCheckpoint(eager = true) else z
+    }
+    def bucketsOf(rs: Seq[(Option[Long], Long, Long, Long)], keys: Seq[String]): Seq[Int] =
+      rs.toDF("k", "k2", "v", ZSetFrame.W).select(pmod(hash(keys.map(col): _*), lit(n)))
+        .distinct().collect().map(_.getInt(0)).toSeq
+    case class Case(name: String, keys: Seq[String], nullKeys: Boolean = false,
+                    emptyB: Boolean = false, spans: Boolean = false)
+    Seq(Case("unequal knownTouchedA/knownTouchedB", Seq("k"), spans = true),
+        Case("an empty ΔB", Seq("k"), emptyB = true, spans = true),
+        Case("a two-column key", Seq("k", "k2")),
+        Case("null keys", Seq("k"), nullKeys = true),
+        Case("null keys in a two-column key", Seq("k", "k2"), nullKeys = true)).foreach { c =>
+      Seq(false, true).foreach { pin =>
+        val label = s"${c.name} on the ${if (pin) "shuffle" else "driver"} route"
+        val steps = Seq.fill(3)((rows(12, c.nullKeys), if (c.emptyB) Nil else rows(8, c.nullKeys)))
+        // B's second column is a key column only when A's is
+        val bK2 = if (c.keys.contains("k2")) "k2" else "k3"
+        val (das, dbs) = (steps.map(s => frame(s._1, "k2", "v", pin)), steps.map(s => frame(s._2, bK2, "v2", pin)))
+        val aSt = new KeyedState(c.keys, n, Incremental.emptyLike(das.head))
+        val bSt = new KeyedState(c.keys, n, Incremental.emptyLike(dbs.head))
+        val outs = steps.zip(das.zip(dbs)).map { case ((ra, rb), (dA, dB)) =>
+          // A's span: every bucket; B's: exactly its own (none for an empty ΔB)
+          val (ka, kb) = if (c.spans) (Some(0 until n: Seq[Int]), Some(bucketsOf(rb, c.keys))) else (None, None)
+          Incremental.joinDeltaKeyed(aSt, dA, bSt, dB, c.keys, knownTouchedA = ka, knownTouchedB = kb)
+        }
+        val (aAll, bAll) = (ZSetFrame.sumAll(das).consolidate, ZSetFrame.sumAll(dbs).consolidate)
+        withClue(label) {
+          assertSameRows(ZSetFrame.sumAll(outs).consolidate.df, aAll.join(bAll, c.keys).consolidate.df)
+          assertSameRows(aSt.snapshot.consolidate.df, aAll.df)
+          assertSameRows(bSt.snapshot.consolidate.df, bAll.df)
+        }
+        (outs ++ (if (pin) das ++ dbs else Nil)).foreach(z => Pinned.release(z.df))
+        aSt.close(); bSt.close()
+      }
+    }
   }
 
   test("bucket views plan consolidate∘agg with ZERO exchanges (declared clustering)") {
@@ -614,29 +661,34 @@ class KeyedStateSpec extends SparkSpec {
   }
 
   test("a failed joinDeltaKeyed step throws its cause unwrapped and leaves no pin behind") {
-    // with requireAllClusterKeysForDistribution the shuffle route refuses to
-    // build a segment, so the merge task fails while the output job succeeds:
-    // the step must throw the merge's own exception, and release the output
-    // it already pinned (the states' segments are unchanged — neither merge
-    // installed anything)
+    // with requireAllClusterKeysForDistribution a merge's in-place
+    // consolidation needs an exchange, which its soundness gate refuses, so
+    // the merge tasks fail while the co-partitioned output job (a join on
+    // exactly the bucket key) succeeds: the step must throw a merge's own
+    // exception, and release the output it already pinned (the states'
+    // segments are unchanged — neither merge installed anything). The
+    // deltas are driver-resident: the shuffle route would refuse the conf
+    // while routing, before the output job starts.
     val n = 8
     val aSt = new KeyedState(Seq("k"), n, zf((0L until 16L).map(k => (k, k, 1L))))
     val bSt = new KeyedState(Seq("k"), n, zf((0L until 16L).map(k => (k, k % 3, 1L)), "attr"))
-    val dA = zf((0L until 16L).map(k => (k, k + 100, 1L))).localCheckpoint(eager = true)
-    val dB = zf((0L until 16L).map(k => (k, 7L, 1L)), "attr").localCheckpoint(eager = true)
+    val dA = zf((0L until 16L).map(k => (k, k + 100, 1L)))
+    val dB = zf((0L until 16L).map(k => (k, 7L, 1L)), "attr")
     val sc = spark.sparkContext
     val conf = "spark.sql.requireAllClusterKeysForDistribution"
     val before = sc.getPersistentRDDs.keySet
     spark.conf.set(conf, "true")
     try {
-      val e = intercept[IllegalArgumentException](Incremental.joinDeltaKeyed(aSt, dA, bSt, dB,
-        Seq("k"), knownTouchedA = Some(0 until n), knownTouchedB = Some(0 until n)))
-      assert(e.getMessage.contains("requireAllClusterKeysForDistribution"), e.getMessage)
+      val (e, shape) = StepShape.measure(spark)(intercept[IllegalArgumentException](
+        Incremental.joinDeltaKeyed(aSt, dA, bSt, dB, Seq("k"),
+          knownTouchedA = Some(0 until n), knownTouchedB = Some(0 until n))))
+      assert(e.getMessage.contains("materializeAligned planned an Exchange"), e.getMessage)
+      assert(shape.jobs == 1, s"the output job alone should have run: $shape")
       assert(sc.getPersistentRDDs.keySet -- before == Set.empty,
         "the failed step left pinned RDDs behind")
     } finally {
       spark.conf.unset(conf)
-      aSt.close(); bSt.close(); Pinned.release(dA.df); Pinned.release(dB.df)
+      aSt.close(); bSt.close()
     }
   }
 

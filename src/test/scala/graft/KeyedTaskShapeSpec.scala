@@ -22,16 +22,17 @@ class KeyedTaskShapeSpec extends SparkSpec {
   /** Per-step ceilings (jobs, tasks), measured on local[4] (G = 4) with the
     * packed layout. Before it, the same steps ran one task per touched
     * bucket in every view-reading stage. The driver-route steps ran
-    * (4, 20) and (9, 44) on the shuffle route; the cluster join now runs
-    * (7, 36), since its already-pinned deltas are stable and are not
-    * pinned again. */
+    * (4, 20) and (9, 44) on the shuffle route. The co-partitioned join
+    * runs its output job and its two merges and nothing else; the shuffle
+    * route adds one routing map job per delta, whose mini-segment both the
+    * output and the merge read. */
   private val bounds: Map[String, (Int, Int)] = Map(
     "aggStep" -> (2, 12),
     "aggStep cluster" -> (4, 20),
     "merge" -> (2, 8),
     "merge append" -> (2, 8),
-    "joinDeltaKeyed" -> (5, 28),
-    "joinDeltaKeyed cluster" -> (7, 36))
+    "joinDeltaKeyed" -> (3, 16),
+    "joinDeltaKeyed cluster" -> (5, 24))
 
   test("a keyed step reads each view in ≤ G tasks; per-step jobs and tasks stay bounded") {
     val rnd = new scala.util.Random(2100)
@@ -92,17 +93,16 @@ class KeyedTaskShapeSpec extends SparkSpec {
         pins.foreach(d => Pinned.release(d.df))
       }
     }
-    // joinDeltaKeyed's A_new probe is a view ∪ the ΔA slice hashing into
-    // ΔB's buckets, so its stage also runs the delta's own partitions
-    val deltaParts = dFact().df.rdd.getNumPartitions
     val runs = Seq(run(), run())
     runs.flatten.foreach { case (name, s) =>
       s.stages.filter(_.viewParts.nonEmpty).foreach { st =>
         assert(st.viewParts.forall(_ <= g), s"$name read a view in more than G = $g tasks: $st")
-        val allowed = g * st.viewParts.size + (if (name.startsWith("joinDeltaKeyed")) deltaParts else 0)
-        assert(st.tasks <= allowed,
+        assert(st.tasks <= g * st.viewParts.size,
           s"$name ran a view-reading stage of ${st.tasks} tasks over ${st.viewParts.size} views")
       }
+      // both deltas join inside the traces' bucket layout: nothing is broadcast
+      if (name.startsWith("joinDeltaKeyed"))
+        assert(s.broadcastJobs == 0, s"$name ran ${s.broadcastJobs} broadcast jobs")
     }
     // AQE re-plans while stages run, so a job count can differ by one
     // between runs of the same step: each step is charged its smaller count

@@ -281,4 +281,35 @@ class RecursiveSpec extends SparkSpec {
     assert(fin(5L) == 5L && fin(6L) == 5L && fin(7L) == 5L)
     assert(!fin.contains(9L), "node 9 lost its last edge and must leave")
   }
+  test("with autoBroadcastJoinThreshold -1, an incremental epoch broadcasts nothing and stays exact") {
+    // the delta-derived probe sets broadcast only when their counted size
+    // fits Spark's own threshold: at -1 an epoch builds no broadcast
+    // relation (a bulk delta likewise falls back to a shuffle join)
+    val conf = "spark.sql.autoBroadcastJoinThreshold"
+    val base = Seq((0L, 1L), (1L, 2L), (2L, 0L), (5L, 6L), (6L, 7L), (7L, 5L), (2L, 5L))
+      .toDF("src", "dst")
+    def z(rows: Seq[(Long, Long, Long)]) = ZSetFrame.fromDelta(rows.toDF("src", "dst", ZSetFrame.W))
+    val scc = new Recursive.IncrementalScc(ZSetFrame.fromTable(base))
+    val closure = new Recursive.IncrementalClosure(ZSetFrame.fromTable(base))
+    spark.conf.set(conf, "-1")
+    try {
+      var acc = ZSetFrame.fromTable(base)
+      Seq(z(Seq((6L, 1L, 1L))), z(Seq((7L, 5L, -1L), (3L, 4L, 1L)))).foreach { d =>
+        acc = (acc + d).distinctZ
+        val edgesNow = acc.toDF.select("src", "dst")
+        val (labels, sccShape) = StepShape.measure(spark)(
+          scc.step(d).collect().map(r => (r.getLong(0), r.getLong(1))))
+        assert(sccShape.broadcastJobs == 0, s"IncrementalScc epoch broadcast: $sccShape")
+        assertSameRows(labels.toSeq.toDF("node", "scc"), Recursive.scc(edgesNow))
+        val (tc, tcShape) = StepShape.measure(spark)(
+          closure.step(d).collect().map(r => (r.getLong(0), r.getLong(1))))
+        assert(tcShape.broadcastJobs == 0, s"IncrementalClosure epoch broadcast: $tcShape")
+        val live = edgesNow.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+        assertSameRows(tc.toSeq.toDF("src", "dst"), closureOf(live).toSeq.toDF("src", "dst"))
+      }
+    } finally {
+      spark.conf.unset(conf)
+      scc.close(); closure.close()
+    }
+  }
 }

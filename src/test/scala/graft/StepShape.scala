@@ -12,8 +12,11 @@ import org.apache.spark.sql.SparkSession
 /** The Spark work a block of code ran: jobs, tasks, the stages that ran
   * (skipped ones excluded) and the elements its tasks pulled from cached
   * blocks. `views` of a stage are the KeyedState bucket views it reads; a
-  * view's `viewParts` is its partition (task) count. */
-final case class Shape(jobs: Int, tasks: Int, stages: Seq[StageShape], cachedRecordsRead: Long)
+  * view's `viewParts` is its partition (task) count. `broadcastJobs` of
+  * `jobs` built a broadcast relation: Spark tags each such job with
+  * `broadcast exchange (runId …)` in `spark.job.tags`. */
+final case class Shape(jobs: Int, tasks: Int, stages: Seq[StageShape], cachedRecordsRead: Long,
+                       broadcastJobs: Int)
 final case class StageShape(tasks: Int, viewParts: Seq[Int])
 
 /** Counts the jobs, tasks and stages a step starts, attributed by a
@@ -24,9 +27,12 @@ final case class StageShape(tasks: Int, viewParts: Seq[Int])
 object StepShape {
   private val TagKey = "graft.stepshape"
   private val ViewName = "graft bucket view"
+  private val JobTagsKey = "spark.job.tags"
+  private val BroadcastTag = "broadcast exchange (runId"
 
   private final class Counts {
     val jobs = new AtomicInteger
+    val broadcastJobs = new AtomicInteger
     val tasks = new AtomicInteger
     val records = new AtomicLong
     val stages = new ConcurrentHashMap[Int, StageShape]()
@@ -45,7 +51,12 @@ object StepShape {
     if (!registered) {
       spark.sparkContext.addSparkListener(new SparkListener {
         override def onJobStart(js: SparkListenerJobStart): Unit =
-          tagOf(js.properties).foreach(t => counts(t).jobs.incrementAndGet())
+          tagOf(js.properties).foreach { t =>
+            val c = counts(t)
+            c.jobs.incrementAndGet()
+            if (Option(js.properties.getProperty(JobTagsKey)).exists(_.contains(BroadcastTag)))
+              c.broadcastJobs.incrementAndGet()
+          }
         override def onStageSubmitted(ss: SparkListenerStageSubmitted): Unit =
           tagOf(ss.properties).foreach { t =>
             val si = ss.stageInfo
@@ -75,6 +86,6 @@ object StepShape {
     ListenerBusAccess.drain(sc)
     val c = Option(byTag.remove(tag)).getOrElse(new Counts)
     (a, Shape(c.jobs.get, c.tasks.get,
-      c.stages.asScala.toSeq.sortBy(_._1).map(_._2), c.records.get))
+      c.stages.asScala.toSeq.sortBy(_._1).map(_._2), c.records.get, c.broadcastJobs.get))
   }
 }

@@ -53,8 +53,8 @@ object StepBench {
     val ts = (1 to steps).map { i =>
       // knownTouched from the delta's own keys, mapped driver-side
       // (KeyedState.bucketsOfLongKeys == SQL hash(); a CDC source knows
-      // its delta's keys — they DEFINE the delta): kills the per-step
-      // bucket-discovery action, leaving ONE sequential action per step
+      // its delta's keys — they DEFINE the delta); the step checks it
+      // against the delta's rows
       val ks = (0 until 2).map(j => (i * 31L + j * 97L) % nKeys)
       val kt = Some(KeyedState.bucketsOfLongKeys(ks, nBuckets))
       val t0 = System.nanoTime()

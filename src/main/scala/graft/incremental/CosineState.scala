@@ -272,6 +272,13 @@ final class CosineState(emptyTf: ZSetFrame,
         .join(affected, Seq("doc_id"))
         .join(broadcast(iqTab), Seq("term"))
         .select(col("doc_id"), col("term"), (col("tf") * col("iq")).as("dvq"))
+        // ONE doc_id clustering for the rest of the rescore: both sums, their
+        // join and the per-doc top-1 window are then satisfied in place. Left
+        // to AQE, the sums shuffle apart and the join is re-planned once a
+        // side is measured; when it turns into a broadcast join the window
+        // needs an exchange of its own — one job more, depending on which
+        // stage finished first
+        .repartition(col("doc_id"))
       val nd = rows.groupBy("doc_id")
         .agg(sum(col("dvq") * col("dvq")).as("nd2"))
       val dt = rows.join(broadcast(centTab), Seq("term"))

@@ -91,14 +91,14 @@ final class DurableKeyedState private (
     // plan still reads the files being overwritten
     val out = merged.df.withColumn("__bucket", bucketId).localCheckpoint(true)
     // bucket audit over the PINNED output (one ≤nBuckets-row action) —
-    // two failure modes the in-memory KeyedState tolerates or debug-gates
-    // are unacceptable here because the write is irreversible:
+    // two failure modes that are unacceptable here because the write is
+    // irreversible:
     //  (a) a bucket present in `out` but NOT in `touched` means the
     //      caller's knownTouched missed a delta bucket: the dynamic
     //      overwrite would REPLACE that whole partition with just the
     //      delta's rows, silently destroying every other key stored there
-    //      (the in-memory variant merely drops the rows, and offers
-    //      spark.graft.checkedTouched as a debug gate) — fail loudly;
+    //      (the in-memory KeyedState refuses such a span too, before it
+    //      installs anything) — fail loudly;
     //  (b) a touched bucket ABSENT from `out` was fully retracted:
     //      dynamic partition overwrite only replaces partitions present
     //      in the written data, so the stale files would survive and the

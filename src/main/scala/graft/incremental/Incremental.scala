@@ -60,11 +60,12 @@ object Incremental {
     * delta's keys hash into are read), so a step costs O(|Δ| + touched
     * buckets). Merges ΔA into `aSt` and ΔB into `bSt`.
     *
-    * CO-PARTITIONED: each delta is routed ONCE into its trace's packed
-    * bucket layout (`KeyedState.align`, the mini-segment aggStep builds
-    * too), and both terms join inside that layout — the reference's
-    * sharded join, where a delta meets the other trace in the shard both
-    * were routed to (operator/join.rs:180, communication/shard.rs):
+    * CO-PARTITIONED: each delta takes its trace's one step path
+    * (`KeyedState.route` → `align` → `mergeAligned`): it is routed ONCE
+    * into the trace's packed bucket layout, and both terms join inside that
+    * layout — the reference's sharded join, where a delta meets the other
+    * trace in the shard both were routed to (operator/join.rs:180,
+    * communication/shard.rs):
     *   ΔA ⋈ B_old — ΔA's mini-segment against B's view over ΔA's groups;
     *   A_new ⋈ ΔB — A's pre-merge view over ΔB's groups with ΔA read as its
     *                extra spine batch, against ΔB's mini-segment.
@@ -75,22 +76,17 @@ object Incremental {
     * runs the output job and the two merges CONCURRENTLY (`StepTasks`),
     * each merge reusing its delta's mini-segment: 3 jobs when both deltas
     * are driver-resident, plus one routing-shuffle map job per
-    * cluster-resident delta. A driver-resident delta's span is its own
-    * buckets (a knownTouched* is only checked against them), so with no
-    * rows it adds no term and no merge.
+    * cluster-resident delta. A delta's span is the buckets its rows land
+    * in (a knownTouched* is only checked against them), so a delta with no
+    * rows adds no term and its merge installs nothing.
     *
-    * Callers that know a delta's bucket span pass it via knownTouched*
-    * (any SUPERSET of the actual span is correct — a DENSE delta passes
-    * all buckets, skipping the per-step bucket-discovery job entirely,
-    * since discovery would return every bucket anyway). Each delta the
-    * pin rule cannot prove stable is PINNED ONCE, eagerly, up front: the
-    * discovery job, the routing, the output job and its merge all read it,
-    * so a plan not stable under re-evaluation (rand(), a growing source
-    * table) would otherwise land different rows in the traces than in the
-    * emitted join delta with no error. A stable delta (driver-resident, or
-    * already pinned by its producer) is not pinned again. The pins are
-    * released once the output is materialized and both merges installed
-    * their segments. */
+    * DELTA PIN: each trace's `route` decides its delta's pin — a delta the
+    * pin rule cannot prove stable is pinned ONCE, lazily, and the routing
+    * map stage, the step's only read of the delta, fills the pin: the
+    * output job and the merge read the routed mini-segment, so a plan not
+    * stable under re-evaluation (rand(), a growing source table) lands the
+    * same rows in the traces as in the emitted join delta. The pin is
+    * released on the trace's deferred schedule. */
   def joinDeltaKeyed(aSt: KeyedState, dA: ZSetFrame,
                      bSt: KeyedState, dB: ZSetFrame,
                      keys: Seq[String],
@@ -105,33 +101,28 @@ object Incremental {
       s"graft: joinDeltaKeyed traces must share key types (a key hashes by its type): " +
         s"${aSt.keys.zip(aSt.keyTypes).map { case (k, t) => s"$k ${t.sql}" }.mkString(", ")} vs " +
         s"${bSt.keys.zip(bSt.keyTypes).map { case (k, t) => s"$k ${t.sql}" }.mkString(", ")}")
-    val pinned = scala.collection.mutable.Buffer.empty[ZSetFrame]
-    def align(st: KeyedState, d: ZSetFrame, known: Option[Seq[Int]]): KeyedState.Aligned =
-      st.align(st.route(Pinned.stabilized(d, eager = true)(pinned += _)), known)
-    try {
-      val a = align(aSt, dA, knownTouchedA)
-      val b = align(bSt, dB, knownTouchedB)
-      // the PRE-merge views are taken here, before the merges start (a view
-      // snapshots its buckets' segment lists); the terms over them are
-      // composed and planned on the output task while the merges run
-      val terms = Seq(
-        // ΔA ⋈ B_old
-        a -> (aSt.deltaView(a).hint("shuffle_hash"), bSt.viewOf(a.groups)),
-        // A_new ⋈ ΔB
-        b -> (aSt.viewOf(b.groups, extra = Some(a.seg)), bSt.deltaView(b).hint("shuffle_hash")))
-        .collect { case (d, (l, r)) if !d.isEmpty => (l, r) }
-      // eager: the emitted join delta reads views that are only valid until
-      // the second subsequent merge (KeyedState reclaims superseded
-      // segments) — materialize it while the merges run
-      StepTasks.output(
-          "merge-a" -> (() => aSt.mergeAligned(a)),
-          "merge-b" -> (() => bSt.mergeAligned(b))) {
-        def join(l: DataFrame, r: DataFrame) = ZSetFrame.fromDelta(l).join(ZSetFrame.fromDelta(r), keys)
-        terms.map((join _).tupled).reduceOption(_ + _)
-          .getOrElse(emptyLike(join(aSt.viewOf(Vector.empty), bSt.viewOf(Vector.empty))))
-          .localCheckpoint(eager = true)
-      }
-    } finally pinned.foreach(p => Pinned.release(p.df))
+    val a = aSt.align(aSt.route(dA), knownTouchedA)
+    val b = bSt.align(bSt.route(dB), knownTouchedB)
+    // the PRE-merge views are taken here, before the merges start (a view
+    // snapshots its buckets' segment lists); the terms over them are
+    // composed and planned on the output task while the merges run
+    val terms = Seq(
+      // ΔA ⋈ B_old
+      a -> (aSt.deltaView(a).hint("shuffle_hash"), bSt.viewOf(a.groups)),
+      // A_new ⋈ ΔB
+      b -> (aSt.viewOf(b.groups, extra = Some(a.seg)), bSt.deltaView(b).hint("shuffle_hash")))
+      .collect { case (d, (l, r)) if !d.isEmpty => (l, r) }
+    // eager: the emitted join delta reads views that are only valid until
+    // the second subsequent merge (KeyedState reclaims superseded
+    // segments) — materialize it while the merges run
+    StepTasks.output(
+        "merge-a" -> (() => aSt.mergeAligned(a)),
+        "merge-b" -> (() => bSt.mergeAligned(b))) {
+      def join(l: DataFrame, r: DataFrame) = ZSetFrame.fromDelta(l).join(ZSetFrame.fromDelta(r), keys)
+      terms.map((join _).tupled).reduceOption(_ + _)
+        .getOrElse(emptyLike(join(aSt.viewOf(Vector.empty), bSt.viewOf(Vector.empty))))
+        .localCheckpoint(eager = true)
+    }
   }
 
   /** Incremental distinct: δ = distinct(A_new) − distinct(A_old)

@@ -42,27 +42,41 @@ import graft.plans.{BucketClusteredPartitioning, BucketLayout, BucketPackRDD, Bu
   * the overwhelming majority of a large state under a small delta — are
   * never read, shuffled, or rewritten.
   *
-  * TWO ROUTES into the layout, decided once per delta per step (`route`),
-  * both building the same segment:
+  * ONE STEP PATH. `merge`, `aggStep` and `Incremental.joinDeltaKeyed` all
+  * run the same three stages on a delta:
+  *  1. `route` — resolve the delta's route into the layout (below) and
+  *     decide its pin: a delta the pin rule (`Pinned.isStable`) cannot
+  *     prove stable is pinned LAZILY (the routing job fills it) and the
+  *     pin is retired into this state's deferred-release queue;
+  *  2. `align` — the SPAN (exactly the buckets the delta's rows land in;
+  *     a caller's `knownTouched` is only checked against it), the span's
+  *     packing and the delta's UNPINNED mini-segment;
+  *  3. the step's reads over the aligned views, then `mergeAligned` — tick
+  *     the clock and install the mini-segment (append) or the span
+  *     consolidated with it in place (replace).
+  * TWO ROUTES into the layout, both building the same mini-segment:
   *  - DRIVER route — the delta is driver-resident: its plan is
   *    deterministic and folds to a LocalRelation (a `Seq.toDF` delta, a
   *    CDC batch the caller built in memory). Spark's own optimizer
   *    evaluates the bucket id `pmod(hash(keys), n)` over its rows, which
   *    are filed under their (partition, slot) on the driver and handed to
   *    Spark as a G-partition parallelize, one element per bucket: no
-  *    shuffle, no delta pin, no bucket-discovery job, and a `knownTouched`
-  *    span is checked against every row for free. This is the reference's
-  *    input handle, which hashes pushed deltas to their worker shards
-  *    before the step starts (operator/input.rs, `handle.append`).
+  *    shuffle, no delta pin, and the span is read off the rows in hand.
+  *    This is the reference's input handle, which hashes pushed deltas to
+  *    their worker shards before the step starts (operator/input.rs,
+  *    `handle.append`).
   *  - SHUFFLE route — every other delta (pinned CDC slices, query frames)
-  *    and the seed: `repartition(nBuckets, keys)`, pruned to the span.
+  *    and the seed: `repartition(nBuckets, keys)`, pruned to the span. The
+  *    span is read off the routing shuffle's map output statistics (a
+  *    bucket is in it exactly when some map task wrote rows to it), so
+  *    neither route runs a bucket-discovery job, and every reader of the
+  *    mini-segment shares the one routing map stage.
   *  The DETERMINISM GUARD (`Pinned.fixedRows`): a plan with a
   *  nondeterministic projection (rand(), uuid(), a nondeterministic UDF)
   *  or one reading the clock (current_timestamp(), which the optimizer
   *  fixes per optimization) also folds to a LocalRelation, but re-folds to
   *  new rows each time a plan over it is optimized; it takes the shuffle
-  *  route, and the pin rule (`Pinned.isStable`) pins it, so every consumer
-  *  sees the same rows.
+  *  route, and the pin rule pins it, so every consumer sees the same rows.
   *
   * SEGMENT RECLAMATION (the trace's merge/GC, reference:
   * crates/dbsp/src/trace/spine_fueled.rs merge batches + drop superseded):
@@ -76,12 +90,13 @@ import graft.plans.{BucketClusteredPartitioning, BucketLayout, BucketPackRDD, Bu
   *
   * LIFECYCLE CONTRACT: DataFrames returned by `view`/`probe`/`merge` are
   * bucket-pruned views over pinned segments — valid until the SECOND
-  * subsequent `merge` (or `compact`) on this state. Step outputs that must
-  * outlive that window are eagerly materialized (`aggStep` does this for
-  * its emitted delta; `Incremental.joinDeltaKeyed` likewise, joining each
-  * delta's routed mini-segment against the other state's view over the
-  * same bucket groups — co-partitioned, no exchange — while both merges
-  * run beside its output job).
+  * subsequent step (`merge`, `aggStep`, a join's merge, or `compact`) on
+  * this state; a step's delta pin is released on the same schedule. Step
+  * outputs that must outlive that window are eagerly materialized
+  * (`aggStep` does this for its emitted delta; `Incremental.joinDeltaKeyed`
+  * likewise, joining each delta's mini-segment against the other state's
+  * view over the same bucket groups — co-partitioned, no exchange — while
+  * both merges run beside its output job).
   *
   * On a real cluster the same layout is a bucketed/partitioned state table
   * with dynamic partition overwrite of touched buckets — that rendition is
@@ -125,7 +140,11 @@ final class KeyedState(val keys: Seq[String], val nBuckets: Int, init: ZSetFrame
   private def gen: Long = retireQ.generation
 
   { // seed segment: the (usually empty) initial state, bucketed
-    install(pin(routed(init, groupsOf(0 until nBuckets), consolidate = true)), 0 until nBuckets)
+    val groups = groupsOf(0 until nBuckets)
+    val rows = routed(init, consolidate = true)
+      .getOrElse(spark.sparkContext.parallelize(Seq.empty[InternalRow], nBuckets))
+    install(pin(new Segment(new BucketPackRDD(rows, groups), BucketPacking.slots(groups))),
+      0 until nBuckets)
   }
 
   /** REPLACE `bucketIds`' lists with `seg`, maintaining refcounts; segments
@@ -181,15 +200,15 @@ final class KeyedState(val keys: Seq[String], val nBuckets: Int, init: ZSetFrame
     seg
   }
 
-  /** The SHUFFLE route (see the class scaladoc for the two routes): route
-    * `z` into the bucket layout by key hash, as an UNPINNED segment packed
-    * by `groups`. It serves the seed and every delta that is not
-    * driver-resident — a cluster-resident plan, or one the determinism
-    * guard turns away (the pin rule fixes its rows first; the driver
-    * route's `deltaSegment` builds the same segment from rows already on
-    * the driver). The shuffle writes nBuckets partitions, but only
-    * the span's are ever READ: the reduce side is pruned to the groups'
-    * buckets and packed into G tasks (BucketPackRDD) — a step's
+  /** The SHUFFLE route (see the class scaladoc for the two routes): `z`'s
+    * rows in the bucket layout by key hash — one partition per bucket —
+    * or None when AQE folded an all-empty build away. It serves the seed
+    * and every delta that is not driver-resident — a cluster-resident
+    * plan, or one the determinism guard turns away (the pin rule fixes its
+    * rows first; the driver route files the same rows from the driver).
+    * The shuffle writes nBuckets partitions, but only the span's are ever
+    * READ: the reduce side is pruned to the span's buckets and packed into
+    * G tasks (BucketPackRDD, built by the caller) — a step's
     * Δ route runs G reduce tasks, not nBuckets, nor |touched|. Without the
     * pruning every step would pay an nBuckets-task stage of overwhelmingly
     * EMPTY tasks — pure scheduling overhead that grows with bucket COUNT
@@ -207,8 +226,7 @@ final class KeyedState(val keys: Seq[String], val nBuckets: Int, init: ZSetFrame
     * clustering, so the groupBy adds NO second exchange. Same rows out
     * either way — grouping is on all data columns and zero-net rows drop
     * after the sum. */
-  private def routed(z: ZSetFrame, groups: IndexedSeq[IndexedSeq[Int]],
-                     consolidate: Boolean = false): Segment = {
+  private def routed(z: ZSetFrame, consolidate: Boolean = false): Option[RDD[InternalRow]] = {
     // the consolidate below relies on HashPartitioning's SUBSET rule
     // (grouping by dataCols ⊇ keys is satisfied by the key repartition);
     // spark.sql.requireAllClusterKeysForDistribution=true disables that
@@ -236,21 +254,34 @@ final class KeyedState(val keys: Seq[String], val nBuckets: Int, init: ZSetFrame
     } else bucketed
     // INTERNAL rows (what Dataset.checkpoint itself does): no Row
     // conversion on write or on any later view read
-    val internal0 = ds.queryExecution.toRdd
-    val internal = if (internal0.getNumPartitions == nBuckets) internal0 else {
+    val internal = ds.queryExecution.toRdd
+    if (internal.getNumPartitions == nBuckets) Some(internal) else {
       // AQE's empty-relation propagation folds an ALL-EMPTY build (the seed
-      // of a fresh state, or a delta that exactly cancels its buckets) into
-      // a 0/1-partition local relation, silently losing the bucket layout
-      // every reader indexes by. Restore it with an explicitly empty
-      // nBuckets-wide RDD; any NON-empty layout loss is a hard error
+      // of a fresh state, or a delta with no rows) into a 0/1-partition
+      // local relation, losing the bucket layout every reader indexes by:
+      // the caller restores it. Any NON-empty layout loss is a hard error
       // (partition-count check is metadata-only; the take(1) job runs only
       // on this rare path).
-      require(internal0.take(1).isEmpty,
-        s"graft: bucket layout lost (${internal0.getNumPartitions} partitions," +
+      require(internal.take(1).isEmpty,
+        s"graft: bucket layout lost (${internal.getNumPartitions} partitions," +
           s" expected $nBuckets) on non-empty data")
-      spark.sparkContext.parallelize(Seq.empty[InternalRow], nBuckets)
+      None
     }
-    new Segment(new BucketPackRDD(internal, groups), BucketPacking.slots(groups))
+  }
+
+  /** The buckets a shuffle-routed delta's rows land in: the routing
+    * shuffle's non-empty reduce partitions, read off its map output
+    * statistics (`GraftSqlShim.shuffleBytes` — no job under AQE, whose
+    * `toRdd` in `routed` has run the map stage; otherwise that map stage
+    * runs here and the readers skip it). A map status records an empty
+    * block as exactly 0 bytes and a non-empty one as at least 1, so the
+    * set is exact. */
+  private def landed(rows: RDD[InternalRow]): Seq[Int] = {
+    val bytes = org.apache.spark.sql.graft.GraftSqlShim.shuffleBytes(rows)
+      .filter(_.length == nBuckets)
+      .getOrElse(throw new IllegalStateException(
+        "graft: a shuffle-routed delta has no bucket shuffle to read its span from"))
+    bytes.indices.filter(bytes(_) > 0)
   }
 
   /** Consolidate an ALREADY bucket-aligned view (a `viewOf(groups, …)`
@@ -375,13 +406,21 @@ final class KeyedState(val keys: Seq[String], val nBuckets: Int, init: ZSetFrame
     }
   }
 
-  /** Resolve a delta's route into this state's layout (see the class
-    * scaladoc) — once per delta per step; every consumer of the step
-    * shares the result. The delta projected to the state's columns plus its
-    * bucket id is optimized once: when it folds to a LocalRelation, Spark's
-    * ConvertToLocalRelation has evaluated the very expression
-    * `repartition(nBuckets, keys)` routes by, so the driver route's bucket
-    * ids match the shuffle route's by construction. */
+  /** STEP STAGE 1 — resolve a delta's route into this state's layout (see
+    * the class scaladoc), once per delta per step; every consumer of the
+    * step shares the result. The delta projected to the state's columns
+    * plus its bucket id is optimized once: when it folds to a
+    * LocalRelation, Spark's ConvertToLocalRelation has evaluated the very
+    * expression `repartition(nBuckets, keys)` routes by, so the driver
+    * route's bucket ids match the shuffle route's by construction.
+    *
+    * This is the ONE place a step decides its delta's pin. A driver-resident
+    * delta is stable by construction; any other delta the pin rule
+    * (`Pinned.isStable`: a file scan, a view, a rand() plan) cannot prove
+    * stable is pinned LAZILY — no job of its own: the routing map stage in
+    * `align` is the step's only read of it and fills the pin. The pin is
+    * retired into this state's queue and freed two steps on, with the
+    * segments the step supersedes. */
   private[incremental] def route(delta: ZSetFrame): KeyedState.DeltaRoute = {
     val frame = ZSetFrame.fromDelta(delta.df.select(colsInOrder.map(col): _*))
     // the segment rows are read with the STATE's schema and filed by a hash
@@ -395,57 +434,60 @@ final class KeyedState(val keys: Seq[String], val nBuckets: Int, init: ZSetFrame
     }
     val n = colsInOrder.size
     val withBucket = frame.df.select(colsInOrder.map(col) :+ bucketId.as("__b"): _*)
-    val rows = KeyedState.driverRows(withBucket).map { case (output, data) =>
-      val strip = UnsafeProjection.create(output.take(n).zipWithIndex.map {
-        case (a, i) => BoundReference(i, a.dataType, a.nullable)
-      })
-      data.groupBy(_.getInt(n)).map { case (b, rs) =>
-        b -> rs.map(r => strip(r).copy(): InternalRow).toArray
-      }
+    KeyedState.driverRows(withBucket) match {
+      case Some((output, data)) =>
+        val strip = UnsafeProjection.create(output.take(n).zipWithIndex.map {
+          case (a, i) => BoundReference(i, a.dataType, a.nullable)
+        })
+        new KeyedState.DeltaRoute(frame, Some(data.groupBy(_.getInt(n)).map { case (b, rs) =>
+          b -> rs.map(r => strip(r).copy(): InternalRow).toArray
+        }))
+      case None =>
+        new KeyedState.DeltaRoute(
+          Pinned.stabilized(frame, eager = false)(p => retireQ.retire(p.df.rdd)), None)
     }
-    new KeyedState.DeltaRoute(frame, rows)
   }
 
-  /** The bucket span a step over `r` touches: a caller's `knownTouched`, or
-    * else the delta's own buckets. knownTouched CONTRACT: any SUPERSET of
-    * the delta's true span — `install` repoints only the listed buckets, so
-    * delta rows hashing elsewhere would be dropped. A driver-resident
-    * delta's rows are all in hand, so the contract is always checked, at
-    * no cost; a cluster-resident delta's only behind
-    * spark.graft.checkedTouched (debug; one extra job). It fails as
+  /** STEP STAGE 2 — route a `route`d delta into this state's layout for
+    * one step, without changing the state: its SPAN, the span's packing
+    * (`groupsOf`) and the delta's UNPINNED mini-segment packed by it.
+    *
+    * The span is exactly the buckets the delta's rows land in: the driver
+    * route reads them off the rows in hand and ships each bucket's rows as
+    * one element of a G-partition parallelize (the rows travel inside the
+    * readers' tasks, as a LocalTableScanExec already ships them); the
+    * shuffle route runs the routing shuffle's map stage here and reads
+    * them off its map output statistics (`landed`). A step therefore
+    * probes, consolidates and installs no bucket its delta does not hit,
+    * and an empty delta has an empty span. Every reader of the
+    * mini-segment — a join's output, aggStep's output, `mergeAligned` —
+    * reads the same shuffle map output (or the same driver rows).
+    *
+    * knownTouched CONTRACT: a caller's `knownTouched` must be a SUPERSET of
+    * the span — it is checked here, on both routes, at no cost, before
+    * anything is installed, and an under-inclusive one fails as
     * DurableKeyedState.merge does: an IllegalArgumentException naming
     * `knownTouched` and the missed buckets. */
-  private[incremental] def span(r: KeyedState.DeltaRoute, knownTouched: Option[Seq[Int]]): Seq[Int] =
-    knownTouched match {
-      case Some(ts) =>
-        val checked = r.rows.map(_.keys.toSeq).orElse(
-          if (spark.conf.getOption(KeyedState.CheckedTouchedConf).contains("true"))
-            Some(touchedBuckets(r.frame))
-          else None)
-        val have = ts.toSet
-        val missing = checked.getOrElse(Nil).filterNot(have)
-        require(missing.isEmpty,
-          s"graft: KeyedState knownTouched=${ts.distinct.sorted} does not cover delta " +
-            s"bucket(s) ${missing.sorted} - the rows there would be dropped")
-        ts
-      case None => r.rows.fold(touchedBuckets(r.frame))(_.keys.toSeq.sorted)
+  private[incremental] def align(r: KeyedState.DeltaRoute,
+                                 knownTouched: Option[Seq[Int]]): Aligned = {
+    // the shuffle route's map stage runs here, and its span is read off it
+    val shuffled = if (r.rows.isDefined) None else routed(r.frame)
+    val span = r.rows.map(_.keys.toSeq).getOrElse(shuffled.fold(Seq.empty[Int])(landed))
+    knownTouched.foreach { ts =>
+      val missing = span.filterNot(ts.toSet)
+      require(missing.isEmpty,
+        s"graft: KeyedState knownTouched=${ts.distinct.sorted} does not cover delta " +
+          s"bucket(s) ${missing.sorted} - the rows there would be dropped")
     }
-
-  /** The delta's UNPINNED segment packed by `groups`, by its route: the
-    * driver route hands each bucket's rows to Spark as one element of a
-    * G-partition parallelize (the rows travel inside the tasks, as a
-    * LocalTableScanExec already ships them); the shuffle route is
-    * `routed`. */
-  private def deltaSegment(r: KeyedState.DeltaRoute,
-                           groups: IndexedSeq[IndexedSeq[Int]]): Segment = r.rows match {
-    case Some(rows) =>
-      val sc = spark.sparkContext
-      val chunks = groups.map(_.map(b => rows.getOrElse(b, Array.empty[InternalRow])))
-      val rdd =
-        if (groups.isEmpty) sc.emptyRDD[Array[InternalRow]]
-        else sc.parallelize(chunks, groups.size).flatMap(_.iterator)
-      new Segment(rdd, BucketPacking.slots(groups))
-    case None => routed(r.frame, groups)
+    val groups = groupsOf(span.sorted.toIndexedSeq)
+    val sc = spark.sparkContext
+    val rdd = (r.rows, shuffled) match {
+      case (Some(rows), _) if groups.nonEmpty =>
+        sc.parallelize(groups.map(_.map(rows)), groups.size).flatMap(_.iterator)
+      case (None, Some(rows)) => new BucketPackRDD(rows, groups)
+      case _ => sc.emptyRDD[Array[InternalRow]]
+    }
+    new Aligned(groups, new Segment(rdd, BucketPacking.slots(groups)))
   }
 
   /** Bucket-pruned read of the given buckets (no job launched). */
@@ -469,12 +511,12 @@ final class KeyedState(val keys: Seq[String], val nBuckets: Int, init: ZSetFrame
   def compact(keep: Option[Column] = None): Unit = {
     // a CALLER-driven compact is a step for the retire clock (code-review
     // r15): install retires the superseded segments at the CURRENT
-    // generation, and the queue only frees on advance() — which previously
-    // ran solely in prepare(). A caller compacting on a periodic cadence
+    // generation, and the queue only frees on advance() — which otherwise
+    // runs only in mergeAligned. A caller compacting on a periodic cadence
     // with no intervening merges (RollingLinearState.gcBefore on an idle
     // stream) accumulated one pinned full-state copy per tick, never
     // released. Advancing here keeps the deferral contract: a view is
-    // valid until the second subsequent merge-or-compact. prepare()'s
+    // valid until the second subsequent merge-or-compact. mergeAligned's
     // automatic cadence compaction calls compactInternal DIRECTLY — its
     // merge already advanced the clock this step, and a second tick would
     // free the previous step's still-visible views one step early.
@@ -497,103 +539,47 @@ final class KeyedState(val keys: Seq[String], val nBuckets: Int, init: ZSetFrame
     if (compactEvery > 0 && gen % compactEvery == 0) compactInternal(None)
   }
 
-  /** Shared step prologue: advance the generation clock (reclaim + periodic
-    * compaction), pin a delta the pin rule cannot prove stable, resolve the
-    * touched-bucket span and its packing (`groupsOf`), and take the
-    * pre-merge view of the touched buckets. Install of the new
-    * segment is the caller's job — `aggStep` uses this to run the segment
-    * build CONCURRENTLY with the output-delta job. */
-  private def prepare(r0: KeyedState.DeltaRoute, knownTouched: Option[Seq[Int]])
-      : (KeyedState.DeltaRoute, IndexedSeq[IndexedSeq[Int]], ZSetFrame) = {
-    // a driver-resident delta's span is resolved — and a knownTouched
-    // checked against its rows — before the step changes anything
-    val driverSpan = if (r0.onDriver) Some(span(r0, knownTouched)) else None
-    advance()
-    // no pre-consolidation of the delta: the merged-segment consolidate
-    // below subsumes it. A delta the pin rule cannot prove stable (a file
-    // scan, a view, a rand() plan) is pinned LAZILY — no job of its own; the
-    // step's first read fills it — so the touched-bucket scan and the merge
-    // read the same rows without recomputing them. A stable delta (a
-    // driver-resident one included) is read as it is. The pin only needs to
-    // live through this merge; it is freed on the retired segments'
-    // deferred schedule.
-    val d = Pinned.stabilized(r0.frame, eager = false)(c => retireQ.retire(c.df.rdd))
-    val r = if (d eq r0.frame) r0 else new KeyedState.DeltaRoute(d, None)
-    val touched = driverSpan.getOrElse(span(r, knownTouched))
-    val groups = groupsOf(touched.distinct.sorted.toIndexedSeq)
-    (r, groups, ZSetFrame.fromDelta(viewOf(groups)))
-  }
-
-  /** Merge a delta into the state, touching only the buckets its keys hash
-    * into. Returns (old content of touched buckets, new content of touched
-    * buckets) for delta-rule use — both are bucket-pruned views, never
-    * full-state scans; valid until the second subsequent merge.
+  /** Merge a delta into the state, touching only the buckets its rows land
+    * in (`align`). Returns (old content of touched buckets, new content of
+    * touched buckets) for delta-rule use — both are bucket-pruned views,
+    * never full-state scans; valid until the second subsequent merge.
     *
-    * `append = false` (default): only the delta is routed into the bucket
-    * layout, and the touched buckets' old content is consolidated with it
-    * IN PLACE into ONE new segment (the shuffle route's map stage plus one
-    * exchange-free consolidation — 2 jobs; the driver route runs only the
-    * consolidation) — rows stay physically unique, at O(|Δ|) routing and
-    * O(touched-bucket rows) scan per step.
-    * `append = true`: the delta becomes a NEW segment prepended to its
-    * buckets' spine — O(|Δ|) per step regardless of bucket size (the
-    * reference's fueled-spine append, spine_fueled.rs:1-45); returned
-    * views may then carry weight-split duplicate rows, so readers that
-    * need physical uniqueness consolidate on read (aggStep consolidates
-    * AFTER `restrictTo`, paying O(restricted), and periodic `compact`
-    * collapses the spine).
-    *
-    * The engine decides the delta's pin (`Pinned.isStable`): a delta it
-    * cannot prove stable is pinned once, lazily, for this merge; a stable
-    * one — driver-resident, or a deterministic plan over pinned data — is
-    * read as it is. */
+    * `append = false` (default): the touched buckets' old content is
+    * consolidated with the delta's mini-segment IN PLACE into ONE new
+    * segment — rows stay physically unique, at O(|Δ|) routing and
+    * O(touched-bucket rows) scan per step. Jobs: the consolidation, plus
+    * the routing map stage on the shuffle route.
+    * `append = true`: the delta's mini-segment is pinned as a NEW segment
+    * prepended to its buckets' spine — O(|Δ|) per step regardless of
+    * bucket size (the reference's fueled-spine append,
+    * spine_fueled.rs:1-45); returned views may then carry weight-split
+    * duplicate rows, so readers that need physical uniqueness consolidate
+    * on read (aggStep consolidates AFTER `restrictTo`, paying
+    * O(restricted), and periodic `compact` collapses the spine). Jobs: the
+    * segment pin, plus the routing map stage on the shuffle route. */
   def merge(delta: ZSetFrame, knownTouched: Option[Seq[Int]] = None,
             append: Boolean = false): (ZSetFrame, ZSetFrame) = {
-    val (r, groups, oldTouched) = prepare(route(delta), knownTouched)
-    val touched = groups.flatten
-    if (append) {
-      // spine append: route ONLY the delta into the bucket layout; old
-      // segments are untouched (no O(bucket) consolidate on the hot path)
-      installAppend(pin(deltaSegment(r, groups)), touched)
-    } else {
-      // consolidate BEFORE installing: state rows must stay physically
-      // unique (weight-merged) or count-style aggregates over the trace
-      // would see duplicate rows. The routed Δ is read unpinned, once, as
-      // the view's extra spine batch — on the shuffle route its exchange is
-      // the step's only one
-      val dView = viewOf(groups, extra = Some(deltaSegment(r, groups)))
-      install(materializeAligned(dView, groups), touched)
-    }
-    val newTouched = ZSetFrame.fromDelta(viewOf(groups))
-    (oldTouched, newTouched)
+    val a = align(route(delta), knownTouched)
+    val oldTouched = ZSetFrame.fromDelta(viewOf(a.groups))
+    mergeAligned(a, append)
+    (oldTouched, ZSetFrame.fromDelta(viewOf(a.groups)))
   }
 
-  /** Route a delta (already pinned if the pin rule asks for it) into this
-    * state's layout for one step, without changing the state: its span,
-    * the span's packing, and the delta's UNPINNED mini-segment. A join
-    * reads the segment in its output job and `mergeAligned` reuses it, so
-    * the shuffle route's exchange runs once (its map output is read by
-    * both), and the driver route's rows ride inside each reader's tasks.
-    * A driver-resident delta's span is exactly its own buckets — a
-    * `knownTouched` is only checked against them — so the join probes and
-    * merges no bucket the delta does not hit; a cluster-resident delta's
-    * span is `knownTouched` or its discovered buckets. */
-  private[incremental] def align(r: KeyedState.DeltaRoute,
-                                 knownTouched: Option[Seq[Int]]): Aligned = {
-    val checked = span(r, knownTouched)
-    val groups = groupsOf(r.rows.fold(checked)(_.keys.toSeq).distinct.sorted.toIndexedSeq)
-    new Aligned(groups, deltaSegment(r, groups))
-  }
-
-  /** The replace `merge` of an `align`ed delta: tick the clock, then
-    * consolidate the span with the delta's mini-segment in place — one job.
-    * An empty delta changes nothing, so it runs nothing and leaves the
-    * clock as it is. */
-  private[incremental] def mergeAligned(a: Aligned): Unit =
+  /** STEP STAGE 3 — merge an `align`ed delta: tick the clock (reclaim +
+    * periodic compaction), then install — in replace mode the span
+    * consolidated with the delta's mini-segment in place (one job; the
+    * consolidation must precede the install, or count-style aggregates over
+    * the trace would see duplicate rows), in append mode the mini-segment
+    * itself, pinned (one job). An empty delta ticks the clock and installs
+    * nothing. */
+  private[incremental] def mergeAligned(a: Aligned, append: Boolean = false): Unit = {
+    advance()
     if (!a.isEmpty) {
-      advance()
-      install(materializeAligned(viewOf(a.groups, extra = Some(a.seg)), a.groups), a.groups.flatten)
+      val touched = a.groups.flatten
+      if (append) installAppend(pin(a.seg), touched)
+      else install(materializeAligned(viewOf(a.groups, extra = Some(a.seg)), a.groups), touched)
     }
+  }
 
   /** Trace PROBE: the state rows living in the buckets touched by `other`'s
     * keys — the reference's indexed-trace lookup during an incremental join
@@ -602,6 +588,11 @@ final class KeyedState(val keys: Seq[String], val nBuckets: Int, init: ZSetFrame
     * cost is O(|other| + touched-bucket rows). The result may contain
     * co-bucketed extra keys; the subsequent equi-join discards them. */
   def probe(other: ZSetFrame): ZSetFrame = view(touchedBuckets(other))
+
+  /** Any bucket currently holding a multi-segment spine (append-mode
+    * residue not yet compacted)? Views over such buckets may carry
+    * weight-split duplicate rows. */
+  private def anySpine: Boolean = bucketSegs.exists(_.lengthCompare(1) > 0)
 
   /** One incremental GENERAL-aggregate step (min/max/top-n/argmax...):
     * merge the delta, then re-aggregate ONLY the touched buckets, emitting
@@ -614,8 +605,8 @@ final class KeyedState(val keys: Seq[String], val nBuckets: Int, init: ZSetFrame
     * stays valid after superseded segments are reclaimed.
     *
     * `knownTouched`: any SUPERSET of the buckets the delta's keys hash
-    * into (see `merge` — an under-inclusive set silently drops rows; the
-    * delta's keys must hash with the state's exact column types).
+    * into, checked (see `align`; the delta's keys must hash with the
+    * state's exact column types).
     *
     * `restrictTo` — TOUCHED-RANGE recompute for windowed aggregates (the
     * radix-tree economics of the reference's rolling aggregate, reference:
@@ -634,31 +625,28 @@ final class KeyedState(val keys: Seq[String], val nBuckets: Int, init: ZSetFrame
     * Z-set minus exactly like co-bucketed untouched keys; rows outside the
     * restriction are unaffected by construction. An under-inclusive
     * predicate silently corrupts the emitted delta (IncrementalSpec gates
-    * the equivalence against the unrestricted path). */
-  /** `append` — run the merge in spine-append mode (see `merge`): the step
+    * the equivalence against the unrestricted path).
+    *
+    * `append` — run the merge in spine-append mode (see `merge`): the step
     * pays O(|Δ| + restricted rows) instead of O(touched-bucket rows). The
     * restricted views are consolidated before `agg` so weight-split spine
     * duplicates are invisible to it — identical aggregate semantics, with
     * the consolidation shuffle sized to the restriction, not the bucket
     * (the radix-tree economics VERDICT r8 #5 asks for: a rolling step's
     * cost follows the touched range, with the spine's deferred compaction
-    * amortizing the physical merge). */
-  /** Any bucket currently holding a multi-segment spine (append-mode
-    * residue not yet compacted)? Views over such buckets may carry
-    * weight-split duplicate rows. */
-  private def anySpine: Boolean = bucketSegs.exists(_.lengthCompare(1) > 0)
-
-  /** JOB FUSION (VERDICT r9 #4 — the per-step driver-job floor is the
+    * amortizing the physical merge).
+    *
+    * JOB SHAPE (VERDICT r9 #4 — the per-step driver-job floor is the
     * local-mode lever, and job COUNT per step is what sets it): the new
-    * touched content is ≡ (oldTouched + Δ) consolidated, so the output-
-    * delta job does not need the new SEGMENT — it reads the same inputs
-    * (old views + the aligned Δ) through its own consolidate. That makes the
-    * segment-materialization job and the output job independent, and they
-    * run CONCURRENTLY as step tasks (`StepTasks`; Spark schedules
-    * concurrent jobs fine; both read only pinned blocks). A step's wall
-    * clock is max(segment, output) instead of segment + output. The delta
-    * is pinned as in `merge`: only when the pin rule cannot prove it
-    * stable. */
+    * touched content is ≡ (oldTouched + Δ) consolidated, so the output job
+    * reads the old view and the old view with the mini-segment as its extra
+    * spine batch, through its own consolidate — it never needs the new
+    * SEGMENT. In replace mode the output job and `mergeAligned` therefore
+    * run CONCURRENTLY as step tasks (`StepTasks`; both read only pinned
+    * blocks and the routed delta), and a step's wall clock is
+    * max(merge, output): 2 jobs, plus the routing map stage on the shuffle
+    * route, which both readers share. In append mode the mini-segment is
+    * pinned and installed first, and the output reads the pinned blocks. */
   def aggStep(delta: ZSetFrame, knownTouched: Option[Seq[Int]] = None,
               restrictTo: Option[Column] = None,
               append: Boolean = false)
@@ -666,11 +654,9 @@ final class KeyedState(val keys: Seq[String], val nBuckets: Int, init: ZSetFrame
     // duplicate-visibility is a property of the STATE, not of this call's
     // merge mode: a replace-mode step after earlier append merges still
     // reads spine duplicates in its old view (ADVICE r9 #1) — key the
-    // consolidation on actual spine depth (oldTouched is a view over the
+    // consolidation on actual spine depth (the old view is over the
     // pre-merge segment lists)
     val preSpined = anySpine
-    val (r, groups, oldTouched) = prepare(route(delta), knownTouched)
-    val touched = groups.flatten
     // Δ BUCKET ALIGNMENT, once: with the delta in the state's own layout,
     // the new side is a single bucket-clustered scan (old spine ⊎ Δ
     // mini-segment via viewOf's `extra`), so BOTH aggregate chains below
@@ -678,13 +664,9 @@ final class KeyedState(val keys: Seq[String], val nBuckets: Int, init: ZSetFrame
     // reference's step economics made literal: a batch is routed to its
     // shards once, and every downstream read/merge happens shard-local
     // (communication/shard.rs; spine_fueled.rs merges within a shard).
-    // The shuffle route pins the mini-segment (its exchange, O(|Δ|), is the
-    // step's only one, and three readers share it); the driver route's
-    // rows ride inside each reader's tasks, so it is pinned only in append
-    // mode, where it is installed as a spine segment that outlives the step.
-    val seg = deltaSegment(r, groups)
-    val miniSeg = if (r.onDriver && !append) seg else pin(seg)
-    val newView = ZSetFrame.fromDelta(viewOf(groups, extra = Some(miniSeg)))
+    val a = align(route(delta), knownTouched)
+    val oldTouched = ZSetFrame.fromDelta(viewOf(a.groups))
+    val newView = ZSetFrame.fromDelta(viewOf(a.groups, extra = Some(a.seg)))
     val (o, n) = restrictTo match {
       case Some(p) => (oldTouched.where(p), newView.where(p))
       case None => (oldTouched, newView)
@@ -693,49 +675,32 @@ final class KeyedState(val keys: Seq[String], val nBuckets: Int, init: ZSetFrame
     // NEW side always consolidates; the OLD side only when spine duplicates
     // can exist (consolidation is sized to the restriction, not the bucket)
     val oc = if (preSpined) o.consolidate else o
+    def out = (agg(n.consolidate) - agg(oc)).localCheckpoint(eager = true)
     if (append) {
-      // the aligned delta IS the merge — install up front; views captured
-      // above are unaffected (viewOf snapshots the spine lists eagerly).
-      // A failed output job leaves the merge installed, matching the
-      // replace path's failure contract.
-      installAppend(miniSeg, touched)
-      (agg(n.consolidate) - agg(oc)).localCheckpoint(eager = true)
+      // the mini-segment IS the merge: pin and install it up front; the
+      // views captured above are unaffected (viewOf snapshots the spine
+      // lists eagerly). A failed output job leaves the merge installed,
+      // matching the replace path's failure contract.
+      mergeAligned(a, append = true)
+      out
     } else {
-      // keep a pinned aligned delta through this step's reads; the deferred
-      // reclaim frees it once the replace segment supersedes it
-      if (!r.onDriver) retireQ.retire(miniSeg.rdd)
-      // the replace consolidation builds AND installs the new segment on a
-      // side task, CONCURRENT with the output job — and is itself
-      // shuffle-free: the spine view is already bucket-aligned, so
-      // consolidating it is scan + agg in place (materializeAligned), each
-      // bucket group staying in its task. A failed output job therefore
-      // still leaves the merge installed; a failed build leaves the state
-      // pre-merge (with the generation advanced) and fails the step.
-      StepTasks.output("segment-build" -> (() =>
-          install(materializeAligned(newView.df, groups), touched))) {
-        (agg(n.consolidate) - agg(oc)).localCheckpoint(eager = true)
-      }
+      // a failed output job still leaves the merge installed; a failed
+      // merge leaves the state pre-merge (with the clock ticked) and
+      // fails the step
+      StepTasks.output("merge" -> (() => mergeAligned(a)))(out)
     }
   }
 }
 
 object KeyedState {
-  /** Debug flag: when "true", `merge` verifies a caller-supplied
-    * `knownTouched` is a superset of a cluster-resident delta's actual
-    * bucket span (the same contract-check philosophy as
-    * ZSetFrame.CheckedWeightsConf); a driver-resident delta is always
-    * checked. */
-  val CheckedTouchedConf = "spark.graft.checkedTouched"
-
   /** A step's delta resolved against one state's layout (`KeyedState.route`):
-    * `frame` is the delta in the state's column order; `rows` holds a
+    * `frame` is the delta in the state's column order (pinned when the pin
+    * rule asked for it); `rows` holds a
     * DRIVER-RESIDENT delta's rows (UnsafeRows) by bucket — the driver
     * route — and is None for a cluster-resident delta, which takes the
     * shuffle route. */
   private[incremental] final class DeltaRoute(val frame: ZSetFrame,
-                                              val rows: Option[Map[Int, Array[InternalRow]]]) {
-    def onDriver: Boolean = rows.isDefined
-  }
+                                              val rows: Option[Map[Int, Array[InternalRow]]])
 
   /** `rdd` holds, per partition, one element per bucket of its group;
     * rows in the INTERNAL UnsafeRow format, so views rebuild DataFrames
@@ -750,8 +715,8 @@ object KeyedState {
 
   /** A step's delta routed into one state's layout (`KeyedState.align`):
     * the packing of its span and its mini-segment. `isEmpty` when the span
-    * is empty (a driver-resident delta with no rows) — a join term or a
-    * merge over it is a no-op. */
+    * is empty (a delta with no rows) — a join term over it is dropped and
+    * its merge only ticks the clock. */
   private[incremental] final class Aligned(val groups: IndexedSeq[IndexedSeq[Int]],
                                            val seg: Segment) {
     def isEmpty: Boolean = groups.isEmpty
@@ -777,12 +742,11 @@ object KeyedState {
   /** DRIVER-SIDE bucket id for a row of Long key values — exactly what
     * `repartition(n, keys)` computes for LongType key columns: murmur3
     * chained across columns from seed 42 (Spark's Murmur3Hash), then
-    * positive mod. A CDC-style caller that knows its delta's keys (it
-    * always does — they define the delta) maps them through this and
-    * hands `knownTouched` to merge/aggStep, eliminating the per-step
-    * bucket-DISCOVERY action — in local mode one whole job of the step's
-    * 2-job floor (the reference's shard routing is likewise computed from
-    * the key, never discovered from the data: communication/shard.rs).
+    * positive mod. A caller that knows its delta's keys (a CDC source
+    * always does — they define the delta) maps them through this to
+    * address buckets on the driver: a `view` span, or a `knownTouched`
+    * that a step checks against its delta's rows (the reference's shard
+    * routing is likewise computed from the key: communication/shard.rs).
     * KeyedStateSpec pins this against the SQL `hash()` builtin. */
   def bucketOfLongs(keyVals: Seq[Long], nBuckets: Int): Int = {
     val h = keyVals.foldLeft(42) { (seed, v) =>

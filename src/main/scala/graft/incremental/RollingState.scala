@@ -61,8 +61,8 @@ final class RollingLinearState(init: ZSetFrame, keyCol: String, tsCol: String,
     * |ts| beyond 2^53 (nanosecond epochs are ~1.7e18) the numerator itself
     * rounds in double and the computed chunk diverges from the exact
     * driver-side Math.floorDiv that bucketsFor/dBuckets use — making
-    * knownTouched under-inclusive, KeyedState's documented silent-drop
-    * corruption mode. IntegralDivide on the pmod-floored numerator is
+    * knownTouched under-inclusive, which KeyedState refuses (the step
+    * fails). IntegralDivide on the pmod-floored numerator is
     * exact over the full Long range (numerator divisible by chunkLen, and
     * pmod's non-negative remainder turns truncation into floor). */
   private def chunkOf(ts: Column): Column = {
@@ -81,9 +81,9 @@ final class RollingLinearState(init: ZSetFrame, keyCol: String, tsCol: String,
   // HARD TYPE CONTRACT (ADVICE r10): bucketsFor routes buckets through
   // KeyedState.bucketOfLongs, which reproduces SQL hash() ONLY for LongType
   // columns. A caller handing touchedKeys with e.g. an IntegerType key would
-  // make knownTouched under-inclusive and KeyedState would silently DROP the
-  // delta rows hashing elsewhere (the documented corruption mode) — state
-  // and output diverge with no error. Fail at construction instead; the
+  // make knownTouched under-inclusive (KeyedState refuses it, but only
+  // mid-stream, when a step's rows first hash elsewhere). Fail at
+  // construction instead; the
   // value column must be Long anyway (caller-scaled integer sums) and the
   // chunk column is derived as long from a long ts.
   locally {

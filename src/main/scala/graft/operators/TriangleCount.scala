@@ -57,18 +57,17 @@ final class TriangleCountState(spark: SparkSession, nBuckets: Int = 32) {
     * maintenance), so a plan that re-evaluates to different rows would
     * silently diverge the traces from the emitted deltas. The engine pins
     * exactly the deltas the pin rule (`Pinned.isStable`) cannot prove
-    * stable, lazily — the touched-bucket job fills the pin, so no barrier
-    * is added to the gated tri-track floor; a stable delta (every in-repo
-    * caller's) is read as it is. The step's pins (that one and the wedge
-    * delta) are released once the triangle delta is materialized. */
+    * stable, lazily — the edge merge's routing job fills the pin, so no
+    * barrier is added to the gated tri-track floor; a stable delta (every
+    * in-repo caller's) is read as it is. The step's pins (that one and the
+    * wedge delta) are released once the triangle delta is materialized. */
   def advance(delta: ZSetFrame): ZSetFrame = {
     val pins = scala.collection.mutable.Buffer.empty[ZSetFrame]
     val dE = Pinned.stabilized(delta, eager = false)(pins += _)
     try {
       // J1: wedge delta through the u-keyed self-join. merge() returns the
       // old/new content of exactly the delta's buckets — both probe views.
-      val touched = edgeU.touchedBuckets(dE)
-      val (eOldT, eNewT) = edgeU.merge(dE, knownTouched = Some(touched))
+      val (eOldT, eNewT) = edgeU.merge(dE)
       def roleB(z: ZSetFrame) = ZSetFrame.fromDelta(
         z.df.select(col("u"), col("v").as("w"), col(W)))
       val dW = (dE.join(roleB(eOldT), Seq("u")) + eNewT.join(roleB(dE), Seq("u")))

@@ -14,9 +14,12 @@ import org.apache.spark.sql.SparkSession
   * blocks. `views` of a stage are the KeyedState bucket views it reads; a
   * view's `viewParts` is its partition (task) count. `broadcastJobs` of
   * `jobs` built a broadcast relation: Spark tags each such job with
-  * `broadcast exchange (runId …)` in `spark.job.tags`. */
+  * `broadcast exchange (runId …)` in `spark.job.tags`. `pins` counts the
+  * RDDs the code newly persisted and left persisted (a pinned delta,
+  * output or segment), from the context's persistent-RDD registry, which
+  * costs no job. */
 final case class Shape(jobs: Int, tasks: Int, stages: Seq[StageShape], cachedRecordsRead: Long,
-                       broadcastJobs: Int)
+                       broadcastJobs: Int, pins: Int)
 final case class StageShape(tasks: Int, viewParts: Seq[Int])
 
 /** Counts the jobs, tasks and stages a step starts, attributed by a
@@ -81,11 +84,13 @@ object StepShape {
     val sc = spark.sparkContext
     val tag = s"shape-${tagSeq.incrementAndGet()}"
     ListenerBusAccess.drain(sc)
+    val persisted = sc.getPersistentRDDs.keySet
     sc.setLocalProperty(TagKey, tag)
     val a = try f finally sc.setLocalProperty(TagKey, null)
+    val pins = (sc.getPersistentRDDs.keySet -- persisted).size
     ListenerBusAccess.drain(sc)
     val c = Option(byTag.remove(tag)).getOrElse(new Counts)
     (a, Shape(c.jobs.get, c.tasks.get,
-      c.stages.asScala.toSeq.sortBy(_._1).map(_._2), c.records.get, c.broadcastJobs.get))
+      c.stages.asScala.toSeq.sortBy(_._1).map(_._2), c.records.get, c.broadcastJobs.get, pins))
   }
 }

@@ -23,6 +23,14 @@ final class ZSetFrame private (val df: DataFrame) extends Serializable {
   import ZSetFrame.W
 
   def spark: SparkSession = df.sparkSession
+
+  /** A driver-resident delta's rows as `KeyedState.route` filed them, by
+    * the state layout they were filed for: every state of that layout a
+    * step feeds this frame reuses them instead of re-running the route.
+    * Only immutable driver-route rows are kept, and they live as long as
+    * this frame. */
+  @transient private[graft] lazy val routeMemo =
+    new java.util.concurrent.ConcurrentHashMap[AnyRef, AnyRef]()
   def dataCols: Array[String] = df.columns.filter(_ != W)
   private def dataColumns: Seq[Column] = dataCols.toSeq.map(col)
   def weight: Column = col(W)

@@ -1,9 +1,15 @@
 package graft.incremental
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{AttributeReference, BoundReference}
+import org.apache.spark.sql.catalyst.plans.physical.UnknownPartitioning
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.GraftSqlShim
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 import graft.core.ZSetFrame
+import graft.plans.{BucketKernels, BucketUnionRDD}
 
 /** Deterministic step-loop incremental evaluation — the batch-mode twin of
   * the reference's `DBSPHandle::step` (reference:
@@ -63,22 +69,26 @@ object Incremental {
     * CO-PARTITIONED: each delta takes its trace's one step path
     * (`KeyedState.route` → `align` → `mergeAligned`): it is routed ONCE
     * into the trace's packed bucket layout, and both terms join inside that
-    * layout — the reference's sharded join, where a delta meets the other
-    * trace in the shard both were routed to (operator/join.rs:180,
-    * communication/shard.rs):
-    *   ΔA ⋈ B_old — ΔA's mini-segment against B's view over ΔA's groups;
-    *   A_new ⋈ ΔB — A's pre-merge view over ΔB's groups with ΔA read as its
-    *                extra spine batch, against ΔB's mini-segment.
-    * The two traces share key columns, key types and bucket count, so both
-    * sides of a term have one layout and Catalyst plans each as a
-    * shuffled-hash join with NO exchange (BucketClusteredPartitioning's
-    * layout compatibility; the delta side is the hash build side). A step
-    * runs the output job and the two merges CONCURRENTLY (`StepTasks`),
-    * each merge reusing its delta's mini-segment: 3 jobs when both deltas
-    * are driver-resident, plus one routing-shuffle map job per
-    * cluster-resident delta. A delta's span is the buckets its rows land
-    * in (a knownTouched* is only checked against them), so a delta with no
-    * rows adds no term and its merge installs nothing.
+    * layout, bucket by bucket — the reference's sharded join, where a delta
+    * meets the other trace in the shard both were routed to
+    * (operator/join.rs:180, communication/shard.rs):
+    *   ΔA ⋈ B_old — per bucket of ΔA's span, a hash table on ΔA's chunk
+    *                probed by B's pre-merge spine;
+    *   A_new ⋈ ΔB — per bucket of ΔB's span, a hash table on ΔB's chunk
+    *                probed by A's pre-merge spine plus ΔA.
+    * The two traces share key columns, key types and bucket count, so a
+    * bucket of one is the same bucket of the other. Both terms run as one
+    * kernel job (`BucketKernels.Join` over the slot reader): no Dataset is
+    * built, no query is planned, nothing is exchanged or broadcast. The
+    * output has exactly `ZSetFrame.join`'s columns, and its weight is
+    * `ZSetFrame.weightTimes`'s expression, so overflow under ANSI and under
+    * `spark.graft.checkedWeights` fails as the join does. A step runs the
+    * output job and the two merges CONCURRENTLY (`StepTasks`), each merge
+    * reusing its delta's mini-segment: 3 jobs when both deltas are
+    * driver-resident, plus one routing-shuffle map job per cluster-resident
+    * delta. A delta's span is the buckets its rows land in (a knownTouched*
+    * is only checked against them), so a delta with no rows adds no term
+    * and its merge installs nothing.
     *
     * DELTA PIN: each trace's `route` decides its delta's pin — a delta the
     * pin rule cannot prove stable is pinned ONCE, lazily, and the routing
@@ -95,33 +105,50 @@ object Incremental {
     require(aSt ne bSt,
       "graft: joinDeltaKeyed needs two traces - its two merges run concurrently and " +
         "would race on one state; keep the second side in a KeyedState of its own")
-    require(aSt.nBuckets == bSt.nBuckets && aSt.keys == bSt.keys,
-      "join traces must share key columns and bucket count")
+    require(aSt.nBuckets == bSt.nBuckets && aSt.keys == bSt.keys && keys.toSet == aSt.keys.toSet,
+      "join traces must share key columns and bucket count, and join on exactly those keys")
     require(aSt.keyTypes == bSt.keyTypes,
       s"graft: joinDeltaKeyed traces must share key types (a key hashes by its type): " +
         s"${aSt.keys.zip(aSt.keyTypes).map { case (k, t) => s"$k ${t.sql}" }.mkString(", ")} vs " +
         s"${bSt.keys.zip(bSt.keyTypes).map { case (k, t) => s"$k ${t.sql}" }.mkString(", ")}")
     val a = aSt.align(aSt.route(dA), knownTouchedA)
     val b = bSt.align(bSt.route(dB), knownTouchedB)
-    // the PRE-merge views are taken here, before the merges start (a view
-    // snapshots its buckets' segment lists); the terms over them are
-    // composed and planned on the output task while the merges run
+    val spark = dA.spark
+    val (sa, sb) = (aSt.schema, bSt.schema)
+    // JoinedRow(A row, B row) → ZSetFrame.join's columns: the keys, A's
+    // other data columns, B's other data columns, the weight product
+    val fields = sa.fields ++ sb.fields
+    val attrs = fields.indices.map { i =>
+      val name = if (i == sa.size - 1) "__wl" else if (i == fields.size - 1) "__wr" else s"_c$i"
+      AttributeReference(name, fields(i).dataType, fields(i).nullable)()
+    }
+    val weight = GraftSqlShim.boundExpression(spark,
+      ZSetFrame.weightTimes(spark, col("__wl"), col("__wr")), attrs)
+    def others(s: StructType) = s.fieldNames.indices.init.filterNot(i => keys.contains(s(i).name))
+    val cols = keys.map(sa.fieldIndex) ++ others(sa) ++ others(sb).map(_ + sa.size)
+    val out = cols.map(i => BoundReference(i, fields(i).dataType, fields(i).nullable)) :+ weight
+    val schema = StructType(cols.map(fields) :+ StructField(ZSetFrame.W, LongType, weight.nullable))
+    def term(d: KeyedState.Aligned, deltaIsA: Boolean, other: Seq[BucketUnionRDD.Member]) = {
+      val kernel = new BucketKernels.Join(keys.map(sa(_).dataType), keys.map(sa.fieldIndex), keys.map(sb.fieldIndex),
+        deltaIsA, out)
+      BucketUnionRDD(spark.sparkContext, d.groups, Seq(Seq(d.seg.rdd -> d.seg.slots.get _), other))
+        .mapPartitions(kernel.apply)
+    }
+    // the PRE-merge spines are snapshotted here, before the merges start
     val terms = Seq(
-      // ΔA ⋈ B_old
-      a -> (aSt.deltaView(a).hint("shuffle_hash"), bSt.viewOf(a.groups)),
-      // A_new ⋈ ΔB
-      b -> (aSt.viewOf(b.groups, extra = Some(a.seg)), bSt.deltaView(b).hint("shuffle_hash")))
-      .collect { case (d, (l, r)) if !d.isEmpty => (l, r) }
-    // eager: the emitted join delta reads views that are only valid until
-    // the second subsequent merge (KeyedState reclaims superseded
+      Option.when(!a.isEmpty)(term(a, deltaIsA = true, bSt.spine(a.groups))),   // ΔA ⋈ B_old
+      Option.when(!b.isEmpty)(term(b, deltaIsA = false, aSt.spine(b.groups, Some(a.seg))))) // A_new ⋈ ΔB
+      .flatten
+    // eager: the emitted join delta reads segments that are only valid
+    // until the second subsequent merge (KeyedState reclaims superseded
     // segments) — materialize it while the merges run
     StepTasks.output(
         "merge-a" -> (() => aSt.mergeAligned(a)),
         "merge-b" -> (() => bSt.mergeAligned(b))) {
-      def join(l: DataFrame, r: DataFrame) = ZSetFrame.fromDelta(l).join(ZSetFrame.fromDelta(r), keys)
-      terms.map((join _).tupled).reduceOption(_ + _)
-        .getOrElse(emptyLike(join(aSt.viewOf(Vector.empty), bSt.viewOf(Vector.empty))))
-        .localCheckpoint(eager = true)
+      val rows = Pinned.pinNow(if (terms.isEmpty) spark.sparkContext.emptyRDD[InternalRow]
+        else spark.sparkContext.union(terms))
+      ZSetFrame.fromDelta(GraftSqlShim.internalDf(spark, rows, schema,
+        _ => UnknownPartitioning(rows.getNumPartitions)))
     }
   }
 

@@ -7,10 +7,11 @@ import org.apache.spark.sql.catalyst.expressions.{Attribute, BoundReference, Uns
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.{Chunk, GraftSqlShim}
 import org.apache.spark.sql.types.DataType
 
 import graft.core.ZSetFrame
-import graft.plans.{BucketClusteredPartitioning, BucketLayout, BucketPackRDD, BucketPacking, BucketSlot}
+import graft.plans.{BucketClusteredPartitioning, BucketKernels, BucketPackRDD, BucketPacking, BucketSlot, BucketUnionRDD}
 
 /** Key-partitioned incremental state — the "trace" of a stateful operator,
   * sharded by the operator key so one delta step costs O(|Δ| + |touched
@@ -30,8 +31,9 @@ import graft.plans.{BucketClusteredPartitioning, BucketLayout, BucketPackRDD, Bu
   * a contiguous group of the span, and stores ONE ELEMENT PER BUCKET of its
   * group — that bucket's rows as an array. Each bucket therefore points at
   * (segment, partition, slot); reading it pulls one element of one pinned
-  * partition (BucketUnionRDD) — its packed neighbours' rows are never
-  * iterated, nothing is recomputed or rescanned — and a step over k touched
+  * partition (BucketUnionRDD, the one slot reader) — its packed
+  * neighbours' rows are never iterated, nothing is recomputed or
+  * rescanned — and a step over k touched
   * buckets runs G tasks per job, not k (the reference shards its trace one
   * shard per worker, not per fine bucket).
   *
@@ -53,7 +55,12 @@ import graft.plans.{BucketClusteredPartitioning, BucketLayout, BucketPackRDD, Bu
   *     packing and the delta's UNPINNED mini-segment;
   *  3. the step's reads over the aligned views, then `mergeAligned` — tick
   *     the clock and install the mini-segment (append) or the span
-  *     consolidated with it in place (replace).
+  *     consolidated with it in place (replace) by the MERGE KERNEL
+  *     (`BucketKernels.Consolidate` over the slot reader, bucket by
+  *     bucket): the merge builds no Dataset and plans no query — its shape
+  *     never changes between steps, so it is compiled once per task, not
+  *     planned per step. Only a caller's own `agg` (aggStep) runs on
+  *     Catalyst.
   * TWO ROUTES into the layout, both building the same mini-segment:
   *  - DRIVER route — the delta is driver-resident: its plan is
   *    deterministic and folds to a LocalRelation (a `Seq.toDF` delta, a
@@ -85,8 +92,11 @@ import graft.plans.{BucketClusteredPartitioning, BucketLayout, BucketPackRDD, Bu
   * are unpersisted TWO merges later, so pinned storage tracks live state,
   * not step count. Because a bucket move supersedes only that bucket's
   * slot (the rest of the old segment stays live and pinned whole), every
-  * `compactEvery` merges all buckets are compacted into one fresh segment,
-  * bounding stale-slot carry to the inter-compaction window.
+  * `compactEvery` merges all buckets are compacted into one fresh segment
+  * (the same merge kernel over every bucket), bounding stale-slot carry to
+  * the inter-compaction window. A segment's per-bucket element is a
+  * `Chunk`, which reports its own footprint to the block store, so pinning
+  * a segment never walks its rows to size it.
   *
   * LIFECYCLE CONTRACT: DataFrames returned by `view`/`probe`/`merge` are
   * bucket-pruned views over pinned segments — valid until the SECOND
@@ -94,9 +104,9 @@ import graft.plans.{BucketClusteredPartitioning, BucketLayout, BucketPackRDD, Bu
   * this state; a step's delta pin is released on the same schedule. Step
   * outputs that must outlive that window are eagerly materialized
   * (`aggStep` does this for its emitted delta; `Incremental.joinDeltaKeyed`
-  * likewise, joining each delta's mini-segment against the other state's
-  * view over the same bucket groups — co-partitioned, no exchange — while
-  * both merges run beside its output job).
+  * likewise, joining each delta's mini-segment bucket by bucket against the
+  * other state's spine in a kernel — no query, no exchange — while both
+  * merges run beside its output job).
   *
   * On a real cluster the same layout is a bucketed/partitioned state table
   * with dynamic partition overwrite of touched buckets — that rendition is
@@ -110,7 +120,7 @@ final class KeyedState(val keys: Seq[String], val nBuckets: Int, init: ZSetFrame
   /** Canonical column order: data columns as declared by `init`, then weight. */
   private val colsInOrder: Seq[String] = init.dataCols.toSeq :+ ZSetFrame.W
   private val dataCols: Seq[String] = init.dataCols.toSeq
-  private val schema = init.df.select(colsInOrder.map(col): _*).schema
+  private[incremental] val schema = init.df.select(colsInOrder.map(col): _*).schema
 
   private def keyExprs: Seq[Column] = keys.map(col)
 
@@ -139,11 +149,12 @@ final class KeyedState(val keys: Seq[String], val nBuckets: Int, init: ZSetFrame
   private val retireQ = new RetireQueue[RDD[_]](unpersistTree)
   private def gen: Long = retireQ.generation
 
-  { // seed segment: the (usually empty) initial state, bucketed
+  { // seed segment: the (usually empty) initial state, bucketed and
+    // consolidated by the merge kernel
     val groups = groupsOf(0 until nBuckets)
-    val rows = routed(init, consolidate = true)
-      .getOrElse(spark.sparkContext.parallelize(Seq.empty[InternalRow], nBuckets))
-    install(pin(new Segment(new BucketPackRDD(rows, groups), BucketPacking.slots(groups))),
+    val packed = routed(init).map(rows =>
+      new Segment(new BucketPackRDD(rows, groups), BucketPacking.slots(groups)))
+    install(consolidated(groups, packed.toSeq.map(s => s.rdd -> s.slots.get _), None),
       0 until nBuckets)
   }
 
@@ -193,12 +204,9 @@ final class KeyedState(val keys: Seq[String], val nBuckets: Int, init: ZSetFrame
   private def groupsOf(sorted: IndexedSeq[Int]): IndexedSeq[IndexedSeq[Int]] =
     BucketPacking.groups(sorted, spark.sparkContext.defaultParallelism)
 
-  /** Pin a segment's packed partitions in memory (one job, G tasks). */
-  private def pin(seg: Segment): Segment = {
-    seg.rdd.localCheckpoint()
-    seg.rdd.count()
-    seg
-  }
+  /** Pin a segment's packed partitions in memory (one job, G tasks;
+    * `Pinned.pinNow`). */
+  private def pin(seg: Segment): Segment = { Pinned.pinNow(seg.rdd); seg }
 
   /** The SHUFFLE route (see the class scaladoc for the two routes): `z`'s
     * rows in the bucket layout by key hash — one partition per bucket —
@@ -218,43 +226,14 @@ final class KeyedState(val keys: Seq[String], val nBuckets: Int, init: ZSetFrame
     * this either: a shard writes only the shards a batch touches
     * (communication/shard.rs), not one output per possible shard. Under AQE
     * the shuffle's map stage runs here (its own job); the reduce side runs
-    * with whichever job reads the result.
-    *
-    * `consolidate = true` weight-merges to physically-unique rows INSIDE
-    * the bucket layout: repartition first, THEN groupBy — the repartition's
-    * HashPartitioning(keys) satisfies the consolidate's full-column
-    * clustering, so the groupBy adds NO second exchange. Same rows out
-    * either way — grouping is on all data columns and zero-net rows drop
-    * after the sum. */
-  private def routed(z: ZSetFrame, consolidate: Boolean = false): Option[RDD[InternalRow]] = {
-    // the consolidate below relies on HashPartitioning's SUBSET rule
-    // (grouping by dataCols ⊇ keys is satisfied by the key repartition);
-    // spark.sql.requireAllClusterKeysForDistribution=true disables that
-    // rule and Catalyst would insert a hash(dataCols) re-shuffle AFTER the
-    // bucket repartition — and when its width happens to equal nBuckets
-    // the partition-count check below cannot catch it, so a MIS-BUCKETED
-    // segment would install silently (code-review r15). The whole-plan
-    // Exchange check materializeAligned uses is unavailable here (a
-    // delta's own upstream plan may legitimately contain exchanges), so
-    // fail fast on the conf instead — read per call, it can change
-    // mid-session.
-    require(!spark.conf.get(
-        "spark.sql.requireAllClusterKeysForDistribution", "false").toBoolean,
-      "graft: KeyedState requires spark.sql.requireAllClusterKeysFor" +
-        "Distribution=false (the bucket layout relies on HashPartitioning's " +
-        "subset rule; with it disabled a post-repartition re-shuffle can " +
-        "silently mis-bucket segments)")
-    val bucketed = z.df.select(colsInOrder.map(col): _*)
-      .repartition(nBuckets, keyExprs: _*)
-    val ds = if (consolidate) {
-      bucketed.groupBy(dataCols.map(col): _*)
-        .agg(sum(ZSetFrame.W).as(ZSetFrame.W))
-        .where(col(ZSetFrame.W) =!= 0L)
-        .select(colsInOrder.map(col): _*)
-    } else bucketed
-    // INTERNAL rows (what Dataset.checkpoint itself does): no Row
-    // conversion on write or on any later view read
-    val internal = ds.queryExecution.toRdd
+    * with whichever job reads the result. */
+  private def routed(z: ZSetFrame): Option[RDD[InternalRow]] = {
+    // the repartition is the plan's last exchange (nothing above it asks
+    // for a distribution), so partition b holds exactly bucket b; INTERNAL
+    // rows (what Dataset.checkpoint itself does): no Row conversion on
+    // write or on any later view read
+    val internal = z.df.select(colsInOrder.map(col): _*)
+      .repartition(nBuckets, keyExprs: _*).queryExecution.toRdd
     if (internal.getNumPartitions == nBuckets) Some(internal) else {
       // AQE's empty-relation propagation folds an ALL-EMPTY build (the seed
       // of a fresh state, or a delta with no rows) into a 0/1-partition
@@ -284,62 +263,45 @@ final class KeyedState(val keys: Seq[String], val nBuckets: Int, init: ZSetFrame
     bytes.indices.filter(bytes(_) > 0)
   }
 
-  /** Consolidate an ALREADY bucket-aligned view (a `viewOf(groups, …)`
-    * result) into a pinned segment packed by the same `groups` WITHOUT re-shuffling: the view's
-    * declared clustering satisfies the consolidate's grouping, so the build
-    * is scan + agg in place — the reference's shard-local spine merge
-    * (spine_fueled.rs: batches of one shard merge within the shard; nothing
-    * crosses shards). The aggregate keeps the view's partitions (one per
-    * bucket group) but mixes a group's buckets, so each output row carries
-    * its bucket id and the pack splits the group back into per-bucket
-    * slots. */
-  private def materializeAligned(view: DataFrame,
-                                 groups: IndexedSeq[IndexedSeq[Int]]): Segment = {
-    // empty-delta step: no touched buckets, nothing to consolidate. Without
-    // this guard the empty view's consolidate plans a shuffle whose width is
-    // spark.sql.shuffle.partitions when AQE is off (AQE-on folds it to an
-    // EmptyRelation), and the layout-restore below would need a 0-slice
-    // parallelize — which throws.
+  /** The merge kernel (`BucketKernels.Consolidate`) over one set of
+    * segments read bucket by bucket in `groups`' packing, pinned as a new
+    * segment packed by the same groups — the reference's shard-local spine
+    * merge (spine_fueled.rs: batches of one shard merge within the shard;
+    * nothing crosses shards). One job of G tasks, with no query planned.
+    * `keep` (a retention predicate over the data columns) drops the
+    * consolidated rows failing it. */
+  private def consolidated(groups: IndexedSeq[IndexedSeq[Int]], set: Seq[BucketUnionRDD.Member],
+                           keep: Option[Column]): Segment = {
     if (groups.isEmpty)
-      return new Segment(spark.sparkContext.emptyRDD[Array[InternalRow]], Map.empty)
-    val ds = view.groupBy(dataCols.map(col): _*)
-      .agg(sum(ZSetFrame.W).as(ZSetFrame.W))
-      .where(col(ZSetFrame.W) =!= 0L)
-      .select(colsInOrder.map(col) :+ bucketId.as("__b"): _*)
-    // SOUNDNESS GATE (ADVICE r10): partition COUNT alone cannot prove the
-    // aligned layout survived planning — an exchange whose width happens to
-    // equal the group count (small touched spans vs shuffle.partitions, or
-    // spark.sql.requireAllClusterKeysForDistribution=true defeating the
-    // subset rule in BucketClusteredPartitioning.satisfies0) would silently
-    // move rows away from their group's partition and the pack would file
-    // them under the wrong slots. The declared clustering makes this plan
-    // exchange-free by construction, so any Exchange in it is a broken
-    // invariant — fail loudly instead of corrupting state. (String check on
-    // the already-planned physical plan: no extra planning work.)
-    val planStr = org.apache.spark.sql.graft.GraftSqlShim.executedPlanString(ds)
-    require(!planStr.contains("Exchange"),
-      "graft: materializeAligned planned an Exchange — the bucket-aligned " +
-        "view lost its declared clustering; refusing to pin a mis-indexed " +
-        s"segment. Plan:\n$planStr")
-    val internal0 = ds.queryExecution.toRdd
-    val internal = if (internal0.getNumPartitions == groups.size) internal0 else {
-      // same AQE empty-relation fold as `routed`: an all-empty
-      // consolidation loses the layout; restore an empty aligned RDD
-      require(internal0.take(1).isEmpty,
-        s"graft: aligned layout lost (${internal0.getNumPartitions} parts," +
-          s" expected ${groups.size}) on non-empty data")
-      spark.sparkContext.parallelize(Seq.empty[InternalRow], groups.size)
-    }
-    pin(new Segment(BucketPacking.byRowBucket(internal, groups, schema),
-      BucketPacking.slots(groups)))
+      return new Segment(spark.sparkContext.emptyRDD[Chunk], Map.empty)
+    val bound = keep.map(GraftSqlShim.boundExpression(spark, _, DataTypeUtils.toAttributes(schema)))
+    val kernel = new BucketKernels.Consolidate(dataCols.map(schema(_).dataType), bound,
+      spark.sessionState.conf.ansiEnabled)
+    val reads = BucketUnionRDD(spark.sparkContext, groups, Seq(set))
+    pin(new Segment(reads.mapPartitionsWithIndex(kernel.apply), BucketPacking.slots(groups)))
+  }
+
+  /** The slot-reader set of `groups`' buckets: every segment of their
+    * spines, plus `extra` — an uninstalled segment (a step's routed Δ)
+    * read as if appended to every bucket it covers, so a step sees old ∪ Δ
+    * as one read. The segment may be packed by other groups than the
+    * read's: each bucket's slot is read where the segment holds it. The
+    * spine lists are snapshotted here. */
+  private[incremental] def spine(groups: IndexedSeq[IndexedSeq[Int]],
+                                 extra: Option[Segment] = None): Seq[BucketUnionRDD.Member] = {
+    val lists = groups.flatten.map(b => b -> bucketSegs(b)).toMap
+    (lists.values.flatten.toSeq.distinct.map(s => s.rdd -> ((b: Int) =>
+      if (lists.get(b).exists(_.contains(s))) s.slots.get(b) else None))) ++
+      extra.map(x => x.rdd -> x.slots.get _)
   }
 
   /** DataFrame over exactly the buckets of `groups` — slot reads of their
     * pinned segments; no job is launched and no other bucket is scanned.
     * The view has one partition per group; partition j concatenates, for
-    * each bucket of group j, its slot in every segment of its spine.
-    * Appended buckets may carry weight-split duplicate rows — consolidate
-    * on read where physical uniqueness matters.
+    * each bucket of group j, its slot in every segment of its spine (and
+    * in `extra`, see `spine`). Appended buckets may carry weight-split
+    * duplicate rows — consolidate on read where physical uniqueness
+    * matters.
     *
     * ONE scan for the whole view (BucketUnionRDD, narrow). The resulting
     * frame DECLARES the key clustering the bucket layout guarantees
@@ -349,46 +311,15 @@ final class KeyedState(val keys: Seq[String], val nBuckets: Int, init: ZSetFrame
     * aggregation probes shards in place, never re-shards). Correctness is
     * untouched: the declared property (equal keys co-located) holds because
     * a key lives in exactly one bucket and a bucket in exactly one group,
-    * and KeyedStateSpec's layout law and readback gates pin it.
-    *
-    * `extra`: an uninstalled segment (a step's routed Δ) read as if
-    * appended to every bucket it covers — lets a step see old ∪ Δ as one
-    * clustered scan and consolidate it in place. The segment may be packed
-    * by other groups than the view's: each bucket's slot is read where the
-    * segment holds it. */
+    * and KeyedStateSpec's layout law and readback gates pin it. */
   private[incremental] def viewOf(groups: IndexedSeq[IndexedSeq[Int]],
                                   extra: Option[Segment] = None): DataFrame = {
-    val listed = groups.flatten.flatMap(bucketSegs(_)).distinct
-    scan(groups, (listed ++ extra).distinct, (s, b) =>
-      bucketSegs(b).contains(s) || extra.exists(x => (x eq s) && x.slots.contains(b)))
-  }
-
-  /** A step's aligned delta ALONE, as a scan in its span's layout that
-    * OFFERS that layout to a join (BucketClusteredPartitioning): joined with
-    * another state's `viewOf` the same groups on the key columns, Catalyst
-    * plans the join with no exchange — each group's delta rows meet that
-    * group's trace rows in one task. */
-  private[incremental] def deltaView(a: Aligned): DataFrame =
-    scan(a.groups, Seq(a.seg), (s, b) => s.slots.contains(b), offersLayout = true)
-
-  /** ONE narrow scan over `segs` (BucketUnionRDD): partition j reads, for
-    * each bucket of group j, its slot in every segment that `carries` it,
-    * and the frame declares the layout's key clustering. */
-  private def scan(groups: IndexedSeq[IndexedSeq[Int]], segs: Seq[Segment],
-                   carries: (Segment, Int) => Boolean,
-                   offersLayout: Boolean = false): DataFrame = {
-    if (groups.isEmpty || segs.isEmpty)
+    if (groups.isEmpty)
       return spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
-    val reads = groups.map { grp =>
-      segs.map { s =>
-        grp.filter(carries(s, _)).map(s.slots).groupBy(_.part).toArray.sortBy(_._1)
-          .map { case (p, ss) => (p, ss.map(_.slot).sorted.toArray) }
-      }.toArray
-    }.toArray
-    val union = new graft.plans.BucketUnionRDD(segs.map(_.rdd), reads)
-    org.apache.spark.sql.graft.GraftSqlShim.internalDf(spark, union, schema,
-      attrs => BucketClusteredPartitioning(keys.map(k => attrs(schema.fieldIndex(k))),
-        BucketLayout(nBuckets, groups), offersLayout))
+    val rows = BucketUnionRDD(spark.sparkContext, groups, Seq(spine(groups, extra)))
+      .mapPartitions(_.flatMap(_.rows))
+    GraftSqlShim.internalDf(spark, rows, schema, attrs =>
+      BucketClusteredPartitioning(keys.map(k => attrs(schema.fieldIndex(k))), groups.size))
   }
 
   /** The full state as a Z-set (final read-out; scans every bucket). */
@@ -421,7 +352,24 @@ final class KeyedState(val keys: Seq[String], val nBuckets: Int, init: ZSetFrame
     * `align` is the step's only read of it and fills the pin. The pin is
     * retired into this state's queue and freed two steps on, with the
     * segments the step supersedes. */
-  private[incremental] def route(delta: ZSetFrame): KeyedState.DeltaRoute = {
+  private[incremental] def route(delta: ZSetFrame): KeyedState.DeltaRoute =
+    delta.routeMemo.get(layout) match {
+      case rows: Map[Int, Chunk] @unchecked => new KeyedState.DeltaRoute(delta, Some(rows))
+      case _ =>
+        val r = resolve(delta)
+        r.rows.foreach(delta.routeMemo.put(layout, _))
+        r
+    }
+
+  /** What a driver route's filed rows depend on: the key columns, the
+    * columns in order with their types, and the bucket count. States of
+    * one layout (a view and a join trace over the same facts) file a delta
+    * identically, so a step routes a driver-resident delta once, whatever
+    * the number of states it feeds. */
+  private val layout: AnyRef =
+    (keys, schema.fields.map(f => (f.name, f.dataType)).toSeq, nBuckets)
+
+  private def resolve(delta: ZSetFrame): KeyedState.DeltaRoute = {
     val frame = ZSetFrame.fromDelta(delta.df.select(colsInOrder.map(col): _*))
     // the segment rows are read with the STATE's schema and filed by a hash
     // of their own key values: a column of another type (an int key into a
@@ -440,7 +388,7 @@ final class KeyedState(val keys: Seq[String], val nBuckets: Int, init: ZSetFrame
           case (a, i) => BoundReference(i, a.dataType, a.nullable)
         })
         new KeyedState.DeltaRoute(frame, Some(data.groupBy(_.getInt(n)).map { case (b, rs) =>
-          b -> rs.map(r => strip(r).copy(): InternalRow).toArray
+          b -> new Chunk(rs.map(r => strip(r).copy(): InternalRow).toArray)
         }))
       case None =>
         new KeyedState.DeltaRoute(
@@ -485,7 +433,7 @@ final class KeyedState(val keys: Seq[String], val nBuckets: Int, init: ZSetFrame
       case (Some(rows), _) if groups.nonEmpty =>
         sc.parallelize(groups.map(_.map(rows)), groups.size).flatMap(_.iterator)
       case (None, Some(rows)) => new BucketPackRDD(rows, groups)
-      case _ => sc.emptyRDD[Array[InternalRow]]
+      case _ => sc.emptyRDD[Chunk]
     }
     new Aligned(groups, new Segment(rdd, BucketPacking.slots(groups)))
   }
@@ -526,8 +474,7 @@ final class KeyedState(val keys: Seq[String], val nBuckets: Int, init: ZSetFrame
 
   private def compactInternal(keep: Option[Column]): Unit = {
     val groups = groupsOf(0 until nBuckets)
-    val view = viewOf(groups)
-    install(materializeAligned(keep.fold(view)(view.where), groups), 0 until nBuckets)
+    install(consolidated(groups, spine(groups), keep), 0 until nBuckets)
   }
 
   /** A merge's clock tick: free what was retired two merges ago and, every
@@ -577,7 +524,7 @@ final class KeyedState(val keys: Seq[String], val nBuckets: Int, init: ZSetFrame
     if (!a.isEmpty) {
       val touched = a.groups.flatten
       if (append) installAppend(pin(a.seg), touched)
-      else install(materializeAligned(viewOf(a.groups, extra = Some(a.seg)), a.groups), touched)
+      else install(consolidated(a.groups, spine(a.groups, Some(a.seg)), None), touched)
     }
   }
 
@@ -700,7 +647,7 @@ object KeyedState {
     * route — and is None for a cluster-resident delta, which takes the
     * shuffle route. */
   private[incremental] final class DeltaRoute(val frame: ZSetFrame,
-                                              val rows: Option[Map[Int, Array[InternalRow]]])
+                                              val rows: Option[Map[Int, Chunk]])
 
   /** `rdd` holds, per partition, one element per bucket of its group;
     * rows in the INTERNAL UnsafeRow format, so views rebuild DataFrames
@@ -708,7 +655,7 @@ object KeyedState {
     * the layout guarantees. `slots` maps every bucket the segment carries
     * to its (partition, slot); `refs` counts the buckets of the owning
     * state that point at it. */
-  private[incremental] final class Segment(val rdd: RDD[Array[InternalRow]],
+  private[incremental] final class Segment(val rdd: RDD[Chunk],
                                            val slots: Map[Int, BucketSlot]) {
     var refs: Int = 0
   }

@@ -63,6 +63,24 @@ object Pinned {
     if (isStable(z.df)) z
     else { val p = z.localCheckpoint(eager); own(p); p }
 
+  /** Pin `rdd` in memory NOW (`localCheckpoint` + one job). A failed job
+    * leaves nothing pinned, and a task's user-facing Spark error (an
+    * arithmetic overflow, a `raise_error`) is thrown as it was raised, not
+    * wrapped in the job's abort. */
+  private[graft] def pinNow[T](rdd: RDD[T]): RDD[T] = {
+    rdd.localCheckpoint()
+    try rdd.count()
+    catch {
+      case e: org.apache.spark.SparkException => unpersistTree(rdd); throw (e.getCause match {
+        case c: org.apache.spark.SparkThrowable if c.getCondition != null && !c.isInternalError =>
+          c.asInstanceOf[Throwable]
+        case _ => e
+      })
+      case e: Throwable => unpersistTree(rdd); throw e
+    }
+    rdd
+  }
+
   /** Unpersist `rdd` and every persisted ancestor: a DataFrame's `.rdd` is
     * a row-conversion CHILD of the internally persisted checkpoint RDD, so
     * releasing a checkpointed frame means walking the (short) dependency

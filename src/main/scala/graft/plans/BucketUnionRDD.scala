@@ -5,8 +5,7 @@ import scala.collection.mutable.ArrayBuffer
 import org.apache.spark.{NarrowDependency, Partition, TaskContext}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BoundReference, UnsafeProjection}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.graft.Chunk
 
 /** Where one bucket's rows live in a packed KeyedState segment: element
   * `slot` of partition `part`. */
@@ -16,7 +15,7 @@ private[graft] final case class BucketSlot(part: Int, slot: Int)
   * span of buckets runs as G = min(|span|, parallelism) partitions, each a
   * CONTIGUOUS group of the sorted bucket ids. In a pinned segment a
   * partition stores one element per bucket of its group — that bucket's
-  * rows as an array — so a bucket stays addressable as (partition, slot)
+  * rows as a `Chunk` — so a bucket stays addressable as (partition, slot)
   * and reading it never touches the rows of the buckets packed beside it.
   * The bucket stays the unit of routing and pruning; the group is the unit
   * of work, one task per core instead of one per bucket (the reference
@@ -36,40 +35,19 @@ private[graft] object BucketPacking {
       grp.zipWithIndex.map { case (b, s) => b -> BucketSlot(p, s) }
     }.toMap
 
-  /** Pack rows that carry their bucket id in column `schema.size` (one past
-    * the data columns) and sit in the partition of their bucket's group:
-    * partition g becomes one element per bucket of `groups(g)`, the bucket
-    * column projected away. This is how an in-place consolidation of a
-    * packed view — whose aggregate mixes a group's buckets — is split back
-    * into addressable buckets. */
-  def byRowBucket(rows: RDD[InternalRow], groups: IndexedSeq[IndexedSeq[Int]],
-                  schema: StructType): RDD[Array[InternalRow]] = {
-    val n = schema.size
-    rows.mapPartitionsWithIndex { (g, it) =>
-      val grp = groups(g)
-      val slotOf = grp.zipWithIndex.toMap
-      val strip = UnsafeProjection.create(schema.fields.toSeq.zipWithIndex.map {
-        case (f, i) => BoundReference(i, f.dataType, f.nullable)
-      })
-      val bufs = Array.fill(grp.size)(ArrayBuffer.empty[InternalRow])
-      it.foreach(r => bufs(slotOf(r.getInt(n))) += strip(r).copy())
-      bufs.iterator.map(_.toArray)
-    }
-  }
-
-  /** The rows of the chunks at ascending `slots` of one packed partition.
-    * Skipped chunks are stepped over as whole elements — their rows are
-    * never iterated — and the partition iterator is run to its end so a
-    * cached block's read lock is released with it. */
-  def slotRows(chunks: Iterator[Array[InternalRow]], slots: Array[Int]): Iterator[InternalRow] = {
-    val picked = new Array[Array[InternalRow]](slots.length)
+  /** The chunks at ascending `slots` of one packed partition. Skipped
+    * chunks are stepped over as whole elements — their rows are never
+    * iterated — and the partition iterator is run to its end so a cached
+    * block's read lock is released with it. */
+  def pick(chunks: Iterator[Chunk], slots: Array[Int]): Array[Chunk] = {
+    val picked = new Array[Chunk](slots.length)
     var pos = 0
     slots.indices.foreach { k =>
       while (pos < slots(k)) { chunks.next(); pos += 1 }
       picked(k) = chunks.next(); pos += 1
     }
     while (chunks.hasNext) chunks.next()
-    picked.iterator.flatMap(_.iterator)
+    picked
   }
 }
 
@@ -82,14 +60,14 @@ private[graft] class BucketPackPartition(override val index: Int,
 /** Packs a bucket-per-partition RDD (partition b holds bucket b — a
   * `repartition(nBuckets, keys)` shuffle read) into groups: output
   * partition g reads the parent partitions of `groups(g)` and yields one
-  * element per bucket, that bucket's rows (copied — the shuffle reader
-  * reuses its row buffers). The dependency is narrow, so a touched span of
+  * element per bucket, that bucket's rows as a `Chunk` (copied — the
+  * shuffle reader reuses its row buffers). The dependency is narrow, so a touched span of
   * k buckets runs k-bucket reduce work in G tasks, and buckets outside the
   * span are never read. */
 private[graft] class BucketPackRDD(
     @transient private val parent: RDD[InternalRow],
     groups: IndexedSeq[IndexedSeq[Int]])
-  extends RDD[Array[InternalRow]](parent.sparkContext, Seq(
+  extends RDD[Chunk](parent.sparkContext, Seq(
     new NarrowDependency[InternalRow](parent) {
       override def getParents(partitionId: Int): Seq[Int] = groups(partitionId)
     })) {
@@ -98,62 +76,85 @@ private[graft] class BucketPackRDD(
     Array.tabulate(groups.size)(g =>
       new BucketPackPartition(g, groups(g).map(parent.partitions(_)).toArray))
 
-  override def compute(split: Partition, ctx: TaskContext): Iterator[Array[InternalRow]] = {
+  override def compute(split: Partition, ctx: TaskContext): Iterator[Chunk] = {
     val p = firstParent[InternalRow]
     split.asInstanceOf[BucketPackPartition].parents.iterator.map(pp =>
-      p.iterator(pp, ctx).map(_.copy()).toArray)
+      new Chunk(p.iterator(pp, ctx).map(_.copy()).toArray))
   }
+}
+
+/** One bucket of a task's group as the task reads it: `sets(s)` holds the
+  * bucket's chunks from every segment of segment set `s` that carries it. */
+private[graft] final class BucketRead(val bucket: Int, val sets: Array[Array[Chunk]]) {
+  /** Every row of the bucket, all sets flattened. */
+  def rows: Iterator[InternalRow] = sets.iterator.flatMap(_.iterator.flatMap(_.rows.iterator))
+  def rowsOf(set: Int): Iterator[InternalRow] = sets(set).iterator.flatMap(_.rows.iterator)
 }
 
 private[graft] class BucketUnionPartition(
     override val index: Int,
-    /** reads(i) = (partition, ascending slots) pairs to read from parent i */
-    val reads: Array[Array[(Partition, Array[Int])]]) extends Partition
+    /** the group's buckets, ascending */
+    val buckets: Array[Int],
+    /** reads(i) = (partition, ascending slots, the bucket at each slot) to
+      * read from parent i */
+    val reads: Array[Array[(Partition, Array[Int], Array[Int])]]) extends Partition
 
-/** Multi-parent NARROW union of packed segments: output partition j is one
-  * group of the view's sorted buckets and concatenates, from every parent
-  * segment, the chunks of that group's buckets the segment carries
-  * (segments not carrying a bucket contribute nothing for it). This is a
-  * KeyedState spine read as ONE scan: all of a bucket's spine batches
-  * stream through a single task, so the view keeps the segments' key
-  * co-location — the property [[BucketClusteredPartitioning]] then declares
-  * to Catalyst. (The stock alternatives lose it: `union` of per-segment
-  * DataFrames erases partitioning, and `UnionRDD` appends partitions
-  * instead of aligning them.) A task reads each parent partition once and
-  * picks its buckets' chunks by slot, so reading a bucket costs that
-  * bucket's rows, not its packed neighbours'. Dependencies are narrow, so
-  * no shuffle and full locality; the reference analog is reading one
+/** THE slot reader: a multi-parent NARROW union of packed segments, the
+  * parents grouped into SETS. Output partition j is one group of a sorted
+  * bucket span and yields one `BucketRead` per bucket of the group — that
+  * bucket's chunks from each set's segments (a segment not carrying a
+  * bucket contributes nothing for it). A view is one set, its chunks
+  * flattened into rows (`KeyedState.viewOf`); a kernel consumes the reads
+  * bucket by bucket — the spine merge one set (old segments ⊎ the delta's
+  * mini-segment), the delta join two (the delta, the other trace). This is
+  * a KeyedState spine read as ONE scan: all of a bucket's spine batches
+  * stream through a single task, so the read keeps the segments' key
+  * co-location — the property [[BucketClusteredPartitioning]] declares to
+  * Catalyst for a view. (The stock alternatives lose it: `union` of
+  * per-segment DataFrames erases partitioning, and `UnionRDD` appends
+  * partitions instead of aligning them.) A task reads each parent partition
+  * once and picks its buckets' chunks by slot, so reading a bucket costs
+  * that bucket's rows, not its packed neighbours'. Dependencies are narrow,
+  * so no shuffle and full locality; the reference analog is reading one
   * shard's spine batches sequentially (crates/dbsp/src/trace/spine_fueled.rs
   * — a shard's batches live together and merge locally, never across
   * shards). */
-private[graft] class BucketUnionRDD(
-    @transient private val parents: Seq[RDD[Array[InternalRow]]],
-    reads: Array[Array[Array[(Int, Array[Int])]]])
-  extends RDD[InternalRow](
-    parents.head.sparkContext,
+private[graft] class BucketUnionRDD private (
+    sc: org.apache.spark.SparkContext,
+    @transient private val parents: Seq[RDD[Chunk]],
+    setOf: Array[Int],
+    nSets: Int,
+    groups: IndexedSeq[IndexedSeq[Int]],
+    reads: Array[Array[Array[(Int, Array[Int], Array[Int])]]])
+  extends RDD[BucketRead](sc,
     parents.zipWithIndex.map { case (p, i) =>
-      new NarrowDependency[Array[InternalRow]](p) {
+      new NarrowDependency[Chunk](p) {
         override def getParents(partitionId: Int): Seq[Int] =
           reads(partitionId)(i).map(_._1).toSeq
       }
     }) {
 
-  setName("graft bucket view")
+  setName(BucketUnionRDD.Name)
 
   override def getPartitions: Array[Partition] =
-    Array.tabulate(reads.length)(j => new BucketUnionPartition(j,
+    Array.tabulate(reads.length)(j => new BucketUnionPartition(j, groups(j).toArray,
       reads(j).zip(parents).map { case (rs, p) =>
-        rs.map { case (pi, slots) => (p.partitions(pi), slots) }
+        rs.map { case (pi, slots, buckets) => (p.partitions(pi), slots, buckets) }
       }))
 
-  override def compute(split: Partition, ctx: TaskContext): Iterator[InternalRow] = {
+  override def compute(split: Partition, ctx: TaskContext): Iterator[BucketRead] = {
     val bp = split.asInstanceOf[BucketUnionPartition]
-    dependencies.iterator.zipWithIndex.flatMap { case (dep, i) =>
-      val parent = dep.rdd.asInstanceOf[RDD[Array[InternalRow]]]
-      bp.reads(i).iterator.flatMap { case (pp, slots) =>
-        BucketPacking.slotRows(parent.iterator(pp, ctx), slots)
+    val got = Array.fill(bp.buckets.length, nSets)(ArrayBuffer.empty[Chunk])
+    dependencies.iterator.zipWithIndex.foreach { case (dep, i) =>
+      val parent = dep.rdd.asInstanceOf[RDD[Chunk]]
+      bp.reads(i).foreach { case (pp, slots, buckets) =>
+        val chunks = BucketPacking.pick(parent.iterator(pp, ctx), slots)
+        chunks.indices.foreach { k =>
+          got(java.util.Arrays.binarySearch(bp.buckets, buckets(k)))(setOf(i)) += chunks(k)
+        }
       }
     }
+    bp.buckets.indices.iterator.map(k => new BucketRead(bp.buckets(k), got(k).map(_.toArray)))
   }
 
   /** Memoized per-split host lists (ADVICE r15): segments are immutable
@@ -175,8 +176,34 @@ private[graft] class BucketUnionRDD(
       // that one segment had no locations even if the others did).
       val hosts = dependencies.iterator.zipWithIndex.flatMap { case (dep, i) =>
         val parent = dep.rdd
-        bp.reads(i).iterator.flatMap { case (pp, _) => parent.preferredLocations(pp) }
+        bp.reads(i).iterator.flatMap { case (pp, _, _) => parent.preferredLocations(pp) }
       }.toSeq
       hosts.groupBy(identity).toSeq.sortBy(-_._2.size).map(_._1)
     })
+}
+
+private[graft] object BucketUnionRDD {
+  /** The RDD name the task-shape specs find bucket reads by. */
+  val Name = "graft bucket view"
+
+  /** A segment as a set member: its packed chunks and where it holds a
+    * bucket for this read (None: not read for that bucket). */
+  type Member = (RDD[Chunk], Int => Option[BucketSlot])
+
+  /** The reads of `groups` (the sorted span's packing, one task each) over
+    * `sets` of segments. */
+  def apply(sc: org.apache.spark.SparkContext, groups: IndexedSeq[IndexedSeq[Int]],
+            sets: Seq[Seq[Member]]): BucketUnionRDD = {
+    val members = sets.zipWithIndex.flatMap { case (set, s) => set.map(_ -> s) }
+    val reads = groups.map { grp =>
+      members.map { case ((_, at), _) =>
+        grp.flatMap(b => at(b).map(_ -> b)).groupBy(_._1.part).toArray.sortBy(_._1).map {
+          case (p, picks) =>
+            val sorted = picks.sortBy(_._1.slot)
+            (p, sorted.map(_._1.slot).toArray, sorted.map(_._2).toArray)
+        }
+      }.toArray
+    }.toArray
+    new BucketUnionRDD(sc, members.map(_._1._1), members.map(_._2).toArray, sets.size, groups, reads)
+  }
 }

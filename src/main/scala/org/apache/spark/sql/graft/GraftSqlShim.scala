@@ -2,8 +2,11 @@ package org.apache.spark.sql.graft
 
 import org.apache.spark.{MapOutputTrackerMaster, ShuffleDependency}
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.{InternalRow, QueryPlanningTracker}
+import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, AttributeSeq, BindReferences, Expression}
+import org.apache.spark.sql.catalyst.optimizer.NormalizeFloatingNumbers
+import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, Project}
 import org.apache.spark.sql.catalyst.plans.physical.Partitioning
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.classic.{Dataset, SparkSession => ClassicSession}
@@ -28,7 +31,7 @@ object GraftSqlShim {
     * `attrsFor`). */
   def internalDf(spark: SparkSession, rdd: RDD[InternalRow],
                  schema: StructType,
-                 partitioning: Seq[org.apache.spark.sql.catalyst.expressions.Attribute] => Partitioning): DataFrame = {
+                 partitioning: Seq[Attribute] => Partitioning): DataFrame = {
     val attrs = DataTypeUtils.toAttributes(schema)
     val plan = LogicalRDD(attrs, rdd, partitioning(attrs), Nil, false, None)(
       spark.asInstanceOf[ClassicSession], None, None)
@@ -60,9 +63,20 @@ object GraftSqlShim {
     }
   }
 
-  /** The analyzed-plan physical partition layout of a DataFrame's
-    * materialization, as Spark would report it — used by specs to assert
-    * exchange elision. */
-  def executedPlanString(df: DataFrame): String =
-    df.queryExecution.executedPlan.toString
+  /** `c` resolved against `input` and bound to its ordinals, evaluable
+    * over a row of `input`'s layout. Only the analyzer runs: no Dataset is
+    * built and nothing is planned. Functions resolve and ANSI arithmetic
+    * takes its evaluation mode from the session's conf, as in a query. */
+  def boundExpression(spark: SparkSession, c: Column, input: Seq[Attribute]): Expression = {
+    val session = spark.asInstanceOf[ClassicSession]
+    val plan = Project(Seq(Alias(session.expression(c), "_")()), LocalRelation(input))
+    val analyzed = session.withActive(
+      session.sessionState.analyzer.executeAndCheck(plan, new QueryPlanningTracker))
+    BindReferences.bindReference(analyzed.asInstanceOf[Project].projectList.head
+      .asInstanceOf[Alias].child, AttributeSeq.fromNormalOutput(input))
+  }
+
+  /** `e` with NaN and -0.0 normalized as Catalyst normalizes grouping and
+    * join keys, so equal keys have equal bytes in an UnsafeRow. */
+  def normalized(e: Expression): Expression = NormalizeFloatingNumbers.normalize(e)
 }

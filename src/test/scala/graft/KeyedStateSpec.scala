@@ -69,45 +69,89 @@ class KeyedStateSpec extends SparkSpec {
       vals.map(want).distinct.sorted)
   }
 
+  /** A generated step as a delta frame: driver-resident, or pinned first
+    * (the shuffle route); empty steps keep the column types. */
+  private def genFrame(rows: ZSetGen.Step, pin: Boolean): ZSetFrame = {
+    val z = ZSetFrame.fromDelta(rows.map(r => (r.k1, r.k2, r.d, r.s, r.dec, r.w))
+      .toDF(ZSetGen.Columns :+ ZSetFrame.W: _*)
+      .withColumn("dec", col("dec").cast("decimal(10,2)")))
+    if (pin) z.localCheckpoint(eager = true) else z
+  }
+
   test("KeyedState snapshot ≡ naive State acc over random delta sequences") {
-    for (seed <- 1 to 3) {
-      val rnd = new scala.util.Random(seed + 500)
-      def randomDelta(n: Int): ZSetFrame = {
-        val rows = Seq.fill(n) {
-          val w = { val x = rnd.nextInt(4) - 2; if (x >= 0) x + 1 else x }
-          (rnd.nextInt(20).toLong, rnd.nextInt(8).toLong, w.toLong)
-        }
-        ZSetFrame.fromDelta(rows.toDF("k", "v", ZSetFrame.W))
+    // the merge kernel ≡ ZSetFrame.consolidate, row for row (no consolidate
+    // on read: a replace merge leaves physically unique rows, with NaN,
+    // -0.0/0.0, strings and decimals grouped as groupBy groups them), from
+    // the seed's consolidation on, on both routes; then
+    // compact(keep) ≡ filter ∘ consolidate, after an append on top
+    val keys = Seq("k1", "k2")
+    ZSetGen.check(3, ZSetGen.steps(2, 4)) { steps =>
+      val frames = steps.zipWithIndex.map { case (st, i) => genFrame(st, pin = i % 2 == 1) }
+      val keyed = new KeyedState(keys, 8, frames.head)
+      try {
+        frames.tail.foreach(keyed.merge(_))
+        val all = ZSetFrame.sumAll(frames).consolidate
+        assertSameRows(keyed.snapshot.df, all.df)
+        keyed.merge(frames.head, append = true)
+        val keep = col("s") =!= "x" && !isnan(col("d"))
+        keyed.compact(Some(keep))
+        assertSameRows(keyed.snapshot.df, (all + frames.head).consolidate.where(keep).df)
+      } finally {
+        keyed.close()
+        frames.foreach(f => Pinned.release(f.df))
       }
-      val deltas = Seq.fill(4)(randomDelta(15))
-      val naive = new Incremental.State(Incremental.emptyLike(deltas.head))
-      val keyed = new KeyedState(Seq("k"), 8, Incremental.emptyLike(deltas.head))
-      deltas.foreach { d => naive.update(d); keyed.merge(d) }
-      assertSameRows(keyed.snapshot.consolidate.df, naive.acc.consolidate.df)
     }
   }
 
   test("joinDeltaKeyed ≡ batch join over random two-sided delta sequences") {
-    for (seed <- 1 to 3) {
-      val rnd = new scala.util.Random(seed + 800)
-      def randomDelta(n: Int, vName: String): ZSetFrame = {
-        val rows = Seq.fill(n) {
-          val w = { val x = rnd.nextInt(4) - 2; if (x >= 0) x + 1 else x }
-          (rnd.nextInt(6).toLong, rnd.nextInt(8).toLong, w.toLong)
+    // the join kernel ≡ ZSetFrame.join over generated two-sided sequences:
+    // the same columns, and Σ steps ≡ the batch join of the accumulated sides
+    val jkeys = Seq("k1", "k2")
+    ZSetGen.check(3, ZSetGen.steps(2, 3).flatMap(as => ZSetGen.steps(as.size, as.size).map(as -> _))) {
+      case (as, bs) =>
+        val das = as.map(genFrame(_, pin = false))
+        val dbs = bs.map(st => ZSetFrame.fromDelta(genFrame(st, pin = false).df
+          .withColumnRenamed("d", "d2").withColumnRenamed("s", "s2").withColumnRenamed("dec", "dec2")))
+        val aSt = new KeyedState(jkeys, 8, Incremental.emptyLike(das.head))
+        val bSt = new KeyedState(jkeys, 8, Incremental.emptyLike(dbs.head))
+        try {
+          val outs = das.zip(dbs).map { case (dA, dB) => Incremental.joinDeltaKeyed(aSt, dA, bSt, dB, jkeys) }
+          val batch = ZSetFrame.sumAll(das).join(ZSetFrame.sumAll(dbs), jkeys)
+          assert(outs.head.df.schema == batch.df.schema)
+          assertSameRows(ZSetFrame.sumAll(outs).consolidate.df, batch.consolidate.df)
+          outs.foreach(o => Pinned.release(o.df))
+        } finally { aSt.close(); bSt.close() }
+    }
+    // ... and overflows the weight product as ZSetFrame.join does: under
+    // ANSI, under spark.graft.checkedWeights, and wrapping with neither
+    val big = Long.MaxValue / 2 + 1
+    def failure(f: => Set[String]): Either[(Class[_], String), Set[String]] =
+      try Right(f)
+      catch { case e: Exception => Left(e.getClass -> Option(e.getMessage).fold("")(_.take(60))) }
+    for ((ansi, checked) <- Seq((true, false), (false, true), (false, false))) {
+      spark.conf.set("spark.sql.ansi.enabled", ansi)
+      spark.conf.set(ZSetFrame.CheckedWeightsConf, checked)
+      val aSt = new KeyedState(Seq("k"), 8, zf(Seq((1L, 1L, 1L))))
+      val bSt = new KeyedState(Seq("k"), 8, zf(Seq((1L, 5L, big)), "attr"))
+      try {
+        val dA = zf(Seq((1L, 2L, 3L)))
+        val want = failure(canon(dA.join(zf(Seq((1L, 5L, big)), "attr"), Seq("k")).df).keySet)
+        val got = failure {
+          val o = Incremental.joinDeltaKeyed(aSt, dA, bSt, zf(Nil, "attr"), Seq("k"))
+          try canon(o.df).keySet finally Pinned.release(o.df)
         }
-        ZSetFrame.fromDelta(rows.toDF("k", vName, ZSetFrame.W))
+        withClue(s"ansi=$ansi checkedWeights=$checked: ") {
+          assert(got.isLeft == want.isLeft, s"got $got, want $want")
+          (got, want) match {
+            case (Left((gc, gm)), Left((wc, wm))) => assert(gc == wc && gm == wm, s"got $got, want $want")
+            case _ => assert(got == want)
+          }
+        }
+      } finally {
+        spark.conf.unset("spark.sql.ansi.enabled")
+        spark.conf.unset(ZSetFrame.CheckedWeightsConf)
+        aSt.close(); bSt.close()
       }
-      val das = Seq.fill(3)(randomDelta(10, "v"))
-      val dbs = Seq.fill(3)(randomDelta(10, "v2"))
-      val aSt = new KeyedState(Seq("k"), 8, Incremental.emptyLike(das.head))
-      val bSt = new KeyedState(Seq("k"), 8, Incremental.emptyLike(dbs.head))
-      val out = new Incremental.State(
-        Incremental.emptyLike(das.head.join(dbs.head, Seq("k"))))
-      das.zip(dbs).foreach { case (dA, dB) =>
-        out.update(Incremental.joinDeltaKeyed(aSt, dA, bSt, dB, Seq("k")))
-      }
-      assertSameRows(out.acc.consolidate.df,
-        aSt.snapshot.join(bSt.snapshot, Seq("k")).consolidate.df)
     }
     // the shapes the co-partitioned join must also get right: spans that
     // differ between the two sides, an empty ΔB (a bulk step on A alone),
@@ -720,34 +764,53 @@ class KeyedStateSpec extends SparkSpec {
   }
 
   test("a failed joinDeltaKeyed step throws its cause unwrapped and leaves no pin behind") {
-    // with requireAllClusterKeysForDistribution a merge's in-place
-    // consolidation needs an exchange, which its soundness gate refuses, so
-    // the merge tasks fail while the co-partitioned output job (a join on
-    // exactly the bucket key) succeeds: the step must throw a merge's own
-    // exception, and release the output it already pinned (the states'
-    // segments are unchanged — neither merge installed anything). The
-    // deltas are driver-resident: the shuffle route would refuse the conf
-    // while routing, before the output job starts.
+    // a trace row at weight Long.MaxValue and ΔA +1 on that same row: only
+    // merge-a's consolidation overflows (exact weight sums under ANSI),
+    // while the output job — ΔA ⋈ B_old, weight 1 × 1 — succeeds. The step
+    // must throw the merge's own ArithmeticException, and release the
+    // output it already pinned and the segment the merge did not finish
+    // (the states are unchanged; ΔB is empty, so merge-b installs nothing)
     val n = 8
-    val aSt = new KeyedState(Seq("k"), n, zf((0L until 16L).map(k => (k, k, 1L))))
+    val aSt = new KeyedState(Seq("k"), n, zf((0L until 16L).map(k => (k, k, if (k == 3L) Long.MaxValue else 1L))))
     val bSt = new KeyedState(Seq("k"), n, zf((0L until 16L).map(k => (k, k % 3, 1L)), "attr"))
-    val dA = zf((0L until 16L).map(k => (k, k + 100, 1L)))
-    val dB = zf((0L until 16L).map(k => (k, 7L, 1L)), "attr")
+    val dA = zf(Seq((3L, 3L, 1L)))
+    val dB = zf(Nil, "attr")
     val sc = spark.sparkContext
-    val conf = "spark.sql.requireAllClusterKeysForDistribution"
     val before = sc.getPersistentRDDs.keySet
-    spark.conf.set(conf, "true")
     try {
-      val (e, shape) = StepShape.measure(spark)(intercept[IllegalArgumentException](
+      val (e, shape) = StepShape.measure(spark)(intercept[ArithmeticException](
         Incremental.joinDeltaKeyed(aSt, dA, bSt, dB, Seq("k"),
           knownTouchedA = Some(0 until n), knownTouchedB = Some(0 until n))))
-      assert(e.getMessage.contains("materializeAligned planned an Exchange"), e.getMessage)
-      assert(shape.jobs == 1, s"the output job alone should have run: $shape")
+      assert(e.getMessage.contains("overflow"), e.getMessage)
+      assert(shape.jobs == 2, s"the output job and merge-a's failed job should have run: $shape")
       assert(sc.getPersistentRDDs.keySet -- before == Set.empty,
         "the failed step left pinned RDDs behind")
-    } finally {
-      spark.conf.unset(conf)
-      aSt.close(); bSt.close()
+    } finally { aSt.close(); bSt.close() }
+  }
+
+  test("a segment chunk reports its size within 10% of SizeEstimator over the same rows") {
+    // the block store sizes a pinned partition through the chunks'
+    // KnownSizeEstimation instead of walking their rows, so state_mb reads
+    // what it read before
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.{BoundReference, UnsafeProjection}
+    import org.apache.spark.sql.graft.Chunk
+    import org.apache.spark.sql.types.{LongType, StringType}
+    import org.apache.spark.unsafe.types.UTF8String
+    val longs = UnsafeProjection.create(Seq(BoundReference(0, LongType, false), BoundReference(1, LongType, false)))
+    val strings = UnsafeProjection.create(Seq(BoundReference(0, StringType, true), BoundReference(1, LongType, false)))
+    val rnd = new scala.util.Random(7)
+    for (n <- Seq(0, 1, 7, 300, 450, 950, 5000)) {
+      val cases = Seq(
+        "long" -> Array.fill[InternalRow](n)(longs(InternalRow(rnd.nextLong(), 1L)).copy()),
+        "string" -> Array.fill[InternalRow](n)(strings(InternalRow(
+          UTF8String.fromString("t" * rnd.nextInt(40)), 1L)).copy()))
+      cases.foreach { case (kind, rows) =>
+        // SizeEstimator over the same rows in a slot that does not report its size
+        val want = org.apache.spark.util.SizeEstimator.estimate(new PlainChunk(rows)).toDouble
+        val got = new Chunk(rows).estimatedSize.toDouble
+        assert(math.abs(got - want) <= 0.1 * want, s"$n $kind rows: chunk reports $got, SizeEstimator $want")
+      }
     }
   }
 
@@ -755,15 +818,18 @@ class KeyedStateSpec extends SparkSpec {
     // BucketUnionRDD picks chunks by slot: the rows of a chunk it does not
     // select are never touched — here any touch of them throws
     import org.apache.spark.sql.catalyst.InternalRow
-    import graft.plans.BucketUnionRDD
+    import org.apache.spark.sql.graft.Chunk
+    import graft.plans.{BucketSlot, BucketUnionRDD}
     val packed = spark.sparkContext.parallelize(Seq(0), 1).mapPartitions { _ =>
-      def rows(vs: Long*): Array[InternalRow] = vs.map(v => new PoisonableRow(v, false): InternalRow).toArray
-      def poison: Array[InternalRow] = Array(new PoisonableRow(0L, true))
+      def rows(vs: Long*): Chunk = new Chunk(vs.map(v => new PoisonableRow(v, false): InternalRow).toArray)
+      def poison: Chunk = new Chunk(Array(new PoisonableRow(0L, true)))
       Iterator(poison, rows(1L, 2L), poison, rows(3L), poison)
     }.localCheckpoint()
     packed.count()
-    val view = new BucketUnionRDD(Seq(packed), Array(Array(Array((0, Array(1, 3))))))
-    assert(view.map(_.getLong(0)).collect().sorted.toSeq == Seq(1L, 2L, 3L))
+    // buckets 1 and 3 sit at slots 1 and 3 of the one packed partition
+    val view = BucketUnionRDD(spark.sparkContext, IndexedSeq(IndexedSeq(1, 3)),
+      Seq(Seq(packed -> ((b: Int) => Some(BucketSlot(0, b))))))
+    assert(view.flatMap(_.rows.map(_.getLong(0))).collect().sorted.toSeq == Seq(1L, 2L, 3L))
     Pinned.unpersistTree(packed)
   }
 
@@ -779,6 +845,11 @@ class KeyedStateSpec extends SparkSpec {
       assertSameRows(es.retract, src.where(pmod(col("doc_id"), lit(10L)) === 3L))
     } finally es.close()
   }
+}
+
+/** A slot with `Chunk`'s fields that leaves its sizing to SizeEstimator. */
+final class PlainChunk(val rows: Array[org.apache.spark.sql.catalyst.InternalRow]) {
+  val estimatedSize: Long = 0L
 }
 
 /** A test row whose field reads throw when `poisoned`. */

@@ -53,6 +53,15 @@ class KeyedTaskShapeSpec extends SparkSpec {
     "merge" -> 1, "merge append" -> 1, "merge driver" -> 1,
     "joinDeltaKeyed" -> 3, "joinDeltaKeyed cluster" -> 3, "joinDeltaKeyed scan" -> 5)
 
+  /** The query executions a step runs (measured): the merges and the join
+    * output are kernels over the slot reader and plan none; aggStep plans
+    * its emitted output, the caller's `agg` over the aligned views; each
+    * parquet-scan delta adds the two of its own lazy pin. */
+  private val queries: Map[String, Int] = Map(
+    "aggStep" -> 1, "aggStep cluster" -> 1, "aggStep append" -> 1, "aggStep scan" -> 3,
+    "merge" -> 0, "merge append" -> 0, "merge driver" -> 0,
+    "joinDeltaKeyed" -> 0, "joinDeltaKeyed cluster" -> 0, "joinDeltaKeyed scan" -> 4)
+
   test("a keyed step reads each view in ≤ G tasks; per-step jobs and tasks stay bounded") {
     val rnd = new scala.util.Random(2100)
     // one key for each of the first `Touched` buckets the key sequence hits
@@ -129,6 +138,7 @@ class KeyedTaskShapeSpec extends SparkSpec {
           s"$name ran a view-reading stage of ${st.tasks} tasks over ${st.viewParts.size} views")
       }
       assert(s.pins == pins(name), s"$name left ${s.pins} RDDs pinned, want ${pins(name)}")
+      assert(s.queries == queries(name), s"$name planned ${s.queries} queries, want ${queries(name)}")
       // both deltas join inside the traces' bucket layout: nothing is broadcast
       if (name.startsWith("joinDeltaKeyed"))
         assert(s.broadcastJobs == 0, s"$name ran ${s.broadcastJobs} broadcast jobs")

@@ -8,6 +8,8 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.ListenerBusAccess
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.util.QueryExecutionListener
 
 /** The Spark work a block of code ran: jobs, tasks, the stages that ran
   * (skipped ones excluded) and the elements its tasks pulled from cached
@@ -17,9 +19,11 @@ import org.apache.spark.sql.SparkSession
   * `broadcast exchange (runId …)` in `spark.job.tags`. `pins` counts the
   * RDDs the code newly persisted and left persisted (a pinned delta,
   * output or segment), from the context's persistent-RDD registry, which
-  * costs no job. */
+  * costs no job. `queries` counts the query executions the code ran (a
+  * Dataset action, a checkpoint), as a QueryExecutionListener sees them —
+  * also no job. */
 final case class Shape(jobs: Int, tasks: Int, stages: Seq[StageShape], cachedRecordsRead: Long,
-                       broadcastJobs: Int, pins: Int)
+                       broadcastJobs: Int, pins: Int, queries: Int)
 final case class StageShape(tasks: Int, viewParts: Seq[Int])
 
 /** Counts the jobs, tasks and stages a step starts, attributed by a
@@ -38,12 +42,17 @@ object StepShape {
     val broadcastJobs = new AtomicInteger
     val tasks = new AtomicInteger
     val records = new AtomicLong
+    val queries = new AtomicInteger
     val stages = new ConcurrentHashMap[Int, StageShape]()
   }
   private val byTag = new ConcurrentHashMap[String, Counts]()
   private val stageTag = new ConcurrentHashMap[Int, String]()
   private val tagSeq = new AtomicInteger
   @volatile private var registered = false
+  /** The tag of the block being measured: query executions carry no local
+    * properties, so they are attributed by the measured window (blocks are
+    * measured one at a time, and the bus is drained at both ends). */
+  @volatile private var measuring: String = null
 
   private def tagOf(p: java.util.Properties): Option[String] =
     Option(p).flatMap(x => Option(x.getProperty(TagKey)))
@@ -74,6 +83,11 @@ object StepShape {
             Option(te.taskMetrics).foreach(m => c.records.addAndGet(m.inputMetrics.recordsRead))
           }
       })
+      spark.listenerManager.register(new QueryExecutionListener {
+        private def count(): Unit = Option(measuring).foreach(t => counts(t).queries.incrementAndGet())
+        override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = count()
+        override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = count()
+      })
       registered = true
     }
   }
@@ -86,11 +100,15 @@ object StepShape {
     ListenerBusAccess.drain(sc)
     val persisted = sc.getPersistentRDDs.keySet
     sc.setLocalProperty(TagKey, tag)
-    val a = try f finally sc.setLocalProperty(TagKey, null)
-    val pins = (sc.getPersistentRDDs.keySet -- persisted).size
-    ListenerBusAccess.drain(sc)
+    measuring = tag
+    val (a, pins) = try {
+      val a = try f finally sc.setLocalProperty(TagKey, null)
+      val pins = (sc.getPersistentRDDs.keySet -- persisted).size
+      ListenerBusAccess.drain(sc)
+      (a, pins)
+    } finally measuring = null
     val c = Option(byTag.remove(tag)).getOrElse(new Counts)
-    (a, Shape(c.jobs.get, c.tasks.get,
-      c.stages.asScala.toSeq.sortBy(_._1).map(_._2), c.records.get, c.broadcastJobs.get, pins))
+    (a, Shape(c.jobs.get, c.tasks.get, c.stages.asScala.toSeq.sortBy(_._1).map(_._2),
+      c.records.get, c.broadcastJobs.get, pins, c.queries.get))
   }
 }
